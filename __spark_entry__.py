@@ -24,22 +24,25 @@ if _REPO not in sys.path:
 SF0001 = "/root/testdata/sf0.001"
 
 def _fingerprint(path: str) -> str:
-    """Content fingerprint (name+size+mtime of data files) of a file or
-    parquet dir.  /tmp caches derived from a source embed this in their
-    path, so regenerating the source (or editing the synthetic
-    generator) silently invalidates the stale cache instead of reusing
-    it (ADVICE-r3)."""
+    """Content fingerprint (names and bytes of the data files, never the
+    path or mtimes) of a file or parquet dir.  /tmp caches derived from
+    a source embed this in their path, so regenerating the source (or
+    editing the synthetic generator) silently invalidates the stale
+    cache instead of reusing it (ADVICE-r3), while a fresh checkout of
+    the same tree keeps every key and every oracle SQL text."""
     import hashlib
-    h = hashlib.md5(path.encode())
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            if name.startswith(("_", ".")):
-                continue
-            st = os.stat(os.path.join(path, name))
-            h.update(f"{name}:{st.st_size}:{int(st.st_mtime)}".encode())
-    elif os.path.exists(path):
-        st = os.stat(path)
-        h.update(f"{st.st_size}:{int(st.st_mtime)}".encode())
+    h = hashlib.md5()
+    names = (sorted(n for n in os.listdir(path)
+                    if not n.startswith(("_", ".")))
+             if os.path.isdir(path) else [""])
+    for name in names:
+        f = os.path.join(path, name) if name else path
+        if not os.path.isfile(f):
+            continue
+        h.update(f"{name}:".encode())
+        with open(f, "rb") as fh:
+            for chunk in iter(lambda: fh.read(1 << 20), b""):
+                h.update(chunk)
     return h.hexdigest()[:10]
 
 
@@ -77,14 +80,15 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     exchange measured as a net loss and `_t` stays.
 
     Pushdown barrier (r6 round 2): Catalyst pushes deterministic
-    filters through the round-robin repartition, so the validator
-    queries' expensive `size(violations) > 0` filter sank back to the
-    row-group-bound scan and the floor bought nothing (the whole
-    violation array evaluated on 6 tasks at sf1.0).  A nondeterministic
-    always-true filter (monotonically_increasing_id() >= 0 — the id is
-    non-negative by construction) pins downstream filters above the
-    exchange; it is added ONLY when the floor actually repartitioned,
-    so at real scale the helper remains a strict no-op."""
+    filters through the round-robin repartition, so an expensive
+    per-row filter above the floor sank back to the row-group-bound
+    scan and the floor bought nothing (measured on the validator
+    queries: the whole violation array evaluated on 6 tasks at
+    sf1.0).  A nondeterministic always-true filter
+    (monotonically_increasing_id() >= 0 — the id is non-negative by
+    construction) pins downstream filters above the exchange; it is
+    added ONLY when the floor actually repartitioned, so at real scale
+    the helper remains a strict no-op."""
     return _fan(_t(spark, sf_dir, name))
 
 
@@ -96,28 +100,6 @@ def _fan(df: DataFrame) -> DataFrame:
     if fanned is df:
         return df
     return fanned.where(F.monotonically_increasing_id() >= 0)
-
-
-def _prefiltered(v, df: DataFrame) -> DataFrame:
-    """Validator-query input: keep only rows that can produce a
-    violation row, BEFORE the parallelism floor.
-
-    `v.valid_column` is the AND chain of the check predicates; under
-    Kleene logic it is FALSE exactly when some check predicate is
-    false — which is exactly when `_violation_array()` is non-empty
-    (each violation entry fires on `~coalesce(pred, true)`), so
-    `violations(filtered)` == `violations(df)` row for row (the
-    `_extra_ok` terms can only keep extra rows, which the size>0
-    filter above drops as before; verified identical on sf0.01/0.1
-    and the sf1.0 shape).  The win: this filter is deterministic, so
-    it pushes below the floor exchange to the SCAN — passing rows pay
-    one cheap codegen'd boolean chain and never reach the exchange or
-    the struct/message-building array evaluation (measured at the
-    sf1.0 shape: violations 6.5→4.4 s, best_match 8.1→5.7 s,
-    error_tree 6.4→4.1 s).  Used only for specs whose predicates are
-    fully native (no pandas-UDF format/pattern fallbacks — those
-    would run twice)."""
-    return _fan(df.filter(v.valid_column == False))  # noqa: E712
 
 
 # --------------------------------------------------------------- specs ----
@@ -159,9 +141,9 @@ PART_SPEC = {
 def q_violations_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level keyword validation -> violation counts (compiler core)."""
     from jsonschema_spark import CompiledValidator
-    li = _t(spark, sf_dir, "lineitem")
+    li = _tp(spark, sf_dir, "lineitem")
     v = CompiledValidator(LINEITEM_SPEC, li)
-    return (v.violations(_prefiltered(v, li))
+    return (v.violations(li)
             .groupBy("keyword", "json_path")
             .agg(F.count(F.lit(1)).alias("n")))
 
@@ -187,10 +169,9 @@ def q_best_match_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """best_match ranking: one most-relevant violation per failing row."""
     from jsonschema_spark import CompiledValidator
     from jsonschema_spark.operators.bestmatch import best_match
-    li = _t(spark, sf_dir, "lineitem")
+    li = _tp(spark, sf_dir, "lineitem")
     v = CompiledValidator(LINEITEM_SPEC, li)
-    viols = v.violations(_prefiltered(v, li),
-                         ["l_orderkey", "l_linenumber"])
+    viols = v.violations(li, ["l_orderkey", "l_linenumber"])
     return best_match(viols, ["l_orderkey", "l_linenumber"]).select(
         "l_orderkey", "l_linenumber", "keyword", "json_path")
 
@@ -199,9 +180,9 @@ def q_error_tree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ErrorTree: violations grouped by instance path."""
     from jsonschema_spark import CompiledValidator
     from jsonschema_spark.operators.bestmatch import error_tree
-    li = _t(spark, sf_dir, "lineitem")
+    li = _tp(spark, sf_dir, "lineitem")
     v = CompiledValidator(LINEITEM_SPEC, li)
-    return error_tree(v.violations(_prefiltered(v, li))).select(
+    return error_tree(v.violations(li)).select(
         "json_path", "total_errors",
         F.array_join("keywords", ",").alias("keywords"))
 
@@ -600,9 +581,9 @@ def q_composition_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Applicator keywords (anyOf/oneOf/not/if-then-else) as boolean
     algebra over child predicates — violation counts by keyword."""
     from jsonschema_spark import CompiledValidator
-    o = _t(spark, sf_dir, "orders")
+    o = _tp(spark, sf_dir, "orders")
     v = CompiledValidator(COMPOSED_ORDERS_SPEC, o)
-    return (v.violations(_prefiltered(v, o))
+    return (v.violations(o)
             .groupBy("keyword", "json_path")
             .agg(F.count(F.lit(1)).alias("n")))
 
@@ -822,9 +803,9 @@ def q_violations_draft4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Legacy-draft profile dispatch: $schema picks the draft4 compiler
     (boolean exclusiveMaximum modifier, dependencies keyword)."""
     from jsonschema_spark import CompiledValidator
-    o = _t(spark, sf_dir, "orders")
+    o = _tp(spark, sf_dir, "orders")
     v = CompiledValidator(DRAFT4_ORDERS_SPEC, o)
-    return (v.violations(_prefiltered(v, o))
+    return (v.violations(o)
             .groupBy("keyword", "json_path")
             .agg(F.count(F.lit(1)).alias("n")))
 
@@ -834,9 +815,9 @@ def q_standard_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated."""
     from jsonschema_spark import CompiledValidator
     from jsonschema_spark.operators.bestmatch import standard_output
-    o = _t(spark, sf_dir, "orders")
+    o = _tp(spark, sf_dir, "orders")
     v = CompiledValidator(ORDERS_SPEC, o)
-    return (standard_output(v.violations(_prefiltered(v, o)))
+    return (standard_output(v.violations(o))
             .groupBy("valid", "keywordLocation", "instanceLocation")
             .agg(F.count(F.lit(1)).alias("n")))
 

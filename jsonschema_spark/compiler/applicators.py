@@ -756,13 +756,7 @@ def _sub_ok(ctx: CompileContext, sub: Any, fragment: str) -> Any:
     if sub is False:
         return False
     node = compile_subschema(ctx.child(schema_fragment=fragment), sub)
-    cols = [c.pred for c in node.checks] + list(node._extra_ok)
-    if not cols:
-        return True
-    out = cols[0]
-    for c in cols[1:]:
-        out = out & c
-    return out
+    return node.ok if node.checks or node._extra_ok else True
 
 
 def _member_ok(ctx: CompileContext, sub: Any, member: Column,

@@ -160,13 +160,9 @@ def _type_or_schema_pred(ctx: CompileContext, t: Any):
             return _F.lit(False)
         return _type_pred_for(ctx, t)
     node = compile_subschema(ctx.child(schema_fragment="type"), t)
-    cols = [c.pred for c in node.checks] + list(node._extra_ok)
-    if not cols:
+    if not (node.checks or node._extra_ok):
         return None  # True schema: statically satisfied
-    out = cols[0]
-    for c in cols[1:]:
-        out = out & c
-    return out
+    return node.ok
 
 
 def c_type_draft3(ctx: CompileContext, value: Any,

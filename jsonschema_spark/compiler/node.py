@@ -13,7 +13,7 @@ into ``ValidationError`` at runtime
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -86,13 +86,18 @@ class Node:
 
     @property
     def ok(self) -> Column:
-        cols = [c.pred for c in self.checks] + list(self._extra_ok)
-        if not cols:
-            return F.lit(True)
-        out = cols[0]
-        for c in cols[1:]:
-            out = out & c
-        return out
+        return all_of([c.pred for c in self.checks] + self._extra_ok)
+
+
+def all_of(cols: Sequence[Column]) -> Column:
+    """Kleene AND of `cols` (True when empty) as a balanced tree that
+    keeps their left-to-right order.  A left-deep chain of hundreds of
+    terms overflows the JVM stack in Catalyst's recursive tree walks;
+    the balanced tree is log-deep and evaluates to the same value."""
+    if len(cols) <= 1:
+        return cols[0] if cols else F.lit(True)
+    mid = len(cols) // 2
+    return all_of(cols[:mid]) & all_of(cols[mid:])
 
 
 def static_node(valid: bool, json_path: str, schema_path: str,

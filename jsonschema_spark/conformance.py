@@ -47,6 +47,7 @@ from .compiler.context import CompileContext
 from .compiler.registry import (SchemaCompileError, compile_subschema,
                                 default_registry)
 from .compiler.resolver import Resolver
+from .validator import _violation_rows, _vrow
 
 SUITE_DIR = "/root/reference/json/tests"
 REMOTES_DIR = "/root/reference/json/remotes"
@@ -504,28 +505,22 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
     if base_id:
         out["absoluteKeywordLocation"] = base_id + "#"
     if not valid:
-        structs = [F.when(~F.coalesce(c.pred, F.lit(True)), F.struct(
-            F.lit(c.schema_path).alias("sp"),
-            F.lit(c.json_path).alias("jp"),
-            c.message.cast("string").alias("msg")))
-            for c in node.checks]
+        structs = [F.when(~F.coalesce(c.pred, F.lit(True)), _vrow(
+            c.keyword, c.json_path, c.schema_path, c.message,
+            F.lit(None))) for c in node.checks]
         units = []
-        if structs:
-            arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-            rows = (df.select(F.explode(arr).alias("_v"))
-                    .select(F.col("_v.sp").alias("sp"),
-                            _jsonpath_to_pointer(F.col("_v.jp"))
-                            .alias("il"),
-                            F.col("_v.msg").alias("msg")).collect())
-            for r in rows:
-                u = {"valid": False,
-                     "keywordLocation": "/" + r["sp"],
-                     "instanceLocation": r["il"] or "",
-                     "error": r["msg"] or ""}
-                a = absolute(u["keywordLocation"])
-                if a:
-                    u["absoluteKeywordLocation"] = a
-                units.append(u)
+        for r in _violation_rows(df, structs).select(
+                "schema_path", "message",
+                _jsonpath_to_pointer(F.col("json_path")).alias("il")
+        ).collect():
+            u = {"valid": False,
+                 "keywordLocation": "/" + r["schema_path"],
+                 "instanceLocation": r["il"] or "",
+                 "error": r["message"] or ""}
+            a = absolute(u["keywordLocation"])
+            if a:
+                u["absoluteKeywordLocation"] = a
+            units.append(u)
         out["errors"] = units or [
             {"valid": False, "keywordLocation": "",
              "instanceLocation": "", "error": "instance failed validation"}]

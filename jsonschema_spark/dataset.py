@@ -58,7 +58,7 @@ from typing import Any, Mapping, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .validator import CompiledValidator
+from .validator import CompiledValidator, _violation_rows, _vrow
 
 VIOLATION_COLS = ("keyword", "json_path", "schema_path", "message",
                   "failing_value")
@@ -131,21 +131,16 @@ def validate_dataset(df: DataFrame, schema: dict,
             from .operators.drift import load_baseline, partitioned_drift
 
             def _drow(kw, col, stat_col, threshold, label):
-                return F.struct(
-                    F.lit(kw).alias("keyword"),
-                    F.lit(f"$.{col}").alias("json_path"),
-                    F.lit(f"x-spark/drift/{col}/{stat_col}")
-                    .alias("schema_path"),
+                return _vrow(
+                    kw, f"$.{col}", f"x-spark/drift/{col}/{stat_col}",
                     F.concat(F.lit(f"partition {by}="),
                              F.col("part").cast("string"),
                              F.lit(f": {label} "),
                              # %.4f, not round().cast: fixed-width
                              # rendering a SQL oracle reproduces exactly
                              F.format_string("%.4f", F.col(stat_col)),
-                             F.lit(f" exceeds {threshold}"))
-                    .alias("message"),
-                    F.format_string("%.6f", F.col(stat_col))
-                    .alias("failing_value"))
+                             F.lit(f" exceeds {threshold}")),
+                    F.format_string("%.6f", F.col(stat_col)))
 
             for col, (lo, hi, bins) in numeric.items():
                 base = load_baseline(df.sparkSession, d["baseline"], col)
@@ -165,11 +160,7 @@ def validate_dataset(df: DataFrame, schema: dict,
                     structs.append(F.when(F.col("l1") > max_l1,
                                           _drow("drift:l1", col, "l1",
                                                 max_l1, "L1 distance")))
-                v = (stats.select(
-                    F.explode(F.filter(F.array(*structs),
-                                       lambda s: s.isNotNull()))
-                    .alias("_v")).select("_v.*"))
-                parts.append(pad(v))
+                parts.append(pad(_violation_rows(stats, structs)))
         else:
             from .operators.drift import check_against_baseline
             viol = check_against_baseline(df, d["baseline"],
@@ -227,13 +218,6 @@ def validate_dataset(df: DataFrame, schema: dict,
             df, carry=("w", "h") if fuse_pixel else (),
             with_psnr=fuse_pixel, with_luma=fuse_luma)
 
-        def _vrow(keyword, json_path, schema_path, message, failing):
-            return F.struct(F.lit(keyword).alias("keyword"),
-                            F.lit(json_path).alias("json_path"),
-                            F.lit(schema_path).alias("schema_path"),
-                            message.alias("message"),
-                            failing.alias("failing_value"))
-
         integ_bad = F.col("hamming") > maxh
         integ_struct = F.when(integ_bad, _vrow(
             "phashIntegrity", "$.phash", "x-spark/phash_integrity",
@@ -253,12 +237,7 @@ def validate_dataset(df: DataFrame, schema: dict,
         # ONE projection over the single decode subtree emits every
         # violation type — a union of per-type filters would reference
         # (and re-execute) the mapInPandas decode once per branch
-        bad = (chk.select(
-            "image_id",
-            F.explode(F.filter(F.array(*structs),
-                               lambda s: s.isNotNull())).alias("_v"))
-            .select("image_id", "_v.*"))
-        parts.append(pad(bad))
+        parts.append(pad(_violation_rows(chk, structs, ["image_id"])))
 
     if "image_quality_decoded" in xs and not fuse_luma:
         # decoded-tier quality standalone (no phash-integrity subtree
@@ -275,12 +254,7 @@ def validate_dataset(df: DataFrame, schema: dict,
             from .operators.quality import pixel_invariant_struct
             lstructs.append(pixel_invariant_struct(
                 pix_cfg.get("min_psnr", 40.0)))
-        bad = (st.select(
-            "image_id",
-            F.explode(F.filter(F.array(*lstructs),
-                               lambda s: s.isNotNull())).alias("_v"))
-            .select("image_id", "_v.*"))
-        parts.append(pad(bad))
+        parts.append(pad(_violation_rows(st, lstructs, ["image_id"])))
 
     if "near_dup_phash" in xs:
         # dataset-level assertion: at most max_pairs near-duplicate
@@ -324,26 +298,19 @@ def validate_dataset(df: DataFrame, schema: dict,
         t = F.col(col)
 
         def _rrow(kind, n, lim, frac):
-            return F.when(frac > lim, F.struct(
-                F.lit(f"repetition:{kind}{n}").alias("keyword"),
-                F.lit(f"$.{col}").alias("json_path"),
-                F.lit(f"x-spark/repetition/{kind}_{n}gram")
-                 .alias("schema_path"),
+            return F.when(frac > lim, _vrow(
+                f"repetition:{kind}{n}", f"$.{col}",
+                f"x-spark/repetition/{kind}_{n}gram",
                 F.concat(F.lit(f"{kind} {n}-gram char fraction "),
                          F.format_string("%.6f", frac),
-                         F.lit(f" exceeds {lim}")).alias("message"),
-                F.format_string("%.6f", frac).alias("failing_value")))
+                         F.lit(f" exceeds {lim}")),
+                F.format_string("%.6f", frac)))
 
         structs = [_rrow("top", n, lim, top_ngram_char_frac(t, n))
                    for n, lim in sorted(max_top.items())]
         structs += [_rrow("dup", n, lim, dup_ngram_char_frac(t, n))
                     for n, lim in sorted(max_dup.items())]
-        viol = (df.select(
-            *keep,
-            F.explode(F.filter(F.array(*structs),
-                               lambda s: s.isNotNull())).alias("_v"))
-            .select(*keep, "_v.*"))
-        parts.append(pad(viol))
+        parts.append(pad(_violation_rows(df, structs, keep)))
 
     if "pii" in xs:
         # PII budget per row (operators/pii.py: zero-shuffle regexps)

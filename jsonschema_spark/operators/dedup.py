@@ -1060,24 +1060,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     return _jaccard_pairs_from_posting(posting, min_jaccard, max_bucket)
 
 
-def shingle_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                          k: int = 5, min_jaccard: float = 0.5,
-                          max_bucket: int = 500) -> DataFrame:
-    """Exact character-k-shingle Jaccard pairs — the ground truth the
-    MinHash estimator approximates (same shingle space as
-    minhash_signatures_df, same codegen'd explode+substring posting
-    generation: no interpreted transform-HOF shingle array is built)."""
-    n_sh = F.greatest(F.length(text_col) - (k - 1), F.lit(1))
-    posting = (ensure_parallelism(df.filter(F.col(text_col).isNotNull()))
-               .select(F.col(id_col).alias("_id"), F.col(text_col),
-                       F.explode(F.sequence(F.lit(1), n_sh)).alias("_i"))
-               .select("_id",
-                       F.expr(f"substring(`{text_col}`, _i, {k})")
-                       .alias("_g"))
-               .distinct())
-    return _jaccard_pairs_from_posting(posting, min_jaccard, max_bucket)
-
-
 def verify_pairs_exact_jaccard(pairs: DataFrame, df: DataFrame,
                                id_col: str, text_col: str,
                                k: int = 5,

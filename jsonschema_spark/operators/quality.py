@@ -40,27 +40,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_VIOL = ("keyword", "json_path", "schema_path", "message", "failing_value")
-
-
-def _vrow(keyword: str, json_path: str, schema_path: str,
-          message: Column, failing: Column) -> Column:
-    return F.struct(F.lit(keyword).alias("keyword"),
-                    F.lit(json_path).alias("json_path"),
-                    F.lit(schema_path).alias("schema_path"),
-                    message.alias("message"),
-                    failing.alias("failing_value"))
-
-
-def _explode_structs(df: DataFrame, structs: Sequence[Column],
-                     id_cols: Sequence[str]) -> DataFrame:
-    """One projection emits every violation type (same single-subtree
-    pattern as dataset.py's fused decode projection)."""
-    return (df.select(
-        *id_cols,
-        F.explode(F.filter(F.array(*structs),
-                           lambda s: s.isNotNull())).alias("_v"))
-        .select(*id_cols, "_v.*"))
+from ..validator import _violation_rows, _vrow
 
 
 def image_quality_violations(df: DataFrame, cfg: dict,
@@ -90,7 +70,7 @@ def image_quality_violations(df: DataFrame, cfg: dict,
     bands = _quality_bands(cfg)
     structs = [F.when(pred, _vrow(kw, jp, sp, msg, fv))
                for kw, pred, jp, sp, msg, fv in bands]
-    return _explode_structs(df, structs, id_cols)
+    return _violation_rows(df, structs, id_cols)
 
 
 def image_quality_flags(cfg: dict) -> dict:
@@ -397,4 +377,4 @@ def alignment_violations(df: DataFrame, cfg: dict,
                      F.lit(f" below {min_cos}")),
             F.format_string("%.6f", cos))),
     ]
-    return _explode_structs(base, structs, ids)
+    return _violation_rows(base, structs, ids)

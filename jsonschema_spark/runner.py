@@ -156,10 +156,12 @@ class ValidationRun:
                 conf.unset("spark.sql.sources.partitionOverwriteMode")
         # one aggregate pass: per-group rows, invalid rows, violation
         # rows (map-side partial agg; no join back to the written files)
-        arr = validator._violation_array()
+        fails = [~F.coalesce(c.pred, F.lit(True)) for c in validator.checks]
+        nviol = (F.size(F.filter(F.array(*fails), lambda b: b)) if fails
+                 else F.lit(0))
         stats = (work.select(
                     "part", validator.valid_column.alias("_v"),
-                    F.size(arr).alias("_nv"))
+                    nviol.alias("_nv"))
                  .groupBy("part")
                  .agg(F.count(F.lit(1)).alias("rows"),
                       F.sum((~F.coalesce(F.col("_v"), F.lit(True)))

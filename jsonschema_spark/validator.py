@@ -24,10 +24,42 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .compiler.context import CompileContext
-from .compiler.node import Check
+from .compiler.node import Check, all_of
 from .compiler.registry import (KeywordRegistry, compile_subschema,
                                 default_registry)
 from .spec import check_schema
+
+
+#: field types of :func:`_vrow`'s struct, the ``ValidationError`` analogue
+_VIOLATION_DDL = ("keyword:string,json_path:string,schema_path:string,"
+                 "message:string,failing_value:string")
+
+
+def _vrow(keyword: str, json_path: str, schema_path: str,
+          message: Column, failing: Column, **extra: Column) -> Column:
+    """One violation struct: compile-time keyword and locations as
+    literals, the runtime message and failing value as strings, then any
+    `extra` fields in the order given."""
+    return F.struct(F.lit(keyword).alias("keyword"),
+                    F.lit(json_path).alias("json_path"),
+                    F.lit(schema_path).alias("schema_path"),
+                    message.cast("string").alias("message"),
+                    failing.cast("string").alias("failing_value"),
+                    *[c.alias(k) for k, c in extra.items()])
+
+
+def _violation_rows(df: DataFrame, structs: Sequence[Column],
+                    id_cols: Sequence[str] = (),
+                    ddl: str = _VIOLATION_DDL) -> DataFrame:
+    """Flat rows from ``when(bad, struct(...))`` Columns: `id_cols` then
+    the struct's fields, one row per non-NULL struct per input row.  One
+    projection evaluates every struct, so a subtree below `df` (a decode
+    pass, say) runs once however many violation kinds it feeds.  No
+    structs gives the empty result typed by `ddl`."""
+    arr = (F.filter(F.array(*structs), lambda s: s.isNotNull()) if structs
+           else F.array().cast(f"array<struct<{ddl}>>"))
+    return (df.select(*id_cols, F.explode(arr).alias("_v"))
+            .select(*id_cols, "_v.*"))
 
 
 class CompiledValidator:
@@ -100,62 +132,20 @@ class CompiledValidator:
     # ------------------------------------------------------------- is_valid
     @property
     def valid_column(self) -> Column:
-        preds = [c.pred for c in self.checks] + list(self._extra_ok)
-        if not preds:
-            return F.lit(True)
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+        return all_of([c.pred for c in self.checks] + self._extra_ok)
 
     def with_valid(self, df: DataFrame, col: str = "valid") -> DataFrame:
         return df.withColumn(col, self.valid_column)
 
     # ---------------------------------------------------------- iter_errors
-    def _violation_array(self) -> Column:
-        """Array of violation structs (empty when the row passes).
-        ``type_match`` carries ``error._matches_type()``
-        (exceptions.py:184-197) — the 5th ``by_relevance`` element,
-        consumed by :func:`operators.bestmatch.best_match`."""
-        structs = [
-            F.when(~F.coalesce(c.pred, F.lit(True)), F.struct(
-                F.lit(c.keyword).alias("keyword"),
-                F.lit(c.json_path).alias("json_path"),
-                F.lit(c.schema_path).alias("schema_path"),
-                c.message.cast("string").alias("message"),
-                c.failing_value.cast("string").alias("failing_value"),
-                (c.type_match if c.type_match is not None
-                 else F.lit(False)).alias("type_match"),
-            ))
-            for c in self.checks
-        ]
-        if not structs:
-            return F.array().cast(
-                "array<struct<keyword:string,json_path:string,"
-                "schema_path:string,message:string,failing_value:string,"
-                "type_match:boolean>>")
-        return F.filter(F.array(*structs), lambda x: x.isNotNull())
-
     def violations(self, df: DataFrame,
                    id_cols: Sequence[str] = ()) -> DataFrame:
         """One row per (instance row × failed keyword) — the vectorized
-        ``iter_errors``.  Rows with no violations are filtered before the
-        explode so passing data never materializes error structs."""
-        arr = self._violation_array()
-        keep = [F.col(c) for c in id_cols]
-        exploded = (df
-                    .select(*keep, arr.alias("_violations"))
-                    .filter(F.size("_violations") > 0)
-                    .select(*keep, F.explode("_violations").alias("_v")))
-        return exploded.select(
-            *keep,
-            F.col("_v.keyword").alias("keyword"),
-            F.col("_v.json_path").alias("json_path"),
-            F.col("_v.schema_path").alias("schema_path"),
-            F.col("_v.message").alias("message"),
-            F.col("_v.failing_value").alias("failing_value"),
-            F.col("_v.type_match").alias("type_match"),
-        )
+        ``iter_errors``.  ``type_match`` carries
+        ``error._matches_type()`` (exceptions.py:184-197) — the 5th
+        ``by_relevance`` element, consumed by
+        :func:`operators.bestmatch.best_match`."""
+        return self._violations(df, id_cols, self.checks, False)
 
     def violations_with_context(self, df: DataFrame,
                                 id_cols: Sequence[str] = ()) -> DataFrame:
@@ -165,37 +155,30 @@ class CompiledValidator:
         carrying ``context_of`` = the composite's schema_path (NULL for
         top-level errors).  Context rows fire only when their composite
         fails; they feed :func:`operators.bestmatch.best_match_deep`."""
-        structs = [
-            F.when(~F.coalesce(c.pred, F.lit(True)), F.struct(
-                F.lit(c.keyword).alias("keyword"),
-                F.lit(c.json_path).alias("json_path"),
-                F.lit(c.schema_path).alias("schema_path"),
-                c.message.cast("string").alias("message"),
-                c.failing_value.cast("string").alias("failing_value"),
-                F.lit(c.context_of).cast("string").alias("context_of"),
-                (c.type_match if c.type_match is not None
-                 else F.lit(False)).alias("type_match"),
-            ))
-            for c in self.checks + self.context_checks
-        ]
-        ddl = ("array<struct<keyword:string,json_path:string,"
-               "schema_path:string,message:string,failing_value:string,"
-               "context_of:string,type_match:boolean>>")
-        arr = (F.filter(F.array(*structs), lambda x: x.isNotNull())
-               if structs else F.array().cast(ddl))
-        keep = [F.col(c) for c in id_cols]
-        exploded = (df
-                    .select(*keep, arr.alias("_violations"))
-                    .filter(F.size("_violations") > 0)
-                    .select(*keep, F.explode("_violations").alias("_v")))
-        return exploded.select(
-            *keep, F.col("_v.keyword").alias("keyword"),
-            F.col("_v.json_path").alias("json_path"),
-            F.col("_v.schema_path").alias("schema_path"),
-            F.col("_v.message").alias("message"),
-            F.col("_v.failing_value").alias("failing_value"),
-            F.col("_v.context_of").alias("context_of"),
-            F.col("_v.type_match").alias("type_match"))
+        return self._violations(
+            df, id_cols, self.checks + self.context_checks, True)
+
+    def _violations(self, df: DataFrame, id_cols: Sequence[str],
+                    checks: Sequence[Check], context: bool) -> DataFrame:
+        """Passing rows are dropped on the boolean validity chain before
+        any struct is built.  Under Kleene AND, ``valid`` is false
+        exactly when some check's ``~coalesce(pred, true)`` fires (a
+        context check fires only when its composite's check does), so
+        no violation row is lost; the filter is deterministic and pushes
+        down to the scan."""
+        def row(c: Check) -> Column:
+            extra = ({"context_of": F.lit(c.context_of).cast("string")}
+                     if context else {})
+            return F.when(~F.coalesce(c.pred, F.lit(True)), _vrow(
+                c.keyword, c.json_path, c.schema_path, c.message,
+                c.failing_value, **extra,
+                type_match=(c.type_match if c.type_match is not None
+                            else F.lit(False))))
+        ddl = (_VIOLATION_DDL + (",context_of:string" if context else "")
+               + ",type_match:boolean")
+        return _violation_rows(
+            df.filter(self.valid_column == False),  # noqa: E712
+            [row(c) for c in checks], id_cols, ddl)
 
     # ---------------------------------------------------------- annotations
     def annotation_units(self, df: DataFrame,
@@ -210,9 +193,8 @@ class CompiledValidator:
         import json as _json
 
         from .operators.bestmatch import _jsonpath_to_pointer
-        valid = self.valid_column
         structs = [
-            F.when(valid & F.coalesce(a.pred, F.lit(False)), F.struct(
+            F.when(F.coalesce(a.pred, F.lit(False)), F.struct(
                 F.lit(a.keyword).alias("keyword"),
                 F.lit("/" + a.schema_path).alias("keywordLocation"),
                 F.lit(a.json_path).alias("json_path"),
@@ -220,22 +202,16 @@ class CompiledValidator:
             ))
             for a in self.annotations
         ]
-        ddl = ("array<struct<keyword:string,keywordLocation:string,"
-               "json_path:string,annotation_json:string>>")
-        arr = (F.filter(F.array(*structs), lambda x: x.isNotNull())
-               if structs else F.array().cast(ddl))
-        keep = [F.col(c) for c in id_cols]
-        exploded = (df.select(*keep, arr.alias("_anns"))
-                    .filter(F.size("_anns") > 0)
-                    .select(*keep, F.explode("_anns").alias("_a")))
-        return exploded.select(
-            *keep,
+        ddl = ("keyword:string,keywordLocation:string,json_path:string,"
+               "annotation_json:string")
+        return _violation_rows(df.filter(self.valid_column), structs,
+                               id_cols, ddl).select(
+            *id_cols,
             F.lit(True).alias("valid"),
-            F.col("_a.keyword").alias("keyword"),
-            F.col("_a.keywordLocation").alias("keywordLocation"),
-            _jsonpath_to_pointer(F.col("_a.json_path"))
+            "keyword", "keywordLocation",
+            _jsonpath_to_pointer(F.col("json_path"))
             .alias("instanceLocation"),
-            F.col("_a.annotation_json").alias("annotation_json"))
+            "annotation_json")
 
     # ------------------------------------------------------------- manifest
     def manifest(self, df: DataFrame,

@@ -157,6 +157,51 @@ def test_violation_rows_shape(spark):
     assert (r["id"], r["keyword"], r["json_path"]) == ("a", "minimum", "$.x")
     assert r["schema_path"] == "properties/x/minimum"
 
+    # NULL-bearing rows under a Python-fallback pattern (the comment
+    # group forces the pandas UDF), a numeric bound and `required`:
+    # violations() must equal the per-check definition row for row
+    df = spark.createDataFrame(
+        [("a", "1x", 5), ("b", "2x", 50), ("c", None, 50), ("d", "1y", None),
+         ("e", None, None), ("f", "9", 7)], "id string, s string, x int")
+    v = CompiledValidator(
+        {"required": ["x"],
+         "properties": {"s": {"pattern": "(?#c)^1"},
+                        "x": {"maximum": 10}}}, df)
+    fields = ["keyword", "json_path", "schema_path", "message",
+              "failing_value", "type_match"]
+    want = []
+    for c in v.checks:
+        want += df.filter(~F.coalesce(c.pred, F.lit(True))).select(
+            "id", F.lit(c.keyword), F.lit(c.json_path),
+            F.lit(c.schema_path), c.message.cast("string"),
+            c.failing_value.cast("string"),
+            c.type_match if c.type_match is not None
+            else F.lit(False)).collect()
+    got = v.violations(df, ["id"])
+    assert sorted(map(tuple, got.select("id", *fields).collect())) \
+        == sorted(map(tuple, want))
+    assert sorted(r[0] for r in want) == ["b", "b", "c", "d", "e", "f"]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    # one pandas UDF: at most one Python node below the validity filter
+    # plus one above it
+    assert plan.count("EvalPython") <= 2, plan
+
+
+def test_wide_contract_validity_chain(spark):
+    """800 checks over 400 columns: the validity AND chain is a
+    balanced tree, so Catalyst's recursive walks stay shallow (a
+    left-deep chain this long overflowed the JVM stack)."""
+    cols = [f"c{i}" for i in range(400)]
+    df = spark.range(8).select(*[(F.col("id") + i).cast("int").alias(c)
+                                 for i, c in enumerate(cols)])
+    v = CompiledValidator(
+        {"properties": {c: {"minimum": 0, "maximum": 400} for c in cols}},
+        df)
+    assert len(v.checks) == 800
+    # row k fails `maximum` on the k-1 columns c(401-k)..c399
+    assert v.counts(df) == (2, 6)
+    assert v.violations(df).count() == sum(range(1, 7))
+
 
 def test_check_schema_rejects_malformed():
     with pytest.raises(SchemaCompileError):

@@ -3,11 +3,23 @@ unevaluated* keyword files must execute with zero failures (skips are
 documented data-model deltas, counted but not failures).
 
 Full-suite numbers live in CONFORMANCE.md (tools/run_conformance.py).
+The corpus-reading tests skip, naming the missing directory, where the
+official suite is not checked out; the committed CONFORMANCE*.md files
+keep the recorded results.
 """
+
+import os
 
 import pytest
 
-from jsonschema_spark.conformance import run_suite
+from jsonschema_spark.conformance import OUTPUT_TESTS_DIR, SUITE_DIR, run_suite
+
+
+def _needs(path):
+    return pytest.mark.skipif(
+        not os.path.isdir(path),
+        reason=f"official JSON-Schema-Test-Suite directory {path} is "
+               f"absent; recorded results are in CONFORMANCE*.md")
 
 FILES = [
     "type.json", "enum.json", "const.json", "minimum.json", "maximum.json",
@@ -21,6 +33,7 @@ FILES = [
 
 
 @pytest.mark.slow
+@_needs(SUITE_DIR)
 def test_suite_keyword_files_zero_failures(spark):
     rep = run_suite(spark, "draft2020-12", files=FILES)
     fails = rep.failures()
@@ -31,6 +44,7 @@ def test_suite_keyword_files_zero_failures(spark):
 
 
 @pytest.mark.slow
+@_needs(SUITE_DIR)
 def test_draft7_legacy_keywords_zero_failures(spark):
     rep = run_suite(spark, "draft7", files=[
         "items.json", "additionalItems.json", "dependencies.json",
@@ -43,6 +57,7 @@ def test_draft7_legacy_keywords_zero_failures(spark):
 
 
 @pytest.mark.slow
+@_needs(SUITE_DIR)
 def test_draft4_boolean_exclusive_zero_failures(spark):
     rep = run_suite(spark, "draft4", files=[
         "minimum.json", "maximum.json", "type.json",
@@ -51,6 +66,7 @@ def test_draft4_boolean_exclusive_zero_failures(spark):
     assert rep.counts()["pass"] > 40
 
 
+@_needs(OUTPUT_TESTS_DIR)
 def test_output_tests_corpus(spark):
     """VERDICT-r3 #2: the official output-tests content suite (basic
     format) passes 100% for both drafts that define it — the engine's

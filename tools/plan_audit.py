@@ -82,9 +82,9 @@ def main() -> None:
     # 2. violations with pre-explode filter: still a narrow scan
     cases.append((
         "violations",
-        "iter_errors: size(violations)>0 filter BEFORE explode, so "
-        "passing rows never materialize error structs; narrow (no "
-        "exchange at all)",
+        "iter_errors: the pushed filter is the boolean validity chain "
+        "(valid = false) BEFORE explode, so passing rows never "
+        "materialize error structs; narrow (no exchange at all)",
         v.violations(img, ["image_id"])))
 
     # 3. manifest: partial+final agg only
