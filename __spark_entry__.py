@@ -322,12 +322,12 @@ def _dup_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edges are a pure function of the input table."""
     # key on the EDGE-PRODUCING modules (not _GEN_FP, which tracks the
     # image/codec generators) AND a content fingerprint of the source
-    # table: a change to the Jaccard join / fingerprint kernel OR
-    # regenerated testdata at the same path must invalidate the
-    # persisted edges (the repo-wide /tmp cache convention, ADVICE-r3)
+    # table: a change to the Jaccard join / fingerprint kernel / the
+    # bounded-collect gate OR regenerated testdata at the same path
+    # must invalidate the persisted edges (the repo-wide /tmp cache convention, ADVICE-r3)
     fp = "".join(_fingerprint(os.path.join(
         _REPO, "jsonschema_spark", "operators", f"{mod}.py"))
-        for mod in ("dedup", "text"))[:16]
+        for mod in ("dedup", "kernels", "text"))[:16]
     src_fp = _fingerprint(os.path.join(sf_dir, "documents.parquet"))
     # the edge-defining parameters live in THIS file, outside the
     # fingerprinted modules — embed them so retuning the threshold
@@ -738,13 +738,7 @@ def q_embeddings_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path the brute-force oracle queries baseline."""
     from jsonschema_spark.operators.similarity import ivf_topk
     e = _t(spark, sf_dir, "embeddings")
-    # approx_n (one metadata-cheap count) switches the quantizer-sample
-    # branch from hash-thinning (which under-samples here and pays a
-    # second full collect) to the full-coverage fraction path — the
-    # training matrix is IDENTICAL at these scales (frac = 1.0), one
-    # driver collect cheaper (r6)
-    return ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=3,
-                    approx_n=e.count())
+    return ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=3)
 
 
 def q_embeddings_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,10 +755,7 @@ def q_embeddings_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_probe — the query pins the *contract*, not the tuning.
     truth = brute_force_topk(e, "vec_id", "embedding", k=3) \
         .select("id", "neighbour_id")
-    # approx_n: same identical-training-matrix shortcut as
-    # q_embeddings_ann_ivf (frac = 1.0 at these scales)
-    ann = ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=12,
-                   approx_n=e.count()) \
+    ann = ivf_topk(e, "vec_id", "embedding", k=3, n_lists=16, n_probe=12) \
         .select("id", "neighbour_id").withColumn("_hit", F.lit(1))
     # ONE action: truth and ann pipelines each execute once
     row = (truth.join(ann, ["id", "neighbour_id"], "left")
@@ -1773,15 +1764,18 @@ def oracle_sql() -> dict[str, str]:
         """,
         "duplicate_custkeys": """
             SELECT o_custkey, count(*) AS dup_count
-            FROM orders GROUP BY o_custkey HAVING count(*) > 1
+            FROM orders WHERE o_custkey IS NOT NULL
+            GROUP BY o_custkey HAVING count(*) > 1
         """,
         "duplicate_custkeys_sortmerge": """
             SELECT o_custkey, count(*) AS dup_count
-            FROM orders GROUP BY o_custkey HAVING count(*) > 1
+            FROM orders WHERE o_custkey IS NOT NULL
+            GROUP BY o_custkey HAVING count(*) > 1
         """,
         "duplicate_custkeys_bucketed": """
             SELECT o_custkey, count(*) AS dup_count
-            FROM orders GROUP BY o_custkey HAVING count(*) > 1
+            FROM orders WHERE o_custkey IS NOT NULL
+            GROUP BY o_custkey HAVING count(*) > 1
         """,
         "referential_orphans": """
             SELECT 'lineitem.l_orderkey->orders' AS fk, count(*) AS orphans

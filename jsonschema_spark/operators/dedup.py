@@ -1,8 +1,8 @@
 """Deduplication operators for training-data pipelines.
 
-Exact, MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine
-near-dup — all expressed with native higher-order functions (aggregate /
-transform / zip_with) so signatures are computed JVM-side in one narrow
+Exact, MinHash+LSH, SimHash and n-gram Jaccard near-dup — all
+expressed with native higher-order functions (aggregate / transform /
+zip_with) so signatures are computed JVM-side in one narrow
 pass; the only shuffles are the band/bucket groupBys, which carry
 signatures (tens of bytes), never documents.  That property is what makes
 the plan survive 100 TB: document payloads stay columnar in the scan and
@@ -16,6 +16,11 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .kernels import (bounded_collect, empty, launch, list_matrix, track,
+                      worker_memo)
+# one registry releases what every operator here persisted
+from .kernels import clear_persisted as clear_dedup_cache  # noqa: F401
 
 MAX_HASH = (1 << 62)
 
@@ -149,7 +154,7 @@ def minhash_signatures_df(df: DataFrame, id_col: str, text_col: str,
                     .alias("_sig")))
 
 
-def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
+def _minhash_pairs_kernel(spark, sigs, num_hashes: int, bands: int,
                           min_jaccard: float, id_dt: str) -> DataFrame:
     """Bounded-corpus banding kernel: result-identical to the
     slice-keyed LSH self-join below, for corpora whose signature frame
@@ -166,22 +171,19 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
     ``(SIG[ia] == SIG[ib]).sum(1)`` gather — exact integer equality on
     the same signature values, est = agree/num_hashes in the same IEEE
     double.  Only est-passing pairs become rows; the caller's
-    (id_a, id_b) max-aggregation dedups across bands."""
+    (id_a, id_b) max-aggregation dedups across bands.  ``sigs`` is the
+    collected ``(_id, _sig)`` Arrow table."""
     import numpy as np
 
     rows = num_hashes // bands
     min_agree = int(math.ceil(min_jaccard * num_hashes))
-    spark = sigs.sparkSession
     out_schema = f"id_a {id_dt}, id_b {id_dt}, _agree int"
-    # Arrow transfer (toPandas) instead of the pickled-row collect:
-    # same long values, measured ~3x less driver time on the
-    # array-of-64-longs column at 50k rows
-    pdf = sigs.toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame([], out_schema)
-    sort_ix = pdf["_id"].to_numpy().argsort(kind="stable")
-    ids = pdf["_id"].to_numpy()[sort_ix].tolist()
-    SIG = np.asarray(list(pdf["_sig"]), dtype=np.int64)[sort_ix]
+    if sigs.num_rows == 0:
+        return empty(spark, out_schema)
+    raw_ids = sigs.column("_id").to_numpy()
+    sort_ix = raw_ids.argsort(kind="stable")
+    ids = raw_ids[sort_ix].tolist()
+    SIG = list_matrix(sigs.column("_sig"), np.int64)[sort_ix]
     # one byte per signature column for the early-reject screen
     DIG = (SIG & 0xFF).astype(np.uint8)
     bc = spark.sparkContext.broadcast((ids, SIG, DIG))
@@ -193,9 +195,7 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
     # tasks (identical union of pairs); enumeration is re-run per
     # stride task but is a tiny fraction of the chunk work.
     salt = max(1, (spark.sparkContext.defaultParallelism * 2) // bands)
-    _PA = {"bigint": "int64", "int": "int32", "smallint": "int16",
-           "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA.get(id_dt, "string")
+    typ = sigs.schema.field("_id").type
 
     def kernel(batches):
         import pyarrow as pa
@@ -286,7 +286,6 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
                     continue
                 aa = np.concatenate(out_a)
                 if len(aa):
-                    typ = getattr(pa, pa_id_type)()
                     bb = np.concatenate(out_b)
                     # zero-copy for numeric id arrays; object arrays
                     # (string ids) need the python-list conversion
@@ -299,14 +298,15 @@ def _minhash_pairs_kernel(sigs: DataFrame, num_hashes: int, bands: int,
                                   type=pa.int32())],
                         names=["id_a", "id_b", "_agree"])
 
-    blocks = spark.range(0, bands * salt, 1, numPartitions=bands * salt)
-    return blocks.mapInArrow(kernel, out_schema)
+    return launch(spark, kernel, out_schema, bands * salt)
 
 
-#: corpora at or below this row count take the broadcast banding
-#: kernel in :func:`minhash_candidates` (signature matrix ~0.5 KB/row
-#: -> ~300 MB broadcast at the cap); larger corpora use the
-#: distributed slice-keyed self-join.  Raised 200k -> 600k in r6: the
+#: row cap of the bounded collect that gates the three text kernels
+#: (:func:`minhash_candidates`, :func:`ngram_jaccard_pairs`,
+#: :func:`hamming_verified_pairs`); above it each takes its distributed
+#: path.  For minhash (signature matrix ~0.5 KB/row -> ~300 MB
+#: broadcast at the cap) that is the slice-keyed self-join.  Raised
+#: 200k -> 600k in r6: the
 #: kernel measured 31 s at 200k docs / ~800M band collisions (the
 #: byte-digest screen makes collision cost ~128 B/pair), while the
 #: join's per-collision interpreted zip_with would take ~25 minutes
@@ -319,10 +319,7 @@ MINHASH_KERNEL_MAX_ROWS = 600_000
 def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 64, bands: int = 16,
                        shingle_k: int = 5,
-                       min_jaccard: float = 0.5,
-                       approx_n: int = None,
-                       small_corpus_threshold: int =
-                       MINHASH_KERNEL_MAX_ROWS) -> DataFrame:
+                       min_jaccard: float = 0.5) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH.
 
     Pipeline: shingle -> signature (codegen'd explode+agg) -> explode
@@ -351,26 +348,36 @@ def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
     identical sessions, a coin-flip this operator must not depend on,
     so the compact HOF form is deliberate.
 
-    Small-corpus fast path: when the input row count (``approx_n``, or
-    one metadata-cheap ``df.count()``) is at most
-    ``small_corpus_threshold``, the banding runs through
-    :func:`_minhash_pairs_kernel` instead of the self-join — identical
-    pair set (parity pinned in tests), ~4x at sf1.0.  Pass
-    ``small_corpus_threshold=0`` to force the distributed join."""
-    rows = num_hashes // bands
+    Bounded-collect gate: the signature frame is collected through
+    :func:`kernels.bounded_collect` capped at
+    :data:`MINHASH_KERNEL_MAX_ROWS` signatures.  When it fits, the
+    banding runs through :func:`_minhash_pairs_kernel` instead of the
+    self-join — identical pair set (parity pinned in tests at cap = n
+    and n - 1), ~4x at sf1.0.  Over the cap the collect stops at
+    cap + 1 rows and the self-join recomputes the signatures, so the
+    probe's signature pass is paid twice."""
     sigs = minhash_signatures_df(df, id_col, text_col, num_hashes,
                                  shingle_k)
-    n = approx_n if approx_n is not None else \
-        (df.count() if small_corpus_threshold > 0 else None)
-    if n is not None and n <= small_corpus_threshold:
+    tbl = bounded_collect(sigs, MINHASH_KERNEL_MAX_ROWS)
+    if tbl is not None:
         id_dt = df.schema[id_col].dataType.simpleString()
-        pairs = _minhash_pairs_kernel(sigs, num_hashes, bands,
-                                      min_jaccard, id_dt)
-        est = F.col("_agree") / F.lit(float(num_hashes))
-        return (pairs.select("id_a", "id_b", est.alias("est_jaccard"))
-                .groupBy("id_a", "id_b")
-                .agg(F.max("est_jaccard").alias("est_jaccard"))
-                .filter(F.col("est_jaccard") >= min_jaccard))
+        pairs = _minhash_pairs_kernel(df.sparkSession, tbl, num_hashes,
+                                      bands, min_jaccard, id_dt)
+    else:
+        pairs = _minhash_band_join(sigs, num_hashes, bands, min_jaccard)
+    est = F.col("_agree") / F.lit(float(num_hashes))
+    return (pairs.select("id_a", "id_b", est.alias("est_jaccard"))
+            .groupBy("id_a", "id_b")
+            .agg(F.max("est_jaccard").alias("est_jaccard"))
+            .filter(F.col("est_jaccard") >= min_jaccard))
+
+
+def _minhash_band_join(sigs: DataFrame, num_hashes: int, bands: int,
+                       min_jaccard: float) -> DataFrame:
+    """The distributed side of :func:`minhash_candidates`: the
+    slice-keyed band self-join, ``(id_a, id_b, _agree)`` per band
+    collision that passes the agreement threshold."""
+    rows = num_hashes // bands
     slices = F.array(*[
         F.struct(F.lit(bb).alias("_band"),
                  F.struct(*[F.element_at("_sig", bb * rows + r + 1)
@@ -388,18 +395,13 @@ def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
         lambda v: v))
     min_agree = int(math.ceil(min_jaccard * num_hashes))
 
-    pairs = (a.join(b, (F.col("a._band") == F.col("b._band"))
-                    & (F.col("a._slice") == F.col("b._slice"))
-                    & (F.col("a._id") < F.col("b._id"))
-                    & (agree >= F.lit(min_agree)))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"),
-                     agree.alias("_agree")))
-    est = F.col("_agree") / F.lit(float(num_hashes))
-    return (pairs.select("id_a", "id_b", est.alias("est_jaccard"))
-            .groupBy("id_a", "id_b")
-            .agg(F.max("est_jaccard").alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= min_jaccard))
+    return (a.join(b, (F.col("a._band") == F.col("b._band"))
+                   & (F.col("a._slice") == F.col("b._slice"))
+                   & (F.col("a._id") < F.col("b._id"))
+                   & (agree >= F.lit(min_agree)))
+            .select(F.col("a._id").alias("id_a"),
+                    F.col("b._id").alias("id_b"),
+                    agree.alias("_agree")))
 
 
 # --------------------------------------------- bounded bucket self-join ---
@@ -447,36 +449,6 @@ def chunked_bucket_pairs(keyed: DataFrame, bucket_cols: Sequence[str],
 
 
 # ------------------------------------------------------------ simhash -----
-
-def simhash(items: Column, bits: int = 64) -> Column:
-    """SimHash over an item set as an array<int> of sign bits: ONE
-    64-bit hash per item, bit b's +-1 contribution extracted with literal
-    shifts (cheap bit ops, not per-bit re-hashing).  One native aggregate
-    pass over the items."""
-    if bits > 64:
-        raise ValueError(f"bits={bits}: one xxhash64 supplies at most "
-                         "64 sign bits")
-    init = F.array_repeat(F.lit(0), bits)
-
-    def contribs(it: Column) -> Column:
-        h = F.xxhash64(it)
-        return F.array(*[
-            F.when(F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1,
-                   F.lit(1)).otherwise(F.lit(-1))
-            for b in range(bits)
-        ])
-
-    counts = F.aggregate(
-        items, init,
-        lambda acc, it: F.zip_with(acc, contribs(it), lambda a, v: a + v))
-    return F.transform(counts, lambda c: (c > 0).cast("int"))
-
-
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between two bit arrays (native)."""
-    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x != y),
-                           lambda v: v))
-
 
 def simhash_signatures_df(df: DataFrame, id_col: str, text_col: str,
                           bits: int = 64) -> DataFrame:
@@ -537,26 +509,6 @@ def simhash_packed_df(df: DataFrame, id_col: str, text_col: str,
     return sigs.select("_id", packed.alias("_sh"))
 
 
-#: persisted signature frames, released by :func:`clear_dedup_cache`
-_DEDUP_PERSISTED: list = []
-
-
-def clear_dedup_cache() -> int:
-    """Unpersist every signature frame a prior :func:`simhash_duplicates`
-    call left cached (needed while its returned DataFrame is being
-    consumed — Spark cannot unpersist lazily; long-lived applications
-    call this once results are materialized, mirroring
-    ``similarity.clear_ivf_cache``).  Returns frames released."""
-    n = 0
-    while _DEDUP_PERSISTED:
-        try:
-            _DEDUP_PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
 def simhash_duplicates(df: DataFrame, id_col: str, text_col: str,
                        bits: int = 64, max_hamming: int = 3,
                        band_bits: int = 16,
@@ -590,8 +542,7 @@ def simhash_duplicates(df: DataFrame, id_col: str, text_col: str,
     — which also warms the cache) via :func:`resolve_pair_strategy`."""
     sigs = simhash_packed_df(df, id_col, text_col, bits)
     if cache_signatures:
-        sigs = sigs.cache()
-        _DEDUP_PERSISTED.append(sigs)
+        sigs = track(sigs.cache())
     if strategy == "auto" and approx_n is None:
         approx_n = sigs.count()
     strategy = resolve_pair_strategy(strategy, approx_n, max_hamming)
@@ -878,9 +829,8 @@ def _jaccard_pairs_from_posting(posting: DataFrame, min_jaccard: float,
             .filter(F.col("jaccard") >= min_jaccard))
 
 
-def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
-                        n: int, min_jaccard: float, max_bucket: int,
-                        id_dt: str) -> DataFrame:
+def _ngram_pairs_kernel(spark, docs, n: int, min_jaccard: float,
+                        max_bucket: int, id_dt: str) -> DataFrame:
     """Bounded-corpus inverted-index kernel: result-identical to the
     posting-list self-join in :func:`ngram_jaccard_pairs` (same gated
     fast-path contract as ``_minhash_pairs_kernel``).
@@ -899,43 +849,29 @@ def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
     byte-for-byte: ``trim`` strips 0x20 only, Java-regex ``\\s`` is the
     ASCII class, empty tokens are KEPT (split keeps leading/trailing
     empties), and a doc with fewer than n words contributes its single
-    short joined gram."""
+    short joined gram.  ``docs`` is the collected ``(id, text)`` Arrow
+    table of the non-NULL texts."""
+    import uuid
+
     import numpy as np
 
-    spark = df.sparkSession
     out_schema = f"id_a {id_dt}, id_b {id_dt}, jaccard double"
-    rows = (df.filter(F.col(text_col).isNotNull())
-            .select(id_col, text_col).collect())
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    rows.sort(key=lambda r: r[0])
-    ids = [r[0] for r in rows]
-    txts = [r[1] for r in rows]
+    if docs.num_rows == 0:
+        return empty(spark, out_schema)
+    raw_ids = docs.column(0).to_pylist()
+    raw_txts = docs.column(1).to_pylist()
+    sort_ix = sorted(range(len(raw_ids)), key=raw_ids.__getitem__)
+    ids = [raw_ids[i] for i in sort_ix]
+    txts = [raw_txts[i] for i in sort_ix]
     bc = spark.sparkContext.broadcast((ids, txts))
-    import uuid
-    bc_token = uuid.uuid4().hex
+    token = uuid.uuid4().hex
     n_docs = len(ids)
     par = spark.sparkContext.defaultParallelism
     n_blocks = min(max(4 * par, 1), n_docs)
     mj = float(min_jaccard)
-    _PA = {"bigint": "int64", "int": "int32", "smallint": "int16",
-           "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA.get(id_dt, "string")
+    typ = docs.schema.field(0).type
 
-    def _prep(pid):
-        # resolve the cache through the worker-side module import:
-        # cloudpickle copies a nested function's referenced globals BY
-        # VALUE into every task's closure, so naming the module global
-        # directly hands each task a FRESH dict and the cache never
-        # hits (measured: prep re-ran on all 128 tasks, ~6 s wall).
-        # The module is importable on workers by the same contract the
-        # kernel's module-level helper references already rely on.
-        from jsonschema_spark.operators.dedup import _AUDIT_PREP_CACHE \
-            as cache
-        key = (bc_token, n, max_bucket, pid)
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
+    def _prep():
         import re
         p_ids, p_txts = bc.value
         ws_re = re.compile(r"[ \t\n\x0b\x0c\r]+")
@@ -968,17 +904,12 @@ def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
         gs = g_kept[order]
         inv_indptr = np.searchsorted(
             gs, np.arange(len(vocab) + 1, dtype=np.int64))
-        prep = (p_ids, flat, indptr, sizes, kept, inv_docs, inv_indptr)
-        cache.clear()
-        cache[key] = prep
-        return prep
+        return (p_ids, flat, indptr, sizes, kept, inv_docs, inv_indptr)
 
     def kernel(batches):
-        import os as _os
-
         import pyarrow as pa
         p_ids, flat, indptr, sizes, kept, inv_docs, inv_indptr = \
-            _prep(_os.getpid())
+            worker_memo(token, _prep)
         id_arr = np.asarray(p_ids)
         for batch in batches:
             for blk in batch.column(0).to_pylist():
@@ -1013,40 +944,38 @@ def _ngram_pairs_kernel(df: DataFrame, id_col: str, text_col: str,
                         out_b.extend(id_arr[js[keep]].tolist())
                         out_j.extend(jac[keep].tolist())
                 if out_a:
-                    typ = getattr(pa, pa_id_type)()
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(out_a, type=typ),
                          pa.array(out_b, type=typ),
                          pa.array(out_j, type=pa.float64())],
                         names=["id_a", "id_b", "jaccard"])
 
-    blocks = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
-    return blocks.mapInArrow(kernel, out_schema)
+    return launch(spark, kernel, out_schema, n_blocks)
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, min_jaccard: float = 0.6,
-                        max_bucket: int = 200,
-                        approx_n: int = None,
-                        small_corpus_threshold: int =
-                        MINHASH_KERNEL_MAX_ROWS) -> DataFrame:
+                        max_bucket: int = 200) -> DataFrame:
     """Exact word-n-gram Jaccard pairs (see _jaccard_pairs_from_posting
     for the posting-list shape).  The posting list is generated
     codegen-side: split once per doc, explode gram start indices, and
     slice+join per exploded row — no interpreted transform-HOF.
 
-    Small-corpus fast path (r6): at or below
-    ``small_corpus_threshold`` input rows (``approx_n``, or one
-    metadata-cheap count) the pairs come from
-    :func:`_ngram_pairs_kernel` — identical output (parity pinned in
-    tests; the sf1.0 posting join emitted 114M co-pair rows for a
-    25-pair result).  ``small_corpus_threshold=0`` forces the join."""
-    n_rows = approx_n if approx_n is not None else \
-        (df.count() if small_corpus_threshold > 0 else None)
-    if n_rows is not None and n_rows <= small_corpus_threshold:
+    Bounded-collect gate (r6 kernel): the non-NULL ``(id, text)`` rows
+    are collected through :func:`kernels.bounded_collect` capped at
+    :data:`MINHASH_KERNEL_MAX_ROWS`; when they fit, the pairs come
+    from :func:`_ngram_pairs_kernel` — identical output (parity pinned
+    in tests at cap = n and n - 1; the sf1.0 posting join emitted 114M
+    co-pair rows for a 25-pair result).  Over the cap the posting join
+    scans the texts again, after the probe has read up to cap + 1
+    rows of them."""
+    docs = bounded_collect(df.filter(F.col(text_col).isNotNull())
+                           .select(id_col, text_col),
+                           MINHASH_KERNEL_MAX_ROWS)
+    if docs is not None:
         id_dt = df.schema[id_col].dataType.simpleString()
-        return _ngram_pairs_kernel(df, id_col, text_col, n,
-                                   min_jaccard, max_bucket, id_dt)
+        return _ngram_pairs_kernel(df.sparkSession, docs, n, min_jaccard,
+                                   max_bucket, id_dt)
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     cnt = F.greatest(F.size("_w") - (n - 1), F.lit(1))
     posting = (ensure_parallelism(df.filter(F.col(text_col).isNotNull()))
@@ -1110,14 +1039,6 @@ def verify_pairs_exact_jaccard(pairs: DataFrame, df: DataFrame,
             .filter(F.col("jaccard") >= min_jaccard))
 
 
-#: per-worker shingle-table memo for :func:`hamming_verified_pairs` —
-#: keyed by (broadcast id, k, pid) so a reused Python worker builds the
-#: interned shingle arrays once per panel, not once per task (guide
-#: §4.5 heavy-init-once; the module is importable on executors, so the
-#: global survives across tasks)
-_AUDIT_PREP_CACHE: dict = {}
-
-
 def _popcount64(x):
     """Vectorized popcount over a uint64 numpy array (bitwise_count on
     numpy >= 2, SWAR fallback otherwise)."""
@@ -1165,28 +1086,44 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
 
     Anchors are strided across blocks so early/late blocks carry equal
     suffix work.  Ties/floats: jaccard = inter/(na+nb-inter) in IEEE
-    double, identical to the Spark expression it replaces."""
+    double, identical to the Spark expression it replaces.
+
+    Bounded-collect gate: the signatures and the texts are each
+    collected through :func:`kernels.bounded_collect` capped at
+    :data:`MINHASH_KERNEL_MAX_ROWS`.  A panel over the cap runs the
+    composition above instead (parity pinned in tests at cap = n and
+    n - 1), recomputing the signatures the probe already paid for."""
+    import uuid
+
     import numpy as np
 
     id_dt = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_dt}, id_b {id_dt}, jaccard double"
     spark = df.sparkSession
 
-    sigs = simhash_packed_df(df, id_col, text_col, bits)
-    sig_rows = sigs.collect()
-    if not sig_rows:
-        return spark.createDataFrame([], out_schema)
-    texts = {r[0]: r[1] for r in
-             df.select(id_col, text_col)
-               .filter(F.col(text_col).isNotNull()).collect()}
-    sig_rows.sort(key=lambda r: r[0])
-    ids = [r[0] for r in sig_rows]
-    codes = np.array([r[1] for r in sig_rows], dtype=np.int64) \
+    sigs = bounded_collect(simhash_packed_df(df, id_col, text_col, bits),
+                           MINHASH_KERNEL_MAX_ROWS)
+    docs = None if sigs is None else bounded_collect(
+        df.select(id_col, text_col).filter(F.col(text_col).isNotNull()),
+        MINHASH_KERNEL_MAX_ROWS)
+    if docs is None:
+        cand = simhash_duplicates(df, id_col, text_col, bits=bits,
+                                  max_hamming=max_hamming,
+                                  band_bits=band_bits)
+        return verify_pairs_exact_jaccard(cand, df, id_col, text_col,
+                                          k=k, min_jaccard=min_jaccard)
+    if sigs.num_rows == 0:
+        return empty(spark, out_schema)
+    texts = dict(zip(docs.column(0).to_pylist(),
+                     docs.column(1).to_pylist()))
+    raw_ids = sigs.column("_id").to_numpy()
+    sort_ix = raw_ids.argsort(kind="stable")
+    ids = raw_ids[sort_ix].tolist()
+    codes = sigs.column("_sh").to_numpy()[sort_ix].astype(np.int64) \
         .view(np.uint64)
     txt_list = [texts.get(i) for i in ids]
     bc = spark.sparkContext.broadcast((ids, codes, txt_list))
-    import uuid
-    bc_token = uuid.uuid4().hex       # worker-memo key for this panel
+    token = uuid.uuid4().hex
 
     n = len(ids)
     n_bands = bits // band_bits
@@ -1195,20 +1132,9 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
     n_blocks = min(max(4 * par, 1), n)
     mh = np.uint64(max_hamming)
     mj = float(min_jaccard)
-    _PA_TYPES = {"bigint": "int64", "int": "int32", "smallint": "int16",
-                 "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA_TYPES.get(id_dt, "string")
+    typ = sigs.schema.field("_id").type
 
-    def _prep(bc_id, pid):
-        # worker-side module import: see the ngram kernel's _prep —
-        # naming the module global directly ships a fresh by-value
-        # dict per task and defeats the cache entirely
-        from jsonschema_spark.operators.dedup import _AUDIT_PREP_CACHE \
-            as cache
-        key = (bc_id, k, pid)
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
+    def _prep():
         p_ids, p_codes, p_txt = bc.value
         # CSR of interned shingle ids: intersection sizes then come
         # from one boolean lookup-table gather + reduceat per anchor
@@ -1244,17 +1170,12 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
             one_hot = np.zeros((len(p_txt), len(vocab)),
                                dtype=np.float32)
             one_hot[np.repeat(np.arange(len(p_txt)), sizes), flat] = 1.0
-        prep = (p_ids, p_codes, flat, indptr, sizes, lut, one_hot)
-        cache.clear()                 # one panel per worker at a time
-        cache[key] = prep
-        return prep
+        return (p_ids, p_codes, flat, indptr, sizes, lut, one_hot)
 
     def kernel(batches):
-        import os as _os
-
         import pyarrow as pa
         p_ids, p_codes, flat, indptr, sizes, lut, one_hot = \
-            _prep(bc_token, _os.getpid())
+            worker_memo(token, _prep)
         id_arr = np.asarray(p_ids)
         # pigeonhole: max_hamming set bits cannot occupy every one of
         # n_bands bands when max_hamming < n_bands, so the band-share
@@ -1316,53 +1237,10 @@ def hamming_verified_pairs(df: DataFrame, id_col: str, text_col: str,
                         out_b.extend(id_arr[js[keep]].tolist())
                         out_j.extend(jac[keep].tolist())
                 if out_a:
-                    typ = getattr(pa, pa_id_type)()
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(out_a, type=typ),
                          pa.array(out_b, type=typ),
                          pa.array(out_j, type=pa.float64())],
                         names=["id_a", "id_b", "jaccard"])
 
-    blocks = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
-    return blocks.mapInArrow(kernel, out_schema)
-
-
-# ----------------------------------------------- embedding near-dup -------
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine over two array<float/double> columns — native zip_with +
-    aggregate (no UDF)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
-def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
-                              threshold: float = 0.95,
-                              n_planes: int = 16,
-                              seed: int = 42,
-                              chunk_size: int = 8192) -> DataFrame:
-    """Near-dup pairs by cosine >= threshold, blocked by a random-
-    hyperplane LSH bucket (deterministic planes) so the self-join is
-    bucket-local instead of a full cross join.
-
-    `n_planes` sign patterns cap the bucket key space at 2^n_planes, so
-    the bucket self-join shares SimHash's quadratic-at-scale ceiling —
-    :func:`chunked_bucket_pairs` bounds it the same way."""
-    from .similarity import hyperplane_signature
-    keyed = df.select(F.col(id_col).alias("_id"),
-                      F.col(vec_col).cast("array<double>").alias("_v"))
-    keyed = keyed.withColumn(
-        "_bucket", hyperplane_signature(keyed, "_v", n_planes, seed))
-    a, b = chunked_bucket_pairs(keyed, ["_bucket"], chunk_size)
-    pairs = (a.join(b, ["_bucket", "_chunk"])
-             .filter(F.col("a._id") < F.col("b._id"))
-             .select(F.col("a._id").alias("id_a"),
-                     F.col("b._id").alias("id_b"),
-                     cosine_similarity(F.col("a._v"),
-                                       F.col("b._v")).alias("cosine")))
-    return pairs.filter(F.col("cosine") >= threshold)
+    return launch(spark, kernel, out_schema, n_blocks)

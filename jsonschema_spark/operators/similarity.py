@@ -1,65 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k is the correctness baseline; the scale path is
-random-hyperplane LSH bucketing (deterministic, seeded planes) so the
-self-join is bucket-local — at 10^12 rows a full cross join is
-impossible, a bucketed one shuffles each vector once.  All math is
-native ``zip_with``/``aggregate`` (JVM codegen); no UDFs.
+:func:`ivf_topk` — a bounded-sample k-means quantizer and cell-local
+scoring, so work per query grows with the probed cells, not with the
+corpus (at 10^12 rows a full cross join is impossible).  Scoring is
+one BLAS matmul per Arrow batch or per cell.
 """
 
 from __future__ import annotations
 
 import math
-import random
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine_similarity
-
-
-def _vector_dim(df: DataFrame, vec_col: str) -> int:
-    first = df.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        return 0
-    return first["d"]
-
-
-def hyperplane_signature(df: DataFrame, vec_col: str,
-                         n_planes: int = 16, seed: int = 42,
-                         dim: Optional[int] = None) -> Column:
-    """LSH bucket id: sign pattern of `n_planes` seeded random
-    hyperplanes, folded into one long.  Planes are literal arrays
-    (constant-folded by Catalyst); the dot products are native."""
-    d = dim or _vector_dim(df, vec_col)
-    rng = random.Random(seed)
-    acc = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(rng.gauss(0.0, 1.0)) for _ in range(d)])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col).cast("array<double>"), plane,
-                       lambda x, w: x * w),
-            F.lit(0.0), lambda a, v: a + v)
-        acc = acc * 2 + (dot > 0).cast("long")
-    return acc
-
-
-def _normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(_id, _v) with _v L2-normalized ONCE per row, so pairwise cosine
-    after a join is a single dot product — norms are never recomputed
-    per pair (O(n*d) instead of O(n^2*d) extra work)."""
-    v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(F.aggregate(F.transform(v, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
-    return df.select(
-        F.col(id_col).alias("_id"),
-        F.transform(v, lambda x: x / norm).alias("_v"))
-
-
-def dot_product(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
+from .kernels import bounded_collect, empty, launch, list_matrix, track
+# one registry releases what every operator here persisted
+from .kernels import clear_persisted as clear_ivf_cache  # noqa: F401
 
 
 def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
@@ -74,7 +32,7 @@ def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
     and score against it with one BLAS matmul per Arrow batch.  This is
     ~100x faster than a pairwise HOF self-join (interpreted lambdas)
     and shuffles nothing.  For candidate sets beyond broadcast size use
-    :func:`lsh_topk`.
+    :func:`ivf_topk`.
 
     Selection (r6): per-anchor top-k used to be a full ``np.lexsort``
     over all N candidates — O(N log N) per anchor, 85%% of the
@@ -158,39 +116,6 @@ def brute_force_topk(df: DataFrame, id_col: str, vec_col: str,
                                 f"cosine double"))
 
 
-def lsh_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
-             n_planes: int = 8, seed: int = 42,
-             probes: int = 1) -> DataFrame:
-    """ANN top-k: candidates restricted to vectors sharing the
-    hyperplane-sign bucket (multi-probe: `probes` single-bit flips widen
-    recall).  Exact cosine rerank within buckets."""
-    dim = _vector_dim(df, vec_col)
-    keyed = df.select(F.col(id_col).alias("_id"),
-                      F.col(vec_col).cast("array<double>").alias("_v"))
-    keyed = keyed.withColumn(
-        "_sig", hyperplane_signature(keyed, "_v", n_planes, seed, dim))
-    # probe buckets: the bucket itself + single-bit flips
-    flips = [F.col("_sig")]
-    for b in range(min(probes - 1, n_planes)):
-        flips.append(F.col("_sig").bitwiseXOR(F.lit(1 << b)))
-    probed = keyed.select("_id", "_v",
-                          F.explode(F.array(*flips)).alias("_bucket"))
-    anchor = keyed.select(F.col("_id").alias("id"),
-                          F.col("_v").alias("av"),
-                          F.col("_sig").alias("_bucket"))
-    cand = (anchor.join(probed, "_bucket")
-            .filter(F.col("id") != F.col("_id"))
-            .select("id", "av", F.col("_id").alias("neighbour_id"),
-                    F.col("_v").alias("bv"))
-            .dropDuplicates(["id", "neighbour_id"]))
-    sim = cosine_similarity(F.col("av"), F.col("bv"))
-    scored = cand.select("id", "neighbour_id", sim.alias("cosine"))
-    w = (Window.partitionBy("id")
-         .orderBy(F.col("cosine").desc(), F.col("neighbour_id").asc()))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
-
-
 def _kmeans_spherical(X, n_lists: int, seed: int, iters: int = 10):
     """Driver-side spherical k-means over an already-bounded,
     L2-normalized sample (<=max_train rows by construction) — the
@@ -212,16 +137,15 @@ def _kmeans_spherical(X, n_lists: int, seed: int, iters: int = 10):
     return C
 
 
-#: corpora at or below this row count take the broadcast IVF kernel in
+#: row cap of the bounded collect that gates the broadcast IVF kernel in
 #: :func:`ivf_topk` (vector matrix ~0.5 KB/row at 64 float64 dims ->
 #: ~100 MB broadcast at the cap); larger corpora use the distributed
-#: cogroup path.  Same documented-bounded fast-path contract as
-#: ``dedup.MINHASH_KERNEL_MAX_ROWS``.
+#: cogroup path.  Same contract as ``dedup.MINHASH_KERNEL_MAX_ROWS``.
 IVF_KERNEL_MAX_ROWS = 200_000
 
 
 def _ivf_topk_kernel(spark, ids, M, H, centers, k: int, n_probe: int,
-                     chunk_size: int, id_dt: str) -> DataFrame:
+                     chunk_size: int, id_dt: str, typ) -> DataFrame:
     """Bounded-corpus IVF kernel: result-identical to the distributed
     cogroup path below, for corpora whose normalized vector matrix fits
     a broadcast.
@@ -242,12 +166,11 @@ def _ivf_topk_kernel(spark, ids, M, H, centers, k: int, n_probe: int,
     blockwise GEMM + vectorized ``argpartition`` selection.  Only
     per-chunk top-k candidates (n_probe*k per query) become rows; the
     caller's global window merge is unchanged, so the final top-k is
-    the same set under the same ordering."""
+    the same set under the same ordering.  ``typ`` is the Arrow type
+    of the ids."""
     import numpy as np
 
     out_schema = f"id {id_dt}, neighbour_id {id_dt}, cosine double"
-    if len(M) == 0:
-        return spark.createDataFrame([], out_schema)
     # identical assignment math to the distributed path's pandas UDF:
     # nearest n_probe cells in cosine order via argsort on -sims
     sims = M @ centers.T
@@ -261,14 +184,9 @@ def _ivf_topk_kernel(spark, ids, M, H, centers, k: int, n_probe: int,
     chunk = H % nchunks[cell0]
     groups = [(c, int(ch)) for c in range(n_cells) if counts[c]
               for ch in range(int(nchunks[c]))]
-    if not groups:
-        return spark.createDataFrame([], out_schema)
     bc = spark.sparkContext.broadcast(
         (ids, M, order, cell0, chunk, groups))
     kk = k
-    _PA = {"bigint": "int64", "int": "int32", "smallint": "int16",
-           "tinyint": "int8", "string": "string"}
-    pa_id_type = _PA.get(id_dt, "string")
 
     def kernel(batches):
         import pyarrow as pa
@@ -307,7 +225,6 @@ def _ivf_topk_kernel(spark, ids, M, H, centers, k: int, n_probe: int,
                     out_cos.append(vals[rr, cc])
                 aa = np.concatenate(out_id) if out_id else []
                 if len(aa):
-                    typ = getattr(pa, pa_id_type)()
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(aa.tolist(), type=typ),
                          pa.array(np.concatenate(out_nb).tolist(),
@@ -316,40 +233,15 @@ def _ivf_topk_kernel(spark, ids, M, H, centers, k: int, n_probe: int,
                                   type=pa.float64())],
                         names=["id", "neighbour_id", "cosine"])
 
-    blocks = spark.range(0, len(groups), 1,
-                         numPartitions=min(len(groups),
-                                           spark.sparkContext
-                                           .defaultParallelism))
-    return blocks.mapInArrow(kernel, out_schema)
-
-
-#: persisted IVF assignment frames, released by :func:`clear_ivf_cache`
-_IVF_PERSISTED: list = []
-
-
-def clear_ivf_cache() -> int:
-    """Unpersist every assignment frame a prior :func:`ivf_topk` call
-    left persisted (the cache is required while the returned DataFrame
-    is being consumed — Spark cannot unpersist lazily — so long-lived
-    applications call this once results are materialized).  Returns the
-    number of frames released."""
-    n = 0
-    while _IVF_PERSISTED:
-        try:
-            _IVF_PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    return launch(spark, kernel, out_schema, len(groups),
+                  min(len(groups), spark.sparkContext.defaultParallelism))
 
 
 def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
              n_lists: Optional[int] = 16, n_probe: int = 2,
              seed: int = 42, max_train: int = 100_000,
              chunk_size: int = 8192,
-             approx_n: Optional[int] = None,
-             small_corpus_threshold: int = IVF_KERNEL_MAX_ROWS
-             ) -> DataFrame:
+             approx_n: Optional[int] = None) -> DataFrame:
     """IVF (inverted-file) ANN top-k: KMeans coarse quantizer -> search
     only the `n_probe` nearest cells per query vector.
 
@@ -373,9 +265,18 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
     The query side of a group is additionally processed in fixed-size
     blocks inside the kernel so matmul intermediates stay bounded.
 
+    Bounded-collect gate: the raw vectors are collected through
+    :func:`kernels.bounded_collect` capped at
+    :data:`IVF_KERNEL_MAX_ROWS`.  When they fit, n is the collected row
+    count and :func:`_ivf_topk_kernel` scores them (result-identical to
+    the cogroup path; parity pinned in tests at cap = n and n - 1).
+    Over the cap the collect stops at cap + 1 rows and the cogroup path
+    scans the vectors again; `approx_n` then sets its training-sample
+    fraction (without it the sample is hash-thinned, see below).
+
     `n_lists=None` auto-sizes the quantizer to ~sqrt(n) (capped by
     `max_train`), the standard IVF balance between cell count and cell
-    size.
+    size; over the cap without `approx_n` that costs one count job.
 
     Contract: `id_col` values must be unique — self-match exclusion
     keys on id equality and the chunk salt hashes the id, so heavy id
@@ -383,30 +284,34 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
     chunk bound (the kernel raises rather than OOM in that case)."""
     import numpy as np
 
+    id_dt = df.schema[id_col].dataType.simpleString()
+    out_schema = f"id {id_dt}, neighbour_id {id_dt}, cosine double"
     keyed = df.select(F.col(id_col).alias("_id"),
                       F.col(vec_col).cast("array<double>").alias("_v"))
     norm = F.sqrt(F.aggregate(F.transform(F.col("_v"), lambda x: x * x),
                               F.lit(0.0), lambda a, x: a + x))
     keyed = keyed.select(
         "_id", F.transform("_v", lambda x: x / norm).alias("_v"))
+    raw = bounded_collect(
+        df.select(F.col(id_col).alias("_id"),
+                  F.col(vec_col).cast("array<double>").alias("_v"),
+                  F.xxhash64(F.col(id_col)).alias("_h")),
+        IVF_KERNEL_MAX_ROWS)
     # VERDICT-r3 #5: no unconditional count() — a full extra scan at
     # 100 TB.  n is needed only to (a) auto-size n_lists and (b) bound
-    # the training-sample fraction; an explicit n_lists with an
-    # `approx_n` hint (or none) needs neither, so no count job runs.
-    n: Optional[int] = approx_n
+    # the training-sample fraction; the kernel path knows it from the
+    # collect, and the cogroup path with an explicit n_lists runs
+    # without it.
+    n: Optional[int] = raw.num_rows if raw is not None else approx_n
     if n is None and n_lists is None:
         n = keyed.count()  # auto-sizing inherently needs n (documented)
+    if n == 0:
+        return empty(df.sparkSession, out_schema)
     if n_lists is None:
         n_lists = max(16, min(int(math.isqrt(n)), max_train // 4))
     unthinned = keyed.select("_v")
     sample_df = unthinned
     if n is not None:
-        if n == 0:
-            return keyed.sparkSession.createDataFrame(
-                [], f"id {df.schema[id_col].dataType.simpleString()}, "
-                    f"neighbour_id "
-                    f"{df.schema[id_col].dataType.simpleString()},"
-                    f" cosine double")
         frac = min(1.0, 1.25 * max_train / n)
         if frac < 1.0:
             sample_df = sample_df.sample(frac, seed=seed)
@@ -422,6 +327,7 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
         sample_df = (keyed.filter(
             F.pmod(F.xxhash64("_id", F.lit(seed)), F.lit(64)) == 0)
             .select("_v"))
+
     def _collect_matrix(df_v):
         # Arrow transfer (toPandas) instead of the pickled-row collect:
         # same float64 values, ~3x less driver time on array columns
@@ -429,44 +335,26 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
         return np.asarray(list(vals), dtype=np.float64) \
             if len(vals) else np.empty((0,))
 
-    id_dt_ = df.schema[id_col].dataType.simpleString()
-    take_kernel = n is not None and n <= small_corpus_threshold
-
-    def _collect_norm_matrix():
-        """(ids, normalized matrix, xxhash64(id)) in ONE Arrow transfer
-        of the RAW vectors.  The Spark-side HOF normalize is interpreted
-        and runs at scan parallelism (ONE task on a single-row-group
-        file — measured 8 s of the 11 s kernel-path total at 20k x 64),
-        so the kernel path normalizes on the driver instead, with the
-        numerically IDENTICAL left-fold: acc starts at 0.0 and adds
-        x*x in element order (a column loop, not np.sum's pairwise
-        tree), then x/sqrt(acc) elementwise — bit-equal to the
-        ``F.transform(v, x/norm)`` expression (asserted in tests)."""
-        raw = df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            F.xxhash64(F.col(id_col)).alias("_h")).toPandas()
-        if len(raw) == 0:
-            return raw["_id"].to_numpy(), np.empty((0, 0)), \
-                raw["_h"].to_numpy()
-        M = np.asarray(list(raw["_v"]), dtype=np.float64)
+    if raw is not None:
+        # The Spark-side HOF normalize is interpreted and runs at scan
+        # parallelism (ONE task on a single-row-group file — measured
+        # 8 s of the 11 s kernel-path total at 20k x 64), so the kernel
+        # path normalizes the collected raw vectors on the driver with
+        # the numerically IDENTICAL left-fold: acc starts at 0.0 and
+        # adds x*x in element order (a column loop, not np.sum's
+        # pairwise tree), then x/sqrt(acc) elementwise — bit-equal to
+        # the ``F.transform(v, x/norm)`` expression (asserted in tests)
+        M = list_matrix(raw.column("_v"), np.float64)
         acc = np.zeros(len(M))
         for j in range(M.shape[1]):
             acc += M[:, j] * M[:, j]
         with np.errstate(divide="ignore", invalid="ignore"):
             M = M / np.sqrt(acc)[:, None]
-        return raw["_id"].to_numpy(), M, \
-            raw["_h"].to_numpy().astype(np.int64)
-
-    ids_np = M_np = H_np = None
-    if take_kernel and sample_df is unthinned:
-        # kernel path with no training-sample thinning: the one raw
-        # transfer serves both the quantizer fit (row-order-preserving
-        # prefix — the same rows the bounded limit() collect would
-        # return, verified result-identical in the parity tests) and
-        # the scoring kernel's broadcast matrix
-        ids_np, M_np, H_np = _collect_norm_matrix()
-        X = M_np[:max_train]
+    if raw is not None and sample_df is unthinned:
+        # no training-sample thinning: the collect serves the quantizer
+        # fit too (its row-order prefix is the rows the limit(max_train)
+        # collect would return — result-identical in the parity tests)
+        X = M[:max_train]
     else:
         X = _collect_matrix(sample_df)
         if sample_df is not unthinned and \
@@ -476,31 +364,40 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
             # when the first collect already saw them all)
             X = _collect_matrix(unthinned)
     if len(X) == 0:  # genuinely empty input
-        return keyed.sparkSession.createDataFrame(
-            [], f"id {id_dt_}, neighbour_id {id_dt_}, cosine double")
+        return empty(df.sparkSession, out_schema)
     centers = _kmeans_spherical(X, n_lists, seed)
-    if take_kernel:
-        # bounded-corpus kernel (result-identical; parity pinned in
-        # tests) — the whole probe/score pipeline collapses into one
-        # collect + one mapInArrow job; same global window merge below
-        if M_np is None:
-            ids_np, M_np, H_np = _collect_norm_matrix()
-        scored = _ivf_topk_kernel(df.sparkSession, ids_np, M_np, H_np,
-                                  centers, k, n_probe, chunk_size,
-                                  id_dt_)
-        w = (Window.partitionBy("id")
-             .orderBy(F.col("cosine").desc(),
-                      F.col("neighbour_id").asc()))
-        return (scored.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k).drop("_rn"))
-    bc = df.sparkSession.sparkContext.broadcast(centers)
+    if raw is not None:
+        # the whole probe/score pipeline collapses into one collect +
+        # one mapInArrow job; same global window merge below
+        scored = _ivf_topk_kernel(
+            df.sparkSession, raw.column("_id").to_numpy(), M,
+            raw.column("_h").to_numpy().astype(np.int64), centers, k,
+            n_probe, chunk_size, id_dt, raw.schema.field("_id").type)
+    else:
+        scored = _ivf_cogroup(keyed, centers, k, n_probe, chunk_size,
+                              id_dt)
+    # each member lives in exactly one (cell, chunk), so
+    # (id, neighbour_id) appears at most once — per-chunk top-k merges
+    # to the exact global top-k in one window (top-k is associative)
+    w = (Window.partitionBy("id")
+         .orderBy(F.col("cosine").desc(), F.col("neighbour_id").asc()))
+    return (scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k).drop("_rn"))
+
+
+def _ivf_cogroup(keyed: DataFrame, centers, k: int, n_probe: int,
+                 chunk_size: int, id_dt: str) -> DataFrame:
+    """The distributed side of :func:`ivf_topk`: per-(cell, chunk)
+    top-k candidates ``(id, neighbour_id, cosine)`` from the normalized
+    ``(_id, _v)`` frame."""
+    bc = keyed.sparkSession.sparkContext.broadcast(centers)
 
     def assign(probe: int):
         """nearest `probe` cells per vector (cosine order) against the
         broadcast centroid matrix — one Arrow-batched matmul."""
         @F.pandas_udf("array<int>")
         def _cells(s):
-            import numpy as np  # noqa: F811
+            import numpy as np
             import pandas as pd
             cents = bc.value
             A = np.asarray(list(s), dtype=np.float64)
@@ -517,15 +414,14 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
     # ensure_parallelism (r6): the normalize HOFs + assignment UDF
     # otherwise run at the scan's row-group-bound parallelism (ONE
     # task on the single-row-group sf tables — measured 8.4 s of the
-    # operator's 15.7 s).  Applied only here, NOT to the quantizer
-    # sample above: the sample's collected row order seeds k-means
+    # operator's 15.7 s).  Applied only here, NOT to ivf_topk's
+    # quantizer sample: the sample's collected row order seeds k-means
     # init and must stay partitioning-independent.
     from pyspark import StorageLevel
     from .dedup import ensure_parallelism
-    assigned = (ensure_parallelism(keyed)
-                .withColumn("_cells", assign(n_probe)(F.col("_v")))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    _IVF_PERSISTED.append(assigned)  # released via clear_ivf_cache()
+    assigned = track(ensure_parallelism(keyed)
+                     .withColumn("_cells", assign(n_probe)(F.col("_v")))
+                     .persist(StorageLevel.MEMORY_AND_DISK))
     inv = assigned.select("_id", "_v",
                           F.element_at("_cells", 1).alias("_cell"))
     queries = assigned.select(F.col("_id").alias("id"),
@@ -557,7 +453,6 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
     # needs at 10^12 rows: vectors move once per probed cell, scoring
     # is vectorized, the final global top-k sees only
     # n_probe*k candidates per query.
-    id_dt = df.schema[id_col].dataType.simpleString()
     kk = k
 
     def score(left, right):
@@ -609,17 +504,10 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, k: int = 1,
                              "neighbour_id": np.concatenate(out_nb),
                              "cosine": np.concatenate(out_cos)})
 
-    scored = (queries.groupBy("_cell", "_chunk")
-              .cogroup(inv.groupBy("_cell", "_chunk"))
-              .applyInPandas(score, f"id {id_dt}, neighbour_id {id_dt}, "
-                                    f"cosine double"))
-    # each member lives in exactly one (cell, chunk), so
-    # (id, neighbour_id) appears at most once — per-chunk top-k merges
-    # to the exact global top-k in one window (top-k is associative)
-    w = (Window.partitionBy("id")
-         .orderBy(F.col("cosine").desc(), F.col("neighbour_id").asc()))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return (queries.groupBy("_cell", "_chunk")
+            .cogroup(inv.groupBy("_cell", "_chunk"))
+            .applyInPandas(score, f"id {id_dt}, neighbour_id {id_dt}, "
+                                  f"cosine double"))
 
 
 def max_cosine_per_vector(df: DataFrame, id_col: str, vec_col: str,

@@ -44,9 +44,26 @@ def test_duplicate_keys_both_strategies(spark):
         out = {r["k"]: r["dup_count"]
                for r in duplicate_keys(df, ["k"], strategy=strat).collect()}
         assert out == {"a": 3, "b": 2}, strat
-    salted = {r["k"]: r["dup_count"]
-              for r in duplicate_keys(df, ["k"], salt=4).collect()}
-    assert salted == {"a": 3, "b": 2}
+
+
+def test_uniqueness_null_keys_are_absent(spark):
+    """SQL UNIQUE: a key with a NULL component never forms a duplicate
+    group.  Both duplicate_keys strategies and uniqueness_violations'
+    semi-join give the same answer on a NULL-bearing frame."""
+    df = spark.createDataFrame(
+        [(1, "a", 1), (2, None, 1), (3, "a", 1), (4, None, 1),
+         (5, None, None), (6, "b", None), (7, "b", None), (8, "c", 2)],
+        "id int, k string, j int")
+    for strat in ("groupby", "sort"):
+        single = {r["k"]: r["dup_count"] for r in
+                  duplicate_keys(df, ["k"], strategy=strat).collect()}
+        assert single == {"a": 2, "b": 2}, strat
+        pair = {(r["k"], r["j"]): r["dup_count"] for r in
+                duplicate_keys(df, ["k", "j"], strategy=strat).collect()}
+        assert pair == {("a", 1): 2}, strat
+        viol = sorted(r["id"] for r in uniqueness_violations(
+            df, "k", ["id"], strategy=strat).collect())
+        assert viol == [1, 3, 6, 7], strat
 
 
 def test_uniqueness_violations_on_images(spark):

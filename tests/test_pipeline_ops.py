@@ -1,19 +1,17 @@
-"""Pipeline operators: dedup (exact/minhash/simhash/ngram/embedding),
-similarity search, text analysis, multimodal plumbing."""
+"""Pipeline operators: dedup (exact/minhash/simhash/ngram), similarity
+search, text analysis, multimodal plumbing."""
 
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.dedup import (embedding_near_duplicates,
-                                              exact_duplicates,
+from jsonschema_spark.operators.dedup import (exact_duplicates,
                                               minhash_candidates,
                                               ngram_jaccard_pairs,
                                               simhash_duplicates)
 from jsonschema_spark.operators.multimodal import decode_images, psnr_check
 from jsonschema_spark.operators.similarity import (brute_force_topk,
-                                                   lsh_topk,
                                                    max_cosine_per_vector)
 from jsonschema_spark.operators.text import text_profile
 from jsonschema_spark.sources.images import images_df
@@ -90,29 +88,6 @@ def test_brute_force_topk(vectors):
         assert top1[i][1] > 0.999
 
 
-def test_embedding_near_duplicates(vectors):
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             embedding_near_duplicates(vectors, "vec_id", "v",
-                                       threshold=0.99,
-                                       n_planes=8).collect()}
-    assert all((i, 100 + i) in pairs for i in range(5))
-
-
-def test_lsh_topk_recall(vectors):
-    exact = {r["id"]: r["neighbour_id"]
-             for r in brute_force_topk(vectors, "vec_id", "v", k=1).collect()}
-    ann = {r["id"]: r["neighbour_id"]
-           for r in lsh_topk(vectors, "vec_id", "v", k=1, n_planes=4,
-                             probes=3).collect()}
-    hits = sum(1 for i in exact if ann.get(i) == exact[i])
-    # random gaussian vectors have weak true neighbours, so global top-1
-    # recall is modest; the planted near-dups below are the strict check
-    assert hits / len(exact) >= 0.5
-    # the planted near-dups land in the same bucket (cosine ~ 1)
-    for i in range(5):
-        assert ann.get(i) == 100 + i
-
-
 def test_max_cosine_per_vector(vectors):
     out = {r["id"]: r["max_cosine"]
            for r in max_cosine_per_vector(vectors, "vec_id", "v").collect()}
@@ -168,17 +143,18 @@ def test_ivf_topk_recall(spark):
     assert recall >= 0.6, f"IVF top-1 recall {recall:.2f} too low"
 
 
-def test_ivf_skewed_cell_chunk_bound(spark):
+def test_ivf_skewed_cell_chunk_bound(spark, monkeypatch):
     """VERDICT-r2 #2: a skewed quantizer cell (here ~all vectors in ONE
     cell) must not land in a single unbounded pandas cogroup.  Members
-    are salted into <= chunk_size chunks; the kernel itself raises if a
-    cogroup's member side exceeds 2x the bound, so simply completing
-    this query certifies the invariant.  Probing every cell makes the
-    search exhaustive, so results must equal brute force exactly."""
+    are salted into <= chunk_size chunks; both the broadcast kernel and
+    the cogroup raise if a group's member side exceeds 2x the bound, so
+    simply completing this query on both paths certifies the
+    invariant.  Probing every cell makes the search exhaustive, so
+    results must equal brute force exactly."""
     import numpy as np
     import pandas as pd
-    from jsonschema_spark.operators.similarity import (brute_force_topk,
-                                                       ivf_topk)
+    from jsonschema_spark.operators import similarity
+    from jsonschema_spark.operators.similarity import brute_force_topk
 
     rng = np.random.default_rng(5)
     base = rng.normal(size=32)
@@ -192,14 +168,18 @@ def test_ivf_skewed_cell_chunk_bound(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"vec_id": [r[0] for r in rows],
                       "embedding": [r[1] for r in rows]}))
-    ann = ivf_topk(df, "vec_id", "embedding", k=1, n_lists=8,
-                   n_probe=8, chunk_size=100)
-    got = {r["id"]: r["cosine"] for r in ann.collect()}
     want = {r["id"]: r["cosine"] for r in
             brute_force_topk(df, "vec_id", "embedding", k=1).collect()}
-    assert set(got) == set(want)
-    for i in want:
-        assert abs(got[i] - want[i]) < 1e-9, (i, got[i], want[i])
+    # the kernel path (default cap) and the cogroup path (cap below n)
+    for cap in (similarity.IVF_KERNEL_MAX_ROWS, len(rows) - 1):
+        monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", cap)
+        ann = similarity.ivf_topk(df, "vec_id", "embedding", k=1,
+                                  n_lists=8, n_probe=8, chunk_size=100)
+        got = {r["id"]: r["cosine"] for r in ann.collect()}
+        assert set(got) == set(want)
+        for i in want:
+            assert abs(got[i] - want[i]) < 1e-9, (i, got[i], want[i])
+    similarity.clear_ivf_cache()
 
 
 def test_ivf_auto_n_lists(spark):
@@ -333,72 +313,62 @@ def test_simhash_degenerate_bucket_chunked(spark):
             <= persisted_before)
 
 
-def test_embedding_near_dup_chunked_exactness(spark):
-    import numpy as np
-    rng = np.random.default_rng(11)
-    base = rng.normal(size=12)
-    rows = [(i, [float(x) for x in base + rng.normal(scale=0.02, size=12)])
-            for i in range(250)]
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    tight = {(r["id_a"], r["id_b"]) for r in
-             embedding_near_duplicates(df, "vec_id", "v", threshold=0.99,
-                                       chunk_size=10).collect()}
-    loose = {(r["id_a"], r["id_b"]) for r in
-             embedding_near_duplicates(df, "vec_id", "v", threshold=0.99,
-                                       chunk_size=1 << 30).collect()}
-    assert tight == loose and len(tight) > 1000
-
-
 def test_ivf_no_count_job_with_explicit_n_lists(spark, monkeypatch):
-    """VERDICT-r3 #5: explicit n_lists must not pay a full count() pass.
-    count() is monkeypatched to raise, so merely completing certifies no
-    count job was launched; results still match brute force when every
-    cell is probed."""
+    """VERDICT-r3 #5: explicit n_lists must not pay a full count() pass,
+    on the kernel path (default cap) or the cogroup path (cap below n),
+    with or without approx_n; nor may the minhash and n-gram kernel
+    gates at default arguments.  count() is monkeypatched to raise, so
+    merely completing certifies no count job was launched; IVF results
+    still match brute force when every cell is probed."""
     import numpy as np
     # NB: patch the CLASSIC DataFrame — pyspark.sql.DataFrame is the
     # abstract base whose methods the classic class overrides, so
     # patching the base intercepts nothing on Spark 4
     from pyspark.sql.classic.dataframe import DataFrame as _DF
-    from jsonschema_spark.operators.similarity import (brute_force_topk,
-                                                       clear_ivf_cache,
-                                                       ivf_topk)
+    from jsonschema_spark.operators import similarity
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.normal(size=16)])
             for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
     want = {r["id"]: r["neighbour_id"]
             for r in brute_force_topk(df, "vec_id", "v", k=1).collect()}
+    texts = spark.createDataFrame(DOCS, "doc_id long, text string")
 
     def boom(self):
-        raise AssertionError("ivf_topk launched a count() job")
+        raise AssertionError("a kernel gate launched a count() job")
 
     monkeypatch.setattr(_DF, "count", boom)
-    for hint in (None, 400):
-        ann = ivf_topk(df, "vec_id", "v", k=1, n_lists=4, n_probe=4,
-                       approx_n=hint)
-        got = {r["id"]: r["neighbour_id"] for r in ann.collect()}
-        assert got == want
+    for cap in (similarity.IVF_KERNEL_MAX_ROWS, len(rows) - 1):
+        monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", cap)
+        for hint in (None, 400):
+            ann = similarity.ivf_topk(df, "vec_id", "v", k=1, n_lists=4,
+                                      n_probe=4, approx_n=hint)
+            got = {r["id"]: r["neighbour_id"] for r in ann.collect()}
+            assert got == want
+    assert minhash_candidates(texts, "doc_id", "text").collect()
+    assert ngram_jaccard_pairs(texts, "doc_id", "text").collect()
     monkeypatch.undo()
-    assert clear_ivf_cache() >= 2
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0 or True
+    assert similarity.clear_ivf_cache() >= 2
 
 
-def test_clear_ivf_cache_releases_assignment(spark):
+def test_clear_ivf_cache_releases_assignment(spark, monkeypatch):
     """The assignment persist (and its release) is a distributed-path
     contract; the r6 bounded-corpus kernel persists nothing."""
+    from jsonschema_spark.operators import similarity
     from jsonschema_spark.operators.similarity import (clear_ivf_cache,
                                                        ivf_topk)
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    out = ivf_topk(e, "vec_id", "embedding", k=1, n_lists=8, n_probe=2,
-                   approx_n=e.count(), small_corpus_threshold=0)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "IVF_KERNEL_MAX_ROWS", 0)
+        out = ivf_topk(e, "vec_id", "embedding", k=1, n_lists=8,
+                       n_probe=2)
     out.count()  # materialize -> assignment persisted
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > before
     clear_ivf_cache()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
     # kernel path: no persisted state to leak or release
-    out = ivf_topk(e, "vec_id", "embedding", k=1, n_lists=8, n_probe=2,
-                   approx_n=e.count())
+    out = ivf_topk(e, "vec_id", "embedding", k=1, n_lists=8, n_probe=2)
     out.count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
     assert clear_ivf_cache() == 0
@@ -611,17 +581,20 @@ def test_audio_features(spark):
         assert r["duration_s"] > 0.04
 
 
-def test_ivf_clustered_input_sample_not_prefix_biased(spark):
-    """r4 review finding: with explicit n_lists and no approx_n the
-    quantizer sample must not be a partition prefix.  On a SORTED
-    two-cluster table (prefix = one cluster only), the hash-thinned
-    bounded sample must reach the same recall as a fully unbiased
-    fraction sample (approx_n supplied) — prefix training would
-    collapse recall for the unseen cluster."""
+def test_ivf_clustered_input_sample_not_prefix_biased(spark, monkeypatch):
+    """r4 finding: on the cogroup path (input over the kernel
+    cap) with explicit n_lists and no approx_n the quantizer sample
+    must not be a partition prefix.  On a SORTED two-cluster table
+    (prefix = one cluster only), the hash-thinned bounded sample must
+    reach the same recall as a fully unbiased fraction sample
+    (approx_n supplied) — prefix training would collapse recall for
+    the unseen cluster."""
     import numpy as np
+    from jsonschema_spark.operators import similarity
     from jsonschema_spark.operators.similarity import (brute_force_topk,
                                                        clear_ivf_cache,
                                                        ivf_topk)
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_ROWS", 2999)
     rng = np.random.default_rng(0)
     a = rng.normal(loc=+5, scale=0.3, size=(1500, 12))
     b = rng.normal(loc=-5, scale=0.3, size=(1500, 12))
@@ -970,12 +943,12 @@ def test_phash_integrity_null_phash_batchmates_unharmed(spark):
 
 
 def test_ivf_single_training_collect_on_small_input(spark, monkeypatch):
-    """When n is known (approx_n) and the bounded training collect
-    already scanned the whole (unthinned) input, the under-sample
-    fallback must NOT re-run an identical second collect (one wasted
-    job per explicit-n_lists call on small inputs).  The training
-    transfer is Arrow ``toPandas`` since r6, so both driver-side
-    materialization mechanisms are counted."""
+    """On a small input the kernel path's one bounded collect serves
+    the quantizer fit, the scoring broadcast and n: no second
+    training collect (one wasted job per explicit-n_lists call on
+    small inputs).  The transfers are Arrow ``toArrow`` (the bounded
+    collect) and ``toPandas`` (the training sample), so every
+    driver-side materialization mechanism is counted."""
     import numpy as np
     from pyspark.sql.classic.dataframe import DataFrame as _DF
     from jsonschema_spark.operators.similarity import (clear_ivf_cache,
@@ -985,23 +958,18 @@ def test_ivf_single_training_collect_on_small_input(spark, monkeypatch):
             for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
     calls = {"n": 0}
-    real_collect = _DF.collect
-    real_topandas = _DF.toPandas
 
-    def counting_collect(self):
-        calls["n"] += 1
-        return real_collect(self)
+    def counting(real):
+        def wrapper(self):
+            calls["n"] += 1
+            return real(self)
+        return wrapper
 
-    def counting_topandas(self):
-        calls["n"] += 1
-        return real_topandas(self)
-
-    monkeypatch.setattr(_DF, "collect", counting_collect)
-    monkeypatch.setattr(_DF, "toPandas", counting_topandas)
-    ann = ivf_topk(df, "vec_id", "v", k=1, n_lists=4, n_probe=4,
-                   approx_n=200)
+    for name in ("collect", "toPandas", "toArrow"):
+        monkeypatch.setattr(_DF, name, counting(getattr(_DF, name)))
+    ann = ivf_topk(df, "vec_id", "v", k=1, n_lists=4, n_probe=4)
     assert calls["n"] == 1, \
-        f"expected 1 training materialization, got {calls['n']}"
+        f"expected 1 driver transfer, got {calls['n']}"
     monkeypatch.undo()
     assert ann.count() == 200
     clear_ivf_cache()

@@ -24,36 +24,52 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_minhash_kernel_vs_join_parity(docs):
+#: rows each text kernel collects from the ``docs`` fixture: one per
+#: non-NULL text (the ids are unique)
+N_TEXTS = 243
+
+
+def _gate_sides(monkeypatch, module, cap, n, build, canon=tuple):
+    """Run ``build()`` with ``module.<cap>`` at ``n`` (the bounded
+    collect fits: kernel path) and at ``n - 1`` (it does not:
+    distributed path).  Asserts that only the first plans a MapInArrow
+    and returns the sorted, ``canon``-mapped rows of both sides."""
+    sides = []
+    for limit in (n, n - 1):
+        monkeypatch.setattr(module, cap, limit)
+        df = build()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInArrow" in plan) == (limit == n), (cap, limit)
+        sides.append(sorted(map(canon, df.collect())))
+    return sides
+
+
+def test_minhash_kernel_vs_join_parity(docs, monkeypatch):
     """The broadcast banding kernel must emit exactly the distributed
     slice-keyed self-join's pair set."""
-    from jsonschema_spark.operators.dedup import minhash_candidates
-    join_path = minhash_candidates(docs, "doc_id", "text",
-                                   min_jaccard=0.3,
-                                   small_corpus_threshold=0)
-    kernel_path = minhash_candidates(docs, "doc_id", "text",
-                                     min_jaccard=0.3)
-    a = sorted(map(tuple, join_path.collect()))
-    b = sorted(map(tuple, kernel_path.collect()))
-    assert a == b and len(a) > 0
+    from jsonschema_spark.operators import dedup
+    kern, join = _gate_sides(
+        monkeypatch, dedup, "MINHASH_KERNEL_MAX_ROWS", N_TEXTS,
+        lambda: dedup.minhash_candidates(docs, "doc_id", "text",
+                                         min_jaccard=0.3))
+    assert kern == join and len(kern) > 0
 
 
-def test_hamming_verified_pairs_vs_composition(docs):
-    """Fused audit kernel == simhash_duplicates + exact-Jaccard verify."""
-    from jsonschema_spark.operators.dedup import (
-        clear_dedup_cache, hamming_verified_pairs, simhash_duplicates,
-        verify_pairs_exact_jaccard)
-    cand = simhash_duplicates(docs, "doc_id", "text", max_hamming=12,
-                              band_bits=4)
-    old = verify_pairs_exact_jaccard(cand, docs, "doc_id", "text",
-                                     k=5, min_jaccard=0.5)
-    new = hamming_verified_pairs(docs, "doc_id", "text", bits=64,
-                                 max_hamming=12, band_bits=4, k=5,
-                                 min_jaccard=0.5)
-    a = sorted(map(tuple, old.collect()))
-    b = sorted(map(tuple, new.collect()))
-    clear_dedup_cache()
-    assert a == b and len(a) > 0
+def test_hamming_verified_pairs_vs_composition(docs, monkeypatch):
+    """Fused audit kernel == simhash_duplicates + exact-Jaccard verify,
+    and over its cap the operator runs exactly that composition."""
+    from jsonschema_spark.operators import dedup
+    cand = dedup.simhash_duplicates(docs, "doc_id", "text",
+                                    max_hamming=12, band_bits=4)
+    old = sorted(map(tuple, dedup.verify_pairs_exact_jaccard(
+        cand, docs, "doc_id", "text", k=5, min_jaccard=0.5).collect()))
+    kern, fallback = _gate_sides(
+        monkeypatch, dedup, "MINHASH_KERNEL_MAX_ROWS", N_TEXTS,
+        lambda: dedup.hamming_verified_pairs(
+            docs, "doc_id", "text", bits=64, max_hamming=12,
+            band_bits=4, k=5, min_jaccard=0.5))
+    dedup.clear_dedup_cache()
+    assert kern == fallback == old and len(old) > 0
 
 
 def test_repetition_kernel_vs_column_functions(docs):
@@ -142,29 +158,27 @@ def test_exact_fingerprint_pairs_join_back(docs):
     assert a == b and len(a) > 0
 
 
-def test_ngram_jaccard_kernel_vs_join_parity(docs):
+def test_ngram_jaccard_kernel_vs_join_parity(docs, monkeypatch):
     """Inverted-index kernel == posting-list self-join, including the
     tokenization corner cases (kept empty tokens, short docs, tabs)."""
-    from jsonschema_spark.operators.dedup import ngram_jaccard_pairs
-    join_path = ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                    min_jaccard=0.3,
-                                    small_corpus_threshold=0)
-    kernel_path = ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                      min_jaccard=0.3)
-    a = sorted(map(tuple, join_path.collect()))
-    b = sorted(map(tuple, kernel_path.collect()))
-    assert a == b and len(a) > 0
+    from jsonschema_spark.operators import dedup
+    kern, join = _gate_sides(
+        monkeypatch, dedup, "MINHASH_KERNEL_MAX_ROWS", N_TEXTS,
+        lambda: dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                          min_jaccard=0.3))
+    assert kern == join and len(kern) > 0
 
 
-def test_ivf_kernel_vs_cogroup_parity(spark):
-    """Broadcast IVF kernel == distributed cogroup path: identical
-    selected (id, neighbour_id) sets under both probe configs the
-    declared queries use (cosines may differ by BLAS-accumulation
-    ulps, which the selection comparison deliberately excludes and
-    the queries' contracts — rows-only / recall>=bar — tolerate)."""
+def test_ivf_kernel_vs_cogroup_parity(spark, monkeypatch):
+    """Broadcast IVF kernel == distributed cogroup path under both
+    probe configs the declared queries use.  Compared per query as the
+    multiset of selected cosines rounded to 9 places: the two paths
+    may differ by BLAS-accumulation ulps, and an ulp flip between the
+    fixture's duplicate-direction near-ties may swap which of two
+    equal-cosine neighbours is selected (the queries' contracts —
+    rows-only / recall>=bar — tolerate both)."""
     import numpy as np
-    from jsonschema_spark.operators.similarity import (clear_ivf_cache,
-                                                       ivf_topk)
+    from jsonschema_spark.operators import similarity
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.normal(size=16)])
             for i in range(600)]
@@ -174,15 +188,13 @@ def test_ivf_kernel_vs_cogroup_parity(spark):
                          np.asarray(rows[i % 600][1]) * 2.0]))
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
     for probe in (2, 5):
-        dist = ivf_topk(df, "vec_id", "v", k=3, n_lists=8,
-                        n_probe=probe, approx_n=640,
-                        small_corpus_threshold=0)
-        kern = ivf_topk(df, "vec_id", "v", k=3, n_lists=8,
-                        n_probe=probe, approx_n=640)
-        a = sorted((r["id"], r["neighbour_id"]) for r in dist.collect())
-        b = sorted((r["id"], r["neighbour_id"]) for r in kern.collect())
-        clear_ivf_cache()
-        assert a == b and len(a) == 640 * 3
+        kern, dist = _gate_sides(
+            monkeypatch, similarity, "IVF_KERNEL_MAX_ROWS", 640,
+            lambda: similarity.ivf_topk(df, "vec_id", "v", k=3,
+                                        n_lists=8, n_probe=probe),
+            canon=lambda r: (r["id"], round(r["cosine"], 9)))
+        similarity.clear_ivf_cache()
+        assert kern == dist and len(kern) == 640 * 3
 
 
 def test_ivf_driver_normalize_bit_identity(spark):

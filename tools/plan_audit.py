@@ -154,16 +154,19 @@ def main() -> None:
         "gated behind contains('[') so bracket-free paths stay cheap",
         best_match(v.violations(img, ["image_id"]), ["image_id"])))
 
-    # 11. IVF ANN: bounded cogroup, no pair rows
+    # 11. IVF ANN, kernel path: the audit table fits the bounded
+    # collect, so no scan and no pair rows reach the plan
     from jsonschema_spark.operators.similarity import ivf_topk
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     cases.append((
         "ivf_topk",
-        "IVF ANN: centroids broadcast, ONE shared assignment UDF, "
-        "members salted into fixed-size chunks (per-cell counts are a "
-        "broadcast n_lists-row aggregate), cell+chunk-local cogroup "
-        "scoring — no pair rows in the plan, no cogroup above "
-        "chunk_size members",
+        "IVF ANN, broadcast-kernel path (the table is under "
+        "IVF_KERNEL_MAX_ROWS): ONE bounded Arrow collect of the raw "
+        "vectors already fed the driver-side quantizer fit and the "
+        "broadcast, so the plan reads no table — a range of "
+        "(cell, chunk) groups, ONE MapInArrow scoring node emitting "
+        "only per-chunk top-k rows (no pair rows), and the global "
+        "top-k window's single exchange",
         ivf_topk(emb, "vec_id", "embedding", k=3, n_lists=16,
                  n_probe=4)))
 
