@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import re as _re
 from dataclasses import replace as _dc_replace
+from functools import partial
 from typing import Any, Optional
 
 from pyspark.sql import Column
@@ -20,7 +21,7 @@ from pyspark.sql import types as T
 from .context import CompileContext, pointer_escape
 from .node import Check, Node
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
-                       fmt_message, make_check, stringify)
+                       fmt_message, make_check)
 
 STRING = T.StringType()
 
@@ -77,9 +78,8 @@ def c_any_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     pred = F.lit(False)
     for o in oks:
         pred = pred | o
-    node = make_check(ctx, "anyOf", pred,
-                      fmt_message(ctx, "%s is not valid under any of the "
-                                      "given schemas"))
+    node = make_check(ctx, "anyOf", pred, lambda: fmt_message(
+        ctx, "%s is not valid under any of the given schemas"))
     return _with_context(ctx, node, "anyOf", children, pred)
 
 
@@ -90,9 +90,8 @@ def c_one_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
                                   sub) for i, sub in enumerate(value)]
     oks = [c.ok for c in children]
     n = sum((o.cast("int") for o in oks), F.lit(0))
-    node = make_check(ctx, "oneOf", n == 1,
-                      fmt_message(ctx, "%s is not valid under exactly one of "
-                                      "the given schemas"))
+    node = make_check(ctx, "oneOf", n == 1, lambda: fmt_message(
+        ctx, "%s is not valid under exactly one of the given schemas"))
     # context (branch errors) attaches ONLY when NO branch matched —
     # the reference's too-many-matches error ("valid under each of")
     # carries no context (_keywords.py:360-373), so best_match must not
@@ -107,9 +106,8 @@ def c_one_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
 def c_not(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     """`not` (_keywords.py:376-379)."""
     child = compile_subschema(ctx.child(schema_fragment="not"), value)
-    return make_check(ctx, "not", ~child.ok,
-                      fmt_message(ctx, "%s should not be valid under the "
-                                      "given schema"))
+    return make_check(ctx, "not", ~child.ok, lambda: fmt_message(
+        ctx, "%s should not be valid under the given schema"))
 
 
 def c_if(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -268,8 +266,8 @@ def _memo_store(ctx: CompileContext, mkey: tuple, child: Node,
         return
     ctx.ref_memo[mkey] = (
         p0,
-        [_dc_replace(c) for c in child.checks],
-        [_dc_replace(c) for c in child.context],
+        [c.clone() for c in child.checks],
+        [c.clone() for c in child.context],
         list(child._extra_ok),
         [_dc_replace(a) for a in ann],
         list(ctx.warnings[n_warn:]),
@@ -284,12 +282,12 @@ def _memo_replay(ctx: CompileContext, entry: tuple) -> Node:
     p1 = ctx.schema_path
     out = Node()
     for chk in checks:
-        out.checks.append(_dc_replace(
-            chk, schema_path=_rebase_sp(chk.schema_path, p0, p1),
+        out.checks.append(chk.clone(
+            schema_path=_rebase_sp(chk.schema_path, p0, p1),
             context_of=_rebase_sp(chk.context_of, p0, p1)))
     for chk in context:
-        out.context.append(_dc_replace(
-            chk, schema_path=_rebase_sp(chk.schema_path, p0, p1),
+        out.context.append(chk.clone(
+            schema_path=_rebase_sp(chk.schema_path, p0, p1),
             context_of=_rebase_sp(chk.context_of, p0, p1)))
     out._extra_ok.extend(extra_ok)
     for a in ann:
@@ -518,8 +516,8 @@ def c_pattern_properties(ctx: CompileContext, value: Any,
                               f"patternProperties/{pointer_escape(pattern)}"))
             out._extra_ok.append(ok)
             n = make_check(ctx, "patternProperties", ok,
-                           F.lit(f"a value under a key matching {pattern!r} "
-                                 f"failed its subschema"),
+                           f"a value under a key matching {pattern!r} "
+                           f"failed its subschema",
                            schema_suffix=f"patternProperties/{pointer_escape(pattern)}")
             out.checks.extend(n.checks)
             out._extra_ok.pop()
@@ -560,9 +558,9 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
                 n = make_check(
                     ctx.child(path_fragment=fld.name, row_fields=None),
                     keyword, target.isNull(),
-                    F.lit(f"Additional properties are not allowed "
-                          f"('{fld.name}' was unexpected)"))
-                n.checks[0].failing_value = target.cast("string")
+                    f"Additional properties are not allowed "
+                    f"('{fld.name}' was unexpected)")
+                n.checks[0].failing_value = partial(target.cast, "string")
                 out.checks.extend(n.checks)
             elif value is not True:
                 child_ctx = _bind_member(ctx, fld, keyword)
@@ -587,7 +585,7 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
         if value is False:
             bad = F.size(F.filter(F.map_keys(ctx.target), is_extra))
             return make_check(ctx, keyword, bad == 0,
-                              F.lit("Additional properties are not allowed"))
+                              "Additional properties are not allowed")
         if value is True:
             return None
         extras_map = F.map_filter(ctx.target, lambda k, v: is_extra(k))
@@ -595,7 +593,7 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
                       lambda v: _element_ok(ctx, value, v,
                                             ctx.dtype.valueType, keyword))
         return make_check(ctx, keyword, ok,
-                          F.lit("an additional property failed its subschema"))
+                          "an additional property failed its subschema")
     return None
 
 
@@ -612,8 +610,8 @@ def c_property_names(ctx: CompileContext, value: Any,
             target = (F.col(fld.name) if _row_scope(ctx)
                       else ctx.target.getField(fld.name))
             n = make_check(ctx, "propertyNames", target.isNull() | name_ok,
-                           F.lit(f"property name '{fld.name}' fails "
-                                 f"propertyNames"))
+                           f"property name '{fld.name}' fails "
+                           f"propertyNames")
             out.checks.extend(n.checks)
         return out
     if ctx.is_map():
@@ -621,7 +619,7 @@ def c_property_names(ctx: CompileContext, value: Any,
                       lambda k: _element_ok(ctx, value, k, STRING,
                                             "propertyNames"))
         return make_check(ctx, "propertyNames", ok,
-                          F.lit("a property name fails propertyNames"))
+                          "a property name fails propertyNames")
     return None
 
 
@@ -669,9 +667,10 @@ def c_prefix_items(ctx: CompileContext, value: Any,
         pred = (F.size(ctx.target) <= i) | ok
         n = make_check(ctx.child(path_fragment=i, row_fields=None),
                        "prefixItems", pred,
-                       F.lit(f"item {i} fails prefixItems/{i}"),
+                       f"item {i} fails prefixItems/{i}",
                        schema_suffix=f"prefixItems/{i}")
-        n.checks[0].failing_value = F.get(ctx.target, i).cast("string")
+        n.checks[0].failing_value = \
+            lambda i=i: F.get(ctx.target, i).cast("string")
         out.checks.extend(n.checks)
     return out
 
@@ -685,17 +684,16 @@ def c_items(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     if value is False:
         pred = F.size(c) <= prefix
         return make_check(ctx, "items", pred,
-                          F.lit(f"array has items beyond the {prefix} "
-                                f"allowed prefix items"))
+                          f"array has items beyond the {prefix} "
+                          f"allowed prefix items")
     if value is True:
         return None
     rest = F.slice(c, prefix + 1,
                    F.greatest(F.size(c) - prefix, F.lit(0)))
     ok = F.forall(rest, lambda x: _element_ok(ctx, value, x,
                                               ctx.dtype.elementType, "items"))
-    return make_check(ctx, "items", ok,
-                      fmt_message(ctx, "%s has items failing the items "
-                                      "subschema"))
+    return make_check(ctx, "items", ok, lambda: fmt_message(
+        ctx, "%s has items failing the items subschema"))
 
 
 def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -709,14 +707,12 @@ def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
                                               ctx.dtype.elementType,
                                               "contains")))
     out = Node()
-    node = make_check(ctx, "contains", n >= min_c,
-                      fmt_message(ctx, "%s does not contain enough matching "
-                                      "items"))
+    node = make_check(ctx, "contains", n >= min_c, lambda: fmt_message(
+        ctx, "%s does not contain enough matching items"))
     out.checks.extend(node.checks)
     if max_c is not None:
-        node = make_check(ctx, "maxContains", n <= max_c,
-                          fmt_message(ctx, "%s contains too many matching "
-                                          "items"))
+        node = make_check(ctx, "maxContains", n <= max_c, lambda: fmt_message(
+            ctx, "%s contains too many matching items"))
         out.checks.extend(node.checks)
     return out
 
@@ -865,9 +861,9 @@ def c_unevaluated_properties(ctx: CompileContext, value: Any,
             n = make_check(
                 ctx.child(path_fragment=fld.name, row_fields=None),
                 "unevaluatedProperties", ~bad,
-                F.lit(f"Unevaluated properties are not allowed "
-                      f"('{fld.name}' was unexpected)"))
-            n.checks[0].failing_value = member.cast("string")
+                f"Unevaluated properties are not allowed "
+                f"('{fld.name}' was unexpected)")
+            n.checks[0].failing_value = partial(member.cast, "string")
             out.checks.extend(n.checks)
         return out
     if ctx.is_map():
@@ -1006,7 +1002,7 @@ def c_unevaluated_items(ctx: CompileContext, value: Any,
 
     pred = F.size(F.filter(c, bad_elem)) == 0
     return make_check(ctx, "unevaluatedItems", pred,
-                      F.lit("Unevaluated items are not allowed"))
+                      "Unevaluated items are not allowed")
 
 
 def register_all(reg: KeywordRegistry) -> None:

@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .context import CompileContext
-from .node import Node
+from .node import Node, null_string
 from .registry import (KeywordRegistry, SchemaCompileError, cached_expr,
-                       cached_lit, fmt_message, make_check, stringify)
+                       cached_lit, fmt_message, make_check)
 from ..functions.regex import compile_pattern_predicate
 from ..functions.formats import format_predicate
 
@@ -63,7 +63,7 @@ def _type_pred_for(ctx: CompileContext, t: str) -> Optional[Column]:
             # and overflows beyond int64 — 1e308 IS a draft6+ integer)
             return cached_expr(
                 ctx, "int_valued",
-                lambda: (c.cast("double") % F.lit(1.0)) == 0.0)
+                lambda: (c.cast("double") % 1.0) == 0.0)
         return cached_lit(ctx, False)
     if t == "number":
         return None if ctx.is_numeric() else cached_lit(ctx, False)
@@ -87,7 +87,7 @@ def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
         if "object" in types or "any" in types:
             return None
         return make_check(ctx, "type", F.lit(False),
-                          F.lit(f"row is not of type {types}"))
+                          f"row is not of type {types}")
     preds = [_type_pred_for(ctx, t) for t in types]
     if any(p is None for p in preds):  # statically satisfied by some type
         # non-null values of this Spark type always satisfy; NULL handling
@@ -96,19 +96,19 @@ def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
             return make_check(
                 ctx, "type",
                 cached_expr(ctx, "isnotnull", ctx.target.isNotNull),
-                cached_lit(ctx,
-                           f"None is not of type {_fmt_types(types)}"))
+                f"None is not of type {_fmt_types(types)}")
         return None
     pred = preds[0]
     for p in preds[1:]:
         pred = pred | p
     if not ctx.null_is_absent and "null" not in types:
         pred = cached_expr(ctx, "isnotnull", ctx.target.isNotNull) & pred
-    msg = fmt_message(ctx, "%s is not of type " + _fmt_types(types).replace("%", "%%"))
+    template = "%s is not of type " + _fmt_types(types).replace("%", "%%")
     if all(_is_static_false(p) for p in preds):
         ctx.warn(f"type {types} can never match Spark type "
                  f"{ctx.dtype.simpleString() if ctx.dtype else '?'}")
-    return make_check(ctx, "type", pred, msg)
+    return make_check(ctx, "type", pred,
+                      lambda: fmt_message(ctx, template))
 
 
 def _fmt_types(types: list[str]) -> str:
@@ -146,7 +146,7 @@ def typed_literal_eq(c: Column, dtype: Optional[T.DataType],
     if isinstance(v, bool):
         if not isinstance(dtype, T.BooleanType):
             return never()
-        return present & (c == F.lit(v))
+        return present & (c == v)
     if isinstance(v, (int, float)):
         if not isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType,
                                   T.LongType, T.FloatType, T.DoubleType,
@@ -154,12 +154,12 @@ def typed_literal_eq(c: Column, dtype: Optional[T.DataType],
             return never()
         if isinstance(v, int) and isinstance(dtype, (T.ByteType, T.ShortType,
                                                      T.IntegerType, T.LongType)):
-            return present & (c == F.lit(v))
-        return present & (c.cast("double") == F.lit(float(v)))
+            return present & (c == v)
+        return present & (c.cast("double") == float(v))
     if isinstance(v, str):
         if not isinstance(dtype, T.StringType):
             return never()
-        return present & (c == F.lit(v))
+        return present & (c == v)
     if isinstance(v, list):
         if not isinstance(dtype, T.ArrayType):
             return never()
@@ -244,8 +244,8 @@ def c_enum(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
             pred = eqs[0]
             for e in eqs[1:]:
                 pred = pred | e
-    msg = fmt_message(ctx, "%s is not one of the permitted values")
-    return make_check(ctx, "enum", pred, msg)
+    return make_check(ctx, "enum", pred, lambda: fmt_message(
+        ctx, "%s is not one of the permitted values"))
 
 
 def c_const(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -255,8 +255,8 @@ def c_const(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
         return None
     eq = _literal_eq(ctx, value)
     pred = eq if eq is not None else F.lit(False)
-    msg = fmt_message(ctx, "%s was expected to equal the const value")
-    return make_check(ctx, "const", pred, msg)
+    return make_check(ctx, "const", pred, lambda: fmt_message(
+        ctx, "%s was expected to equal the const value"))
 
 
 # ------------------------------------------------------------- numerics ---
@@ -267,9 +267,9 @@ def _numeric_kw(ctx: CompileContext, keyword: str, value: Any,
         return None  # non-numbers ignored (_keywords.py:149-164)
     if not isinstance(value, (int, float)) or isinstance(value, bool):
         raise SchemaCompileError(f"{keyword} value must be a number")
-    pred = op(ctx.target, F.lit(value))
-    msg = fmt_message(ctx, f"%s violates {keyword} {value}")
-    return make_check(ctx, keyword, pred, msg)
+    pred = op(ctx.target, value)
+    return make_check(ctx, keyword, pred, lambda: fmt_message(
+        ctx, f"%s violates {keyword} {value}"))
 
 
 def c_minimum(ctx, value, schema):
@@ -306,9 +306,9 @@ def c_multiple_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Nod
         raise SchemaCompileError("multipleOf value must be a positive number")
     c = ctx.target
     if ctx.is_integral() and isinstance(value, int):
-        pred = (c % F.lit(value)) == 0
+        pred = (c % value) == 0
     else:
-        q = c.cast("double") / F.lit(float(value))
+        q = c.cast("double") / float(value)
         # quotient-integrality fast path (reference _keywords.py:171-180,
         # via double-domain modulo — floor() overflows past int64)
         # OR exact-zero remainder — covers the overflow case (q = inf)
@@ -318,10 +318,10 @@ def c_multiple_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Nod
         # (Fraction(x)/Fraction(dB)).denominator == 1 — proven bit-equal
         # by the float-boundary differential fuzz
         # (tests/test_property_differential.py, 0/612k disagreements)
-        pred = ((q % F.lit(1.0)) == 0.0) \
-            | ((c.cast("double") % F.lit(float(value))) == 0.0)
-    msg = fmt_message(ctx, f"%s is not a multiple of {value}")
-    return make_check(ctx, "multipleOf", pred, msg)
+        pred = ((q % 1.0) == 0.0) \
+            | ((c.cast("double") % float(value)) == 0.0)
+    return make_check(ctx, "multipleOf", pred, lambda: fmt_message(
+        ctx, f"%s is not a multiple of {value}"))
 
 
 # --------------------------------------------------------------- strings --
@@ -331,7 +331,7 @@ def c_min_length(ctx: CompileContext, value, schema) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_string():
         return None
     return make_check(ctx, "minLength", F.length(ctx.target) >= int(value),
-                      fmt_message(ctx, "%s is too short"))
+                      lambda: fmt_message(ctx, "%s is too short"))
 
 
 def c_max_length(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -339,7 +339,7 @@ def c_max_length(ctx: CompileContext, value, schema) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_string():
         return None
     return make_check(ctx, "maxLength", F.length(ctx.target) <= int(value),
-                      fmt_message(ctx, "%s is too long"))
+                      lambda: fmt_message(ctx, "%s is too long"))
 
 
 def c_pattern(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -352,8 +352,9 @@ def c_pattern(ctx: CompileContext, value, schema) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_string():
         return None
     pred = compile_pattern_predicate(ctx.target, value, warn=ctx.warn)
-    return make_check(ctx, "pattern",
-                      pred, fmt_message(ctx, "%s does not match " + value.replace("%", "%%")))
+    template = "%s does not match " + value.replace("%", "%%")
+    return make_check(ctx, "pattern", pred,
+                      lambda: fmt_message(ctx, template))
 
 
 def c_format(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -373,8 +374,9 @@ def c_format(ctx: CompileContext, value, schema) -> Optional[Node]:
     pred = format_predicate(ctx.target, value)
     if pred is None:
         return None
+    template = "%s is not a " + str(value).replace("%", "%%")
     return make_check(ctx, "format", pred,
-                      fmt_message(ctx, "%s is not a " + str(value).replace("%", "%%")))
+                      lambda: fmt_message(ctx, template))
 
 
 # ------------------------------------------------------- object keywords --
@@ -409,8 +411,8 @@ def c_required(ctx: CompileContext, value, schema) -> Optional[Node]:
         if m is None:
             ctx.warn(f"required property {name!r} not in schema — always fails")
         sub = make_check(ctx, "required", pred,
-                         F.lit(f"'{name}' is a required property"))
-        sub.checks[0].failing_value = F.lit(None).cast("string")
+                         f"'{name}' is a required property")
+        sub.checks[0].failing_value = null_string
         out.checks.extend(sub.checks)
     return out
 
@@ -429,7 +431,7 @@ def c_dependent_required(ctx: CompileContext, value, schema) -> Optional[Node]:
             dep_present = F.lit(False) if d is None else d.isNotNull()
             pred = p.isNull() | dep_present
             sub = make_check(ctx, "dependentRequired", pred,
-                             F.lit(f"'{dep}' is a dependency of '{prop}'"))
+                             f"'{dep}' is a dependency of '{prop}'")
             out.checks.extend(sub.checks)
     return out
 
@@ -455,7 +457,7 @@ def c_min_properties(ctx, value, schema) -> Optional[Node]:
     if n is None:
         return None
     return make_check(ctx, "minProperties", n >= int(value),
-                      F.lit(f"object does not have enough properties (< {value})"))
+                      f"object does not have enough properties (< {value})")
 
 
 def c_max_properties(ctx, value, schema) -> Optional[Node]:
@@ -464,7 +466,7 @@ def c_max_properties(ctx, value, schema) -> Optional[Node]:
     if n is None:
         return None
     return make_check(ctx, "maxProperties", n <= int(value),
-                      F.lit(f"object has too many properties (> {value})"))
+                      f"object has too many properties (> {value})")
 
 
 # -------------------------------------------------------- array keywords --
@@ -474,7 +476,7 @@ def c_min_items(ctx, value, schema) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_array():
         return None
     return make_check(ctx, "minItems", F.size(ctx.target) >= int(value),
-                      fmt_message(ctx, "%s is too short"))
+                      lambda: fmt_message(ctx, "%s is too short"))
 
 
 def c_max_items(ctx, value, schema) -> Optional[Node]:
@@ -482,7 +484,7 @@ def c_max_items(ctx, value, schema) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_array():
         return None
     return make_check(ctx, "maxItems", F.size(ctx.target) <= int(value),
-                      fmt_message(ctx, "%s is too long"))
+                      lambda: fmt_message(ctx, "%s is too long"))
 
 
 def c_unique_items(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -496,7 +498,7 @@ def c_unique_items(ctx: CompileContext, value, schema) -> Optional[Node]:
     c = ctx.target
     pred = F.size(c) == F.size(F.array_distinct(c))
     return make_check(ctx, "uniqueItems", pred,
-                      fmt_message(ctx, "%s has non-unique elements"))
+                      lambda: fmt_message(ctx, "%s has non-unique elements"))
 
 
 def register_all(reg: KeywordRegistry) -> None:

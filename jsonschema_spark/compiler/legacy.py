@@ -29,9 +29,9 @@ from typing import Any, Optional
 from pyspark.sql import functions as F
 
 from .context import CompileContext
-from .node import Node
+from .node import Node, null_string
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
-                       fmt_message, make_check, stringify)
+                       fmt_message, make_check)
 from . import applicators, keywords
 
 
@@ -47,8 +47,8 @@ def c_items_legacy(ctx: CompileContext, value: Any,
     ok = F.forall(ctx.target,
                   lambda x: applicators._element_ok(
                       ctx, value, x, ctx.dtype.elementType, "items"))
-    n = make_check(ctx, "items", ok,
-                   fmt_message(ctx, "%s has items failing the subschema"))
+    n = make_check(ctx, "items", ok, lambda: fmt_message(
+        ctx, "%s has items failing the subschema"))
     out.checks.extend(n.checks)
     return out
 
@@ -67,15 +67,14 @@ def c_additional_items(ctx: CompileContext, value: Any,
     if value is False:
         return make_check(
             ctx, "additionalItems", F.size(c) <= prefix,
-            F.lit(f"Additional items are not allowed (beyond index "
-                  f"{prefix})"))
+            f"Additional items are not allowed (beyond index {prefix})")
     if value is True or value == {}:
         return None
     rest = F.slice(c, prefix + 1, F.greatest(F.size(c) - prefix, F.lit(0)))
     ok = F.forall(rest, lambda x: applicators._element_ok(
         ctx, value, x, ctx.dtype.elementType, "additionalItems"))
     return make_check(ctx, "additionalItems", ok,
-                      F.lit("an additional item fails its subschema"))
+                      "an additional item fails its subschema")
 
 
 def c_dependencies(ctx: CompileContext, value: Any,
@@ -138,7 +137,7 @@ def c_type_draft4(ctx: CompileContext, value: Any,
         if not rest:
             return make_check(
                 ctx, "type", F.lit(False),
-                fmt_message(ctx, "%s is not of type 'integer'"))
+                lambda: fmt_message(ctx, "%s is not of type 'integer'"))
         return keywords.c_type(ctx, rest, schema)
     return keywords.c_type(ctx, value, schema)
 
@@ -177,8 +176,8 @@ def c_type_draft3(ctx: CompileContext, value: Any,
     pred = preds[0]
     for p in preds[1:]:
         pred = pred | p
-    return make_check(ctx, "type", pred,
-                      fmt_message(ctx, "%s is not of the permitted types"))
+    return make_check(ctx, "type", pred, lambda: fmt_message(
+        ctx, "%s is not of the permitted types"))
 
 
 def c_disallow(ctx: CompileContext, value: Any,
@@ -189,19 +188,19 @@ def c_disallow(ctx: CompileContext, value: Any,
         bad = "object" in types or "any" in types
         if bad:
             return make_check(ctx, "disallow", F.lit(False),
-                              F.lit("row matches a disallowed type"))
+                              "row matches a disallowed type")
         return None
     preds = [_type_or_schema_pred(ctx, t) for t in types]
     if any(p is None for p in preds):   # statically matched -> always fails
         return make_check(ctx, "disallow",
                           ctx.target.isNull() if ctx.null_is_absent
                           else F.lit(False),
-                          F.lit("value matches a disallowed type"))
+                          "value matches a disallowed type")
     pred = preds[0]
     for p in preds[1:]:
         pred = pred | p
-    return make_check(ctx, "disallow", ~pred,
-                      fmt_message(ctx, "%s matches a disallowed type"))
+    return make_check(ctx, "disallow", ~pred, lambda: fmt_message(
+        ctx, "%s matches a disallowed type"))
 
 
 def c_extends(ctx: CompileContext, value: Any,
@@ -218,9 +217,9 @@ def c_required_draft3(ctx: CompileContext, value: Any,
     if value is not True or ctx.target is None:
         return None
     n = make_check(ctx, "required", ctx.target.isNotNull(),
-                   F.lit("property is required"))
+                   "property is required")
     n.checks[0].skip_null_guard = True
-    n.checks[0].failing_value = F.lit(None).cast("string")
+    n.checks[0].failing_value = null_string
     return n
 
 
@@ -252,7 +251,7 @@ def c_format_draft3(ctx: CompileContext, value: Any,
         pred = ctx.target.rlike(
             r"\A([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)\z")
         return make_check(ctx, "format", pred,
-                          fmt_message(ctx, "%s is not a time"))
+                          lambda: fmt_message(ctx, "%s is not a time"))
     return keywords.c_format(ctx, value, schema)
 
 
@@ -291,7 +290,7 @@ def c_content_encoding_draft7(ctx: CompileContext, value: Any,
         return None
     pred = F.try_to_binary(ctx.target, F.lit("base64")).isNotNull()
     return make_check(ctx, "contentEncoding", pred,
-                      fmt_message(ctx, "%s is not valid base64"))
+                      lambda: fmt_message(ctx, "%s is not valid base64"))
 
 
 def c_content_media_type_draft7(ctx: CompileContext, value: Any,
@@ -305,8 +304,8 @@ def c_content_media_type_draft7(ctx: CompileContext, value: Any,
     if schema.get("contentEncoding") == "base64":
         target = F.try_to_binary(ctx.target, F.lit("base64")).cast("string")
     pred = F.try_parse_json(target).isNotNull()
-    return make_check(ctx, "contentMediaType", pred,
-                      fmt_message(ctx, "%s is not valid application/json"))
+    return make_check(ctx, "contentMediaType", pred, lambda: fmt_message(
+        ctx, "%s is not valid application/json"))
 
 
 def draft7_registry() -> KeywordRegistry:

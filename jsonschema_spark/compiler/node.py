@@ -12,11 +12,39 @@ into ``ValidationError`` at runtime
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import copy
+from dataclasses import MISSING, dataclass, field
+from functools import partial
 from typing import Optional, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+class _Deferred:
+    """A :class:`Check` field that may hold a zero-argument builder in
+    place of its Column.  The first read runs the builder and stores the
+    Column over it, so every later read returns that same Column."""
+
+    def __init__(self, default=MISSING):
+        self.default = default
+
+    def __set_name__(self, owner, name: str) -> None:
+        self.slot = "_" + name
+
+    def __get__(self, obj, owner=None):
+        if obj is None:  # class access: the dataclass field default
+            if self.default is MISSING:
+                raise AttributeError(self.slot[1:])
+            return self.default
+        v = obj.__dict__[self.slot]
+        # a Column is callable too (it defines __call__), so test it first
+        if callable(v) and not isinstance(v, Column):
+            v = obj.__dict__[self.slot] = v()
+        return v
+
+    def __set__(self, obj, value) -> None:
+        obj.__dict__[self.slot] = value
 
 
 @dataclass
@@ -27,14 +55,24 @@ class Check:
     keyword.  NULL-at-binding rows are handled by the caller (a NULL column
     means "property absent", so every property-bound check passes except
     ``required``).
+
+    ``message``, ``failing_value`` and ``type_match`` feed violation rows
+    only, so they are deferred: each may be given as a Column or as a
+    zero-argument builder of one, and a builder runs on the first read
+    of its field (``violations()``, ``best_match``), never during
+    compile.  ``counts``, ``with_valid`` and ``manifest`` read only
+    ``pred`` and so never pay for them.  :meth:`clone` copies a check
+    without running its builders.
     """
 
     keyword: str
     json_path: str        # '$.fmt' style instance path (exceptions.py:152-163)
     schema_path: str      # 'properties/fmt/enum' style keyword location
     pred: Column
-    message: Column       # string Column with a reference-style message
-    failing_value: Column # stringified offending value
+    #: string Column with a reference-style message (deferred)
+    message: Column = _Deferred()
+    #: stringified offending value (deferred)
+    failing_value: Column = _Deferred()
     #: presence assertions (draft3 `required: true` inside a property
     #: subschema) must NOT be vacuously satisfied by a NULL binding
     skip_null_guard: bool = False
@@ -48,8 +86,28 @@ class Check:
     #: type is known at compile time; only NULL-ness is runtime) —
     #: annotated by ``compile_subschema``; None = no `type` keyword in
     #: the error's schema (the reference's KeyError -> False).  The 5th
-    #: by_relevance element (exceptions.py:421).
-    type_match: Optional[Column] = None
+    #: by_relevance element (exceptions.py:421).  Deferred.
+    type_match: Optional[Column] = _Deferred(None)
+
+    def has_type_match(self) -> bool:
+        """Whether ``type_match`` is set (built or not), without
+        building it."""
+        return self._type_match is not None
+
+    def clone(self, **changes) -> "Check":
+        """A copy with `changes` applied.  Deferred fields are copied as
+        they stand, builders unrun (``dataclasses.replace`` reads every
+        field and would build them)."""
+        out = copy.copy(self)
+        for name, value in changes.items():
+            setattr(out, name, value)
+        return out
+
+
+def null_string() -> Column:
+    """A NULL string Column: the failing value of checks that have no
+    offending value (``required``, static failures)."""
+    return F.lit(None).cast("string")
 
 
 @dataclass
@@ -113,7 +171,8 @@ def static_node(valid: bool, json_path: str, schema_path: str,
         json_path=json_path,
         schema_path=schema_path,
         pred=F.lit(False),
-        message=F.lit(message or "schema is statically unsatisfiable"),
-        failing_value=F.lit(None).cast("string"),
+        message=partial(F.lit,
+                        message or "schema is statically unsatisfiable"),
+        failing_value=null_string,
     ))
     return n

@@ -15,14 +15,15 @@ Compiler signature::
 
 from __future__ import annotations
 
-from typing import Any, Callable, Optional
+from functools import partial
+from typing import Any, Callable, Optional, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .context import CompileContext, schema_path_join
-from .node import Check, Node, static_node
+from .node import Check, Node, null_string, static_node
 
 CompilerFn = Callable[[CompileContext, Any, dict], Optional[Node]]
 
@@ -149,7 +150,7 @@ def fmt_message(ctx: CompileContext, template: str) -> Column:
 def stringify(ctx: CompileContext) -> Column:
     """Stringified failing value for the violation row."""
     if ctx.target is None:
-        return F.lit(None).cast("string")
+        return null_string()
     if ctx.is_array() or ctx.is_struct() or ctx.is_map():
         return cached_expr(ctx, "str_json", lambda: F.to_json(ctx.target))
     if ctx.is_binary():
@@ -236,8 +237,8 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
             keyword="$falseSchema", json_path=ctx.json_path,
             schema_path=ctx.schema_path or "$falseSchema",
             pred=guard(ctx, pred),
-            message=F.lit("False schema does not allow any value"),
-            failing_value=stringify(ctx),
+            message=partial(F.lit, "False schema does not allow any value"),
+            failing_value=partial(stringify, ctx),
         ))
         return n
     if not isinstance(schema, dict):
@@ -277,13 +278,10 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
     # _matches_type annotation (exceptions.py:184-197,421): checks
     # surfacing at THIS level have error.schema == `schema`; descendant
     # checks were annotated at their own level (type_match already set)
-    tm: Optional[Column] = None
+    tm = partial(type_match_column, ctx, schema)
 
     def annotate(chk: Check) -> None:
-        nonlocal tm
-        if chk.type_match is None:
-            if tm is None:
-                tm = type_match_column(ctx, schema)
+        if not chk.has_type_match():
             chk.type_match = tm
 
     for keyword, value in schema.items():
@@ -328,12 +326,20 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
 
 
 def make_check(ctx: CompileContext, keyword: str, pred: Column,
-               message: Column, schema_suffix: Optional[str] = None) -> Node:
+               message: Union[Column, str, Callable[[], Column]],
+               schema_suffix: Optional[str] = None) -> Node:
+    """A one-check Node.  `message` is a Column, a plain string (a
+    literal message), or a zero-argument builder such as ``lambda:
+    fmt_message(ctx, template)``; strings and builders, like the
+    stringified failing value, are built only when a violation row
+    first reads them (see :class:`Check`)."""
+    if isinstance(message, str):
+        message = partial(cached_lit, ctx, message)
     n = Node()
     sp = schema_path_join(ctx.schema_path, schema_suffix or keyword)
     n.checks.append(Check(
         keyword=keyword, json_path=ctx.json_path, schema_path=sp,
-        pred=pred, message=message, failing_value=stringify(ctx),
+        pred=pred, message=message, failing_value=partial(stringify, ctx),
     ))
     return n
 

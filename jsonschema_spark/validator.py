@@ -18,6 +18,7 @@ semantics demand them.
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -118,6 +119,9 @@ class CompiledValidator:
             resolver=resolver, base_uri=root_uri,
             dynamic_scope=(root_uri,))
         node = compile_subschema(ctx, schema)
+        # the $ref memo serves this compile only; the checks' deferred
+        # builders keep `ctx` alive, so drop the memo's snapshots now
+        ctx.ref_memo.clear()
         self.checks: list[Check] = node.checks
         #: anyOf/oneOf branch errors (ValidationError.context analogue,
         #: exceptions.py:120-131) — excluded from validity and from the
@@ -130,8 +134,10 @@ class CompiledValidator:
         self.annotations = list(ctx.annotations)
 
     # ------------------------------------------------------------- is_valid
-    @property
+    @cached_property
     def valid_column(self) -> Column:
+        """Row validity: the Kleene AND of every check, built on first
+        read and reused by every later call on this validator."""
         return all_of([c.pred for c in self.checks] + self._extra_ok)
 
     def with_valid(self, df: DataFrame, col: str = "valid") -> DataFrame:

@@ -493,3 +493,126 @@ def test_expr_cache_does_not_leak_across_compiles(spark):
     v1 = CompiledValidator(spec, df)
     v2 = CompiledValidator(spec, df)
     assert v1.counts(df) == v2.counts(df) == (1, 0)
+
+
+def test_python_literal_operands_build_the_same_predicates(spark):
+    """The keyword compilers hand Python literals straight to Column
+    operators; the JVM wraps them in the same literal ``F.lit`` would
+    build, so every predicate renders exactly as before."""
+    import pyspark.sql.types as T
+
+    from jsonschema_spark.compiler.context import CompileContext
+    from jsonschema_spark.compiler.keywords import (_numeric_kw,
+                                                    c_multiple_of,
+                                                    typed_literal_eq)
+    from jsonschema_spark.compiler.registry import default_registry
+
+    x = F.col("x")
+    for value in (5, 2 ** 40, 0.5, -3.25):
+        for op in (lambda c, v: c >= v, lambda c, v: c < v,
+                   lambda c, v: c % v, lambda c, v: c == v):
+            assert str(op(x, value)) == str(op(x, F.lit(value)))
+
+    def ctx_for(dtype):
+        return CompileContext(registry=default_registry(), target=x,
+                              dtype=dtype)
+
+    pred = _numeric_kw(ctx_for(T.DoubleType()), "minimum", 5,
+                       lambda c, v: c >= v).checks[0].pred
+    assert str(pred) == str(x >= F.lit(5))
+    pred = c_multiple_of(ctx_for(T.IntegerType()), 3, {}).checks[0].pred
+    assert str(pred) == str((x % F.lit(3)) == 0)
+    pred = c_multiple_of(ctx_for(T.DoubleType()), 0.5, {}).checks[0].pred
+    q = x.cast("double") / F.lit(0.5)
+    assert str(pred) == str(((q % F.lit(1.0)) == 0.0)
+                            | ((x.cast("double") % F.lit(0.5)) == 0.0))
+    for dtype, v, want in (
+            (T.StringType(), "a", x == F.lit("a")),
+            (T.BooleanType(), True, x == F.lit(True)),
+            (T.LongType(), 7, x == F.lit(7)),
+            (T.DoubleType(), 7, x.cast("double") == F.lit(7.0))):
+        assert str(typed_literal_eq(x, dtype, v)) \
+            == str(x.isNotNull() & want)
+
+
+def _wide_ref_contract(ncols: int):
+    """`ncols` columns, each reaching its rules through ``$ref``."""
+    defs = {
+        "code": {"type": "string", "pattern": "^[A-Z]{2}[0-9]{3}$"},
+        "pct": {"type": "number", "minimum": 0, "maximum": 100,
+                "multipleOf": 0.5},
+        "level": {"enum": ["low", "mid", "high"],
+                  "not": {"enum": ["mid"]}},
+        "qty": {"type": "integer", "if": {"minimum": 500},
+                "then": {"multipleOf": 2}},
+        "tag": {"type": "string", "minLength": 2, "maxLength": 8},
+    }
+    i = F.col("id")
+    exprs = {
+        "code": F.when(i == 5, "bad").otherwise("AB123"),
+        "pct": F.when(i == 4, 101.0).otherwise(i * 0.5),
+        "level": F.element_at(F.array(*map(F.lit, ["low", "mid", "high"])),
+                              (i % 3 + 1).cast("int")),
+        "qty": F.when(i == 3, 601).otherwise(i * 200).cast("int"),
+        "tag": F.when(i == 2, F.lit(None)).otherwise("tag"),
+    }
+    kinds = list(defs)
+    cols = [(f"c{n:03d}", kinds[n % len(kinds)]) for n in range(ncols)]
+    contract = {"$defs": defs, "type": "object",
+                "required": [c for c, k in cols if k == "tag"],
+                "properties": {c: {"$ref": f"#/$defs/{k}"}
+                               for c, k in cols}}
+    return contract, [exprs[k].alias(c) for c, k in cols]
+
+
+def test_violation_columns_are_built_only_for_violation_rows(
+        spark, monkeypatch):
+    """Compiling and counting never build a check's message, failing
+    value or type_match Column; the first ``violations()`` builds them
+    once, and a second one reuses what the first built."""
+    import collections
+
+    from jsonschema_spark.compiler import (applicators, keywords, legacy,
+                                           registry)
+
+    calls = collections.Counter()
+
+    def count(module, name):
+        orig = getattr(module, name)
+
+        def counted(*a, **kw):
+            calls[name] += 1
+            return orig(*a, **kw)
+        monkeypatch.setattr(module, name, counted)
+
+    for module in (registry, keywords, applicators, legacy):
+        count(module, "fmt_message")
+    count(registry, "stringify")
+    count(registry, "type_match_column")
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def recording(command, *a, **kw):
+        sent.append(command)
+        return send(command, *a, **kw)
+    monkeypatch.setattr(client, "send_command", recording)
+
+    contract, cols = _wide_ref_contract(60)
+    df = spark.range(6).select("id", *cols)
+    v = CompiledValidator(contract, df)
+    assert len(v.checks) >= 60
+    assert v.counts(df) == (1, 5)
+    assert v.valid_column is v.valid_column
+    assert not calls
+    builders = ("format_string", "to_json", "base64")
+    assert not [c for c in sent if any(f"\n{b}\n" in c for b in builders)]
+
+    rows = v.violations(df, ["id"]).collect()
+    assert sorted({r["id"] for r in rows}) == [1, 2, 3, 4, 5]
+    assert {r["message"] for r in rows if r["keyword"] == "multipleOf"} \
+        == {"601 is not a multiple of 2"}
+    assert calls["fmt_message"] and calls["stringify"] \
+        and calls["type_match_column"]
+    first = dict(calls)
+    v.violations(df, ["id"])
+    assert dict(calls) == first

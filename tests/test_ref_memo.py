@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jsonschema_spark import CompiledValidator
+from jsonschema_spark.operators.bestmatch import best_match, best_match_deep
 
 
 def _mkdf(spark):
@@ -56,7 +57,7 @@ def test_memo_replay_matches_fresh_compile_verdicts(spark):
     # $.x via different routes/prefixes.
     schema = {
         "$defs": {
-            "c": {"minimum": 2, "multipleOf": 3},
+            "c": {"type": "integer", "minimum": 2, "multipleOf": 3},
             "a": {"allOf": [{"$ref": "#/$defs/c"}]},
             "b": {"anyOf": [{"$ref": "#/$defs/c"}, {"maximum": 0}]},
         },
@@ -65,8 +66,8 @@ def test_memo_replay_matches_fresh_compile_verdicts(spark):
     }
     inline = {
         "properties": {"x": {"allOf": [
-            {"allOf": [{"minimum": 2, "multipleOf": 3}]},
-            {"anyOf": [{"minimum": 2, "multipleOf": 3},
+            {"allOf": [{"type": "integer", "minimum": 2, "multipleOf": 3}]},
+            {"anyOf": [{"type": "integer", "minimum": 2, "multipleOf": 3},
                        {"maximum": 0}]},
         ]}},
     }
@@ -79,6 +80,30 @@ def test_memo_replay_matches_fresh_compile_verdicts(spark):
     fb = [r["valid"] for r in
           vb.with_valid(df).orderBy("_i").select("valid").collect()]
     assert fa == fb == [False, True, True, False, True]
+    # the replayed checks carry the deferred message / failing value /
+    # type_match builders of the first expansion: every violation field
+    # and the best_match choices must equal the inlined compile's
+    fields = ["_i", "keyword", "json_path", "schema_path", "message",
+              "failing_value"]
+
+    def rows(frame, *extra):
+        return sorted(map(tuple, frame.select(*fields, *extra).collect()),
+                      key=repr)
+
+    def both(call, *extra):
+        return [rows(call(v), *extra) for v in (va, vb)]
+
+    got, want = both(lambda v: v.violations_with_context(df, ["_i"]),
+                     "type_match", "context_of")
+    assert got == want
+    assert (3, "multipleOf", "7 is not a multiple of 3", "7", True) in {
+        (r[0], r[1], r[4], r[5], r[6]) for r in got}
+    got, want = both(lambda v: best_match(v.violations(df, ["_i"]), ["_i"]),
+                     "type_match")
+    assert got == want
+    got, want = both(lambda v: best_match_deep(
+        v.violations_with_context(df, ["_i"]), ["_i"]))
+    assert got == want
 
 
 def test_memo_snapshot_isolated_from_caller_mutation(spark):

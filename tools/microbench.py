@@ -29,6 +29,48 @@ def timeit(fn, repeat=5):
     return min(ts), statistics.median(ts)
 
 
+def wide_ref_creation(spark):
+    """Compile the ``wide_contracts`` benchmark's 240-column ``$ref``
+    contract: best-of-5 ms and py4j round trips per check (median),
+    counted on the session's gateway client."""
+    ncols = 240
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from inputs import wide_columns, wide_contract
+    from pyspark.sql import types as T
+
+    from jsonschema_spark import CompiledValidator
+
+    spark_type = {"code": T.StringType(), "pct": T.DoubleType(),
+                  "level": T.StringType(), "qty": T.IntegerType(),
+                  "ratio": T.DoubleType(), "tag": T.StringType()}
+    df = spark.createDataFrame([], T.StructType(
+        [T.StructField(c, spark_type[k]) for c, k in wide_columns(ncols)]))
+    contract = wide_contract(ncols)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, [0]
+
+    def counting(*a, **kw):
+        sent[0] += 1
+        return send(*a, **kw)
+    client.send_command = counting
+    try:
+        CompiledValidator(contract, df)  # warm-up
+        trips, checks = [], 0
+        for _ in range(5):
+            before = sent[0]
+            checks = len(CompiledValidator(contract, df).checks)
+            trips.append(sent[0] - before)
+        best, _ = timeit(lambda: CompiledValidator(contract, df), 5)
+    finally:
+        client.send_command = send
+    return (f"validator_creation ({ncols}-col `$ref` contract)",
+            f"{best * 1000:.0f} ms, "
+            f"{statistics.median(trips) / checks:.1f} py4j round trips "
+            f"per check",
+            f"{checks} checks; messages, failing values and type_match "
+            f"are built only by violations()")
+
+
 def main() -> None:
     from jsonschema_spark import CompiledValidator
     from jsonschema_spark.session import get_spark
@@ -45,6 +87,7 @@ def main() -> None:
     results.append(("validator_creation (7-col image spec)",
                     f"{best * 1000:.1f} ms", "compile once per job; "
                     "amortized over every row"))
+    results.append(wide_ref_creation(spark))
 
     # --- const vs enum (benchmarks/const_vs_enum.py) ---------------------
     enum_spec = {"properties": {"fmt": {"enum": [f"v{i}" for i in
@@ -121,8 +164,17 @@ def main() -> None:
     ]
     for name, res, note in results:
         lines.append(f"| {name} | {res} | {note} |")
-    with open(os.path.join(REPO, "MICROBENCH.md"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    # the table replaces the file's head; the hand-written sections
+    # from the first "## " heading on are kept as they are
+    path = os.path.join(REPO, "MICROBENCH.md")
+    tail = ""
+    if os.path.exists(path):
+        with open(path) as fh:
+            old = fh.read()
+        if "\n## " in old:
+            tail = "\n" + old[old.index("\n## ") + 1:]
+    with open(path, "w") as fh:
+        fh.write("\n".join(lines) + "\n" + tail)
     for r in results:
         print(r)
     spark.stop()
