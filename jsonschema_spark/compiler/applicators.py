@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .context import CompileContext, pointer_escape
-from .node import Check, Node
+from .node import Node
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
                        fmt_message, make_check)
 
@@ -47,7 +47,6 @@ def c_all_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     for i, sub in enumerate(value):
         child = compile_subschema(ctx.child(schema_fragment=f"allOf/{i}"), sub)
         out.checks.extend(child.checks)
-        out._extra_ok.extend(child._extra_ok)
         out.context.extend(child.context)
     return out
 
@@ -126,7 +125,6 @@ def c_if(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
         for chk in child.context:
             chk.pred = (~if_ok) | chk.pred
             out.context.append(chk)
-        out._extra_ok.extend((~if_ok) | p for p in child._extra_ok)
     if "else" in schema:
         child = compile_subschema(ctx.child(schema_fragment="else"),
                                   schema["else"])
@@ -136,7 +134,6 @@ def c_if(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
         for chk in child.context:
             chk.pred = if_ok | chk.pred
             out.context.append(chk)
-        out._extra_ok.extend(if_ok | p for p in child._extra_ok)
     return out
 
 
@@ -268,7 +265,6 @@ def _memo_store(ctx: CompileContext, mkey: tuple, child: Node,
         p0,
         [c.clone() for c in child.checks],
         [c.clone() for c in child.context],
-        list(child._extra_ok),
         [_dc_replace(a) for a in ann],
         list(ctx.warnings[n_warn:]),
     )
@@ -278,7 +274,7 @@ def _memo_replay(ctx: CompileContext, entry: tuple) -> Node:
     """Rebuild a Node from a memo snapshot, rebasing every recorded
     schema path from the stored call-site prefix to this one.  Fresh
     Check clones each time — see _memo_store."""
-    p0, checks, context, extra_ok, ann, warns = entry
+    p0, checks, context, ann, warns = entry
     p1 = ctx.schema_path
     out = Node()
     for chk in checks:
@@ -289,7 +285,6 @@ def _memo_replay(ctx: CompileContext, entry: tuple) -> Node:
         out.context.append(chk.clone(
             schema_path=_rebase_sp(chk.schema_path, p0, p1),
             context_of=_rebase_sp(chk.context_of, p0, p1)))
-    out._extra_ok.extend(extra_ok)
     for a in ann:
         ctx.annotations.append(_dc_replace(
             a, schema_path=_rebase_sp(a.schema_path, p0, p1)))
@@ -375,7 +370,6 @@ def _compile_referent(ctx: CompileContext, referent: Any, rbase: str,
     # $ref does not prefix the schema path (validators.py:392-393)
     out = Node()
     out.checks.extend(child.checks)
-    out._extra_ok.extend(child._extra_ok)
     out.context.extend(child.context)
     return out
 
@@ -466,7 +460,6 @@ def c_properties(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node
             child_ctx = _bind_member(ctx, fld, f"properties/{pointer_escape(name)}")
             child = compile_subschema(child_ctx, sub)
             out.checks.extend(child.checks)
-            out._extra_ok.extend(child._extra_ok)
             out.context.extend(child.context)
         return out
     if ctx.is_map():
@@ -480,7 +473,6 @@ def c_properties(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node
                                   row_fields=None)
             child = compile_subschema(child_ctx, sub)
             out.checks.extend(child.checks)
-            out._extra_ok.extend(child._extra_ok)
         return out
     return None
 
@@ -499,7 +491,6 @@ def c_pattern_properties(ctx: CompileContext, value: Any,
                         ctx, fld, f"patternProperties/{pointer_escape(pattern)}")
                     child = compile_subschema(child_ctx, sub)
                     out.checks.extend(child.checks)
-                    out._extra_ok.extend(child._extra_ok)
         return out
     if ctx.is_map():
         from ..functions.regex import _to_java
@@ -514,13 +505,11 @@ def c_pattern_properties(ctx: CompileContext, value: Any,
                           lambda v: _element_ok(
                               ctx, sub, v, ctx.dtype.valueType,
                               f"patternProperties/{pointer_escape(pattern)}"))
-            out._extra_ok.append(ok)
             n = make_check(ctx, "patternProperties", ok,
                            f"a value under a key matching {pattern!r} "
                            f"failed its subschema",
                            schema_suffix=f"patternProperties/{pointer_escape(pattern)}")
             out.checks.extend(n.checks)
-            out._extra_ok.pop()
         return out
     return None
 
@@ -566,7 +555,6 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
                 child_ctx = _bind_member(ctx, fld, keyword)
                 child = compile_subschema(child_ctx, value)
                 out.checks.extend(child.checks)
-                out._extra_ok.extend(child._extra_ok)
         return out
     if ctx.is_map():
         from ..functions.regex import _to_java
@@ -647,7 +635,6 @@ def c_dependent_schemas(ctx: CompileContext, value: Any,
         for chk in child.context:
             chk.pred = (~present) | chk.pred
             out.context.append(chk)
-        out._extra_ok.extend((~present) | p for p in child._extra_ok)
     return out
 
 
@@ -752,7 +739,7 @@ def _sub_ok(ctx: CompileContext, sub: Any, fragment: str) -> Any:
     if sub is False:
         return False
     node = compile_subschema(ctx.child(schema_fragment=fragment), sub)
-    return node.ok if node.checks or node._extra_ok else True
+    return node.ok if node.checks else True
 
 
 def _member_ok(ctx: CompileContext, sub: Any, member: Column,

@@ -235,6 +235,9 @@ def c_enum(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     scalars = _scalar_isin_values(ctx, value)
     if scalars is not None:
         pred = ctx.target.isin(*scalars) if scalars else F.lit(False)
+        if scalars and not ctx.null_is_absent:
+            # a null element is present and no scalar member equals it
+            pred = F.coalesce(pred, F.lit(False))
     else:
         eqs = [e for e in (_literal_eq(ctx, v) for v in value)
                if e is not None]

@@ -96,12 +96,10 @@ def c_dependencies(ctx: CompileContext, value: Any,
             for chk in n.checks:
                 chk.keyword = "dependencies"
             out.checks.extend(n.checks)
-            out._extra_ok.extend(n._extra_ok)
     if schemas:
         n = applicators.c_dependent_schemas(ctx, schemas, schema)
         if n is not None:
             out.checks.extend(n.checks)
-            out._extra_ok.extend(n._extra_ok)
     return out
 
 
@@ -159,7 +157,7 @@ def _type_or_schema_pred(ctx: CompileContext, t: Any):
             return _F.lit(False)
         return _type_pred_for(ctx, t)
     node = compile_subschema(ctx.child(schema_fragment="type"), t)
-    if not (node.checks or node._extra_ok):
+    if not node.checks:
         return None  # True schema: statically satisfied
     return node.ok
 

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import copy
 from dataclasses import MISSING, dataclass, field
-from functools import partial
 from typing import Optional, Sequence
 
 from pyspark.sql import Column
@@ -134,17 +133,13 @@ class Node:
     """A compiled (sub)schema: its checks plus the combined validity."""
 
     checks: list[Check] = field(default_factory=list)
-    #: extra predicates that participate in this subschema's overall
-    #: validity but are not reported as individual checks (used by
-    #: applicators that fold children into one reported error).
-    _extra_ok: list[Column] = field(default_factory=list)
     #: context checks (see Check.context_of) — propagated up but never
     #: part of .ok
     context: list[Check] = field(default_factory=list)
 
     @property
     def ok(self) -> Column:
-        return all_of([c.pred for c in self.checks] + self._extra_ok)
+        return all_of([c.pred for c in self.checks])
 
 
 def all_of(cols: Sequence[Column]) -> Column:
@@ -156,23 +151,3 @@ def all_of(cols: Sequence[Column]) -> Column:
         return cols[0] if cols else F.lit(True)
     mid = len(cols) // 2
     return all_of(cols[:mid]) & all_of(cols[mid:])
-
-
-def static_node(valid: bool, json_path: str, schema_path: str,
-                message: Optional[str] = None) -> Node:
-    """A node whose outcome is known at compile time (boolean schemas,
-    statically-impossible type checks).  True compiles to zero checks.
-    """
-    if valid:
-        return Node()
-    n = Node()
-    n.checks.append(Check(
-        keyword="$schema",
-        json_path=json_path,
-        schema_path=schema_path,
-        pred=F.lit(False),
-        message=partial(F.lit,
-                        message or "schema is statically unsatisfiable"),
-        failing_value=null_string,
-    ))
-    return n

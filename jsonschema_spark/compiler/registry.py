@@ -20,10 +20,9 @@ from typing import Any, Callable, Optional, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .context import CompileContext, schema_path_join
-from .node import Check, Node, null_string, static_node
+from .node import Check, Node, null_string
 
 CompilerFn = Callable[[CompileContext, Any, dict], Optional[Node]]
 
@@ -159,14 +158,23 @@ def stringify(ctx: CompileContext) -> Column:
                        lambda: ctx.target.cast("string"))
 
 
-def guard(ctx: CompileContext, pred: Column) -> Column:
+#: keywords that judge a JSON null instead of skipping it: every other
+#: keyword applies to one instance type only and so passes a null
+_NULL_KEYWORDS = frozenset({"type", "enum", "const", "not", "anyOf",
+                            "oneOf", "$falseSchema", "$schema", "disallow"})
+
+
+def guard(ctx: CompileContext, pred: Column, keyword: str) -> Column:
     """NULL-at-binding = property absent: every bound check passes on NULL
     (the reference never applies a property subschema to a missing key —
-    /root/reference/jsonschema/_keywords.py:290-301 iterates only present
-    properties).  Array elements set ``null_is_absent=False`` because a
-    JSON null *element* is a present null instance.
+    jsonschema/_keywords.py:290-301 iterates only present properties).
+    Array elements set ``null_is_absent=False`` because a JSON null
+    *element* is a present null instance: there only `_NULL_KEYWORDS`
+    judge it, and every other keyword passes it, as the reference skips
+    a keyword whose instance type does not match.
     """
-    if ctx.target is None or not getattr(ctx, "null_is_absent", True):
+    if ctx.target is None or (not ctx.null_is_absent
+                              and keyword in _NULL_KEYWORDS):
         return pred
     return cached_expr(ctx, "isnull", lambda: ctx.target.isNull()) | pred
 
@@ -236,7 +244,7 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
         n.checks.append(Check(
             keyword="$falseSchema", json_path=ctx.json_path,
             schema_path=ctx.schema_path or "$falseSchema",
-            pred=guard(ctx, pred),
+            pred=guard(ctx, pred, "$falseSchema"),
             message=partial(F.lit, "False schema does not allow any value"),
             failing_value=partial(stringify, ctx),
         ))
@@ -298,15 +306,14 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
             continue
         for chk in node.checks:
             if not chk.skip_null_guard:
-                chk.pred = guard(ctx, chk.pred)
+                chk.pred = guard(ctx, chk.pred, chk.keyword)
             annotate(chk)
             out.checks.append(chk)
         for chk in node.context:
             if not chk.skip_null_guard:
-                chk.pred = guard(ctx, chk.pred)
+                chk.pred = guard(ctx, chk.pred, chk.keyword)
             annotate(chk)
             out.context.append(chk)
-        out._extra_ok.extend(guard(ctx, p) for p in node._extra_ok)
 
     # annotation keywords produce output units (2020-12 "basic" format)
     # when the owning subschema successfully applies to a present
@@ -314,8 +321,8 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
     present = set(schema) & ANNOTATION_VALUE_KEYWORDS
     if present:
         from .node import AnnotationUnit
-        applies = guard(ctx, out.ok) if ctx.target is not None else out.ok
-        if ctx.target is not None and getattr(ctx, "null_is_absent", True):
+        applies = out.ok
+        if ctx.target is not None and ctx.null_is_absent:
             applies = ctx.target.isNotNull() & applies
         for kw in sorted(present):
             ctx.annotations.append(AnnotationUnit(

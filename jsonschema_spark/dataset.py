@@ -481,7 +481,9 @@ def full_check_counts(df: DataFrame, schema: dict,
             agg = g.agg(
                 F.sum("_c").alias("rows"),
                 F.sum("_bad").alias("bad"),
-                F.sum((F.col("_c") > 1).cast("long")).alias("dups"),
+                # SQL UNIQUE: the NULL-key group is never a duplicate
+                F.sum(((F.col("_c") > 1) & F.col(key).isNotNull())
+                      .cast("long")).alias("dups"),
                 *[F.sum(c).alias(c) for c in orphan_cols.values()],
                 *[F.sum(c).alias(c) for c in quality_cols.values()],
             ).collect()[0]
@@ -494,7 +496,8 @@ def full_check_counts(df: DataFrame, schema: dict,
                 out["quality"][kw] = agg[c] or 0
             first = False
         else:
-            n = (df.groupBy(key).agg(F.count(F.lit(1)).alias("_c"))
+            n = (df.where(F.col(key).isNotNull()).groupBy(key)
+                 .agg(F.count(F.lit(1)).alias("_c"))
                  .filter(F.col("_c") > 1).count())
             out["dup_groups"][key] = n
     return out

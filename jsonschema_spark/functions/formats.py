@@ -35,10 +35,6 @@ def format_predicate(col: Column, name: str) -> Optional[Column]:
     return fn(col) if fn is not None else None
 
 
-def known_formats() -> set[str]:
-    return set(_REGISTRY)
-
-
 # --- native (regex / builtin) formats --------------------------------------
 
 _IPV4 = (r"\A((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"

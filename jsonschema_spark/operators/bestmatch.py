@@ -181,12 +181,6 @@ def error_tree(violations: DataFrame) -> DataFrame:
             .orderBy("json_path"))
 
 
-def error_counts_by_keyword(violations: DataFrame) -> DataFrame:
-    return (violations.groupBy("keyword", "json_path")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("keyword", "json_path"))
-
-
 def _jsonpath_to_pointer(c):
     """Column: engine JSONPath -> RFC 6901 JSON pointer, positional."""
     import re as _re

@@ -251,14 +251,3 @@ def resolve_duplicates(df: DataFrame, pairs: DataFrame, id_col: str,
                         F.col("_survivor").isNull()
                         | (F.col(id_col) == F.col("_survivor")))
             .drop("_survivor"))
-
-
-def cluster_summary(pairs: DataFrame, id_a: str = "id_a",
-                    id_b: str = "id_b", **kw) -> DataFrame:
-    """(cluster_id, n_members, survivor_id) for every non-singleton
-    cluster — the audit view of what dedup would drop.  survivor_id here
-    is the min member (matching :func:`resolve_duplicates` default)."""
-    cc = duplicate_clusters(pairs, id_a, id_b, **kw)
-    return (cc.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n_members"),
-                 F.min("id").alias("survivor_id")))

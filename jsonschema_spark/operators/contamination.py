@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .repetition import word_array, word_ngrams
+from .repetition import word_array
 
 
 def _distinct_gram_frame(df: DataFrame, text_col: str, n: int,
@@ -104,19 +104,3 @@ def ngram_contamination(df: DataFrame, ref_df: DataFrame,
             .otherwise(F.lit(0.0))
     return out.select("*", frac.alias("contaminated_frac"),
                       (F.col("n_hit") > 0).alias("contaminated"))
-
-
-def decontaminate(df: DataFrame, ref_df: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  ref_text_col: str | None = None, n: int = 13,
-                  max_frac: float = 0.0, on_hash: bool = True,
-                  ) -> DataFrame:
-    """Drop contaminated rows: keeps rows of `df` whose overlap
-    fraction is <= `max_frac` (default: any shared n-gram drops the
-    row, the GPT-3 rule).  Returns `df`'s full rows."""
-    scores = ngram_contamination(df, ref_df, id_col, text_col,
-                                 ref_text_col, n, on_hash=on_hash)
-    keep = scores.filter(F.col("contaminated_frac") <= max_frac) \
-                 .select(id_col)
-    # keep-list is corpus-sized (most rows survive) — shuffle semi join
-    return df.join(keep, id_col, "left_semi")

@@ -12,7 +12,6 @@ are never moved.
 from __future__ import annotations
 
 import math
-from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -21,8 +20,6 @@ from .kernels import (bounded_collect, empty, launch, list_matrix, track,
                       worker_memo)
 # one registry releases what every operator here persisted
 from .kernels import clear_persisted as clear_dedup_cache  # noqa: F401
-
-MAX_HASH = (1 << 62)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -38,20 +35,6 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------- exact ------
-
-def exact_duplicates(df: DataFrame, cols: Sequence[str],
-                     id_col: str) -> DataFrame:
-    """Exact dedup via hash-groupBy: rows sharing identical `cols` content.
-    Returns (content_hash, dup_count, ids) for groups with >1 member."""
-    h = F.md5(F.concat_ws("\x1f", *[F.coalesce(F.col(c).cast("string"),
-                                               F.lit("\x00"))
-                                    for c in cols]))
-    return (df.withColumn("content_hash", h)
-            .groupBy("content_hash")
-            .agg(F.count(F.lit(1)).alias("dup_count"),
-                 F.sort_array(F.collect_list(id_col)).alias("ids"))
-            .filter(F.col("dup_count") > 1))
-
 
 def exact_fingerprint_pairs(df: DataFrame, id_col: str,
                             text_col: str) -> DataFrame:
@@ -91,36 +74,6 @@ def shingles(text: Column, k: int = 5) -> Column:
 
 
 # ------------------------------------------------------------ minhash -----
-
-def minhash_signature(items: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: for each of `num_hashes` seeded hash functions,
-    the min of xxhash64(item, seed) over the item set.  One pass via
-    F.aggregate with a zip_with(least) accumulator — O(|items| * H) JVM
-    work, zero Python."""
-    init = F.array_repeat(F.lit(MAX_HASH).cast("long"), num_hashes)
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        items, init,
-        lambda acc, it: F.zip_with(
-            acc,
-            F.transform(seeds, lambda s: F.xxhash64(it, s)),
-            lambda a, b: F.least(a, b)))
-
-
-def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Array of `bands` LSH bucket keys: hash of each signature slice.
-
-    Band/row counts are Python ints, so the whole array is literal
-    ``xxhash64(band, sig[i], ...)`` expressions — fully codegen'd, no
-    interpreted HOF lambda and no per-row string allocation (hashing the
-    slice elements directly beats building a joined string per band)."""
-    return F.array(*[
-        F.xxhash64(F.lit(b),
-                   *[F.element_at(sig, b * rows_per_band + r + 1)
-                     for r in range(rows_per_band)])
-        for b in range(bands)
-    ])
-
 
 def minhash_signatures_df(df: DataFrame, id_col: str, text_col: str,
                           num_hashes: int = 64,

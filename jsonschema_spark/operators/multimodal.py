@@ -441,18 +441,6 @@ def dct_phash(px: np.ndarray) -> int:
     return dct_phash_batch([px])[0]
 
 
-def _gray32(px: np.ndarray) -> np.ndarray:
-    """Rec.601 gray + nearest-neighbor 32x32 sample (dct_phash spec).
-    Samples FIRST (bit-identical: the same uint8 values go through the
-    same weighted sum either way) so the gray math touches 32x32x3
-    regardless of source resolution."""
-    h, w = px.shape[:2]
-    ys = (np.arange(32) * h) // 32
-    xs = (np.arange(32) * w) // 32
-    s = px[np.ix_(ys, xs)]
-    return s[..., 0] * 0.299 + s[..., 1] * 0.587 + s[..., 2] * 0.114
-
-
 _BIT_WEIGHTS = (1 << np.arange(63, dtype=np.uint64))
 
 
@@ -730,79 +718,6 @@ def psnr_check_real(df: DataFrame, min_psnr: float = 40.0) -> DataFrame:
     )
 
 
-# --------------------------------------------- transforms: resize ---------
-
-def resize_images(df: DataFrame, out_w: int, out_h: int,
-                  id_col: str = "image_id",
-                  bytes_col: str = "bytes") -> DataFrame:
-    """Decode -> nearest-neighbour resize -> re-encode, one Arrow-batched
-    mapInPandas pass (brief: 'resize as Pandas UDFs over mapInPandas').
-    Real math for BMP payloads (the built-in codec); undecodable blobs
-    yield a NULL payload row so planted corruption stays visible
-    downstream instead of killing the job."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": []}
-            for image_id, blob in zip(pdf[id_col], pdf[bytes_col]):
-                out["image_id"].append(image_id)
-                px = decode_bmp(bytes(blob)) if blob is not None else None
-                if px is None:
-                    out["bytes"].append(None)
-                    out["w"].append(0)
-                    out["h"].append(0)
-                    continue
-                h, w = px.shape[:2]
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                resized = px[yi][:, xi]
-                out["bytes"].append(encode_bmp(resized))
-                out["w"].append(out_w)
-                out["h"].append(out_h)
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).alias("image_id"),
-                     F.col(bytes_col).alias(bytes_col)).mapInPandas(
-        run, schema="image_id string, bytes binary, w int, h int")
-
-
-def image_features(df: DataFrame, id_col: str = "image_id",
-                   bytes_col: str = "bytes",
-                   hist_bins: int = 8) -> DataFrame:
-    """Feature extraction (brief: 'feature-extract'): per-channel means
-    + a luminance histogram from the DECODED pixels, one mapInPandas
-    pass.  The feature vector is embedding-shaped (array<double>), so
-    it feeds the similarity/dedup operators directly."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "decoded": [], "mean_rgb": [],
-                   "luma_hist": []}
-            for image_id, blob in zip(pdf[id_col], pdf[bytes_col]):
-                out["image_id"].append(image_id)
-                px = decode_bmp(bytes(blob)) if blob is not None else None
-                if px is None:
-                    out["decoded"].append(False)
-                    out["mean_rgb"].append(None)
-                    out["luma_hist"].append(None)
-                    continue
-                luma = (0.299 * px[:, :, 0] + 0.587 * px[:, :, 1]
-                        + 0.114 * px[:, :, 2])
-                hist, _ = np.histogram(luma, bins=hist_bins,
-                                       range=(0.0, 256.0))
-                out["decoded"].append(True)
-                out["mean_rgb"].append(
-                    [float(px[:, :, c].mean()) for c in range(3)])
-                out["luma_hist"].append(
-                    (hist / max(px.shape[0] * px.shape[1], 1)).tolist())
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).alias("image_id"),
-                     F.col(bytes_col).alias(bytes_col)).mapInPandas(
-        run, schema="image_id string, decoded boolean, "
-                    "mean_rgb array<double>, luma_hist array<double>")
-
-
 # ------------------------------------------ video: frame sampling --------
 #
 # Deterministic container: b'VID0' | uint32 n_frames | n x (uint32 len |
@@ -1024,38 +939,3 @@ def decode_audio(df: DataFrame, carry: tuple = ()) -> DataFrame:
     return df.select("audio_id", "bytes", *carry).mapInPandas(
         run, schema=schema)
 
-
-def audio_features(df: DataFrame, id_col: str = "audio_id",
-                   bytes_col: str = "bytes") -> DataFrame:
-    """Per-clip audio features from the REAL decode: RMS level, peak,
-    zero-crossing rate, duration — one mapInPandas pass, numpy math
-    (the audio analogue of image_features)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"audio_id": [], "ok": [], "duration_s": [],
-                   "rms": [], "peak": [], "zcr": []}
-            for audio_id, blob in zip(pdf[id_col], pdf[bytes_col]):
-                out["audio_id"].append(audio_id)
-                dec = decode_wav(bytes(blob)) if blob is not None else None
-                if dec is None:
-                    out["ok"].append(False)
-                    for k in ("duration_s", "rms", "peak", "zcr"):
-                        out[k].append(0.0)
-                    continue
-                samples, rate = dec
-                x = samples[:, 0].astype(np.float64) / 32768.0
-                out["ok"].append(True)
-                out["duration_s"].append(len(x) / rate)
-                out["rms"].append(float(np.sqrt(np.mean(x ** 2)))
-                                  if len(x) else 0.0)
-                out["peak"].append(float(np.max(np.abs(x)))
-                                   if len(x) else 0.0)
-                out["zcr"].append(float(np.mean(
-                    np.abs(np.diff(np.signbit(x).astype(np.int8)))))
-                    if len(x) > 1 else 0.0)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        run, schema="audio_id string, ok boolean, duration_s double, "
-                    "rms double, peak double, zcr double")

@@ -70,14 +70,3 @@ def pii_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         *[c.getField(f"n_{n}").alias(f"n_{n}") for n in PII_PATTERNS],
         total.alias("n_pii"),
         redact_pii(t).alias("redacted"))
-
-
-def drop_pii_rows(df: DataFrame, text_col: str,
-                  max_hits: int = 0) -> DataFrame:
-    """C4-style row filter: drop rows with more than `max_hits` PII
-    matches (default: any hit drops the row)."""
-    t = F.col(text_col)
-    c = pii_counts(t)
-    total = sum((c.getField(f"n_{n}") for n in PII_PATTERNS),
-                F.lit(0).cast("long"))
-    return df.filter(total <= max_hits)

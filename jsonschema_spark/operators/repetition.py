@@ -242,23 +242,3 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str,
             F.round(F.least(F.col(f"_dup_{n}") / base, F.lit(1.0)), 6)
             .alias(f"dup_{n}gram_char_frac"))
     return stats.select(*cols)
-
-
-def repetition_filter(df: DataFrame, id_col: str, text_col: str,
-                      max_top: dict[int, float] | None = None,
-                      max_dup: dict[int, float] | None = None,
-                      ) -> DataFrame:
-    """Rows that PASS the repetition thresholds (Gopher defaults:
-    top-2 0.20 / top-3 0.18 / top-4 0.16; dup-5..10 0.15 down to 0.10).
-    `max_top` / `max_dup` map n -> max allowed fraction."""
-    if max_top is None:
-        max_top = {2: 0.20, 3: 0.18, 4: 0.16}
-    if max_dup is None:
-        max_dup = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
-    t = F.col(text_col)
-    keep = F.lit(True)
-    for n, lim in max_top.items():
-        keep = keep & (top_ngram_char_frac(t, n) <= lim)
-    for n, lim in max_dup.items():
-        keep = keep & (dup_ngram_char_frac(t, n) <= lim)
-    return df.filter(keep)

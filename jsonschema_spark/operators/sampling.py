@@ -47,14 +47,6 @@ def uniform_hash(key: Column, salt: str = "") -> Column:
             / F.lit(_TWO_32))
 
 
-def hash_bucket(key: Column, n_buckets: int, salt: str = "") -> Column:
-    """Stable int bucket in [0, n_buckets) — k-fold cross-validation
-    fold ids, sharding keys, A/B cells."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    return F.floor(uniform_hash(key, salt) * n_buckets).cast("int")
-
-
 def split_column(key: Column, weights: Mapping[str, float],
                  salt: str = "") -> Column:
     """Label column assigning each row to one of `weights`' splits with

@@ -7,7 +7,7 @@ aggregate) — one narrow pass, codegen'd, no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # small per-language stopword kernels for the n-gram/stopword heuristic
@@ -24,13 +24,6 @@ def token_count(text: Column) -> Column:
     trimmed = F.trim(text)
     return F.when(F.length(trimmed) == 0, F.lit(0)) \
             .otherwise(F.size(F.split(trimmed, r"\s+")))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish proxy: count of word pieces + standalone punctuation
-    (`\\w+` runs and non-space non-word chars)."""
-    return (F.coalesce(F.regexp_count(text, F.lit(r"\w+")), F.lit(0))
-            + F.coalesce(F.regexp_count(text, F.lit(r"[^\w\s]")), F.lit(0)))
 
 
 def stopword_hits(text: Column, words: list[str]) -> Column:
@@ -102,17 +95,6 @@ def quality_score(text: Column) -> Column:
                     + diversity * 0.2), 6)
 
 
-def rolling_fingerprint(text: Column, mod: int = (1 << 31) - 1) -> Column:
-    """Polynomial rolling hash of the normalized text (order-sensitive
-    document fingerprint), computed natively char-by-char."""
-    norm = F.lower(F.regexp_replace(text, r"\s+", " "))
-    chars = F.split(norm, "")
-    return F.aggregate(
-        chars, F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * 31 + F.coalesce(F.ascii(ch), F.lit(0)),
-                               F.lit(mod)))
-
-
 def content_fingerprint(text: Column) -> Column:
     """Order-insensitive normalized fingerprint: md5 of the sorted
     distinct token set (classic near-dup blocking key)."""
@@ -120,17 +102,3 @@ def content_fingerprint(text: Column) -> Column:
         F.split(F.lower(F.trim(text)), r"\W+")))
     return F.md5(F.array_join(words, " "))
 
-
-def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One-pass text profile: language, quality, token counts,
-    fingerprints."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        detect_language(t).alias("lang_detected"),
-        quality_score(t).alias("quality"),
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_pieces"),
-        rolling_fingerprint(t).alias("fingerprint"),
-        content_fingerprint(t).alias("content_key"),
-    )

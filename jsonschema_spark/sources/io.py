@@ -41,17 +41,6 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet",
     return reader.options(**options).format(fmt).load(path)
 
 
-def validate_json_lines(spark: SparkSession, path: str, spec: dict,
-                        id_cols=(), schema: Optional[Any] = None,
-                        registry=None) -> DataFrame:
-    """The reference's CLI flow lifted: NDJSON instances -> violation
-    rows (`python -m jsonschema -i instance.json schema.json` becomes one
-    distributed scan)."""
-    from ..validator import CompiledValidator
-    df = read_table(spark, path, "json", schema=schema)
-    return CompiledValidator(spec, df, registry).violations(df, id_cols)
-
-
 def write_bucketed_table(df: DataFrame, name: str, path: str,
                          bucket_col: str, n_buckets: int = 128,
                          sort: bool = False) -> None:

@@ -127,7 +127,6 @@ class CompiledValidator:
         #: exceptions.py:120-131) — excluded from validity and from the
         #: default violations output, consumed by best_match descent
         self.context_checks: list[Check] = node.context
-        self._extra_ok = node._extra_ok
         self.warnings: list[str] = list(ctx.warnings)
         #: compile-time annotation units (readOnly/title/default/...)
         #: with applicability predicates — see annotation_units()
@@ -138,7 +137,7 @@ class CompiledValidator:
     def valid_column(self) -> Column:
         """Row validity: the Kleene AND of every check, built on first
         read and reused by every later call on this validator."""
-        return all_of([c.pred for c in self.checks] + self._extra_ok)
+        return all_of([c.pred for c in self.checks])
 
     def with_valid(self, df: DataFrame, col: str = "valid") -> DataFrame:
         return df.withColumn(col, self.valid_column)

@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from jsonschema_spark.operators.clusters import (
-    cluster_summary,
     connected_components,
     duplicate_clusters,
     resolve_duplicates,
@@ -151,11 +150,3 @@ def test_resolve_duplicates_prefer_column(spark):
                              prefer=-F.col("quality"))
     survivor = [r["doc_id"] for r in out.filter("is_canonical").collect()]
     assert survivor == [2]  # highest quality wins
-
-
-def test_cluster_summary(spark):
-    pairs = spark.createDataFrame([(5, 9), (9, 7), (2, 1)],
-                                  "id_a long, id_b long")
-    got = {r["cluster_id"]: (r["n_members"], r["survivor_id"])
-           for r in cluster_summary(pairs).collect()}
-    assert got == {5: (3, 5), 1: (2, 1)}

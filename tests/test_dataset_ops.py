@@ -4,6 +4,7 @@ best_match/ErrorTree, runner resume."""
 import pytest
 from pyspark.sql import functions as F
 
+from jsonschema_spark.dataset import full_check_counts
 from jsonschema_spark.operators.bestmatch import best_match, error_tree
 from jsonschema_spark.operators.drift import (drift_statistics, histogram,
                                               drift_violations)
@@ -64,6 +65,15 @@ def test_uniqueness_null_keys_are_absent(spark):
         viol = sorted(r["id"] for r in uniqueness_violations(
             df, "k", ["id"], strategy=strat).collect())
         assert viol == [1, 3, 6, 7], strat
+    # full_check_counts' fused pass (k) and extra key pass (j) follow
+    # the same rule; NULL-key rows still count as rows, invalid rows
+    # (j = 1 fails the minimum) and orphans (j = 1 is not in the dim)
+    fused = full_check_counts(
+        df, {"properties": {"j": {"minimum": 2}}}, unique_keys=["k", "j"],
+        referential=[("j", spark.createDataFrame([(2,)], "j int"), "j")])
+    assert fused["dup_groups"] == {"k": 2, "j": 1}
+    assert (fused["rows"], fused["invalid_rows"]) == (8, 4)
+    assert fused["orphans"] == {"j": 4}
 
 
 def test_uniqueness_violations_on_images(spark):

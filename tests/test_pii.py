@@ -6,9 +6,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.pii import (PII_PATTERNS, drop_pii_rows,
-                                            pii_counts, pii_profile,
-                                            redact_pii)
+from jsonschema_spark.operators.pii import (PII_PATTERNS, pii_counts,
+                                            pii_profile, redact_pii)
 
 DOCS_PATH = "/root/testdata/sf0.001/documents.parquet"
 
@@ -43,14 +42,6 @@ def test_redact_masks_everything(spark):
     c = df.select(pii_counts(redact_pii(F.col("t"))).alias("c")) \
           .collect()[0]["c"].asDict()
     assert sum(c.values()) == 0
-
-
-def test_drop_pii_rows(spark):
-    df = spark.createDataFrame(
-        [(1, "hi x@y.zz"), (2, "all clean")], "doc_id int, text string")
-    assert [r["doc_id"] for r in
-            drop_pii_rows(df, "text").collect()] == [2]
-    assert drop_pii_rows(df, "text", max_hits=1).count() == 2
 
 
 @pytest.mark.parametrize("name,rx", sorted(PII_PATTERNS.items()))

@@ -1,19 +1,15 @@
 """Pipeline operators: dedup (exact/minhash/simhash/ngram), similarity
 search, text analysis, multimodal plumbing."""
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.dedup import (exact_duplicates,
-                                              minhash_candidates,
+from jsonschema_spark.operators.dedup import (minhash_candidates,
                                               ngram_jaccard_pairs,
                                               simhash_duplicates)
 from jsonschema_spark.operators.multimodal import decode_images, psnr_check
 from jsonschema_spark.operators.similarity import (brute_force_topk,
                                                    max_cosine_per_vector)
-from jsonschema_spark.operators.text import text_profile
 from jsonschema_spark.sources.images import images_df
 
 DOCS = [
@@ -28,12 +24,6 @@ DOCS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string").cache()
-
-
-def test_exact_duplicates(docs):
-    out = exact_duplicates(docs, ["text"], "doc_id").collect()
-    assert len(out) == 1
-    assert out[0]["ids"] == [1, 4] and out[0]["dup_count"] == 2
 
 
 def test_minhash_candidates(docs):
@@ -93,18 +83,6 @@ def test_max_cosine_per_vector(vectors):
            for r in max_cosine_per_vector(vectors, "vec_id", "v").collect()}
     for i in range(5):
         assert out[i] > 0.999
-
-
-def test_text_profile(spark, docs):
-    prof = {r["doc_id"]: r for r in
-            text_profile(docs, "doc_id", "text").collect()}
-    assert prof[1]["lang_detected"] == "en"
-    assert prof[5]["lang_detected"] == "de"
-    assert prof[1]["n_tokens"] == 13
-    assert prof[1]["fingerprint"] == prof[4]["fingerprint"]
-    assert prof[1]["content_key"] == prof[4]["content_key"]
-    assert prof[1]["fingerprint"] != prof[3]["fingerprint"]
-    assert 0.0 <= prof[3]["quality"] <= 1.0
 
 
 def test_decode_images_and_psnr(spark):
@@ -190,40 +168,6 @@ def test_ivf_auto_n_lists(spark):
                    n_probe=6)
     n = e.count()
     assert out.count() == n       # every vector gets a neighbour
-
-
-def test_resize_and_features(spark):
-    """resize/feature-extract transforms (brief §multimodal): real
-    nearest-neighbour resize over the BMP codec — identity resize is
-    pixel-exact, downsize halves dims; features are deterministic and
-    embedding-shaped."""
-    import numpy as np
-    from jsonschema_spark.operators.multimodal import (decode_bmp,
-                                                       expected_pixels,
-                                                       image_features,
-                                                       resize_images)
-    from jsonschema_spark.sources.images import bmp_images_df
-
-    img = bmp_images_df(spark, 100, size=16).filter("id % 251 != 0")
-    same = {r["image_id"]: r for r in
-            resize_images(img, 16, 16).collect()}
-    down = {r["image_id"]: r for r in resize_images(img, 8, 8).collect()}
-    for iid, r in list(same.items())[:20]:
-        px = decode_bmp(bytes(r["bytes"]))
-        assert px.shape == (16, 16, 3)
-        if not int(iid[4:], 16) % 157 == 0:    # uncorrupted rows
-            assert np.array_equal(px, expected_pixels(iid, 16, 16))
-        d = decode_bmp(bytes(down[iid]["bytes"]))
-        assert d.shape == (8, 8, 3)
-        # nearest-neighbour: every resized pixel exists in the source
-        assert np.array_equal(d, px[::2, ::2])
-
-    feats = {r["image_id"]: r for r in image_features(img).collect()}
-    for iid, r in list(feats.items())[:20]:
-        assert r["decoded"]
-        assert len(r["mean_rgb"]) == 3
-        assert all(0.0 <= m <= 255.0 for m in r["mean_rgb"])
-        assert abs(sum(r["luma_hist"]) - 1.0) < 1e-9
 
 
 def test_video_frame_sampling(spark):
@@ -565,20 +509,6 @@ def test_audio_table_planted_violations(spark):
             assert r["header_ok"] and r["snr"] == 99.0, (i, r["snr"])
             assert r["decoded_samples"] == r["n_samples"]
             assert r["decoded_rate"] == 16_000
-
-
-def test_audio_features(spark):
-    from jsonschema_spark.operators.multimodal import audio_features
-    from jsonschema_spark.sources.images import audio_df
-
-    feats = {r["audio_id"]: r for r in
-             audio_features(audio_df(spark, 60)).collect()}
-    ok = [r for r in feats.values() if r["ok"]]
-    assert len(ok) == 59  # one truncated clip (id 0)
-    for r in ok:
-        assert 0.0 < r["rms"] <= 1.0 and 0.0 < r["peak"] <= 1.0
-        assert 0.0 <= r["zcr"] <= 1.0
-        assert r["duration_s"] > 0.04
 
 
 def test_ivf_clustered_input_sample_not_prefix_biased(spark, monkeypatch):

@@ -67,6 +67,10 @@ def col_schema(draw, col):
             kws["contains"] = {"minimum": draw(st.integers(-2, 2))}
         if draw(st.booleans()):
             kws["items"] = {"maximum": draw(st.integers(-2, 4))}
+        elif draw(st.booleans()):
+            kws["items"] = {"enum": draw(st.lists(
+                st.one_of(st.none(), st.integers(-3, 5)), min_size=1,
+                max_size=3))}
     return kws
 
 
@@ -120,7 +124,8 @@ def rows(draw):
         maybe(st.sampled_from([-2.0, -0.5, 0.0, 1.0, 1.5, 3.0, 6.0])),
         maybe(st.sampled_from(["", "a", "ab", "abc", "xy", "0b", "12ab"])),
         maybe(st.booleans()),
-        maybe(st.lists(st.integers(-3, 5), max_size=5)),
+        maybe(st.lists(st.one_of(st.none(), st.integers(-3, 5)),
+                       max_size=5)),
     )
 
 
@@ -141,6 +146,51 @@ def test_random_schema_agreement(spark, schema, data):
         assert got == want, (
             f"disagreement on {inst} under {schema}: "
             f"engine={got} reference={want}")
+
+
+NULL_ELEMENT_CASES = [
+    ("array<long>",
+     [[1, None, 7], [6], None, [None], [9], [], [None, 6], [2, 3]],
+     [{"minimum": 5}, {"enum": [1, 6]}, {"enum": [1, None]}, {"const": 6},
+      {"not": {"minimum": 5}}, {"anyOf": [{"minimum": 8}, {"maximum": 2}]},
+      {"oneOf": [{"minimum": 5}, {"multipleOf": 2}]},
+      {"if": {"minimum": 5}, "then": {"multipleOf": 3}},
+      {"multipleOf": 3}]),
+    ("array<string>",
+     [["a", None], ["bc"], None, [None], ["xyz"], [], ["ab", "a"],
+      [None, None]],
+     [{"maxLength": 2}, {"pattern": "^a"}, {"enum": ["a", "bc"]},
+      {"enum": ["a", None]}, {"const": "a"}, {"not": {"maxLength": 1}},
+      {"anyOf": [{"maxLength": 1}, {"pattern": "z$"}]}]),
+]
+
+
+def test_null_array_elements_agree_with_reference(spark):
+    """A NULL array element is a present JSON null: a keyword for
+    another instance type passes it, `enum` without a null member fails
+    it, and `not`/`anyOf`/`oneOf` judge it through their branches.  No
+    row's validity is NULL, so `counts()`, `manifest()` and
+    `violations()` agree with each other and with the reference row
+    for row."""
+    for ddl, data, subs in NULL_ELEMENT_CASES:
+        df = spark.createDataFrame(list(enumerate(data)),
+                                   f"id int, arr {ddl}")
+        for sub in subs:
+            schema = {"properties": {"arr": {"items": sub}}}
+            ref = jsonschema.Draft202012Validator(schema)
+            bad = {i for i, arr in enumerate(data)
+                   if not ref.is_valid({} if arr is None else {"arr": arr})}
+            v = CompiledValidator(schema, df)
+            valid = {r["id"]: r["valid"] for r in v.with_valid(df).collect()}
+            assert None not in valid.values(), (sub, valid)
+            assert {i for i, ok in valid.items() if not ok} == bad, sub
+            assert v.counts(df) == (len(data) - len(bad), len(bad)), sub
+            per_row = {r["id"]: r["invalid_rows"]
+                       for r in v.manifest(df, ["id"]).collect()}
+            assert {i for i, n in per_row.items() if n} == bad, sub
+            assert sum(per_row.values()) == len(bad), sub
+            assert {r["id"] for r in
+                    v.violations(df, ["id"]).collect()} == bad, sub
 
 
 def test_multiple_of_float_boundary_fuzz(spark):

@@ -74,7 +74,7 @@ def test_hamming_verified_pairs_vs_composition(docs, monkeypatch):
 
 def test_repetition_kernel_vs_column_functions(docs):
     """The mapInArrow statistics kernel == the Column-level formulation
-    (which repetition_filter still uses)."""
+    (which dataset.py's `repetition` block uses)."""
     from jsonschema_spark.operators.repetition import (
         _run_stats, char_base, repetition_signals, word_array,
         word_ngrams)

@@ -11,10 +11,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.contamination import (decontaminate,
-                                                      ngram_contamination)
+from jsonschema_spark.operators.contamination import ngram_contamination
 from jsonschema_spark.operators.repetition import (dup_ngram_char_frac,
-                                                   repetition_filter,
                                                    repetition_signals,
                                                    top_ngram_char_frac,
                                                    word_ngrams, word_array)
@@ -126,19 +124,6 @@ SELECT doc_id, n, top_frac, dup_frac FROM per_doc
             oracle5, abs=1e-9), doc_id
 
 
-def test_repetition_filter_drops_degenerate(spark):
-    # note: the clean doc must be LONG — on short docs even a
-    # count-1 top gram exceeds 16-20% of characters (by design;
-    # Gopher applies length filters separately)
-    clean = " ".join(f"unique{i} word{i}" for i in range(40))
-    df = spark.createDataFrame(
-        [(1, "spam spam spam spam spam spam spam spam"),
-         (2, clean)],
-        "doc_id int, text string")
-    kept = repetition_filter(df, "doc_id", "text")
-    assert [r["doc_id"] for r in kept.collect()] == [2]
-
-
 def test_column_scope_helpers(spark):
     df = spark.createDataFrame([("q w q w q w",)], "t string")
     row = df.select(
@@ -210,17 +195,3 @@ GROUP BY b.doc_id
     for doc_id, (n_grams, n_hit) in want.items():
         assert (got[doc_id]["n_grams"], got[doc_id]["n_hit"]) \
             == (n_grams, n_hit), doc_id
-
-
-def test_decontaminate_drops_only_contaminated(docs):
-    ref = docs.filter(F.col("source") == "src0")
-    train = docs.filter(F.col("source") != "src0")
-    scores = ngram_contamination(train, ref, n=4)
-    n_bad = scores.filter("contaminated").count()
-    kept = decontaminate(train, ref, n=4)
-    assert kept.count() == train.count() - n_bad
-    assert kept.columns == train.columns
-    # kept ids are exactly the clean ids
-    clean = {r["doc_id"] for r in
-             scores.filter(~F.col("contaminated")).collect()}
-    assert {r["doc_id"] for r in kept.select("doc_id").collect()} == clean

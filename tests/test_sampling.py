@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from jsonschema_spark.operators.sampling import (
     deterministic_sample,
-    hash_bucket,
     split_assign,
     split_column,
     uniform_hash,
@@ -65,15 +64,6 @@ def test_salt_draws_independent_assignment(spark):
     assert 0.4 < diff / len(a) < 0.6  # ~half move under a fresh salt
 
 
-def test_hash_bucket_range_and_mix(spark):
-    df = spark.createDataFrame([(i,) for i in range(5_000)], "k long")
-    got = df.select(hash_bucket(F.col("k"), 5).alias("b"))
-    counts = {r["b"]: r["n"] for r in
-              got.groupBy("b").agg(F.count("*").alias("n")).collect()}
-    assert set(counts) == {0, 1, 2, 3, 4}
-    assert all(abs(c / 5_000 - 0.2) < 0.03 for c in counts.values())
-
-
 def test_stratified_rates_and_default_drop(spark):
     rows = [(i, ["en", "fr", "de"][i % 3]) for i in range(6_000)]
     df = spark.createDataFrame(rows, "k long, lang string")
@@ -107,5 +97,3 @@ def test_sampling_validation_errors(spark):
         split_column(F.col("k"), {})
     with pytest.raises(ValueError, match="non-negative"):
         split_column(F.col("k"), {"a": -1.0, "b": 2.0})
-    with pytest.raises(ValueError, match=">= 1"):
-        hash_bucket(F.col("k"), 0)

@@ -6,7 +6,7 @@ import json
 import pytest
 
 from jsonschema_spark.cli import parse_args, run
-from jsonschema_spark.sources.io import read_table, validate_json_lines
+from jsonschema_spark.sources.io import read_table
 
 SPEC = {
     "required": ["name"],
@@ -28,13 +28,6 @@ def ndjson(tmp_path):
     p = tmp_path / "instances.json"
     p.write_text("\n".join(json.dumps(r) for r in rows))
     return str(p)
-
-
-def test_validate_json_lines(spark, ndjson):
-    v = validate_json_lines(spark, ndjson, SPEC, ["name"])
-    got = sorted((r["keyword"], r["json_path"]) for r in v.collect())
-    assert got == [("maximum", "$.age"), ("minLength", "$.name"),
-                   ("minimum", "$.age"), ("required", "$")]
 
 
 def test_cli_json_input(spark, ndjson, tmp_path):

@@ -94,15 +94,14 @@ def main() -> None:
         "exchange on the group key",
         v.manifest(img, ["fmt"])))
 
-    # 4. uniqueness via hash-prefilter: 8-byte hash shuffle + exact
-    # verify behind a broadcast of the (tiny) candidate-hash set
+    # 4. uniqueness: one partial-aggregated groupBy on the key
     cases.append((
         "uniqueness_groupby",
-        "duplicate_keys(groupby): phase-1 shuffle carries only "
-        "xxhash64(key) (8 bytes/row, ~5x narrower than the string key); "
-        "phase-2 exact verification joins the fact table against a "
-        "BROADCAST of candidate hashes (empty when data is clean), so "
-        "hash collisions can never produce false duplicates",
+        "duplicate_keys(groupby): rows with a NULL key are filtered in "
+        "the scan (SQL UNIQUE: a NULL key is never a duplicate), then "
+        "one groupBy(key) count with map-side partial aggregation — "
+        "the only exchange carries (key, partial count), never the "
+        "row, and no join or broadcast follows",
         duplicate_keys(img, ["image_id"], strategy="groupby")))
 
     # 5. referential: broadcast anti-join (dim side tiny)
