@@ -38,17 +38,19 @@ registry AND runs every declared dataset check, returning one unified
 violation-rows DataFrame (same schema as ``CompiledValidator.violations``)
 — the engine's complete answer to BASELINE.json's north_star.
 
-Physical notes: the row pass is one narrow scan; each uniqueness check is
-one key shuffle; referential checks broadcast small dims; stats is one
-agg; drift compares pre-aggregated histograms; only the pixel-invariant /
-phash-integrity stage is Python (Arrow-batched) and only it reads
-``bytes``.  ``pixel_invariant``'s decode tier is an explicit option:
-``"decode": "stub"`` (synthetic-header fast path), ``"real"`` (the
-built-in BMP/PNG/JPEG/WebP codecs), or ``"auto"`` (default) which
-resolves to "real" when ``phash_integrity`` is also configured — the
-recompute needs real pixels anyway, so the two checks then share ONE
-fused decode pass — and "stub" standalone.  Pin "stub" or "real" when
-the verdict must not depend on which other blocks are present.
+Physical notes: the row pass is one narrow scan; uniqueness is one
+window count (one key shuffle) per key over a narrow scan, with no join
+back; referential checks broadcast small dims; stats is one lazy
+aggregate of only what its rules read; drift compares pre-aggregated
+histograms; only the pixel-invariant / phash-integrity stage is Python
+(Arrow-batched) and only it reads ``bytes``.  ``pixel_invariant``'s
+decode tier is an explicit option: ``"decode": "stub"``
+(synthetic-header fast path), ``"real"`` (the built-in BMP/PNG/JPEG/WebP
+codecs), or ``"auto"`` (default) which resolves to "real" when
+``phash_integrity`` is also configured — the recompute needs real pixels
+anyway, so the two checks then share ONE fused decode pass — and "stub"
+standalone.  Pin "stub" or "real" when the verdict must not depend on
+which other blocks are present.
 """
 
 from __future__ import annotations
@@ -98,9 +100,9 @@ def validate_dataset(df: DataFrame, schema: dict,
 
     parts = [v.violations(df, keep)]
 
-    for key in xs.get("unique", []):
+    if xs.get("unique"):
         from .operators.uniqueness import uniqueness_violations
-        parts.append(pad(uniqueness_violations(df, key, keep)))
+        parts.append(pad(uniqueness_violations(df, xs["unique"], keep)))
 
     for ref in xs.get("referential", []):
         from .operators.referential import referential_violations
@@ -267,18 +269,14 @@ def validate_dataset(df: DataFrame, schema: dict,
         pairs = phash_near_duplicates(
             df, "image_id", "phash", max_hamming=maxh,
             strategy=cfg.get("strategy", "banded"))
-        agg = (pairs.agg(F.count(F.lit(1)).alias("_n"))
-               .filter(F.col("_n") > maxp)
-               .select(
-                   F.lit("nearDup:phash").alias("keyword"),
-                   F.lit("$.phash").alias("json_path"),
-                   F.lit("x-spark/near_dup_phash").alias("schema_path"),
-                   F.concat(F.col("_n").cast("string"),
-                            F.lit(f" near-duplicate image pairs at "
-                                  f"hamming <= {maxh} (allowed "
-                                  f"{maxp})")).alias("message"),
-                   F.col("_n").cast("string").alias("failing_value")))
-        parts.append(pad(agg))
+        n = F.col("_n")
+        parts.append(pad(_violation_rows(
+            pairs.agg(F.count(F.lit(1)).alias("_n")),
+            [F.when(n > maxp, _vrow(
+                "nearDup:phash", "$.phash", "x-spark/near_dup_phash",
+                F.concat(n.cast("string"),
+                         F.lit(f" near-duplicate image pairs at hamming <= "
+                               f"{maxh} (allowed {maxp})")), n))])))
 
     if "repetition" in xs:
         # Gopher-style repetition thresholds as per-row violations
@@ -321,18 +319,13 @@ def validate_dataset(df: DataFrame, schema: dict,
         c = pii_counts(F.col(col))
         total = sum((c.getField(f"n_{n}") for n in PII_PATTERNS),
                     F.lit(0).cast("long"))
-        viol = (df.select(*keep, total.alias("_n"))
-                .filter(F.col("_n") > max_hits)
-                .select(
-                    *keep,
-                    F.lit("pii").alias("keyword"),
-                    F.lit(f"$.{col}").alias("json_path"),
-                    F.lit("x-spark/pii").alias("schema_path"),
-                    F.concat(F.col("_n").cast("string"),
-                             F.lit(f" PII matches exceed allowed "
-                                   f"{max_hits}")).alias("message"),
-                    F.col("_n").cast("string").alias("failing_value")))
-        parts.append(pad(viol))
+        n = F.col("_n")
+        parts.append(pad(_violation_rows(
+            df.select(*keep, total.alias("_n")), [F.when(n > max_hits, _vrow(
+                "pii", f"$.{col}", "x-spark/pii",
+                F.concat(n.cast("string"),
+                         F.lit(f" PII matches exceed allowed {max_hits}")),
+                n))], keep)))
 
     if "image_quality" in xs:
         # metadata-tier image quality (operators/quality.py): aspect /
@@ -366,21 +359,14 @@ def validate_dataset(df: DataFrame, schema: dict,
             df, tables[ref_name], id_col=keep[0], text_col=col,
             ref_text_col=cfg.get("ref_column", col),
             n=cfg.get("n", 13), on_hash=cfg.get("on_hash", True))
-        viol = (sc.filter(F.col("contaminated_frac") > max_frac)
-                .select(
-                    F.col(keep[0]),
-                    F.lit("contamination").alias("keyword"),
-                    F.lit(f"$.{col}").alias("json_path"),
-                    F.lit("x-spark/contamination").alias("schema_path"),
-                    F.concat(F.col("n_hit").cast("string"),
-                             F.lit(" of "),
-                             F.col("n_grams").cast("string"),
-                             F.lit(f" {cfg.get('n', 13)}-grams appear in "
-                                   f"{ref_name} (allowed frac "
-                                   f"{max_frac})")).alias("message"),
-                    F.format_string("%.6f", F.col("contaminated_frac"))
-                     .alias("failing_value")))
-        parts.append(pad(viol))
+        frac = F.col("contaminated_frac")
+        parts.append(pad(_violation_rows(sc, [F.when(frac > max_frac, _vrow(
+            "contamination", f"$.{col}", "x-spark/contamination",
+            F.concat(F.col("n_hit").cast("string"), F.lit(" of "),
+                     F.col("n_grams").cast("string"),
+                     F.lit(f" {cfg.get('n', 13)}-grams appear in {ref_name} "
+                           f"(allowed frac {max_frac})")),
+            F.format_string("%.6f", frac)))], keep[:1])))
 
     out = parts[0].select(*keep, *VIOLATION_COLS)
     for p in parts[1:]:

@@ -7,15 +7,19 @@ stats for all columns are fused into ONE ``df.agg(...)`` so the table is
 scanned exactly once; ``approx_percentile`` sketches merge
 per-partition, so the plan is a partial+final aggregate with no extra
 shuffle stages regardless of how many columns are profiled.
+``stats_violations`` is one such aggregate of only what its rules read.
 """
 
 from __future__ import annotations
 
+import operator
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..validator import _violation_rows, _vrow
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
             T.FloatType, T.DoubleType, T.DecimalType)
@@ -73,29 +77,37 @@ def stats_violations(df: DataFrame, rules: dict[str, dict[str, Any]]) -> DataFra
 
     ``rules`` maps column -> {max_null_rate, min, max, min_distinct}.
     Output mirrors the row-level violation schema with json_path = $.col
-    and keyword = 'stats:<rule>'.
+    and keyword = 'stats:<rule>'.  Lazy: one ``df.agg`` of only the
+    aggregates the rules read, each threshold a ``when`` on its one row.
+    An empty table has no null rate, so ``max_null_rate`` passes.
     """
-    stats = column_stats(df, list(rules)).collect()
-    by_col = {r["column"]: r for r in stats}
-    rows = []
-    for col, rule in rules.items():
-        s = by_col[col]
-        def viol(kw, msg, val):
-            rows.append((kw, f"$.{col}", f"x-spark/stats/{col}/{kw}",
-                         msg, str(val)))
-        if "max_null_rate" in rule and s["null_rate"] > rule["max_null_rate"]:
-            viol("stats:max_null_rate",
-                 f"null rate {s['null_rate']:.4f} exceeds "
-                 f"{rule['max_null_rate']}", s["null_rate"])
-        if "min" in rule and s["min"] is not None and s["min"] < rule["min"]:
-            viol("stats:min", f"min {s['min']} below {rule['min']}", s["min"])
-        if "max" in rule and s["max"] is not None and s["max"] > rule["max"]:
-            viol("stats:max", f"max {s['max']} above {rule['max']}", s["max"])
-        if "min_distinct" in rule and s["approx_distinct"] < rule["min_distinct"]:
-            viol("stats:min_distinct",
-                 f"approx distinct {s['approx_distinct']} below "
-                 f"{rule['min_distinct']}", s["approx_distinct"])
-    spark = df.sparkSession
-    schema = ("keyword string, json_path string, schema_path string, "
-              "message string, failing_value string")
-    return spark.createDataFrame(rows, schema)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    n = F.count(F.lit(1))
+    aggs, structs = [n.alias("_rows")], []  # df.agg needs one aggregate
+    for i, (col, rule) in enumerate(rules.items()):
+        c, dt = F.col(col), types.get(col)
+        # min/max read numbers as they are and strings by length(), like
+        # column_stats; other types have no value to bound
+        v = (c if isinstance(dt, _NUMERIC) else
+             F.length(c) if isinstance(dt, T.StringType) else None)
+        checks = {  # rule -> (aggregate, message words, failing test)
+            "max_null_rate": (F.try_divide(n - F.count(c), n),
+                              "null rate", "exceeds", operator.gt),
+            "min": (None if v is None else F.min(v).cast("double"),
+                    "min", "below", operator.lt),
+            "max": (None if v is None else F.max(v).cast("double"),
+                    "max", "above", operator.gt),
+            "min_distinct": (F.approx_count_distinct(c),
+                             "approx distinct", "below", operator.lt)}
+        for kw, (agg, label, word, fails) in checks.items():
+            if kw not in rule or agg is None:
+                continue
+            s, lim = F.col(f"_{i}_{kw}"), rule[kw]
+            aggs.append(agg.alias(f"_{i}_{kw}"))
+            shown = (F.format_string("%.4f", s) if kw == "max_null_rate"
+                     else s.cast("string"))
+            structs.append(F.when(fails(s, lim), _vrow(
+                f"stats:{kw}", f"$.{col}", f"x-spark/stats/{col}/stats:{kw}",
+                F.concat(F.lit(f"{label} "), shown, F.lit(f" {word} {lim}")),
+                s)))
+    return _violation_rows(df.agg(*aggs), structs)

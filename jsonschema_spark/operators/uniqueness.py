@@ -3,7 +3,7 @@
 Reference anchor: the reference validator's ``uniqueItems`` keyword
 with its ``equal`` semantics; the north_rule mandates the physical
 strategy: repartition-by-hash + sort-within-partitions.  Both
-strategies shuffle once on the key:
+:func:`duplicate_keys` strategies shuffle once on the key:
 
 - ``groupby``: hash partial-agg (map-side combine) -> count>1.  Best when
   duplicates are rare (the partial agg collapses most groups to 1 before
@@ -14,9 +14,8 @@ strategies shuffle once on the key:
   join, and the one to bucket/cluster by at 100 TB.
 
 NULL semantics are SQL ``UNIQUE``: a key with a NULL component is
-absent, not a value, so it never forms a duplicate group — the same
-answer :func:`uniqueness_violations`' semi-join gives, since NULL
-never matches in a join.
+absent, not a value, so it never forms a duplicate group (the window
+count of :func:`uniqueness_violations` is guarded on ``key IS NOT NULL``).
 """
 
 from __future__ import annotations
@@ -26,6 +25,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..validator import _violation_rows, _vrow
 
 
 def duplicate_keys(df: DataFrame, keys: Sequence[str],
@@ -50,21 +51,22 @@ def duplicate_keys(df: DataFrame, keys: Sequence[str],
             .filter(F.col("dup_count") > 1))
 
 
-def uniqueness_violations(df: DataFrame, key: str,
-                          id_cols: Sequence[str] = (),
-                          strategy: str = "groupby") -> DataFrame:
-    """Violation rows for duplicated `key` values — every row participating
-    in a duplicate group, in the engine's violation-row schema
-    (keyword 'uniqueItems:<key>', FIXTURES.md §5)."""
-    dups = duplicate_keys(df, [key], strategy=strategy)
-    keep = [F.col(c) for c in id_cols] if id_cols else []
-    joined = df.join(dups.hint("shuffle_hash"), key, "left_semi")
-    return joined.select(
-        *keep,
-        F.lit(f"uniqueItems:{key}").alias("keyword"),
-        F.lit(f"$.{key}").alias("json_path"),
-        F.lit(f"x-spark/unique/{key}").alias("schema_path"),
-        F.concat(F.lit(f"duplicate {key}: "),
-                 F.col(key).cast("string")).alias("message"),
-        F.col(key).cast("string").alias("failing_value"),
-    )
+def uniqueness_violations(df: DataFrame, keys: str | Sequence[str],
+                          id_cols: Sequence[str] = ()) -> DataFrame:
+    """Violation rows for duplicated values of each key in `keys` (one
+    name or a list) — every row participating in a duplicate group, in
+    the engine's violation-row schema (keyword 'uniqueItems:<key>',
+    FIXTURES.md §5).  One narrow scan of (id_cols, keys), then one
+    ``count(1) over (partition by key)`` per key on the typed key, so
+    doubles group as ``groupBy`` groups them; no join back to `df`."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    narrow = df.select(*dict.fromkeys([*id_cols, *keys]))
+    counted = narrow.select(
+        "*", *[F.count(F.lit(1)).over(Window.partitionBy(k)).alias(f"_n{i}")
+               for i, k in enumerate(keys)])
+    return _violation_rows(counted, [
+        F.when(F.col(k).isNotNull() & (F.col(f"_n{i}") > 1), _vrow(
+            f"uniqueItems:{k}", f"$.{k}", f"x-spark/unique/{k}",
+            F.concat(F.lit(f"duplicate {k}: "), F.col(k).cast("string")),
+            F.col(k)))
+        for i, k in enumerate(keys)], id_cols)

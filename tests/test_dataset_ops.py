@@ -1,6 +1,8 @@
 """Dataset-level operators: stats, uniqueness, referential, drift,
 best_match/ErrorTree, runner resume."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,6 +39,132 @@ def test_stats_violations(spark):
     assert kws == {"stats:max_null_rate", "stats:max"}
 
 
+VIOLATION_FIELDS = ("keyword", "json_path", "schema_path", "message",
+                    "failing_value")
+
+
+def _python_stats_rows(df, rules):
+    """The stats assertions rendered on the driver from column_stats,
+    the way stats_violations rendered them before it became one lazy
+    aggregate: the reference its rows are compared against."""
+    by_col = {r["column"]: r for r in column_stats(df, list(rules)).collect()}
+    rows = []
+    for col, rule in rules.items():
+        s = by_col[col]
+
+        def viol(kw, msg, val):
+            rows.append((kw, f"$.{col}", f"x-spark/stats/{col}/{kw}", msg,
+                         str(val)))
+        if "max_null_rate" in rule and s["null_rate"] > rule["max_null_rate"]:
+            viol("stats:max_null_rate",
+                 f"null rate {s['null_rate']:.4f} exceeds "
+                 f"{rule['max_null_rate']}", s["null_rate"])
+        if "min" in rule and s["min"] is not None and s["min"] < rule["min"]:
+            viol("stats:min", f"min {s['min']} below {rule['min']}", s["min"])
+        if "max" in rule and s["max"] is not None and s["max"] > rule["max"]:
+            viol("stats:max", f"max {s['max']} above {rule['max']}", s["max"])
+        if ("min_distinct" in rule
+                and s["approx_distinct"] < rule["min_distinct"]):
+            viol("stats:min_distinct",
+                 f"approx distinct {s['approx_distinct']} below "
+                 f"{rule['min_distinct']}", s["approx_distinct"])
+    return rows
+
+
+def test_stats_violations_match_driver_rendering(spark):
+    """Every field of every row equals the driver-rendered text, on the
+    frame of test_stats_violations (a 0.5 null rate, a double max) and
+    on an int column whose max is 20000 (the planted images width).
+    Doubles outside [1e-3, 1e7) are left out: there Spark renders
+    `1.0E-5` where Python renders `1e-05`."""
+    half_null = spark.createDataFrame(
+        [(i, None if i % 2 else float(i)) for i in range(100)],
+        "id int, x double")
+    wide = spark.createDataFrame(
+        [(1, 20000, "aa"), (2, 3, None), (3, 640, "bcd")],
+        "id int, w int, s string")
+    cases = [
+        (half_null, {"x": {"max_null_rate": 0.1, "max": 50.0}}),
+        (half_null, {"x": {"max_null_rate": 0.1, "min": 5, "max": 50.0,
+                           "min_distinct": 60},
+                     "id": {"min": 3, "max": 98}}),
+        (wide, {"w": {"max": 16384}, "s": {"max_null_rate": 0.0,
+                                           "min": 3, "max": 2}}),
+    ]
+    for df, rules in cases:
+        got = [tuple(r[f] for f in VIOLATION_FIELDS)
+               for r in stats_violations(df, rules).collect()]
+        assert got == _python_stats_rows(df, rules), rules
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_stats_violations_empty_table(spark, ansi):
+    """No rows, no null rate: max_null_rate cannot fail and must not
+    divide by zero (ANSI raises on it); min/max have no value to test;
+    approx distinct is 0, below any positive minimum."""
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = spark.createDataFrame([], "x double, s string")
+        rules = {"x": {"max_null_rate": 0.0, "min": 1.0, "max": 2.0,
+                       "min_distinct": 1},
+                 "s": {"max_null_rate": 0.1, "min": 1, "max": 0}}
+        got = [(r["keyword"], r["json_path"])
+               for r in stats_violations(df, rules).collect()]
+        assert got == [("stats:min_distinct", "$.x")]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+def _semi_join_rows(df, key, id_cols):
+    """Per-key violation rows the way uniqueness_violations built them
+    with a left-semi join of df to its duplicate keys: the reference
+    its window-count rows are compared against."""
+    dups = duplicate_keys(df, [key])
+    return df.join(dups, key, "left_semi").select(
+        *id_cols,
+        F.lit(f"uniqueItems:{key}").alias("keyword"),
+        F.lit(f"$.{key}").alias("json_path"),
+        F.lit(f"x-spark/unique/{key}").alias("schema_path"),
+        F.concat(F.lit(f"duplicate {key}: "),
+                 F.col(key).cast("string")).alias("message"),
+        F.col(key).cast("string").alias("failing_value"))
+
+
+def test_uniqueness_violations_match_semi_join(spark):
+    """Several keys in one call give the union of the per-key semi-join
+    rows: NULL keys never duplicate, a duplicated id row counts twice,
+    and 0.0/-0.0 and NaN/NaN are one group each, as groupBy groups
+    them.  duplicate_keys' groups agree with the rows."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1, "a", 1, 0.0), (2, None, 1, -0.0), (3, "a", 1, nan),
+         (4, None, 2, nan), (5, None, None, None), (6, "b", None, None),
+         (7, "b", 3, 1.5), (8, "c", 4, 2.5), (8, "c", 4, 2.5),
+         (9, "d", 5, 3.5)],
+        "id int, s string, n bigint, d double")
+    keys = ["s", "n", "d"]
+    got = sorted(map(tuple, uniqueness_violations(df, keys, ["id"])
+                     .collect()))
+    want = []
+    for k in keys:
+        want += map(tuple, _semi_join_rows(df, k, ["id"]).collect())
+    assert got == sorted(want)
+    assert len(got) == 6 + 5 + 6
+
+    def group(k, v):
+        if k != "d":
+            return str(v)
+        v = float(v)
+        return "NaN" if v != v else v + 0.0      # -0.0 joins 0.0
+    for k in keys:
+        rows = Counter(group(k, r[-1]) for r in got
+                       if r[1] == f"uniqueItems:{k}")
+        groups = {group(k, r[k]): r["dup_count"]
+                  for r in duplicate_keys(df, [k]).collect()}
+        assert rows == groups, k
+
+
 def test_duplicate_keys_both_strategies(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "a"), (4, "c"), (5, "a"), (6, "b")],
@@ -50,7 +178,7 @@ def test_duplicate_keys_both_strategies(spark):
 def test_uniqueness_null_keys_are_absent(spark):
     """SQL UNIQUE: a key with a NULL component never forms a duplicate
     group.  Both duplicate_keys strategies and uniqueness_violations'
-    semi-join give the same answer on a NULL-bearing frame."""
+    window count give the same answer on a NULL-bearing frame."""
     df = spark.createDataFrame(
         [(1, "a", 1), (2, None, 1), (3, "a", 1), (4, None, 1),
          (5, None, None), (6, "b", None), (7, "b", None), (8, "c", 2)],
@@ -62,9 +190,9 @@ def test_uniqueness_null_keys_are_absent(spark):
         pair = {(r["k"], r["j"]): r["dup_count"] for r in
                 duplicate_keys(df, ["k", "j"], strategy=strat).collect()}
         assert pair == {("a", 1): 2}, strat
-        viol = sorted(r["id"] for r in uniqueness_violations(
-            df, "k", ["id"], strategy=strat).collect())
-        assert viol == [1, 3, 6, 7], strat
+    viol = sorted(r["id"] for r in uniqueness_violations(
+        df, "k", ["id"]).collect())
+    assert viol == [1, 3, 6, 7]
     # full_check_counts' fused pass (k) and extra key pass (j) follow
     # the same rule; NULL-key rows still count as rows, invalid rows
     # (j = 1 fails the minimum) and orphans (j = 1 is not in the dim)

@@ -300,3 +300,36 @@ def test_check_schema_validates_text_curation_blocks():
     for xs, match in bad:
         with pytest.raises(SchemaCompileError, match=match):
             check_schema({"x-spark": xs})
+
+
+def test_validate_dataset_is_lazy_without_join_back(spark):
+    """Building the plan for unique + referential + stats + stub
+    pixel_invariant starts no Spark job (stats is an aggregate inside the
+    plan, not a driver collect), and uniqueness counts over a window
+    instead of joining its duplicate keys back (no LeftSemi)."""
+    img = images_df(spark, 2_000, with_license=True)
+    spec = dict(IMAGES_SCHEMA)
+    spec["x-spark"] = dict(spec["x-spark"])
+    spec["x-spark"]["pixel_invariant"] = {"min_psnr": 40.0,
+                                          "decode": "stub"}
+    spec["x-spark"]["stats"] = {"caption": {"max_null_rate": 0.001},
+                                "w": {"max": 16384, "min_distinct": 2}}
+    lic = licenses_df(spark)
+    sc = spark.sparkContext
+    group = "validate-dataset-laziness"
+    sc.setJobGroup(group, "jobs started while validate_dataset builds")
+    try:
+        out = validate_dataset(img, spec, ["image_id"],
+                               tables={"licenses": lic})
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        counts = out.groupBy("keyword").count()
+        kinds = {r["keyword"] for r in counts.collect()}
+        # the probe sees jobs once an action runs
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert {"uniqueItems:image_id", "uniqueItems:phash",
+            "referential:license_id", "pixelInvariant",
+            "stats:max_null_rate", "stats:max"} <= kinds
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" not in plan

@@ -1,13 +1,20 @@
 #!/usr/bin/env python
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark AND its oracle_sql() on DuckDB at sf0.01, compare
-row-count + schema + value-hash after sorting columns by name.
+row-count + schema + value-hash after sorting columns by name.  Each
+verdict line carries the query's wall seconds on the Spark side (plan
+build and collect; the oracle is not timed).  The session takes
+``get_spark``'s default core count (``SPARK_GRAFT_CPUS``, else
+``os.cpu_count()``).
+
+    python tools/check_oracles.py [query ...]
 """
 from __future__ import annotations
 
 import hashlib
 import os
 import sys
+import time
 
 import duckdb
 
@@ -43,7 +50,7 @@ def main():
     from jsonschema_spark.session import get_spark
     import __spark_entry__ as em
 
-    spark = get_spark("oracle-check", cores=16, shuffle_partitions=16)
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
@@ -56,11 +63,13 @@ def main():
     for name in sorted(qs):
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         sdf = qs[name](spark, SF_DIR)
         srows = [r.asDict() for r in sdf.collect()]
+        secs = f"{time.perf_counter() - t0:.2f} s"
         scols = sdf.columns
         if name not in oracles:
-            print(f"  {name}: rows-only ({len(srows)} rows)")
+            print(f"  {name}: rows-only ({len(srows)} rows, {secs})")
             continue
         ores = con.execute(oracles[name])
         ocols = [d[0] for d in ores.description]
@@ -70,8 +79,8 @@ def main():
         status = "OK" if (sh == oh and sorted(scols) == sorted(ocols)) else "MISMATCH"
         if status != "OK":
             fails += 1
-            print(f"  {name}: {status} spark={sn} rows {sorted(scols)} "
-                  f"oracle={on} rows {sorted(ocols)}")
+            print(f"  {name}: {status} ({secs}) spark={sn} rows "
+                  f"{sorted(scols)} oracle={on} rows {sorted(ocols)}")
             for a, b in list(zip(sorted(
                     ["|".join(str(r[c]) for c in sorted(scols)) for r in srows]),
                     sorted(["|".join(str(r[c]) for c in sorted(ocols))
@@ -79,7 +88,7 @@ def main():
                 if a != b:
                     print(f"    spark : {a}\n    oracle: {b}")
         else:
-            print(f"  {name}: OK ({sn} rows)")
+            print(f"  {name}: OK ({sn} rows, {secs})")
     spark.stop()
     sys.exit(1 if fails else 0)
 

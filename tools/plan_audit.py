@@ -41,6 +41,7 @@ def summarize(plan: str) -> dict:
             r"|CoGroupsInPandas|MapInArrow)", plan, re.M)),
         "partial_agg": ("partial" in plan.lower()
                         or "HashAggregate" in plan),
+        "left_semi": len(re.findall(r"Join type: LeftSemi", plan)),
     }
 
 
@@ -406,6 +407,25 @@ def main() -> None:
                prefer=-F.length("text"),
                split={"train": 0.9, "val": 0.1})))
 
+    # 27. validate_dataset on the north-star table: uniqueness counts
+    # over windows and stats is an aggregate inside the plan
+    xs = {**IMAGES_SCHEMA["x-spark"],
+          "stats": {"caption": {"max_null_rate": 0.001},
+                    "w": {"max": 16384}},
+          "pixel_invariant": {"min_psnr": 40.0, "decode": "stub"}}
+    cases.append((
+        "validate_dataset_images",
+        "row keywords + unique[image_id, phash] + referential + stats + "
+        "stub pixel invariant as one lazy union: each unique key is one "
+        "exchange into a window count over the narrow (image_id, phash) "
+        "scan, with no LeftSemi join back to the table; stats is one "
+        "partial+final aggregate of only the null count and max its "
+        "rules read; the other two exchanges are the licence dim's "
+        "distinct and its broadcast; the one python node is the stub "
+        "decode",
+        validate_dataset(img, {**spec, "x-spark": xs}, ["image_id"],
+                         tables={"licenses": licenses_df(spark)})))
+
     lines = [
         "# PLANS.md — physical-plan audit",
         "",
@@ -430,7 +450,8 @@ def main() -> None:
             f"- PushedFilters: `{s['pushed']}`",
             f"- exchanges: **{s['exchanges']}**, broadcasts: "
             f"{s['broadcasts']}, whole-stage-codegen spans: "
-            f"{s['codegen_spans']}, python nodes: {s['python']}",
+            f"{s['codegen_spans']}, python nodes: {s['python']}, "
+            f"LeftSemi joins: {s['left_semi']}",
             "",
         ]
         print(name, s)
