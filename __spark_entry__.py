@@ -898,7 +898,7 @@ def q_images_bmp_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
       DuckDB derives the expected counts from the planted corruption
       rules (id % 251 truncation, id % 157 pixel flip), certifying
       that decoding finds exactly the planted damage."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import bmp_images_df
     if not os.path.exists(os.path.join(BMP_ORACLE_PATH, "_SUCCESS")):
         (bmp_images_df(spark, 2_000)
@@ -922,10 +922,10 @@ def q_images_bmp_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.length(b) < declared).cast("long")).alias("truncated"),
         F.sum(((hdr_w == F.col("w")) & (hdr_h == F.col("h")))
               .cast("long")).alias("hdr_dims_ok"))
-    dec = decode_images_real(img, carry=("w", "h"))
+    dec = decode_pixels(img, psnr=True, carry=("w", "h"))
     dec_agg = dec.agg(
-        F.sum((~F.col("header_ok")).cast("long")).alias("decode_fail"),
-        F.sum((F.col("header_ok") & (F.col("psnr") < 40.0))
+        F.sum((~F.col("decode_ok")).cast("long")).alias("decode_fail"),
+        F.sum((F.col("decode_ok") & (F.col("psnr") < 40.0))
               .cast("long")).alias("low_psnr"))
     return hdr_agg.crossJoin(dec_agg)
 
@@ -963,7 +963,7 @@ def q_images_png_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
       corruption rules (id % 251 truncation, id % 311 CRC flip,
       id % 157 pre-encode pixel damage), certifying that decoding
       finds exactly the planted damage."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import png_images_df
     if not os.path.exists(os.path.join(PNGS_ORACLE_PATH, "_SUCCESS")):
         (png_images_df(spark, 2_000)
@@ -986,12 +986,12 @@ def q_images_png_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
               .cast("long")).alias("sig_ok"),
         F.sum(((hdr_w == F.col("w")) & (hdr_h == F.col("h")))
               .cast("long")).alias("hdr_dims_ok"))
-    dec = decode_images_real(img, carry=("w", "h"))
+    dec = decode_pixels(img, psnr=True, carry=("w", "h"))
     dec_agg = dec.agg(
-        F.sum((~F.col("header_ok")).cast("long")).alias("decode_fail"),
-        F.sum((F.col("header_ok") & (F.col("psnr") < 40.0))
+        F.sum((~F.col("decode_ok")).cast("long")).alias("decode_fail"),
+        F.sum((F.col("decode_ok") & (F.col("psnr") < 40.0))
               .cast("long")).alias("low_psnr"),
-        F.sum((F.col("header_ok") & (F.col("decoded_w") == F.col("w"))
+        F.sum((F.col("decode_ok") & (F.col("decoded_w") == F.col("w"))
                & (F.col("decoded_h") == F.col("h")))
               .cast("long")).alias("dims_roundtrip"))
     return hdr_agg.crossJoin(dec_agg)
@@ -1018,7 +1018,7 @@ def q_images_jpeg_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
       rules (id % 251 truncation, id % 311 SOF0-marker kill, id % 157
       pre-encode pixel damage), certifying that lossy decoding clears
       40 dB exactly on the undamaged rows."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import jpeg_images_df
     if not os.path.exists(os.path.join(JPEGS_ORACLE_PATH, "_SUCCESS")):
         (jpeg_images_df(spark, 2_000)
@@ -1042,12 +1042,12 @@ def q_images_jpeg_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sof_ok"),
         F.sum(((hdr_w == F.col("w")) & (hdr_h == F.col("h")))
               .cast("long")).alias("hdr_dims_ok"))
-    dec = decode_images_real(img, carry=("w", "h"))
+    dec = decode_pixels(img, psnr=True, carry=("w", "h"))
     dec_agg = dec.agg(
-        F.sum((~F.col("header_ok")).cast("long")).alias("decode_fail"),
-        F.sum((F.col("header_ok") & (F.col("psnr") < 40.0))
+        F.sum((~F.col("decode_ok")).cast("long")).alias("decode_fail"),
+        F.sum((F.col("decode_ok") & (F.col("psnr") < 40.0))
               .cast("long")).alias("low_psnr"),
-        F.sum((F.col("header_ok") & (F.col("decoded_w") == F.col("w"))
+        F.sum((F.col("decode_ok") & (F.col("decoded_w") == F.col("w"))
                & (F.col("decoded_h") == F.col("h")))
               .cast("long")).alias("dims_roundtrip"))
     return hdr_agg.crossJoin(dec_agg)
@@ -1073,7 +1073,7 @@ def q_images_webp_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
       id % 311 VP8L-signature kill, id % 157 pre-encode pixel
       damage), certifying the lossless tier round-trips bit-exact on
       every undamaged row."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import webp_images_df
     if not os.path.exists(os.path.join(WEBPS_ORACLE_PATH, "_SUCCESS")):
         (webp_images_df(spark, 2_000)
@@ -1104,12 +1104,12 @@ def q_images_webp_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("riff_covered"),
         F.sum(((hdr_w == F.col("w")) & (hdr_h == F.col("h")))
               .cast("long")).alias("hdr_dims_ok"))
-    dec = decode_images_real(img, carry=("w", "h"))
+    dec = decode_pixels(img, psnr=True, carry=("w", "h"))
     dec_agg = dec.agg(
-        F.sum((~F.col("header_ok")).cast("long")).alias("decode_fail"),
-        F.sum((F.col("header_ok") & (F.col("psnr") < 40.0))
+        F.sum((~F.col("decode_ok")).cast("long")).alias("decode_fail"),
+        F.sum((F.col("decode_ok") & (F.col("psnr") < 40.0))
               .cast("long")).alias("low_psnr"),
-        F.sum((F.col("header_ok") & (F.col("decoded_w") == F.col("w"))
+        F.sum((F.col("decode_ok") & (F.col("decoded_w") == F.col("w"))
                & (F.col("decoded_h") == F.col("h")))
               .cast("long")).alias("dims_roundtrip"))
     return hdr_agg.crossJoin(dec_agg)
@@ -1192,21 +1192,21 @@ PHASH_INTEG_ORACLE_PATH = f"/tmp/spark_graft_phash_integ_oracle_{_GEN_FP}"
 def q_phash_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-column integrity: the stored ``phash`` must equal the
     perceptual hash RECOMPUTED from decoded payload pixels
-    (operators/multimodal.phash_integrity_check — one joinless
+    (operators/multimodal.decode_pixels(phash=True) — one joinless
     mapInPandas pass: built-in codec decode -> dct_phash -> xor
     bit_count vs the stored value).  One summary row; the DuckDB
     oracle derives decode_fail structurally (BMP declared size vs
     actual byte length over the same persisted bytes) and the
     mismatch count from the planted corruption rule (id % 211 two-bit
     flip), certifying the recompute finds exactly the planted damage."""
-    from jsonschema_spark.operators.multimodal import phash_integrity_check
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import phash_images_df
     if not os.path.exists(os.path.join(PHASH_INTEG_ORACLE_PATH,
                                        "_SUCCESS")):
         (phash_images_df(spark, 2_000)
          .write.mode("overwrite").parquet(PHASH_INTEG_ORACLE_PATH))
     img = spark.read.parquet(PHASH_INTEG_ORACLE_PATH)
-    chk = phash_integrity_check(img)
+    chk = decode_pixels(img, phash=True)
     return chk.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((~F.col("decode_ok")).cast("long")).alias("decode_fail"),
@@ -1290,7 +1290,7 @@ def q_images_luma_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     block): real-codec decode -> full-resolution Rec.601 luma mean +
     std, thresholded as brightness band [20, 235] and contrast floor 2
     (operators/quality.luma_quality_structs over
-    multimodal.decode_luma_stats).  The planted corpus
+    multimodal.decode_pixels(luma=True)).  The planted corpus
     (sources/images.luma_images_df) lands every class by id arithmetic
     — truncated payloads are SKIPPED (the pixel-invariant's finding),
     solid-gray trips contrast, dark/bright trip the band — and the

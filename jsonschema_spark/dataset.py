@@ -42,15 +42,17 @@ Physical notes: the row pass is one narrow scan; uniqueness is one
 window count (one key shuffle) per key over a narrow scan, with no join
 back; referential checks broadcast small dims; stats is one lazy
 aggregate of only what its rules read; drift compares pre-aggregated
-histograms; only the pixel-invariant / phash-integrity stage is Python
-(Arrow-batched) and only it reads ``bytes``.  ``pixel_invariant``'s
-decode tier is an explicit option: ``"decode": "stub"``
-(synthetic-header fast path), ``"real"`` (the built-in BMP/PNG/JPEG/WebP
-codecs), or ``"auto"`` (default) which resolves to "real" when
-``phash_integrity`` is also configured — the recompute needs real pixels
-anyway, so the two checks then share ONE fused decode pass — and "stub"
-standalone.  Pin "stub" or "real" when the verdict must not depend on
-which other blocks are present.
+histograms; only the pixel checks are Python (Arrow-batched) and only
+they read ``bytes``.  The pixel checks decode each input at most once
+per tier: ``pixel_invariant`` on the stub tier (synthetic-header fast
+path) is one ``decode_images`` pass, and every real-codec block
+(``pixel_invariant`` on the real tier, ``phash_integrity``,
+``image_quality_decoded``) shares ONE ``decode_pixels`` pass.
+``pixel_invariant``'s tier is an explicit option: ``"decode": "stub"``,
+``"real"`` (the built-in BMP/PNG/JPEG/WebP codecs), or ``"auto"``
+(default), which resolves to "real" when ``phash_integrity`` is also
+configured and "stub" otherwise.  Pin "stub" or "real" when the verdict
+must not depend on which other blocks are present.
 """
 
 from __future__ import annotations
@@ -173,90 +175,43 @@ def validate_dataset(df: DataFrame, schema: dict,
             if viol is not None:
                 parts.append(pad(viol))
 
-    # pixel_invariant decode tier is EXPLICIT ("decode": "stub"|"real"|
-    # "auto"): "auto" (the default) keeps the fusion heuristic — real
-    # codecs when phash_integrity is also configured (its recompute
-    # needs real pixels anyway, so one fused decode serves both),
-    # stub-header decode standalone.  Pinning "stub" or "real" makes
-    # the tier independent of other blocks (an unrelated
-    # phash_integrity addition must not silently flip pixel_invariant
-    # verdicts for payloads the stub accepts but real codecs reject).
-    pix_cfg = (xs["pixel_invariant"] or {}) if "pixel_invariant" in xs \
-        else None
+    # pixel checks: one decode per tier (module docstring), and one
+    # projection per decode emits every violation kind — a union of
+    # per-kind filters would re-execute the decode once per branch
     pix_tier = None
-    if pix_cfg is not None:
+    if "pixel_invariant" in xs:
+        from .operators.quality import pixel_invariant_struct
+        pix_cfg = xs["pixel_invariant"] or {}
+        pix_struct = pixel_invariant_struct(pix_cfg.get("min_psnr", 40.0))
         pix_tier = pix_cfg.get("decode", "auto")
         if pix_tier == "auto":
             pix_tier = "real" if "phash_integrity" in xs else "stub"
-    fuse_pixel = pix_tier == "real" and "phash_integrity" in xs
-    fuse_luma = ("image_quality_decoded" in xs
-                 and "phash_integrity" in xs)
-    # pixel_invariant (real tier) + image_quality_decoded WITHOUT a
-    # phash pass: one decode_luma_stats(with_psnr=True) scan feeds both
-    # violation streams — decoding must not run twice in ANY block
-    # combination (review finding r5)
-    fuse_pix_luma = (pix_tier == "real"
-                     and "image_quality_decoded" in xs
-                     and "phash_integrity" not in xs)
-
-    if pix_cfg is not None and not fuse_pixel and not fuse_pix_luma:
-        from .operators.multimodal import psnr_check, psnr_check_real
-        check = psnr_check_real if pix_tier == "real" else psnr_check
-        parts.append(pad(check(df,
-                               min_psnr=pix_cfg.get("min_psnr", 40.0))))
-
-    if "phash_integrity" in xs:
-        # stored phash must equal (within max_hamming) the perceptual
-        # hash recomputed from decoded pixels; undecodable rows are the
-        # pixel_invariant's finding, not a phash mismatch.  When the
-        # pixel-invariant and/or decoded-tier quality checks are also
-        # configured, ONE fused real-decode pass feeds every violation
-        # stream — decoding bytes is the expensive stage and must not
-        # run twice.
-        from .operators.multimodal import phash_integrity_check
-        cfg = xs["phash_integrity"] or {}
-        maxh = cfg.get("max_hamming", 0)
-        chk = phash_integrity_check(
-            df, carry=("w", "h") if fuse_pixel else (),
-            with_psnr=fuse_pixel, with_luma=fuse_luma)
-
-        integ_bad = F.col("hamming") > maxh
-        integ_struct = F.when(integ_bad, _vrow(
-            "phashIntegrity", "$.phash", "x-spark/phash_integrity",
-            F.concat(F.lit("stored phash differs from recomputed "
-                           "pixel hash by "),
-                     F.col("hamming").cast("string"), F.lit(" bits")),
-            F.col("stored_phash").cast("string")))
-        structs = [integ_struct]
-        if fuse_pixel:
-            from .operators.quality import pixel_invariant_struct
-            structs.append(pixel_invariant_struct(
-                pix_cfg.get("min_psnr", 40.0)))
-        if fuse_luma:
+    if pix_tier == "stub":
+        from .operators.multimodal import decode_images
+        parts.append(pad(_violation_rows(decode_images(df, carry=("w", "h")),
+                                         [pix_struct], ["image_id"])))
+    real_psnr = pix_tier == "real"
+    phash = "phash_integrity" in xs
+    luma = "image_quality_decoded" in xs
+    if real_psnr or phash or luma:
+        from .operators.multimodal import decode_pixels
+        structs = [pix_struct] if real_psnr else []
+        if phash:
+            # undecodable rows have a NULL hamming: they are the
+            # pixel_invariant's finding, not a phash mismatch
+            maxh = (xs["phash_integrity"] or {}).get("max_hamming", 0)
+            structs.append(F.when(F.col("hamming") > maxh, _vrow(
+                "phashIntegrity", "$.phash", "x-spark/phash_integrity",
+                F.concat(F.lit("stored phash differs from recomputed "
+                               "pixel hash by "),
+                         F.col("hamming").cast("string"), F.lit(" bits")),
+                F.col("stored_phash").cast("string"))))
+        if luma:
             from .operators.quality import luma_quality_structs
-            structs += luma_quality_structs(
-                xs["image_quality_decoded"])
-        # ONE projection over the single decode subtree emits every
-        # violation type — a union of per-type filters would reference
-        # (and re-execute) the mapInPandas decode once per branch
-        parts.append(pad(_violation_rows(chk, structs, ["image_id"])))
-
-    if "image_quality_decoded" in xs and not fuse_luma:
-        # decoded-tier quality standalone (no phash-integrity subtree
-        # to ride); when the real-tier pixel invariant is ALSO
-        # configured its PSNR/metadata stream rides this same decode
-        # (fuse_pix_luma — one mapInPandas pass, two violation streams)
-        from .operators.multimodal import decode_luma_stats
-        from .operators.quality import luma_quality_structs
-        st = decode_luma_stats(df,
-                               carry=("w", "h") if fuse_pix_luma else (),
-                               with_psnr=fuse_pix_luma)
-        lstructs = list(luma_quality_structs(xs["image_quality_decoded"]))
-        if fuse_pix_luma:
-            from .operators.quality import pixel_invariant_struct
-            lstructs.append(pixel_invariant_struct(
-                pix_cfg.get("min_psnr", 40.0)))
-        parts.append(pad(_violation_rows(st, lstructs, ["image_id"])))
+            structs += luma_quality_structs(xs["image_quality_decoded"])
+        dec = decode_pixels(df, psnr=real_psnr, phash=phash, luma=luma,
+                            carry=("w", "h") if real_psnr else ())
+        parts.append(pad(_violation_rows(dec, structs, ["image_id"])))
 
     if "near_dup_phash" in xs:
         # dataset-level assertion: at most max_pairs near-duplicate

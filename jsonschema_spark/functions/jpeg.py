@@ -23,7 +23,7 @@ sequential only; progressive (SOF2) and subsampled streams return
 None like any other undecodable payload.
 
 Scale shape: the codec is called per-row inside mapInPandas
-(operators/multimodal.decode_images_real), so the work distributes
+(operators/multimodal.decode_pixels), so the work distributes
 with the partitioning; all per-image math that can vectorize does
 (DCT/IDCT/quant over every block at once via einsum), leaving only
 the inherently serial entropy coding in the Python loop.

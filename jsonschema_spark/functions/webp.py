@@ -28,7 +28,7 @@ decodes with libwebp (asserted in tests when the system library is
 present), so the streams are interoperable, not merely self-readable.
 
 Scale shape: called per-row inside mapInPandas
-(operators/multimodal.decode_images_real) — the codec distributes
+(operators/multimodal.decode_pixels) — the codec distributes
 with the partitioning and needs no Spark-side state.
 
 Reference parity note: the reference engine (python-jsonschema) has no

@@ -1,31 +1,29 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Payloads are opaque ``binary`` columns with typed metadata, as mandated
-by the north-star input shape.  Two decode tiers share the same Arrow
-plumbing (schema, batching, UDF signature):
+by the north-star input shape.  Images have two decode tiers, each ONE
+mapInPandas pass over capped Arrow batches, and both emit the same
+``(image_id, fmt, decode_ok, decoded_w, decoded_h)`` prefix:
 
 - ``decode_images`` — the fast stub: parses the synthetic header
   written by ``sources.images._payload`` (for the 8M-row benchmark
-  table whose payloads are compact placeholders);
-- ``decode_images_real`` — a REAL codec path: Windows BMP decodes with
-  the built-in struct+numpy codec (``encode_bmp``/``decode_bmp``),
-  PNG with the built-in pure-python codec (``encode_png``/
-  ``decode_png`` — spec-conformant chunks/CRCs/zlib/all five scanline
-  filters; zlib is stdlib, so the COMPRESSED tier needs no
-  third-party library), baseline JPEG with ``functions/jpeg`` (the
-  lossy tier) and WebP-lossless with ``functions/webp`` (VP8L,
-  libwebp-interoperable).  Unrecognised formats fall back to Pillow
-  when importable.  PSNR
-  is measured against the per-id deterministic reference image, a
-  true decoded-pixel comparison (``sources.images.bmp_images_df`` /
-  ``png_images_df`` generate real payloads with planted
-  truncation/corruption).
+  table whose payloads are compact placeholders).  Its "pixels" are
+  the deterministic byte body, so PSNR is exact (99) for intact
+  payloads and degrades for truncated ones;
+- ``decode_pixels`` — the REAL codec tier: ``decode_blob`` decodes
+  Windows BMP (struct+numpy), PNG (pure-python, zlib is stdlib),
+  baseline JPEG (``functions/jpeg``) and WebP-lossless
+  (``functions/webp``), with Pillow as the fallback when importable.
+  The caller asks for what to compute from the pixels: ``psnr``
+  against the per-id reference image (``expected_pixels``), the
+  recomputed ``phash`` vs the stored column, and ``luma`` quality
+  stats.  Every real-codec check reads this one pass, so decoding
+  never runs twice for one input.
 
 The per-row invariant from BASELINE.json input_hint (decoded-pixel
 PSNR >= 40 dB vs the reference decode + caption equality) is
-``psnr_check``: with the stub codec, "pixels" are the deterministic
-byte body, so PSNR is exact (inf) for intact payloads and degrades for
-truncated ones — the planted-violation path stays testable end-to-end.
+``quality.pixel_invariant_struct`` over either tier's output, and
+``caption_check`` below.
 """
 
 from __future__ import annotations
@@ -38,8 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DECODE_SCHEMA = ("image_id string, fmt string, header_ok boolean, "
-                 "decoded_w int, decoded_h int, payload_len int, psnr double")
+DECODE_SCHEMA = ("image_id string, fmt string, decode_ok boolean, "
+                 "decoded_w int, decoded_h int, psnr double")
 
 
 def _codec_available() -> bool:
@@ -54,23 +52,21 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     """Parse the 16-byte synthetic header (magic|w hex|h hex|checksum)
     and compute the stub PSNR: exact match of the expected deterministic
     body -> inf (capped 99.0); truncation/corruption -> low."""
-    out = {"image_id": [], "fmt": [], "header_ok": [], "decoded_w": [],
-           "decoded_h": [], "payload_len": [], "psnr": []}
+    out = {"image_id": [], "fmt": [], "decode_ok": [], "decoded_w": [],
+           "decoded_h": [], "psnr": []}
     for image_id, fmt, blob in zip(pdf["image_id"], pdf["fmt"],
                                    pdf["bytes"]):
         out["image_id"].append(image_id)
         out["fmt"].append(fmt)
-        n = len(blob) if blob is not None else 0
-        out["payload_len"].append(n)
-        ok = blob is not None and n >= 16 and blob[:4] == b"IMG0"
-        out["header_ok"].append(bool(ok))
+        ok = blob is not None and len(blob) >= 16 and blob[:4] == b"IMG0"
+        out["decode_ok"].append(bool(ok))
         if ok:
             try:
                 w = int(blob[4:8], 16)
                 h = int(blob[8:12], 16)
             except ValueError:
                 w = h = 0
-                out["header_ok"][-1] = False
+                out["decode_ok"][-1] = False
             out["decoded_w"].append(w)
             out["decoded_h"].append(h)
             # stub decode: body bytes ARE the pixels; a full-length body
@@ -93,14 +89,14 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _carry_schema(df: DataFrame, carry) -> str:
-    reserved = {f.split()[0] for f in DECODE_SCHEMA.split(", ")} | {"bytes"}
+def _carry_schema(df: DataFrame, schema: str, carry) -> str:
+    reserved = {f.split()[0] for f in schema.split(", ")} | {"bytes"}
     clash = [c for c in carry if c in reserved]
     if clash:
         raise ValueError(
             f"carry column(s) {clash} collide with decode input/output "
             f"names {sorted(reserved)}; rename before decoding")
-    return DECODE_SCHEMA + "".join(
+    return schema + "".join(
         f", {c} {df.schema[c].dataType.simpleString()}" for c in carry)
 
 
@@ -120,7 +116,7 @@ def decode_images(df: DataFrame, carry: tuple = ()) -> DataFrame:
             yield out
 
     return df.select("image_id", "fmt", "bytes", *carry).mapInPandas(
-        run, schema=_carry_schema(df, carry))
+        run, schema=_carry_schema(df, DECODE_SCHEMA, carry))
 
 
 # ------------------------------------------------- real BMP codec ---------
@@ -324,6 +320,15 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
         min(99.0, 10 * np.log10(255.0 ** 2 / mse)))
 
 
+def _reference_psnr(image_id, px) -> float:
+    """PSNR of decoded pixels against the id's reference image; 0.0
+    for an undecodable payload."""
+    if px is None:
+        return 0.0
+    h, w = px.shape[:2]
+    return psnr(px, expected_pixels(str(image_id), w, h))
+
+
 def decode_blob(blob, use_pil: bool = False):
     """Magic-byte codec dispatch shared by every real-decode pass: BMP,
     PNG, baseline JPEG and WebP-lossless; anything else tries Pillow
@@ -367,51 +372,6 @@ def decode_blob(blob, use_pil: bool = False):
         except Exception:
             return None
     return None
-
-
-def decode_images_real(df: DataFrame, carry: tuple = ()) -> DataFrame:
-    """Real codec path over Arrow batches: BMP, PNG, baseline JPEG
-    and WebP-lossless blobs decode with the built-in numpy codecs
-    (functions/jpeg supplies the lossy tier the north rule's
-    PSNR>=40dB invariant is written for; functions/webp the
-    libwebp-interoperable VP8L tier); other formats use Pillow when
-    importable and are reported as header_ok=False otherwise.  PSNR is measured against
-    the deterministic reference image for the id (`expected_pixels`)
-    — a true decoded-pixel comparison.  `carry` columns pass through
-    (see decode_images)."""
-    use_pil = _codec_available()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "fmt", "header_ok",
-                                   "decoded_w", "decoded_h",
-                                   "payload_len", "psnr")}
-            for image_id, fmt, blob in zip(pdf["image_id"], pdf["fmt"],
-                                           pdf["bytes"]):
-                out["image_id"].append(image_id)
-                out["fmt"].append(fmt)
-                out["payload_len"].append(
-                    len(blob) if blob is not None else 0)
-                px = decode_blob(blob, use_pil=use_pil)
-                if px is None:
-                    out["header_ok"].append(False)
-                    out["decoded_w"].append(0)
-                    out["decoded_h"].append(0)
-                    out["psnr"].append(0.0)
-                    continue
-                hh, ww = px.shape[:2]
-                out["header_ok"].append(True)
-                out["decoded_w"].append(int(ww))
-                out["decoded_h"].append(int(hh))
-                out["psnr"].append(psnr(px, expected_pixels(
-                    str(image_id), ww, hh)))
-            res = pd.DataFrame(out)
-            for c in carry:
-                res[c] = list(pdf[c])
-            yield res
-
-    return df.select("image_id", "fmt", "bytes", *carry).mapInPandas(
-        run, schema=_carry_schema(df, carry))
 
 
 _DCT32 = None
@@ -504,218 +464,82 @@ def _batch_luma(pxs, ok_idx) -> tuple:
     return means, stds
 
 
-def decode_luma_stats(df: DataFrame, carry: tuple = (),
-                      with_psnr: bool = False) -> DataFrame:
-    """Standalone decoded-tier luma stats: one mapInPandas pass (real
-    codecs) -> (image_id, fmt, decode_ok, luma_mean, luma_std[, psnr,
-    decoded_w, decoded_h][, carry]).  Used by the
-    `image_quality_decoded` block when no phash-integrity pass exists
-    to fuse with (dataset.py fuses into
-    :func:`phash_integrity_check`'s decode otherwise — decoding is the
-    expensive stage and must not run twice).  ``with_psnr=True``
-    additionally emits the pixel-invariant columns from the SAME
-    decode, so the `pixel_invariant` (real tier) + `image_quality_decoded`
-    combination also pays exactly one decode pass.  Undecodable rows
-    carry NaN stats and decode_ok=False; they are the pixel-invariant's
-    finding, not a quality violation."""
+def decode_pixels(df: DataFrame, *, psnr: bool = False,
+                  phash: bool = False, luma: bool = False,
+                  carry: tuple = ()) -> DataFrame:
+    """The real-codec decode: ONE mapInPandas pass that calls
+    :func:`decode_blob` once per row and emits ``(image_id, fmt,
+    decode_ok, decoded_w, decoded_h)`` plus only what was asked for:
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        use_pil = _codec_available()
-        for pdf in batches:
-            pxs = [decode_blob(b, use_pil=use_pil) for b in pdf["bytes"]]
-            ok_idx = [i for i, p in enumerate(pxs) if p is not None]
-            means, stds = _batch_luma(pxs, ok_idx)
-            res = pd.DataFrame({
-                "image_id": list(pdf["image_id"]),
-                "fmt": list(pdf["fmt"]),
-                "decode_ok": [p is not None for p in pxs],
-                "luma_mean": means,
-                "luma_std": stds,
-            })
-            if with_psnr:
-                psnrs, dws, dhs = [], [], []
-                for image_id, px in zip(pdf["image_id"], pxs):
-                    if px is None:
-                        psnrs.append(0.0)
-                        dws.append(0)
-                        dhs.append(0)
-                    else:
-                        hh, ww = px.shape[:2]
-                        psnrs.append(psnr(px, expected_pixels(
-                            str(image_id), ww, hh)))
-                        dws.append(int(ww))
-                        dhs.append(int(hh))
-                res["psnr"] = psnrs
-                res["decoded_w"] = dws
-                res["decoded_h"] = dhs
-            for c in carry:
-                res[c] = list(pdf[c])
-            yield res
+    - ``psnr``: PSNR of the decoded pixels against the deterministic
+      reference image for the id (:func:`expected_pixels`), 0.0 when
+      undecodable;
+    - ``phash``: the stored ``phash`` column vs the perceptual hash
+      recomputed from the pixels (:func:`dct_phash_batch`, one batched
+      DCT per Arrow batch) as ``(stored_phash, computed_phash,
+      hamming)``; hamming is NULL when undecodable or stored NULL;
+    - ``luma``: full-resolution Rec.601 ``(luma_mean, luma_std)``, NaN
+      when undecodable.
 
-    extra = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in carry)
-    if with_psnr:
-        extra = ", psnr double, decoded_w int, decoded_h int" + extra
-    return df.select("image_id", "fmt", "bytes", *carry).mapInPandas(
-        run, schema="image_id string, fmt string, decode_ok boolean, "
-                    "luma_mean double, luma_std double" + extra)
-
-
-def phash_integrity_check(df: DataFrame, carry: tuple = (),
-                          with_psnr: bool = False,
-                          with_luma: bool = False) -> DataFrame:
-    """Verify the stored ``phash`` column against the perceptual hash
-    RECOMPUTED from decoded pixels — the cross-column integrity check
-    that ties the codec tier to the table's phash metadata (a corrupt
-    or stale phash silently breaks every phash-keyed dedup downstream,
-    so a 100 TB ingest validates it like any other constraint).
-
-    One joinless mapInPandas pass: decode blob (built-in codecs),
-    :func:`dct_phash` the pixels, hamming vs the stored value via int
-    xor bit_count.  Output per row: decode_ok, stored vs computed
-    phash, hamming (NULL when undecodable or stored phash is NULL).
-    Callers assert ``hamming == 0`` for lossless formats or
-    ``hamming <= t`` for lossy re-encodes.
-
-    ``with_psnr=True`` additionally emits (psnr, decoded_w, decoded_h)
-    from the SAME decode — the fused one-scan path when both the pixel
-    invariant and phash integrity are configured (decoding is the
-    expensive stage; it must not run twice).  ``with_luma=True``
-    likewise rides (luma_mean, luma_std) for the decoded-tier
-    image-quality block on the same pixels (NaN when undecodable —
-    callers gate on decode_ok).
+    Undecodable rows report ``decoded_w = decoded_h = 0``; callers gate
+    on ``decode_ok``.  `carry` columns pass through the decode
+    untouched (see :func:`decode_images`).
 
     The stored phash travels into Arrow as a STRING: pandas coerces an
     int64 column containing any NULL to float64, which silently loses
     low bits of 63-bit values (> 2^53) and would fabricate mismatches
     on every other row of the batch."""
+    schema = ("image_id string, fmt string, decode_ok boolean, "
+              "decoded_w int, decoded_h int")
+    if psnr:
+        schema += ", psnr double"
+    if phash:
+        schema += ", stored_phash long, computed_phash long, hamming int"
+    if luma:
+        schema += ", luma_mean double, luma_std double"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         use_pil = _codec_available()
         for pdf in batches:
-            out = {k: [] for k in ("image_id", "fmt", "decode_ok",
-                                   "stored_phash", "computed_phash",
-                                   "hamming")}
-            if with_psnr:
-                for k in ("psnr", "decoded_w", "decoded_h"):
-                    out[k] = []
-            # decode per image, then hash the decodable ones as ONE
-            # batched DCT (dct_phash_batch) — per-image numpy dispatch
-            # on 32x32 matmuls was the pass's hot spot once decode went
-            # native
             pxs = [decode_blob(b, use_pil=use_pil) for b in pdf["bytes"]]
             ok_idx = [i for i, p in enumerate(pxs) if p is not None]
-            if with_luma:
-                lmeans, lstds = _batch_luma(pxs, ok_idx)
-            comps: list = [None] * len(pxs)
-            for i, hsh in zip(ok_idx,
-                              dct_phash_batch([pxs[i] for i in ok_idx])):
-                comps[i] = hsh
-            for j, (image_id, fmt, stored) in enumerate(zip(
-                    pdf["image_id"], pdf["fmt"], pdf["_phash_str"])):
-                out["image_id"].append(image_id)
-                out["fmt"].append(fmt)
-                stored_i = None if stored is None else int(stored)
-                out["stored_phash"].append(stored_i)
-                px, comp = pxs[j], comps[j]
-                if px is None:
-                    out["decode_ok"].append(False)
-                    out["computed_phash"].append(None)
-                    out["hamming"].append(None)
-                    if with_psnr:
-                        out["psnr"].append(0.0)
-                        out["decoded_w"].append(0)
-                        out["decoded_h"].append(0)
-                    continue
-                out["decode_ok"].append(True)
-                out["computed_phash"].append(comp)
-                out["hamming"].append(
-                    None if stored_i is None
-                    else int(bin(comp ^ stored_i).count("1")))
-                if with_psnr:
-                    hh, ww = px.shape[:2]
-                    out["psnr"].append(psnr(px, expected_pixels(
-                        str(image_id), ww, hh)))
-                    out["decoded_w"].append(int(ww))
-                    out["decoded_h"].append(int(hh))
-            res = pd.DataFrame(out)
-            # int-lists containing None become float64 in pandas,
-            # truncating 63-bit values — force nullable Int64
-            for c in ("stored_phash", "computed_phash", "hamming"):
-                res[c] = pd.array(out[c], dtype="Int64")
-            if with_luma:
-                res["luma_mean"] = lmeans
-                res["luma_std"] = lstds
+            res = pd.DataFrame({
+                "image_id": list(pdf["image_id"]),
+                "fmt": list(pdf["fmt"]),
+                "decode_ok": [p is not None for p in pxs],
+                "decoded_w": [0 if p is None else int(p.shape[1])
+                              for p in pxs],
+                "decoded_h": [0 if p is None else int(p.shape[0])
+                              for p in pxs],
+            })
+            if psnr:
+                res["psnr"] = [_reference_psnr(i, p) for i, p in
+                               zip(pdf["image_id"], pxs)]
+            if phash:
+                comps: list = [None] * len(pxs)
+                for i, hsh in zip(ok_idx, dct_phash_batch(
+                        [pxs[i] for i in ok_idx])):
+                    comps[i] = hsh
+                stored = [None if s is None else int(s)
+                          for s in pdf["_phash_str"]]
+                ham = [None if c is None or s is None
+                       else int(bin(c ^ s).count("1"))
+                       for c, s in zip(comps, stored)]
+                # int-lists containing None become float64 in pandas,
+                # truncating 63-bit values — force nullable Int64
+                res["stored_phash"] = pd.array(stored, dtype="Int64")
+                res["computed_phash"] = pd.array(comps, dtype="Int64")
+                res["hamming"] = pd.array(ham, dtype="Int64")
+            if luma:
+                res["luma_mean"], res["luma_std"] = _batch_luma(pxs, ok_idx)
             for c in carry:
                 res[c] = list(pdf[c])
             yield res
 
-    extra = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in carry)
-    if with_luma:
-        extra = ", luma_mean double, luma_std double" + extra
-    if with_psnr:
-        extra = ", psnr double, decoded_w int, decoded_h int" + extra
-    return df.select(
-        "image_id", "fmt", "bytes",
-        F.col("phash").cast("string").alias("_phash_str"), *carry
-    ).mapInPandas(
-        run, schema="image_id string, fmt string, decode_ok boolean, "
-                    "stored_phash long, computed_phash long, hamming int"
-                    + extra)
-
-
-def psnr_check(df: DataFrame, min_psnr: float = 40.0) -> DataFrame:
-    """Decoded-pixel invariant (BASELINE.json input_hint): violation rows
-    for payloads whose stub-decoded PSNR falls below `min_psnr` or whose
-    header metadata disagrees with the table's (w, h).
-
-    (w, h) ride through the decode pass, so this is ONE narrow
-    mapInPandas scan — no shuffle, and no join on image_id (which is
-    not unique: planted duplicate ids would cross-match and double
-    count)."""
-    joined = decode_images(df, carry=("w", "h"))
-    bad = joined.filter(
-        (~F.col("header_ok"))
-        | (F.col("psnr") < min_psnr)
-        | (F.col("decoded_w") != F.col("w"))
-        | (F.col("decoded_h") != F.col("h")))
-    return bad.select(
-        "image_id",
-        F.lit("pixelInvariant").alias("keyword"),
-        F.lit("$.bytes").alias("json_path"),
-        F.lit("x-spark/pixel/psnr").alias("schema_path"),
-        F.concat(F.lit("decoded payload fails PSNR/metadata invariant "
-                       "(psnr="),
-                 F.round("psnr", 2).cast("string"),
-                 F.lit(")")).alias("message"),
-        F.col("psnr").cast("string").alias("failing_value"),
-    )
-
-
-def psnr_check_real(df: DataFrame, min_psnr: float = 40.0) -> DataFrame:
-    """The decoded-pixel invariant over REAL payloads (BMP via the
-    built-in numpy codec, others via Pillow when importable): violation
-    rows for blobs that fail to decode, decode to the wrong dimensions,
-    or reconstruct below `min_psnr` against the reference pixels.
-    One narrow joinless scan — see psnr_check."""
-    joined = decode_images_real(df, carry=("w", "h"))
-    bad = joined.filter(
-        (~F.col("header_ok"))
-        | (F.col("psnr") < min_psnr)
-        | (F.col("decoded_w") != F.col("w"))
-        | (F.col("decoded_h") != F.col("h")))
-    return bad.select(
-        "image_id",
-        F.lit("pixelInvariant").alias("keyword"),
-        F.lit("$.bytes").alias("json_path"),
-        F.lit("x-spark/pixel/psnr").alias("schema_path"),
-        F.concat(F.lit("decoded payload fails PSNR/metadata invariant "
-                       "(psnr="),
-                 F.round("psnr", 2).cast("string"),
-                 F.lit(")")).alias("message"),
-        F.col("psnr").cast("string").alias("failing_value"),
-    )
+    src = [F.col("phash").cast("string").alias("_phash_str")] if phash \
+        else []
+    return df.select("image_id", "fmt", "bytes", *src, *carry).mapInPandas(
+        run, schema=_carry_schema(df, schema, carry))
 
 
 # ------------------------------------------ video: frame sampling --------

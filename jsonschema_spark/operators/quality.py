@@ -91,9 +91,12 @@ def _quality_bands(cfg: dict) -> list:
     h = F.col(cfg.get("h_col", "h")).cast("double")
     blen = F.length(F.col(cfg.get("bytes_col", "bytes"))).cast("double")
     geom_ok = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
-    aspect = w / h
+    # try_divide: the bands gate on geom_ok, but an aggregate's common
+    # subexpressions are evaluated before the gate, and under ANSI a
+    # plain division by h = 0 raises there
+    aspect = F.try_divide(w, h)
     pixels = w * h
-    bpp = blen / pixels
+    bpp = F.try_divide(blen, pixels)
     dims = F.concat(F.coalesce(w.cast("long").cast("string"), F.lit("?")),
                     F.lit("x"),
                     F.coalesce(h.cast("long").cast("string"), F.lit("?")))
@@ -158,9 +161,8 @@ def luma_quality_structs(cfg: dict) -> list:
     """Violation structs for the DECODED-tier image-quality block
     (``image_quality_decoded``: min_luma / max_luma mean-brightness
     band, min_contrast luma-std floor) over any frame carrying
-    ``(decode_ok, luma_mean, luma_std)`` — shared by the standalone
-    decode pass and the phash-integrity-fused pass in dataset.py, so
-    both plans emit identical rows.  Gated on ``decode_ok``:
+    ``(decode_ok, luma_mean, luma_std)``, such as
+    ``multimodal.decode_pixels(luma=True)``.  Gated on ``decode_ok``:
     undecodable rows are the pixel-invariant's finding (and their NaN
     stats would otherwise compare as greater-than-everything under
     Spark's NaN ordering)."""
@@ -200,10 +202,9 @@ def luma_quality_structs(cfg: dict) -> list:
 
 def pixel_invariant_struct(min_psnr: float) -> Column:
     """The pixelInvariant violation struct over any frame carrying
-    ``(decode_ok, psnr, decoded_w, decoded_h, w, h)`` — shared by BOTH
-    fused decode shapes in dataset.py (phash_integrity-fused and
-    luma-fused) so the violation rows cannot drift between block
-    combinations."""
+    ``(decode_ok, psnr, decoded_w, decoded_h, w, h)`` — the output of
+    either decode tier (``multimodal.decode_images`` or
+    ``decode_pixels(psnr=True)``) with ``w, h`` carried through."""
     pix_bad = ((~F.col("decode_ok"))
                | (F.col("psnr") < min_psnr)
                | (F.col("decoded_w") != F.col("w"))

@@ -3,35 +3,37 @@
 Reference anchor: ``$ref`` composition
 (/root/reference/jsonschema/_keywords.py:274-275); the dataset-level
 reinterpretation (SURVEY.md §2.6) is a semi/anti join against the
-referenced table.  Physical strategy: broadcast the dim side when small
-(one narrow pass over the fact table, zero shuffle of the 100 TB side);
-otherwise let AQE pick sort-merge vs shuffled-hash at runtime.
+referenced table.  Physical strategy: the dim's key column is always
+broadcast, so the check is one narrow pass over the fact table with
+zero shuffle of the 100 TB side.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def orphans(df: DataFrame, fk: str, dim: DataFrame, dim_key: str,
-            broadcast: Optional[bool] = True) -> DataFrame:
+def orphans(df: DataFrame, fk: str, dim: DataFrame,
+            dim_key: str) -> DataFrame:
     """Rows of `df` whose `fk` has no match in `dim.dim_key`
-    (NULL fks are not orphans: absent property semantics)."""
-    keys = dim.select(F.col(dim_key).alias(fk)).distinct()
-    if broadcast:
-        keys = F.broadcast(keys)
+    (NULL fks are not orphans: absent property semantics).  The
+    broadcast side is not deduplicated: a left-anti join only asks
+    whether a key exists, so duplicate dim keys cannot change the
+    result, and a `distinct` would cost a shuffle stage before the
+    broadcast."""
+    keys = F.broadcast(dim.select(F.col(dim_key).alias(fk)))
     return df.filter(F.col(fk).isNotNull()).join(keys, fk, "left_anti")
 
 
 def referential_violations(df: DataFrame, fk: str, dim: DataFrame,
-                           dim_key: str, id_cols: Sequence[str] = (),
-                           broadcast: Optional[bool] = True) -> DataFrame:
+                           dim_key: str,
+                           id_cols: Sequence[str] = ()) -> DataFrame:
     """Violation rows (keyword 'referential:<fk>') for orphaned fks."""
     keep = [F.col(c) for c in id_cols] if id_cols else []
-    return orphans(df, fk, dim, dim_key, broadcast).select(
+    return orphans(df, fk, dim, dim_key).select(
         *keep,
         F.lit(f"referential:{fk}").alias("keyword"),
         F.lit(f"$.{fk}").alias("json_path"),

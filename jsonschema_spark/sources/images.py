@@ -264,7 +264,7 @@ def phash_images_df(spark: SparkSession, n_rows: int = 2_000,
     - everything else: stored phash == recomputed phash exactly (BMP is
       lossless, so decode is bit-exact).
 
-    The integrity checker (phash_integrity_check) must find exactly the
+    The integrity checker (decode_pixels(phash=True)) must find exactly the
     planted damage and nothing else."""
     import pandas as pd
 

@@ -223,6 +223,27 @@ def test_referential(spark):
     assert v.first()["keyword"] == "referential:license_id"
 
 
+def test_orphans_ignore_duplicate_and_null_dim_keys(spark):
+    """A left-anti join only tests whether a key exists, so a dim with
+    duplicate keys and a NULL key finds the same orphans as the same
+    dim after `distinct()` — and the dim side is broadcast as is, with
+    no aggregate in the plan."""
+    img = images_df(spark, 2000, with_license=True)
+    lic = licenses_df(spark)
+    dim = lic.unionByName(lic).unionByName(
+        lic.limit(1).withColumn("license_id", F.lit(None).cast(
+            lic.schema["license_id"].dataType)))
+    bad = orphans(img, "license_id", dim, "license_id")
+    got = sorted(r["image_id"] for r in bad.select("image_id").collect())
+    want = sorted(r["image_id"] for r in orphans(
+        img, "license_id", dim.distinct(), "license_id")
+        .select("image_id").collect())
+    assert got == want and len(got) == 2000 // 500
+    plan = bad._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "HashAggregate" not in plan
+
+
 def test_drift(spark):
     base = spark.range(10_000).select(
         (F.col("id") % 100).cast("double").alias("x"))
@@ -323,22 +344,25 @@ def test_real_bmp_codec_pipeline(spark):
     (decode fails) and pixel corruption (PSNR collapse)."""
     import numpy as np
     from jsonschema_spark.operators.multimodal import (
-        decode_bmp, decode_images_real, encode_bmp, expected_pixels,
-        psnr_check_real)
+        decode_bmp, decode_pixels, encode_bmp, expected_pixels)
     from jsonschema_spark.sources.images import bmp_images_df
 
     px = expected_pixels("roundtrip", 13, 7)  # non-multiple-of-4 row pad
     assert np.array_equal(decode_bmp(encode_bmp(px)), px)
 
     img = bmp_images_df(spark, 1000)
-    d = decode_images_real(img).cache()
+    d = decode_pixels(img, psnr=True).cache()
     n_trunc = sum(1 for i in range(1000) if i % 251 == 0)
     n_corrupt = sum(1 for i in range(1000)
                     if i % 157 == 0 and i % 251 != 0)
-    assert d.filter("NOT header_ok").count() == n_trunc
-    assert d.filter("header_ok AND psnr >= 40").count() == \
+    assert d.filter("NOT decode_ok").count() == n_trunc
+    assert d.filter("decode_ok AND psnr >= 40").count() == \
         1000 - n_trunc - n_corrupt
-    viols = psnr_check_real(img)
+    from jsonschema_spark import validate_dataset
+    viols = validate_dataset(
+        img, {"type": "object",
+              "x-spark": {"pixel_invariant": {"decode": "real"}}},
+        ["image_id"])
     assert viols.count() == n_trunc + n_corrupt
     assert set(viols.select("keyword").distinct().toPandas()["keyword"]) \
         == {"pixelInvariant"}

@@ -1,6 +1,8 @@
 """validate_dataset: the x-spark extension block end-to-end — row-level
 keywords + uniqueness + referential + stats + pixel invariant unified."""
 
+import itertools
+
 from pyspark.sql import functions as F
 
 from jsonschema_spark import CompiledValidator, validate_dataset
@@ -108,6 +110,52 @@ def test_validate_dataset_fused_pixel_and_phash_single_decode(spark):
     assert pix == {i for i in range(n) if i % 251 == 0}
     assert integ == {i for i in range(n) if i % 211 == 0 and i % 251 != 0}
 
+
+
+def test_pixel_block_combinations_decode_once_per_tier(spark):
+    """Every non-empty combination of pixel_invariant (stub/real/auto),
+    phash_integrity and image_quality_decoded gives the union of each
+    block's rows run alone (auto pinned to the tier it resolves to),
+    and its plan decodes once per tier used: one pass when only one
+    tier is used, two for the stub pixel invariant beside a real-tier
+    block."""
+    from jsonschema_spark.sources.images import phash_images_df
+    img = phash_images_df(spark, 300).cache()
+    luma = {"min_luma": 127.5, "min_contrast": 2}
+
+    def run(xs):
+        return validate_dataset(img, {"type": "object", "x-spark": xs},
+                                ["image_id"])
+
+    def rows(xs):
+        return sorted((r["image_id"], r["keyword"])
+                      for r in run(xs).collect())
+
+    alone = {"stub": rows({"pixel_invariant": {"decode": "stub"}}),
+             "real": rows({"pixel_invariant": {"decode": "real"}}),
+             "phash": rows({"phash_integrity": {}}),
+             "luma": rows({"image_quality_decoded": luma})}
+    assert all(alone.values())      # every block finds planted rows
+    for pix, phash, lum in itertools.product(
+            (None, "stub", "real", "auto"), (False, True), (False, True)):
+        xs = {}
+        if pix:
+            xs["pixel_invariant"] = {"decode": pix}
+        if phash:
+            xs["phash_integrity"] = {}
+        if lum:
+            xs["image_quality_decoded"] = luma
+        if not xs:
+            continue
+        tier = ("real" if phash else "stub") if pix == "auto" else pix
+        want = sorted((alone[tier] if pix else [])
+                      + (alone["phash"] if phash else [])
+                      + (alone["luma"] if lum else []))
+        assert rows(xs) == want, xs
+        plan = run(xs)._jdf.queryExecution().executedPlan().toString()
+        tiers = {tier, "real" if phash or lum else None} - {None}
+        assert plan.count("MapInPandas run(") == len(tiers), (xs, plan)
+    img.unpersist()
 
 
 def test_validate_dataset_null_check_configs(spark):

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from jsonschema_spark.operators.dedup import (minhash_candidates,
                                               ngram_jaccard_pairs,
                                               simhash_duplicates)
-from jsonschema_spark.operators.multimodal import decode_images, psnr_check
+from jsonschema_spark.operators.multimodal import decode_images
 from jsonschema_spark.operators.similarity import (brute_force_topk,
                                                    max_cosine_per_vector)
 from jsonschema_spark.sources.images import images_df
@@ -90,7 +90,7 @@ def test_decode_images_and_psnr(spark):
     dec = decode_images(img)
     rows = dec.collect()
     assert len(rows) == 2000
-    ok = [r for r in rows if r["header_ok"]]
+    ok = [r for r in rows if r["decode_ok"]]
     # 0.1% truncated -> 2 rows fail header/psnr
     assert len(rows) - len(ok) == 2
     # header round-trips the clamped dims
@@ -99,7 +99,11 @@ def test_decode_images_and_psnr(spark):
     for iid, r in list(sample.items())[:50]:
         assert r["decoded_w"] == max(src[iid]["w"], 1)
         assert r["decoded_h"] == max(src[iid]["h"], 1)
-    viol = psnr_check(img)
+    from jsonschema_spark import validate_dataset
+    viol = validate_dataset(
+        img, {"type": "object",
+              "x-spark": {"pixel_invariant": {"decode": "stub"}}},
+        ["image_id"])
     # truncated payloads fail psnr; rows with w/h planted out of range
     # fail the metadata-equality invariant
     assert viol.count() >= 2
@@ -431,22 +435,23 @@ def test_png_grey_and_rgba_color_types():
 def test_png_images_table_planted_violations(spark):
     """png_images_df plants truncation (decode fail), CRC corruption
     (decode fail), and pre-encode pixel damage (low PSNR) at known id
-    rates; decode_images_real must find exactly those."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    rates; decode_pixels must find exactly those."""
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import png_images_df
 
     n = 1200
     img = png_images_df(spark, n)
-    dec = {r["image_id"]: r for r in decode_images_real(img).collect()}
+    dec = {r["image_id"]: r
+           for r in decode_pixels(img, psnr=True).collect()}
     assert len(dec) == n
     for i in range(n):
         r = dec[f"png_{i:012x}"]
         if i % 251 == 0 or (i % 311 == 0 and i != 0):
-            assert not r["header_ok"], i
+            assert not r["decode_ok"], i
         elif i % 157 == 0:
-            assert r["header_ok"] and r["psnr"] < 40.0, (i, r["psnr"])
+            assert r["decode_ok"] and r["psnr"] < 40.0, (i, r["psnr"])
         else:
-            assert r["header_ok"] and r["psnr"] == 99.0, (i, r["psnr"])
+            assert r["decode_ok"] and r["psnr"] == 99.0, (i, r["psnr"])
             assert r["decoded_w"] == 16 and r["decoded_h"] == 16
 
 
@@ -605,24 +610,25 @@ def test_jpeg_malformed_and_structure():
 def test_jpeg_images_table_planted_violations(spark):
     """jpeg_images_df plants truncation (decode fail), SOF0-marker
     kill (decode fail), and pre-encode pixel damage (low PSNR) at
-    known id rates; decode_images_real must find exactly those, and
+    known id rates; decode_pixels must find exactly those, and
     every intact LOSSY row must still clear 40 dB against the
     reference pixels."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import jpeg_images_df
 
     n = 1200
     img = jpeg_images_df(spark, n)
-    dec = {r["image_id"]: r for r in decode_images_real(img).collect()}
+    dec = {r["image_id"]: r
+           for r in decode_pixels(img, psnr=True).collect()}
     assert len(dec) == n
     for i in range(n):
         r = dec[f"jpg_{i:012x}"]
         if i % 251 == 0 or (i % 311 == 0 and i != 0):
-            assert not r["header_ok"], i
+            assert not r["decode_ok"], i
         elif i % 157 == 0:
-            assert r["header_ok"] and r["psnr"] < 40.0, (i, r["psnr"])
+            assert r["decode_ok"] and r["psnr"] < 40.0, (i, r["psnr"])
         else:
-            assert r["header_ok"] and 40.0 <= r["psnr"] < 99.0, \
+            assert r["decode_ok"] and 40.0 <= r["psnr"] < 99.0, \
                 (i, r["psnr"])
             assert r["decoded_w"] == 16 and r["decoded_h"] == 16
 
@@ -713,10 +719,10 @@ def test_phash_integrity_planted(spark):
     """The recompute-from-pixels check finds exactly the planted
     damage: id%251 truncation -> decode_fail, id%211 bit flips ->
     hamming 2, everything else verifies at hamming 0."""
-    from jsonschema_spark.operators.multimodal import phash_integrity_check
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import phash_images_df
     n = 800
-    chk = phash_integrity_check(phash_images_df(spark, n)).collect()
+    chk = decode_pixels(phash_images_df(spark, n), phash=True).collect()
     by_id = {int(r.image_id.split("_")[1], 16): r for r in chk}
     assert len(by_id) == n
     for i, r in by_id.items():
@@ -854,7 +860,7 @@ def test_phash_integrity_null_phash_batchmates_unharmed(spark):
     from jsonschema_spark.operators.multimodal import (dct_phash,
                                                        encode_bmp,
                                                        expected_pixels,
-                                                       phash_integrity_check)
+                                                       decode_pixels)
     px = expected_pixels("big", 16, 16)
     base = dct_phash(px)              # ~8.4e18 here: far above 2^53, so
     flipped = base ^ (1 << 62)        # float64 would truncate both
@@ -865,7 +871,7 @@ def test_phash_integrity_null_phash_batchmates_unharmed(spark):
         [(i, bytearray(b), p) for i, b, p in rows],
         "image_id string, bytes binary, phash long").withColumn(
         "fmt", F.lit("bmp")).coalesce(1)   # one Arrow batch
-    got = {r.image_id: r for r in phash_integrity_check(df).collect()}
+    got = {r.image_id: r for r in decode_pixels(df, phash=True).collect()}
     assert got["a"].hamming == 0          # exact match survives NULL mate
     assert got["b"].hamming is None and got["b"].stored_phash is None
     assert got["c"].stored_phash == flipped   # bit-exact round trip

@@ -243,10 +243,10 @@ def test_decoded_luma_fused_with_phash_equals_standalone(spark):
     # give the corpus a correct phash column so the fused pass runs
     # cleanly (recompute on the driver-side generator rule is overkill:
     # just use the integrity checker's own computed value)
-    from jsonschema_spark.operators.multimodal import phash_integrity_check
+    from jsonschema_spark.operators.multimodal import decode_pixels
     df = luma_images_df(spark, n)
-    ph = phash_integrity_check(df.withColumn("phash", F.lit(None)
-                                             .cast("long")))
+    ph = decode_pixels(df.withColumn("phash", F.lit(None).cast("long")),
+                       phash=True)
     df2 = df.join(
         F.broadcast(ph.select("image_id",
                               F.col("computed_phash").alias("phash"))),

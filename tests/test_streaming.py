@@ -283,14 +283,14 @@ def test_validate_dataset_stream_decode_tier_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from jsonschema_spark import validate_dataset
-    from jsonschema_spark.operators.multimodal import phash_integrity_check
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import luma_images_df
     from jsonschema_spark.streaming import validate_dataset_stream
 
     src = str(tmp_path / "luma_src")
     base = luma_images_df(spark, 500)
-    ph = phash_integrity_check(base.withColumn(
-        "phash", F.lit(None).cast("long")))
+    ph = decode_pixels(base.withColumn(
+        "phash", F.lit(None).cast("long")), phash=True)
     (base.join(F.broadcast(ph.select(
         "image_id", F.col("computed_phash").alias("phash"))),
         "image_id", "left")

@@ -322,23 +322,24 @@ def test_distance_map_entrywise_vs_libwebp():
 def test_webp_images_table_planted_violations(spark):
     """webp_images_df plants truncation (decode fail), VP8L-signature
     kill (decode fail), and pre-encode pixel damage (low PSNR) at
-    known id rates; decode_images_real must find exactly those, and
+    known id rates; decode_pixels must find exactly those, and
     every intact row round-trips losslessly -> PSNR 99."""
-    from jsonschema_spark.operators.multimodal import decode_images_real
+    from jsonschema_spark.operators.multimodal import decode_pixels
     from jsonschema_spark.sources.images import webp_images_df
 
     n = 1200
     img = webp_images_df(spark, n)
-    dec = {r["image_id"]: r for r in decode_images_real(img).collect()}
+    dec = {r["image_id"]: r
+           for r in decode_pixels(img, psnr=True).collect()}
     assert len(dec) == n
     for i in range(n):
         r = dec[f"wbp_{i:012x}"]
         if i % 251 == 0 or (i % 311 == 0 and i != 0):
-            assert not r["header_ok"], i
+            assert not r["decode_ok"], i
         elif i % 157 == 0:
-            assert r["header_ok"] and r["psnr"] < 40.0, (i, r["psnr"])
+            assert r["decode_ok"] and r["psnr"] < 40.0, (i, r["psnr"])
         else:
-            assert r["header_ok"] and r["psnr"] == 99.0, (i, r["psnr"])
+            assert r["decode_ok"] and r["psnr"] == 99.0, (i, r["psnr"])
             assert r["decoded_w"] == 16 and r["decoded_h"] == 16
 
 

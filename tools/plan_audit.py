@@ -136,14 +136,18 @@ def main() -> None:
         simhash_packed_df(docs, "doc_id", "text")))
 
     # 9. pixel invariant: joinless decode scan
-    from jsonschema_spark.operators.multimodal import psnr_check
+    from jsonschema_spark import validate_dataset
     cases.append((
         "pixel_invariant",
-        "decoded-pixel PSNR invariant: (w, h) ride through the decode "
-        "mapInPandas, so the whole check is ONE narrow Python scan — "
-        "zero exchanges (the former image_id join both shuffled and "
-        "cross-matched duplicate ids)",
-        psnr_check(img)))
+        "decoded-pixel PSNR invariant, stub tier (validate_dataset with "
+        "only `pixel_invariant: {decode: stub}`): (w, h) ride through "
+        "the decode mapInPandas, so the whole check is ONE narrow "
+        "Python scan — zero exchanges (the former image_id join both "
+        "shuffled and cross-matched duplicate ids)",
+        validate_dataset(
+            img, {"type": "object",
+                  "x-spark": {"pixel_invariant": {"decode": "stub"}}},
+            ["image_id"])))
 
     # 10. best_match: single window over the violations
     from jsonschema_spark.operators.bestmatch import best_match
@@ -363,10 +367,9 @@ def main() -> None:
                     "min_cosine": 0.5}, ["pair_id"])))
 
     # 25. decoded-tier luma quality fused with phash integrity: ONE
-    # Python decode node feeds both violation streams (persist the
+    # decode_pixels node feeds both violation streams (persist the
     # synthetic corpus first — its generator is itself a mapInPandas
     # and would otherwise pollute the audited plan)
-    from jsonschema_spark import validate_dataset
     from jsonschema_spark.sources.images import luma_images_df
     luma_path = "/tmp/plan_audit_luma"
     if not os.path.exists(os.path.join(luma_path, "_SUCCESS")):
@@ -376,11 +379,11 @@ def main() -> None:
     luma_img = spark.read.parquet(luma_path)
     cases.append((
         "luma_quality_fused",
-        "image_quality_decoded + phash_integrity in one spec: the luma "
-        "stats ride the phash-integrity decode (with_luma) — exactly "
-        "ONE python node in the whole plan (decoding is the expensive "
-        "stage and must not run twice), zero exchanges before the "
-        "violation union",
+        "image_quality_decoded + phash_integrity in one spec: one "
+        "decode_pixels(phash=True, luma=True) pass and one violation "
+        "projection over it — exactly ONE python node in the whole "
+        "plan (decoding is the expensive stage and must not run "
+        "twice), zero exchanges before the violation union",
         validate_dataset(
             luma_img,
             {"type": "object",
@@ -420,9 +423,9 @@ def main() -> None:
         "exchange into a window count over the narrow (image_id, phash) "
         "scan, with no LeftSemi join back to the table; stats is one "
         "partial+final aggregate of only the null count and max its "
-        "rules read; the other two exchanges are the licence dim's "
-        "distinct and its broadcast; the one python node is the stub "
-        "decode",
+        "rules read; the other exchange is the licence dim's "
+        "broadcast (no distinct: a left-anti join only tests "
+        "existence); the one python node is the stub decode",
         validate_dataset(img, {**spec, "x-spark": xs}, ["image_id"],
                          tables={"licenses": licenses_df(spark)})))
 
