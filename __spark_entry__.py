@@ -1167,13 +1167,14 @@ PHASH_PANEL_ORACLE_PATH = f"/tmp/spark_graft_phash_panel_oracle_{_GEN_FP}"
 
 def q_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate IMAGE screen over the north-star table's stored
-    ``phash:int64`` column (BASELINE.json input_hint): banded-hamming
-    pairs at hamming <= 3 via operators/dedup.phash_near_duplicates —
-    4 x 16-bit bands (pigeonhole-complete), chunk-salted bucket joins,
-    all codegen'd shift/mask/bit_count.  Runs on a persisted 6k-row
-    panel so the DuckDB oracle can BRUTE-FORCE every pair — a true
-    all-pairs recall AND precision certificate for the banded path
-    (the sf-independent analogue of `simhash_vs_exact`'s audit)."""
+    ``phash:int64`` column (BASELINE.json input_hint): pairs at
+    hamming <= 3 via operators/dedup.phash_near_duplicates — bit-flip
+    enumeration on exact 32-bit block keys (exact for hamming 0..3),
+    hot keys chunk-salted, all codegen'd shift/mask/bit_count.  Runs
+    on a persisted 6k-row panel so the DuckDB oracle can BRUTE-FORCE
+    every pair — a true all-pairs recall AND precision certificate for
+    the enumeration path (the sf-independent analogue of
+    `simhash_vs_exact`'s audit)."""
     from jsonschema_spark.operators.dedup import phash_near_duplicates
     from jsonschema_spark.sources.images import images_df
     if not os.path.exists(os.path.join(PHASH_PANEL_ORACLE_PATH,
@@ -2324,7 +2325,7 @@ def oracle_sql() -> dict[str, str]:
         "phash_near_dups": f"""
             -- TRUE all-pairs brute force over the persisted 6k panel:
             -- every unordered image_id pair's bit_count(xor) distance,
-            -- no banding — certifies the engine's banded+chunk-salted
+            -- no blocking — certifies the engine's bit-flip enumeration
             -- path for BOTH recall and precision
             WITH t AS (SELECT * FROM
                        read_parquet('{PHASH_PANEL_ORACLE_PATH}/*.parquet'))

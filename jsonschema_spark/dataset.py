@@ -15,8 +15,7 @@ dataset-scope checks that have no row-local JSON-Schema analogue::
         "pixel_invariant": {"min_psnr": 40.0,
                             "decode": "auto"},   # "stub"|"real"|"auto"
         "phash_integrity": {"max_hamming": 0},
-        "near_dup_phash": {"max_hamming": 3, "max_pairs": 0,
-                           "strategy": "banded"},
+        "near_dup_phash": {"max_hamming": 3, "max_pairs": 0},
         "repetition": {"column": "text",          # Gopher Table A1
                        "max_top": {"2": 0.20},    # n -> max char frac
                        "max_dup": {"5": 0.15}},   # omit both: defaults
@@ -221,9 +220,8 @@ def validate_dataset(df: DataFrame, schema: dict,
         cfg = xs["near_dup_phash"] or {}
         maxh = cfg.get("max_hamming", 3)
         maxp = cfg.get("max_pairs", 0)
-        pairs = phash_near_duplicates(
-            df, "image_id", "phash", max_hamming=maxh,
-            strategy=cfg.get("strategy", "banded"))
+        pairs = phash_near_duplicates(df, "image_id", "phash",
+                                      max_hamming=maxh)
         n = F.col("_n")
         parts.append(pad(_violation_rows(
             pairs.agg(F.count(F.lit(1)).alias("_n")),

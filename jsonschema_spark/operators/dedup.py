@@ -465,10 +465,7 @@ def simhash_packed_df(df: DataFrame, id_col: str, text_col: str,
 def simhash_duplicates(df: DataFrame, id_col: str, text_col: str,
                        bits: int = 64, max_hamming: int = 3,
                        band_bits: int = 16,
-                       chunk_size: int = 8192,
-                       cache_signatures: bool = True,
-                       strategy: str = "banded",
-                       approx_n: int = None) -> DataFrame:
+                       chunk_size: int = 8192) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming, blocked by
     `bits/band_bits` bands so at least one band matches exactly when the
     distance is small (pigeonhole).  Band extraction and hamming are
@@ -478,31 +475,14 @@ def simhash_duplicates(df: DataFrame, id_col: str, text_col: str,
     10^9+ rows a raw (band, bucket) self-join goes quadratic inside one
     task; :func:`chunked_bucket_pairs` salts one join side into
     ~`chunk_size` chunks so per-task groups stay bounded while every
-    qualifying pair still meets exactly once.
+    qualifying pair still meets exactly once.  Text SimHash bits are
+    near-uniform, so the bands stay balanced (unlike stored phashes —
+    see :func:`phash_near_duplicates`).
 
     The signature pipeline feeds the bucket histogram plus both join
-    sides; `cache_signatures` computes it once (measured ~25% faster
-    at sf0.1) into a TRACKED cache released by
-    :func:`clear_dedup_cache` — pass False for a fully cache-free
-    plan (the pipeline recomputes per subtree).
-
-    ``strategy="enumerate"`` (max_hamming <= 3 only) switches the pair
-    join to :func:`enumerated_hamming_pairs` — exact 32-bit block keys
-    instead of 16-bit bands, removing the 65,536-bucket quadratic
-    ceiling at 10^9+ rows for a 33x probe-key expansion (same pair
-    set, asserted in tests).  ``strategy="auto"`` picks by row count
-    (``approx_n`` when given, else one count over the signature frame
-    — which also warms the cache) via :func:`resolve_pair_strategy`."""
-    sigs = simhash_packed_df(df, id_col, text_col, bits)
-    if cache_signatures:
-        sigs = track(sigs.cache())
-    if strategy == "auto" and approx_n is None:
-        approx_n = sigs.count()
-    strategy = resolve_pair_strategy(strategy, approx_n, max_hamming)
-    if strategy == "enumerate":
-        return enumerated_hamming_pairs(sigs, bits=bits,
-                                        max_hamming=max_hamming,
-                                        chunk_size=chunk_size)
+    sides, so it is computed once (measured ~25% faster at sf0.1) into
+    a TRACKED cache released by :func:`clear_dedup_cache`."""
+    sigs = track(simhash_packed_df(df, id_col, text_col, bits).cache())
     return packed_hamming_pairs(sigs, bits=bits, max_hamming=max_hamming,
                                 band_bits=band_bits, chunk_size=chunk_size)
 
@@ -512,16 +492,16 @@ def packed_hamming_pairs(sigs: DataFrame, bits: int = 64,
                          chunk_size: int = 8192,
                          require_full_recall: bool = False) -> DataFrame:
     """Banded-hamming pair core over an already-materialized packed
-    code column ``(_id, _sh long)`` — the join shape shared by text
-    SimHash and perceptual-hash (phash) near-dup detection.
+    code column ``(_id, _sh long)`` — text SimHash's pair join, whose
+    near-uniform signature bits keep every band's buckets balanced.
 
     Pigeonhole: with ``bits/band_bits`` bands, any pair at hamming <=
     (bits/band_bits - 1) is guaranteed to share at least one exact
     band.  Above that the banding is a best-effort LSH screen (recall
     < 1 by design — the caller trades recall for join size, standard
     SimHash practice); pass ``require_full_recall=True`` to assert the
-    guarantee instead (the phash path does — a near-dup *validation*
-    check must not silently miss pairs).  Band keys are literal
+    guarantee instead (an exact reference must not silently miss
+    pairs).  Band keys are literal
     shift/mask extractions and the final distance is
     ``bit_count(xor)`` — fully codegen'd; the (band, bucket) self-join
     is bounded by :func:`chunked_bucket_pairs` chunk salting so no
@@ -575,21 +555,21 @@ def enumerated_hamming_pairs(sigs: DataFrame, bits: int = 64,
                              max_hamming: int = 3,
                              chunk_size: int = 8192) -> DataFrame:
     """Exact hamming-ball pairs over packed codes ``(_id, _sh long)``
-    via BIT-FLIP ENUMERATION on wide exact keys — the 10^9+-row
-    alternative to 16-bit banding (public algorithm: Manku, Jain &
-    Sarma, "Detecting Near-Duplicates for Web Crawling", WWW'07 §3).
+    via BIT-FLIP ENUMERATION on wide exact keys — the phash near-dup
+    join (public algorithm: Manku, Jain & Sarma, "Detecting
+    Near-Duplicates for Web Crawling", WWW'07 §3).
 
-    Banding's keyspace is 2^band_bits = 65,536 buckets/band, so at
-    10^9+ rows the average bucket holds n/65,536 rows and bucket-local
-    work grows ~n^2/65,536 — chunk salting bounds task size but not
-    total work.  Enumeration instead splits the code into 2 blocks of
-    bits/2; a pair within hamming <= 3 has <= 1 differing bit in SOME
-    block (pigeonhole), so joining every row's block value against the
-    other rows' {identity + bits/2 single-bit variants} on the EXACT
-    32-bit block key gives a 2^32 keyspace — ~0.25 rows/bucket at 10^9
-    rows, no quadratic anywhere.  The price is a (bits/2 + 1)x probe-
-    side key expansion (28-byte key rows, codes only — never payloads),
-    the linear-shuffle trade the published design makes.
+    16-bit banding's keyspace is 65,536 buckets/band, and skewed codes
+    fill far fewer, so bucket-local work grows ~n^2/buckets — chunk
+    salting bounds task size but not total work.  Enumeration instead
+    splits the code into 2 blocks of bits/2; a pair within hamming <= 3
+    has <= 1 differing bit in SOME block (pigeonhole), so joining every
+    row's block value against the other rows' {identity + bits/2
+    single-bit variants} on the EXACT 32-bit block key gives a 2^32
+    keyspace — ~0.25 rows/bucket at 10^9 rows, no quadratic anywhere.
+    The price is a (bits/2 + 1)x probe-side key expansion (28-byte key
+    rows, codes only — never payloads), the linear-shuffle trade the
+    published design makes.
 
     Each qualifying pair meets in both orientations per matching
     (block, variant) event — ``_id`` ordering keeps one — and in up to
@@ -597,8 +577,7 @@ def enumerated_hamming_pairs(sigs: DataFrame, bits: int = 64,
     bit_count condition) makes events unique per input-row pair, with
     the final groupBy min-combining distinct rows that share an id.
     Residual key skew (a planted cluster of identical codes lands on
-    one identity key) is bounded by the same
-    :func:`chunked_bucket_pairs` salting as the banded path.
+    one identity key) is bounded by chunk-salting the hot keys.
     Requires ``max_hamming <= 3`` (the 2-block <= 1-flip regime;
     larger balls need more blocks) and even ``bits``."""
     if not 0 <= max_hamming <= 3:
@@ -612,8 +591,7 @@ def enumerated_hamming_pairs(sigs: DataFrame, bits: int = 64,
     lo_mask = (1 << half) - 1
 
     def block_val(sh, blk: int):
-        v = F.shiftrightunsigned(sh, blk * half).bitwiseAND(F.lit(lo_mask))
-        return v
+        return F.shiftrightunsigned(sh, blk * half).bitwiseAND(F.lit(lo_mask))
 
     originals = sigs.select(
         "_id", "_sh",
@@ -635,7 +613,7 @@ def enumerated_hamming_pairs(sigs: DataFrame, bits: int = 64,
     ).select("_id", "_sh", "_bk._blk", "_bk._key")
 
     # bound residual identity-key skew (clusters of identical codes on
-    # one key): unlike the banded path, the (block, key) histogram here
+    # one key): unlike 16-bit bands, the (block, key) histogram here
     # spans a 2^32 keyspace, so only the HOT keys (count > chunk_size —
     # rare by construction) are broadcast; everything else defaults to
     # one chunk via the left join's coalesce
@@ -671,36 +649,10 @@ def enumerated_hamming_pairs(sigs: DataFrame, bits: int = 64,
             .agg(F.min("hamming").alias("hamming")))
 
 
-#: rows beyond which banding's 65,536-bucket/band keyspace starts going
-#: quadratic inside buckets and the enumerate strategy wins (docstrings
-#: of both strategies; the "auto" strategy switches here)
-BANDED_CROSSOVER_ROWS = 100_000_000
-
-
-def resolve_pair_strategy(strategy: str, n_rows, max_hamming: int) -> str:
-    """Resolve ``"auto"`` to a concrete pair strategy so the 10^9+-safe
-    path doesn't depend on the caller reading a docstring: enumerate
-    beyond :data:`BANDED_CROSSOVER_ROWS` (when its ``max_hamming <= 3``
-    precondition holds), banded otherwise.  ``n_rows`` may be an exact
-    count or any approximation of the right magnitude."""
-    if strategy in ("banded", "enumerate"):
-        return strategy
-    if strategy != "auto":
-        raise ValueError(f"unknown strategy {strategy!r}; expected "
-                         '"banded", "enumerate" or "auto"')
-    if max_hamming > 3:
-        return "banded"              # enumerate can't cover the ball
-    return ("enumerate" if n_rows is not None
-            and n_rows > BANDED_CROSSOVER_ROWS else "banded")
-
-
 def phash_near_duplicates(df: DataFrame, id_col: str = "image_id",
                           phash_col: str = "phash",
                           max_hamming: int = 3,
-                          band_bits: int = 16,
-                          chunk_size: int = 8192,
-                          strategy: str = "banded",
-                          approx_n: int = None) -> DataFrame:
+                          chunk_size: int = 8192) -> DataFrame:
     """Near-duplicate IMAGE pairs by perceptual-hash hamming distance
     over the north-star table's ``phash:int64`` column (BASELINE.json
     input_hint; the reference analogue is a uniqueItems-style pairwise
@@ -708,38 +660,22 @@ def phash_near_duplicates(df: DataFrame, id_col: str = "image_id",
     equality to a hamming ball, the standard near-dup-image screen).
 
     No signature computation: the stored 64-bit phash IS the packed
-    code.  Two exact (full recall AND precision) strategies:
-
-    - ``"banded"`` (default): :func:`packed_hamming_pairs` — 4 bands x
-      16 bits (pigeonhole-complete at hamming <= 3), bounded bucket
-      joins, everything codegen'd.  Right up to ~10^8 rows; beyond
-      that the 65,536-bucket/band keyspace makes bucket-local work
-      grow ~n^2/65,536.
-    - ``"enumerate"``: :func:`enumerated_hamming_pairs` — Manku-style
-      single-bit-flip enumeration on exact 32-bit block keys (2^32
-      keyspace, no quadratic buckets at any realistic n) for a 33x
-      probe-key expansion.  The 10^9+-row strategy.
-
-    Both return identical pair sets (asserted in tests); pass
-    ``strategy="auto"`` to pick by row count (``approx_n`` when given,
-    else one narrow count over the (id, phash) scan) — enumerate past
-    :data:`BANDED_CROSSOVER_ROWS`, banded below.  Rows with
-    NULL phash never pair.  Output ``(id_a, id_b, hamming)``;
-    duplicate ids (same id on two rows) contribute their min-hamming
-    pair once."""
+    code, joined by :func:`enumerated_hamming_pairs` — Manku-style
+    single-bit-flip enumeration on exact 32-bit block keys, exact
+    (full recall AND precision) for ``max_hamming`` 0..3.  Not 16-bit
+    banding: stored phashes are not uniform (the north-star table's
+    are < 2^49, so the top band has 2 buckets of n/2 rows each) and
+    banding goes quadratic inside those buckets (at 200k rows it did
+    not finish in 10 min on 4 cores), while the 2^32 block keyspace
+    leaves only genuinely identical codes sharing a key, and those hot
+    keys are chunk-salted.  Rows with NULL phash never pair.
+    Output ``(id_a, id_b, hamming)``; duplicate ids (same id on two
+    rows) contribute their min-hamming pair once."""
     sigs = (df.filter(F.col(phash_col).isNotNull())
             .select(F.col(id_col).alias("_id"),
                     F.col(phash_col).cast("long").alias("_sh")))
-    if strategy == "auto" and approx_n is None:
-        approx_n = sigs.count()
-    strategy = resolve_pair_strategy(strategy, approx_n, max_hamming)
-    if strategy == "enumerate":
-        return enumerated_hamming_pairs(sigs, bits=64,
-                                        max_hamming=max_hamming,
-                                        chunk_size=chunk_size)
-    return packed_hamming_pairs(sigs, bits=64, max_hamming=max_hamming,
-                                band_bits=band_bits, chunk_size=chunk_size,
-                                require_full_recall=True)
+    return enumerated_hamming_pairs(sigs, bits=64, max_hamming=max_hamming,
+                                    chunk_size=chunk_size)
 
 
 # ------------------------------------------------------ ngram jaccard -----

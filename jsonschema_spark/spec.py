@@ -41,8 +41,7 @@ _X_SPARK_DRIFT_KEYS = frozenset(
 #: blocks where JSON null means "all defaults", with their known keys
 _X_SPARK_NULLABLE = {"pixel_invariant": frozenset({"min_psnr", "decode"}),
                      "phash_integrity": frozenset({"max_hamming"}),
-                     "near_dup_phash": frozenset({"max_hamming", "max_pairs",
-                                                  "strategy"})}
+                     "near_dup_phash": frozenset({"max_hamming", "max_pairs"})}
 #: image_quality threshold keys (operators/quality.py) — the block also
 #: admits w_col/h_col/bytes_col column-name overrides
 _X_SPARK_IMGQ_THRESHOLDS = frozenset(
@@ -301,11 +300,7 @@ def _check_x_spark(xs: Any, path: str) -> None:
             raise bad(f"/{block}", f"unknown key(s) {sorted(unknown)}; "
                                    f"known: {sorted(keys)}")
         for k, val in cfg.items():
-            if k == "strategy":
-                if val not in ("banded", "enumerate", "auto"):
-                    raise bad(f"/{block}/strategy",
-                              'must be "banded", "enumerate" or "auto"')
-            elif k == "decode":
+            if k == "decode":
                 if val not in ("stub", "real", "auto"):
                     raise bad(f"/{block}/decode",
                               'must be "stub", "real" or "auto"')
@@ -316,14 +311,13 @@ def _check_x_spark(xs: Any, path: str) -> None:
                 raise bad(f"/{block}/{k}", "must be an integer")
             elif k == "max_hamming" and block == "near_dup_phash" \
                     and not 0 <= val <= 3:
-                # both exact pair strategies cap at 3: enumerate's
-                # 2-block single-flip regime, and banded's pigeonhole
-                # (4 bands of 16 bits) — beyond that recall silently
-                # drops, so reject at compile time (dedup.py enforces
-                # the same bound with ValueError at the operator seam)
+                # the bit-flip enumeration's 2-block single-flip
+                # regime caps at 3 — reject at compile time (dedup.py
+                # enforces the same bound with ValueError at the
+                # operator seam)
                 raise bad(f"/{block}/max_hamming",
                           "must be 0..3 (the exact-recall regime of "
-                          "both pair strategies)")
+                          "the bit-flip enumeration)")
             elif k == "max_hamming" and block == "phash_integrity" \
                     and not 0 <= val <= 64:
                 raise bad(f"/{block}/max_hamming",

@@ -116,15 +116,14 @@ def scan_validate():
     return v_disk.counts(img_disk)
 
 # near-dup pair scaling runs on its own (smaller) row count: the
-# enumerate strategy's 33x probe-key fan-out makes 32M rows a
+# bit-flip enumeration's 33x probe-key fan-out makes 32M rows a
 # multi-minute job; %(pair_rows)d rows exercises the identical plan
 PAIR_ROWS = %(pair_rows)d
 img_pairs = images_df(spark, PAIR_ROWS, partitions=cores * 8)
 
 def phash_neardup():
     from jsonschema_spark.operators.dedup import phash_near_duplicates
-    return phash_near_duplicates(
-        img_pairs, "image_id", "phash", strategy="enumerate").count()
+    return phash_near_duplicates(img_pairs, "image_id", "phash").count()
 
 def _steal():
     # hypervisor steal (jiffies): a run with thousands is the

@@ -229,8 +229,7 @@ def test_check_schema_validates_x_spark_block():
                   "categorical": ["fmt"]},
         "pixel_invariant": {"min_psnr": 40.0},
         "phash_integrity": None,                  # null == all defaults
-        "near_dup_phash": {"max_hamming": 3, "max_pairs": 0,
-                           "strategy": "enumerate"},
+        "near_dup_phash": {"max_hamming": 3, "max_pairs": 0},
         "future_block": {"anything": True},       # unknown block tolerated
     }})
     bad_blocks = [
@@ -242,7 +241,7 @@ def test_check_schema_validates_x_spark_block():
         ({"drift": {"baseline": "b", "numeric": {"w": [0, 1]}}},
          "three numbers"),
         ({"pixel_invariant": {"min_pnsr": 40}}, "unknown key"),
-        ({"near_dup_phash": {"strategy": "bandid"}}, "banded"),
+        ({"near_dup_phash": {"strategy": "bandid"}}, "unknown key"),
         ({"phash_integrity": {"max_hamming": "0"}}, "integer"),
         ([], "must be an object"),
         # review-r4 guards: fractional/zero bins, lo >= hi, by without
@@ -255,7 +254,7 @@ def test_check_schema_validates_x_spark_block():
          "lo < hi"),
         ({"drift": {"baseline": "b", "by": "fmt"}}, "silent no-op"),
         # review-r5 guards: near_dup_phash.max_hamming beyond the
-        # exact-recall regime of BOTH pair strategies must fail at
+        # exact-recall regime of the bit-flip enumeration must fail at
         # compile time (not an AssertionError deep inside the job —
         # and not silently lost recall under python -O)
         ({"near_dup_phash": {"max_hamming": 4}}, "0..3"),

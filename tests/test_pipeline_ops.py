@@ -231,9 +231,8 @@ def test_chunked_bucket_pairs_bound_and_exactness(spark):
 
 def test_simhash_degenerate_bucket_chunked(spark):
     """A corpus of near-identical docs (all in the same band buckets)
-    gives identical pair sets whether chunked tightly or not, and leaves
-    no cached RDDs behind (the r3 signature cache is gone — ReuseExchange
-    shares the groupBy(_id) shuffle across the count/a/b subtrees)."""
+    gives identical pair sets whether chunked tightly or not, and the
+    tracked signature cache leaves no RDDs behind once released."""
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron pi rho sigma tau upsilon ")
     rows = [(i, base + f"suffix{i % 3}") for i in range(600)]
@@ -243,19 +242,15 @@ def test_simhash_degenerate_bucket_chunked(spark):
     persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     tight = {tuple(r) for r in
              simhash_duplicates(df, "doc_id", "text", max_hamming=6,
-                                chunk_size=25,
-                                cache_signatures=False).collect()}
-    # cache_signatures=False leaves NOTHING persisted at any point
-    # (<=: Spark's async ContextCleaner may reap OLDER tests' persisted
-    # RDDs mid-test, so exact equality is flaky — what this pins is
-    # that THIS call added none)
-    assert (spark.sparkContext._jsc.getPersistentRDDs().size()
-            <= persisted_before)
+                                chunk_size=25).collect()}
     loose = {tuple(r) for r in
              simhash_duplicates(df, "doc_id", "text", max_hamming=6,
                                 chunk_size=1 << 30).collect()}
     assert tight == loose and len(tight) > 100_000
-    # the default TRACKED signature cache is fully released by the hook
+    # the TRACKED signature caches are fully released by the hook
+    # (<=: Spark's async ContextCleaner may reap OLDER tests' persisted
+    # RDDs mid-test, so exact equality is flaky — what this pins is
+    # that THESE calls left none)
     assert clear_dedup_cache() >= 1
     assert (spark.sparkContext._jsc.getPersistentRDDs().size()
             <= persisted_before)
@@ -735,11 +730,13 @@ def test_phash_integrity_planted(spark):
 
 
 def test_phash_enumerate_strategy_equals_banded(spark):
-    """Manku-style bit-flip enumeration (the 10^9-row strategy) returns
-    the exact same pair set as 16-bit banding, including under a
-    planted degenerate cluster of identical phashes where the hot
-    identity key must be chunk-salted (tight chunk_size)."""
-    from jsonschema_spark.operators.dedup import phash_near_duplicates
+    """The phash near-dup path (bit-flip enumeration on 32-bit block
+    keys) returns exactly the pair set of full-recall 16-bit banding
+    over the same (image_id, phash) codes, including under a planted
+    degenerate cluster of identical phashes where the hot identity key
+    must be chunk-salted (tight chunk_size)."""
+    from jsonschema_spark.operators.dedup import (packed_hamming_pairs,
+                                                  phash_near_duplicates)
     img = images_df(spark, 2500)
     # degenerate cluster: 400 extra rows sharing ONE phash value
     cluster = spark.range(400).selectExpr(
@@ -748,14 +745,14 @@ def test_phash_enumerate_strategy_equals_banded(spark):
         "'png' AS fmt", "'c' AS caption", "CAST(123456789 AS LONG) AS phash")
     df = img.select("image_id", "bytes", "w", "h", "fmt", "caption",
                     "phash").unionByName(cluster)
-    banded = {(r.id_a, r.id_b, r.hamming)
-              for r in phash_near_duplicates(
-                  df, "image_id", "phash", strategy="banded").collect()}
-    enum_tight = {(r.id_a, r.id_b, r.hamming)
-                  for r in phash_near_duplicates(
-                      df, "image_id", "phash", strategy="enumerate",
-                      chunk_size=64).collect()}
-    assert banded == enum_tight
+    sigs = df.filter(F.col("phash").isNotNull()).select(
+        F.col("image_id").alias("_id"), F.col("phash").alias("_sh"))
+    banded = {tuple(r) for r in packed_hamming_pairs(
+        sigs, require_full_recall=True).collect()}
+    pairs = phash_near_duplicates(df, "image_id", "phash", chunk_size=64)
+    plan = pairs._jdf.queryExecution().logical().toString()
+    assert "_blk" in plan and "_band" not in plan
+    assert {tuple(r) for r in pairs.collect()} == banded
     # the cluster contributes C(400,2) hamming-0 pairs
     n_cluster = sum(1 for (a, b2, h) in banded
                     if a.startswith("clu_") and b2.startswith("clu_")
@@ -763,44 +760,12 @@ def test_phash_enumerate_strategy_equals_banded(spark):
     assert n_cluster == 400 * 399 // 2
 
 
-def test_pair_strategy_auto_switches_at_crossover(spark):
-    """strategy="auto" resolves by row count — banded below the
-    documented crossover, enumerate above it (so the 10^9+-safe path
-    doesn't depend on callers reading a docstring) — and both
-    resolutions return the same pair set."""
-    from jsonschema_spark.operators.dedup import (
-        BANDED_CROSSOVER_ROWS, phash_near_duplicates,
-        resolve_pair_strategy)
-    assert resolve_pair_strategy("auto", 10_000, 3) == "banded"
-    assert resolve_pair_strategy(
-        "auto", BANDED_CROSSOVER_ROWS + 1, 3) == "enumerate"
-    # enumerate can't cover hamming > 3: auto stays banded
-    assert resolve_pair_strategy(
-        "auto", BANDED_CROSSOVER_ROWS + 1, 4) == "banded"
-    assert resolve_pair_strategy("enumerate", None, 3) == "enumerate"
-
-    img = images_df(spark, 1200)
-    small = phash_near_duplicates(img, strategy="auto", approx_n=1200)
-    big = phash_near_duplicates(img, strategy="auto",
-                                approx_n=BANDED_CROSSOVER_ROWS * 2)
-    # the switch actually happened: banded plans carry _band keys,
-    # enumerated plans carry _blk block keys
-    assert "_band" in small._jdf.queryExecution().logical().toString()
-    assert "_blk" in big._jdf.queryExecution().logical().toString()
-    assert ({tuple(r) for r in small.collect()}
-            == {tuple(r) for r in big.collect()})
-    # no approx_n hint: auto counts the narrow (id, phash) scan itself
-    counted = phash_near_duplicates(img, strategy="auto")
-    assert "_band" in counted._jdf.queryExecution().logical().toString()
-
-
 def test_pair_strategy_errors_are_typed(spark):
     """Misconfigurations raise ValueError (pointed, -O-proof), never
     bare asserts that python -O would strip into silent recall loss."""
     import pytest
     from jsonschema_spark.operators.dedup import (
-        enumerated_hamming_pairs, packed_hamming_pairs,
-        phash_near_duplicates, simhash_duplicates)
+        enumerated_hamming_pairs, packed_hamming_pairs)
     sigs = spark.range(4).selectExpr("CAST(id AS STRING) AS _id",
                                      "xxhash64(id) AS _sh")
     with pytest.raises(ValueError, match="max_hamming"):
@@ -810,12 +775,6 @@ def test_pair_strategy_errors_are_typed(spark):
     with pytest.raises(ValueError, match="pigeonhole"):
         packed_hamming_pairs(sigs, max_hamming=4,
                              require_full_recall=True)
-    with pytest.raises(ValueError, match="unknown strategy"):
-        phash_near_duplicates(images_df(spark, 10), strategy="bogus")
-    with pytest.raises(ValueError, match="unknown strategy"):
-        simhash_duplicates(spark.createDataFrame(
-            [("a", "x y z")], "id string, text string"),
-            "id", "text", strategy="bogus")
 
 
 def test_enumerated_hamming_core_equals_banded_on_random_codes(spark):

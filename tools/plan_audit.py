@@ -29,7 +29,8 @@ def summarize(plan: str) -> dict:
                         [None, ""])[1][:90],
         "pushed": (re.search(r"PushedFilters: (\[[^\]]*\])", plan) or
                    [None, "[]"])[1][:90],
-        "exchanges": len(re.findall(r"Exchange ", plan)),
+        # shuffle exchanges only: BroadcastExchange is counted below
+        "exchanges": len(re.findall(r"(?<!\w)Exchange ", plan)),
         "broadcasts": len(re.findall(r"BroadcastExchange|BroadcastHashJoin"
                                      r"|BroadcastNestedLoop", plan)),
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
@@ -179,14 +180,15 @@ def main() -> None:
     from jsonschema_spark.operators.dedup import simhash_duplicates
     cases.append((
         "simhash_duplicates_chunked",
-        "chunk-salted (band, bucket) self-join: the per-bucket count "
+        "chunk-salted (band, bucket) self-join over the cached "
+        "(id, signature) frame (one InMemoryRelation feeds the "
+        "histogram and both join sides): the per-bucket count "
         "aggregate (<= 65,536 rows/band by construction) comes back as "
         "a BROADCAST; one join side is salted into ~chunk_size chunks, "
         "the other replicates per chunk — so no join group is ever "
         "quadratic in a degenerate bucket, and the only shuffled rows "
         "are 16-byte (id, signature) pairs, never documents",
-        simhash_duplicates(docs, "doc_id", "text",
-                           cache_signatures=False)))
+        simhash_duplicates(docs, "doc_id", "text")))
 
     # 13. caption-equality invariant: pure codegen narrow scan
     from jsonschema_spark.operators.multimodal import caption_check
@@ -200,15 +202,18 @@ def main() -> None:
         "`bytes` pruned",
         caption_check(img_id, reference_caption(F.col("id")))))
 
-    # 14. phash near-dup: narrow (id, phash) projection, bounded
-    # band-bucket join, hamming inside the join condition
+    # 14. phash near-dup: narrow (id, phash) projection, exact 32-bit
+    # block-key join, hamming inside the join condition
     from jsonschema_spark.operators.dedup import phash_near_duplicates
     cases.append((
         "phash_near_duplicates",
-        "banded 64-bit hamming over the STORED phash column: the scan "
+        "bit-flip enumeration over the STORED phash column: the scan "
         "projects only (image_id, phash) — `bytes`/caption pruned — "
-        "bands are codegen'd shift/mask extractions, the bucket "
-        "histogram broadcasts, and the final distance is "
+        "each code explodes into its 2 exact 32-bit block keys (`_blk`, "
+        "`_key`) on one join side and 2 x 33 identity/single-bit-flip "
+        "variants on the other, all codegen'd shift/mask/xor; only the "
+        "hot keys (count > chunk_size) are aggregated and broadcast to "
+        "chunk-salt both sides, and the final distance is "
         "bit_count(xor) evaluated INSIDE the join condition, so "
         "non-qualifying pairs never materialize rows",
         phash_near_duplicates(img, "image_id", "phash")))
@@ -423,9 +428,9 @@ def main() -> None:
         "exchange into a window count over the narrow (image_id, phash) "
         "scan, with no LeftSemi join back to the table; stats is one "
         "partial+final aggregate of only the null count and max its "
-        "rules read; the other exchange is the licence dim's "
-        "broadcast (no distinct: a left-anti join only tests "
-        "existence); the one python node is the stub decode",
+        "rules read; the licence dim is broadcast without a shuffle "
+        "(no distinct: a left-anti join only tests existence); the "
+        "one python node is the stub decode",
         validate_dataset(img, {**spec, "x-spark": xs}, ["image_id"],
                          tables={"licenses": licenses_df(spark)})))
 
