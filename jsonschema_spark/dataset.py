@@ -41,12 +41,13 @@ Physical notes: the row pass is one narrow scan; uniqueness is one
 window count (one key shuffle) per key over a narrow scan, with no join
 back; referential checks broadcast small dims; stats is one lazy
 aggregate of only what its rules read; drift compares pre-aggregated
-histograms; only the pixel checks are Python (Arrow-batched) and only
-they read ``bytes``.  The pixel checks decode each input at most once
-per tier: ``pixel_invariant`` on the stub tier (synthetic-header fast
-path) is one ``decode_images`` pass, and every real-codec block
-(``pixel_invariant`` on the real tier, ``phash_integrity``,
-``image_quality_decoded``) shares ONE ``decode_pixels`` pass.
+histograms; only the real-codec pixel checks are Python (Arrow-batched)
+and only the pixel checks read ``bytes``.  The pixel checks decode each
+input at most once per tier: ``pixel_invariant`` on the stub tier
+(synthetic-header fast path) is one ``decode_images`` projection of
+native Columns, and every real-codec block (``pixel_invariant`` on the
+real tier, ``phash_integrity``, ``image_quality_decoded``) shares ONE
+``decode_pixels`` pass.
 ``pixel_invariant``'s tier is an explicit option: ``"decode": "stub"``,
 ``"real"`` (the built-in BMP/PNG/JPEG/WebP codecs), or ``"auto"``
 (default), which resolves to "real" when ``phash_integrity`` is also
@@ -187,8 +188,8 @@ def validate_dataset(df: DataFrame, schema: dict,
             pix_tier = "real" if "phash_integrity" in xs else "stub"
     if pix_tier == "stub":
         from .operators.multimodal import decode_images
-        parts.append(pad(_violation_rows(decode_images(df, carry=("w", "h")),
-                                         [pix_struct], ["image_id"])))
+        parts.append(pad(_violation_rows(decode_images(df), [pix_struct],
+                                         keep)))
     real_psnr = pix_tier == "real"
     phash = "phash_integrity" in xs
     luma = "image_quality_decoded" in xs
@@ -208,9 +209,13 @@ def validate_dataset(df: DataFrame, schema: dict,
         if luma:
             from .operators.quality import luma_quality_structs
             structs += luma_quality_structs(xs["image_quality_decoded"])
+        # the decode already emits image_id and fmt
+        carry = [c for c in keep if c not in ("image_id", "fmt")]
+        if real_psnr:
+            carry += [c for c in ("w", "h") if c not in carry]
         dec = decode_pixels(df, psnr=real_psnr, phash=phash, luma=luma,
-                            carry=("w", "h") if real_psnr else ())
-        parts.append(pad(_violation_rows(dec, structs, ["image_id"])))
+                            carry=tuple(carry))
+        parts.append(pad(_violation_rows(dec, structs, keep)))
 
     if "near_dup_phash" in xs:
         # dataset-level assertion: at most max_pairs near-duplicate

@@ -1,16 +1,17 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Payloads are opaque ``binary`` columns with typed metadata, as mandated
-by the north-star input shape.  Images have two decode tiers, each ONE
-mapInPandas pass over capped Arrow batches, and both emit the same
-``(image_id, fmt, decode_ok, decoded_w, decoded_h)`` prefix:
+by the north-star input shape.  Images have two decode tiers, and both
+emit ``image_id, fmt, decode_ok, decoded_w, decoded_h``:
 
-- ``decode_images`` — the fast stub: parses the synthetic header
-  written by ``sources.images._payload`` (for the 8M-row benchmark
-  table whose payloads are compact placeholders).  Its "pixels" are
-  the deterministic byte body, so PSNR is exact (99) for intact
-  payloads and degrades for truncated ones;
-- ``decode_pixels`` — the REAL codec tier: ``decode_blob`` decodes
+- ``decode_images`` — the fast stub: one projection of native Columns
+  (no Python worker) that parses the synthetic header written by
+  ``sources.images._payload`` (for the 8M-row benchmark table whose
+  payloads are compact placeholders).  Its "pixels" are the
+  deterministic byte body, so PSNR is exact (99) for intact payloads
+  and degrades for truncated ones;
+- ``decode_pixels`` — the REAL codec tier, ONE mapInPandas pass over
+  capped Arrow batches: ``decode_blob`` decodes
   Windows BMP (struct+numpy), PNG (pure-python, zlib is stdlib),
   baseline JPEG (``functions/jpeg``) and WebP-lossless
   (``functions/webp``), with Pillow as the fallback when importable.
@@ -33,11 +34,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-DECODE_SCHEMA = ("image_id string, fmt string, decode_ok boolean, "
-                 "decoded_w int, decoded_h int, psnr double")
 
 
 def _codec_available() -> bool:
@@ -46,47 +44,6 @@ def _codec_available() -> bool:
         return True
     except ImportError:
         return False
-
-
-def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Parse the 16-byte synthetic header (magic|w hex|h hex|checksum)
-    and compute the stub PSNR: exact match of the expected deterministic
-    body -> inf (capped 99.0); truncation/corruption -> low."""
-    out = {"image_id": [], "fmt": [], "decode_ok": [], "decoded_w": [],
-           "decoded_h": [], "psnr": []}
-    for image_id, fmt, blob in zip(pdf["image_id"], pdf["fmt"],
-                                   pdf["bytes"]):
-        out["image_id"].append(image_id)
-        out["fmt"].append(fmt)
-        ok = blob is not None and len(blob) >= 16 and blob[:4] == b"IMG0"
-        out["decode_ok"].append(bool(ok))
-        if ok:
-            try:
-                w = int(blob[4:8], 16)
-                h = int(blob[8:12], 16)
-            except ValueError:
-                w = h = 0
-                out["decode_ok"][-1] = False
-            out["decoded_w"].append(w)
-            out["decoded_h"].append(h)
-            # stub decode: body bytes ARE the pixels; a full-length body
-            # has zero reconstruction error
-            body = np.frombuffer(blob[16:], dtype=np.uint8)
-            expected_len = min(240, (w * h) // 65536 + 16)
-            if len(body) >= expected_len:
-                out["psnr"].append(99.0)
-            else:
-                # missing samples count as max error (255)
-                mse = (255.0 ** 2) * (expected_len - len(body)) / max(
-                    expected_len, 1)
-                psnr = 99.0 if mse == 0 else min(
-                    99.0, 10 * np.log10(255.0 ** 2 / mse))
-                out["psnr"].append(float(psnr))
-        else:
-            out["decoded_w"].append(0)
-            out["decoded_h"].append(0)
-            out["psnr"].append(0.0)
-    return pd.DataFrame(out)
 
 
 def _carry_schema(df: DataFrame, schema: str, carry) -> str:
@@ -100,23 +57,42 @@ def _carry_schema(df: DataFrame, schema: str, carry) -> str:
         f", {c} {df.schema[c].dataType.simpleString()}" for c in carry)
 
 
-def decode_images(df: DataFrame, carry: tuple = ()) -> DataFrame:
-    """Stub decode over Arrow batches (mapInPandas).  Batch sizes are
-    bounded by spark.sql.execution.arrow.maxRecordsPerBatch so image
-    payload batches can't blow executor memory.  `carry` columns pass
-    through the decode untouched, so per-row invariants need NO join
-    back to the source (image_id is not guaranteed unique — a join on
-    it would both shuffle and cross-match duplicate ids)."""
+def decode_images(df: DataFrame) -> DataFrame:
+    """Stub decode: `df` plus ``(decode_ok, decoded_w, decoded_h, psnr)``
+    parsed from the 16-byte synthetic header (magic ``IMG0`` | w as 4
+    hex digits | h as 4 hex digits | checksum) of ``bytes``.  A plain
+    projection, so every column of `df` rides along and the per-row
+    invariant needs no join back (image_id is not guaranteed unique).
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _parse_batch(pdf)
-            for c in carry:
-                out[c] = list(pdf[c])
-            yield out
+    A NULL, short (< 16 bytes) or wrong-magic payload decodes as not OK
+    with dims 0 and psnr 0.0.  A header whose w or h field is not
+    exactly 4 hex digits is not OK with dims 0, and its psnr is still
+    scored as w = h = 0.  The stub's "pixels" are the body bytes: a
+    body of at least ``E = min(240, w*h // 65536 + 16)`` bytes is exact
+    (psnr 99.0); each missing byte counts as a max error (255), giving
+    ``min(99, 10*log10(255^2 / mse))`` with ``mse = 255^2 * missing /
+    E``."""
+    b = F.col("bytes")
 
-    return df.select("image_id", "fmt", "bytes", *carry).mapInPandas(
-        run, schema=_carry_schema(df, DECODE_SCHEMA, carry))
+    def ascii4(pos: int) -> Column:
+        return F.substring(b, pos, 4).cast("string")
+
+    n = F.octet_length(b)
+    header = F.coalesce((n >= 16) & (ascii4(1) == "IMG0"), F.lit(False))
+    ok = header & ascii4(5).rlike("^[0-9A-Fa-f]{4}$") \
+        & ascii4(9).rlike("^[0-9A-Fa-f]{4}$")
+    w, h = (F.when(ok, F.conv(ascii4(pos), 16, 10).cast("int"))
+            .otherwise(0) for pos in (5, 9))
+    expected = F.least(F.lit(240),
+                       F.shiftright(w.cast("long") * h, 16) + 16)
+    missing = expected - (n - 16)
+    # keep this operation order (mse = 255^2 * missing / E, then
+    # 10*log10(255^2 / mse)): reordering it changes psnr's last bits
+    psnr = (F.when(~header, 0.0).when(missing <= 0, 99.0)
+            .otherwise(F.least(F.lit(99.0), 10 * F.log10(
+                65025.0 / (65025.0 * missing / expected)))))
+    return df.withColumns({"decode_ok": ok, "decoded_w": w,
+                           "decoded_h": h, "psnr": psnr})
 
 
 # ------------------------------------------------- real BMP codec ---------
@@ -483,7 +459,9 @@ def decode_pixels(df: DataFrame, *, psnr: bool = False,
 
     Undecodable rows report ``decoded_w = decoded_h = 0``; callers gate
     on ``decode_ok``.  `carry` columns pass through the decode
-    untouched (see :func:`decode_images`).
+    untouched, so per-row invariants need no join back to the source
+    (image_id is not guaranteed unique — a join on it would both
+    shuffle and cross-match duplicate ids).
 
     The stored phash travels into Arrow as a STRING: pandas coerces an
     int64 column containing any NULL to float64, which silently loses

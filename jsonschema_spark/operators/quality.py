@@ -203,8 +203,9 @@ def luma_quality_structs(cfg: dict) -> list:
 def pixel_invariant_struct(min_psnr: float) -> Column:
     """The pixelInvariant violation struct over any frame carrying
     ``(decode_ok, psnr, decoded_w, decoded_h, w, h)`` — the output of
-    either decode tier (``multimodal.decode_images`` or
-    ``decode_pixels(psnr=True)``) with ``w, h`` carried through."""
+    either decode tier: ``multimodal.decode_images`` (a projection that
+    keeps every table column) or ``decode_pixels(psnr=True)`` with
+    ``w, h`` carried through."""
     pix_bad = ((~F.col("decode_ok"))
                | (F.col("psnr") < min_psnr)
                | (F.col("decoded_w") != F.col("w"))

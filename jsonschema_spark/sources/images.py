@@ -174,9 +174,13 @@ def images_df(spark: SparkSession, n_rows: int = 10_000,
 
 
 def licenses_df(spark: SparkSession) -> DataFrame:
-    """Small dim table for referential checks."""
-    rows = [(f"lic_{i}", f"License {i}") for i in range(8)]
-    return spark.createDataFrame(rows, "license_id string, name string")
+    """Small dim table for referential checks: ``lic_0`` .. ``lic_7``.
+    Built from Columns, not a local Python list, whose scan would start
+    a Python worker."""
+    i = F.col("id").cast("string")
+    return spark.range(8).select(
+        F.concat(F.lit("lic_"), i).alias("license_id"),
+        F.concat(F.lit("License "), i).alias("name"))
 
 
 #: the JSON-Schema constraint spec the north-star table is validated with —

@@ -2,12 +2,16 @@
 keywords + uniqueness + referential + stats + pixel invariant unified."""
 
 import itertools
+import re
 
 from pyspark.sql import functions as F
 
 from jsonschema_spark import CompiledValidator, validate_dataset
 from jsonschema_spark.sources.images import (IMAGES_SCHEMA, images_df,
                                              licenses_df)
+
+# BatchEvalPython/ArrowEvalPython, (FlatMap)...InPandas, ...InArrow
+PYTHON_NODE = re.compile(r"EvalPython|InPandas|InArrow")
 
 
 def test_validate_dataset_unifies_all_check_tiers(spark):
@@ -116,9 +120,9 @@ def test_pixel_block_combinations_decode_once_per_tier(spark):
     """Every non-empty combination of pixel_invariant (stub/real/auto),
     phash_integrity and image_quality_decoded gives the union of each
     block's rows run alone (auto pinned to the tier it resolves to),
-    and its plan decodes once per tier used: one pass when only one
-    tier is used, two for the stub pixel invariant beside a real-tier
-    block."""
+    and its plan decodes once per tier used: the stub tier is a native
+    projection (no Python node at all when it is the only tier), and
+    every real-tier block shares one MapInPandas pass."""
     from jsonschema_spark.sources.images import phash_images_df
     img = phash_images_df(spark, 300).cache()
     luma = {"min_luma": 127.5, "min_contrast": 2}
@@ -153,9 +157,45 @@ def test_pixel_block_combinations_decode_once_per_tier(spark):
                       + (alone["luma"] if lum else []))
         assert rows(xs) == want, xs
         plan = run(xs)._jdf.queryExecution().executedPlan().toString()
-        tiers = {tier, "real" if phash or lum else None} - {None}
-        assert plan.count("MapInPandas run(") == len(tiers), (xs, plan)
+        real = tier == "real" or phash or lum
+        assert plan.count("MapInPandas run(") == int(real), (xs, plan)
     img.unpersist()
+    # the fixture above is generated by a MapInPandas of its own; on a
+    # natively generated table the stub tier plans no Python node at all
+    plan = validate_dataset(
+        images_df(spark, 300),
+        {"type": "object", "x-spark": {"pixel_invariant": {"decode": "stub"}}},
+        ["image_id"])._jdf.queryExecution().executedPlan().toString()
+    assert not PYTHON_NODE.search(plan), plan
+
+
+def test_pixel_violations_keep_caller_id_cols(spark):
+    """The pixel, phash and luma rows carry the caller's id_cols on both
+    decode tiers, not only image_id."""
+    from jsonschema_spark.sources.images import phash_images_df
+
+    def ids(df, xs):
+        rows = validate_dataset(df, {"type": "object", "x-spark": xs},
+                                ["rid"]).collect()
+        assert rows and all(r["rid"] is not None for r in rows), xs
+        return sorted((r["rid"], r["keyword"]) for r in rows)
+
+    def with_rid(df):
+        return df.withColumn("rid", F.concat(F.lit("r:"), "image_id"))
+
+    stub = with_rid(images_df(spark, 2_000))
+    got = ids(stub, {"pixel_invariant": {"decode": "stub"}})
+    want = validate_dataset(
+        stub, {"type": "object",
+               "x-spark": {"pixel_invariant": {"decode": "stub"}}},
+        ["image_id"]).collect()
+    assert got == sorted(("r:" + r["image_id"], r["keyword"]) for r in want)
+    real = with_rid(phash_images_df(spark, 300))
+    got = ids(real, {"pixel_invariant": {"decode": "real"},
+                     "phash_integrity": {},
+                     "image_quality_decoded": {"min_luma": 127.5}})
+    assert {k for _, k in got} >= {"pixelInvariant", "phashIntegrity",
+                                   "lumaQuality:brightness"}
 
 
 def test_validate_dataset_null_check_configs(spark):

@@ -110,6 +110,48 @@ def test_decode_images_and_psnr(spark):
     assert viol.first()["keyword"] == "pixelInvariant"
 
 
+def test_decode_images_stub_edge_cases(spark):
+    """Stub header edge cases.  The expected (decode_ok, decoded_w,
+    decoded_h, psnr) are the earlier per-row Python parser's outputs,
+    except for the four fields only its int(x, 16) accepted."""
+    body = b"x" * 16
+    cases = {
+        "null": (None, (False, 0, 0, 0.0)),
+        "empty": (b"", (False, 0, 0, 0.0)),
+        "b4": (b"IMG0", (False, 0, 0, 0.0)),
+        "b8_truncated": (b"IMG00010", (False, 0, 0, 0.0)),
+        "bad_magic": (b"IMG1001000100000" + body, (False, 0, 0, 0.0)),
+        # unparsable field: not OK, dims 0, psnr still scored as w=h=0
+        # (E = 16, 3 body bytes)
+        "non_hex": (b"IMG0zz1000100000xxx",
+                    (False, 0, 0, 0.9017663034908805)),
+        "lower_hex": (b"IMG000ff00ff0000" + body, (True, 255, 255, 99.0)),
+        "header_only": (b"IMG0001000100000", (True, 16, 16, 0.0)),
+        "full_body": (b"IMG0001000100000" + body, (True, 16, 16, 99.0)),
+        # E = min(240, 65535*65535 // 65536 + 16) = 240, 4 body bytes
+        "ffff_short": (b"IMG0FFFFFFFF0000xxxx",
+                       (True, 65535, 65535, 0.07299238741499424)),
+        # int(x, 16) accepted these; a field is now exactly 4 hex digits
+        "space": (b"IMG0 ff 00100000" + body, (False, 0, 0, 99.0)),
+        "0x": (b"IMG00x1000100000" + body, (False, 0, 0, 99.0)),
+        "plus": (b"IMG0+fff00100000" + body, (False, 0, 0, 99.0)),
+        "underscore": (b"IMG00_ff00100000" + body, (False, 0, 0, 99.0)),
+    }
+    df = spark.createDataFrame(
+        [(k, None if b is None else bytearray(b))
+         for k, (b, _) in cases.items()], "image_id string, bytes binary")
+    got = {r["image_id"]: (r["decode_ok"], r["decoded_w"], r["decoded_h"],
+                           r["psnr"])
+           for r in decode_images(df).collect()}
+    for k, (_, want) in cases.items():
+        if k == "ffff_short":
+            # Spark's log10 may differ from numpy's by an ulp
+            assert got[k][:3] == want[:3]
+            assert got[k][3] == pytest.approx(want[3], rel=1e-15)
+        else:
+            assert got[k] == want, k
+
+
 def test_ivf_topk_recall(spark):
     from jsonschema_spark.operators.similarity import (brute_force_topk,
                                                        ivf_topk)

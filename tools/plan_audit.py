@@ -136,15 +136,16 @@ def main() -> None:
         "exchange",
         simhash_packed_df(docs, "doc_id", "text")))
 
-    # 9. pixel invariant: joinless decode scan
+    # 9. pixel invariant: joinless native decode projection
     from jsonschema_spark import validate_dataset
     cases.append((
         "pixel_invariant",
         "decoded-pixel PSNR invariant, stub tier (validate_dataset with "
-        "only `pixel_invariant: {decode: stub}`): (w, h) ride through "
-        "the decode mapInPandas, so the whole check is ONE narrow "
-        "Python scan — zero exchanges (the former image_id join both "
-        "shuffled and cross-matched duplicate ids)",
+        "only `pixel_invariant: {decode: stub}`): the header parse is a "
+        "projection of native Columns beside (w, h) in the same row, so "
+        "the whole check is ONE narrow scan — zero exchanges, zero "
+        "python nodes (the former image_id join both shuffled and "
+        "cross-matched duplicate ids)",
         validate_dataset(
             img, {"type": "object",
                   "x-spark": {"pixel_invariant": {"decode": "stub"}}},
@@ -306,16 +307,19 @@ def main() -> None:
                                      F.lit("_v2")), "text")),
             doc_pairs, "doc_id", prefer=-F.length("text"))))
 
-    # 20. repetition signals: ZERO shuffle — per-doc n-gram histograms
-    # fold in-row (array_sort + aggregate HOF), never exploded
+    # 20. repetition signals: per-doc n-gram histograms in one
+    # mapInArrow pass, never exploded or shuffled
     from jsonschema_spark.operators.repetition import repetition_signals
     cases.append((
         "repetition_signals",
         "Gopher repetition block (top 2/3/4-gram + dup 5..10-gram char "
-        "fractions): the n-gram histogram per document is a sorted-run "
-        "fold inside one projection — ZERO exchanges, zero python "
-        "nodes, text column read once; the explode+groupBy "
-        "formulation this replaces would shuffle ~9x the corpus text",
+        "fractions): one narrow (doc_id, text) pass through a mapInArrow "
+        "kernel (the one python node) returns each document's integer "
+        "n-gram masses, then a codegen'd projection divides; the one "
+        "exchange is the small-input parallelism floor "
+        "(ensure_parallelism repartitions an input with fewer partitions "
+        "than cores), so no shuffle carries n-grams — the explode+groupBy "
+        "formulation would shuffle ~9x the corpus text",
         repetition_signals(docs, "doc_id", "text",
                            top_ns=(2, 3, 4), dup_ns=(5, 10))))
 
@@ -430,7 +434,7 @@ def main() -> None:
         "partial+final aggregate of only the null count and max its "
         "rules read; the licence dim is broadcast without a shuffle "
         "(no distinct: a left-anti join only tests existence); the "
-        "one python node is the stub decode",
+        "stub decode is a native projection, so no python node",
         validate_dataset(img, {**spec, "x-spark": xs}, ["image_id"],
                          tables={"licenses": licenses_df(spark)})))
 
