@@ -618,18 +618,20 @@ def q_quantiles_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_drift_ks_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS + L1 drift between o_totalprice distributions of O-status vs
-    F-status orders (current vs baseline histogram compare)."""
-    from jsonschema_spark.operators.drift import drift_statistics, histogram
+    F-status orders (current vs baseline histogram compare), scored in
+    one partition by the library's drift scorer."""
+    from jsonschema_spark.operators.drift import histogram, score_histograms
     o = _t(spark, sf_dir, "orders")
     cur = histogram(o.filter(F.col("o_orderstatus") == "O"),
                     "o_totalprice", 0.0, 500000.0, 20)
     base = histogram(o.filter(F.col("o_orderstatus") == "F"),
                      "o_totalprice", 0.0, 500000.0, 20)
-    s = drift_statistics(cur, base)
-    return spark.createDataFrame(
-        [(round(s["ks"], 6), round(s["l1"], 6),
-          s["n_current"], s["n_baseline"])],
-        "ks double, l1 double, n_current bigint, n_baseline bigint")
+    s = score_histograms(cur.select(F.lit(0).alias("part"), "bucket",
+                                    F.col("n").alias("n_cur")), 20, base)
+    return (s.crossJoin(base.agg(F.sum("n").alias("n_baseline")))
+            .select(F.round("ks", 6).alias("ks"),
+                    F.round("l1", 6).alias("l1"),
+                    F.col("n_rows").alias("n_current"), "n_baseline"))
 
 
 def q_drift_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,8 +40,10 @@ violation-rows DataFrame (same schema as ``CompiledValidator.violations``)
 Physical notes: the row pass is one narrow scan; uniqueness is one
 window count (one key shuffle) per key over a narrow scan, with no join
 back; referential checks broadcast small dims; stats is one lazy
-aggregate of only what its rules read; drift compares pre-aggregated
-histograms; only the real-codec pixel checks are Python (Arrow-batched)
+aggregate of only what its rules read; drift scores each profiled
+column's histogram with one lazy scorer, in the table scope as one
+constant partition and with ``by`` per partition; only the real-codec
+pixel checks are Python (Arrow-batched)
 and only the pixel checks read ``bytes``.  The pixel checks decode each
 input at most once per tier: ``pixel_invariant`` on the stub tier
 (synthetic-header fast path) is one ``decode_images`` projection of
@@ -120,60 +122,22 @@ def validate_dataset(df: DataFrame, schema: dict,
         parts.append(pad(stats_violations(df, xs["stats"])))
 
     if "drift" in xs:
+        # table scope or, with "by", per partition (north_star:
+        # "distribution-drift checks comparing per-partition
+        # histograms/KS statistics against a baseline snapshot"): one
+        # lazy scorer either way, one violation row per tripped
+        # (partition, column, statistic)
+        from .operators.drift import check_against_baseline
         d = xs["drift"]
-        numeric = {c: tuple(v) for c, v in (d.get("numeric") or {}).items()}
-        # `is None`, not dict-default: a present-but-JSON-null key also
-        # means "use the default" (0.0 is a legitimate max_ks)
-        max_ks = 0.1 if d.get("max_ks") is None else d["max_ks"]
-        max_l1 = d.get("max_l1")
-        by = d.get("by")
-        if by:
-            # per-partition mode (north_star: "distribution-drift checks
-            # comparing per-partition histograms/KS statistics against a
-            # baseline snapshot"): one distributed partitioned_drift pass
-            # per numeric column, each tripped partition its own row
-            from .operators.drift import load_baseline, partitioned_drift
-
-            def _drow(kw, col, stat_col, threshold, label):
-                return _vrow(
-                    kw, f"$.{col}", f"x-spark/drift/{col}/{stat_col}",
-                    F.concat(F.lit(f"partition {by}="),
-                             F.col("part").cast("string"),
-                             F.lit(f": {label} "),
-                             # %.4f, not round().cast: fixed-width
-                             # rendering a SQL oracle reproduces exactly
-                             F.format_string("%.4f", F.col(stat_col)),
-                             F.lit(f" exceeds {threshold}")),
-                    F.format_string("%.6f", F.col(stat_col)))
-
-            for col, (lo, hi, bins) in numeric.items():
-                base = load_baseline(df.sparkSession, d["baseline"], col)
-                if not base.limit(1).count():
-                    # empty baseline would make every CDF term NULL and
-                    # the check a silent pass — misconfiguration, not
-                    # drift; fail loudly (baseline tables are tiny)
-                    raise ValueError(
-                        f"baseline at {d['baseline']!r} has no histogram "
-                        f"for column {col!r} — was it saved with this "
-                        f"column in `numeric`?")
-                stats = partitioned_drift(df, by, col, lo, hi, bins, base)
-                structs = [F.when(F.col("ks") > max_ks,
-                                  _drow("drift:ks", col, "ks", max_ks,
-                                        "KS statistic"))]
-                if max_l1 is not None:
-                    structs.append(F.when(F.col("l1") > max_l1,
-                                          _drow("drift:l1", col, "l1",
-                                                max_l1, "L1 distance")))
-                parts.append(pad(_violation_rows(stats, structs)))
-        else:
-            from .operators.drift import check_against_baseline
-            viol = check_against_baseline(df, d["baseline"],
-                                          numeric=numeric,
-                                          categorical=(d.get("categorical")
-                                                       or ()),
-                                          max_ks=max_ks, max_l1=max_l1)
-            if viol is not None:
-                parts.append(pad(viol))
+        parts.append(pad(check_against_baseline(
+            df, d["baseline"],
+            numeric={c: tuple(b)
+                     for c, b in (d.get("numeric") or {}).items()},
+            categorical=d.get("categorical") or (),
+            # `is None`, not dict-default: a present-but-JSON-null key
+            # also means "use the default" (0.0 is a legitimate max_ks)
+            max_ks=0.1 if d.get("max_ks") is None else d["max_ks"],
+            max_l1=d.get("max_l1"), by=d.get("by"))))
 
     # pixel checks: one decode per tier (module docstring), and one
     # projection per decode emits every violation kind — a union of
@@ -331,117 +295,3 @@ def validate_dataset(df: DataFrame, schema: dict,
         out = out.unionByName(p)
     return out
 
-
-def full_check_counts(df: DataFrame, schema: dict,
-                      unique_keys: Sequence[str] = (),
-                      referential: Optional[Sequence[tuple]] = None,
-                      isin_max_keys: int = 10_000,
-                      image_quality: Optional[dict] = None,
-                      ) -> dict:
-    """Scan-fused dataset check: validation counts, per-key duplicate
-    groups, and referential orphan counts in **one keyed pass per unique
-    key** (plus zero extra passes for validation/referential).
-
-    The insight: a uniqueness check already pays one groupBy(key) pass
-    over every row, and that pass can CARRY the per-row work — the
-    is_valid predicate sum and the broadcast-dim membership test ride
-    along as aggregate expressions, so "validate + unique(image_id) +
-    unique(phash) + referential" costs 2 scans/shuffles instead of 4
-    jobs.  Small referential dims (<= `isin_max_keys` distinct keys)
-    are collected driver-side and compiled into codegen'd `isin`
-    membership sets — no join node at all; bigger dims become a
-    broadcast-hash-join membership flag riding the SAME fused pass (an
-    unbounded `isin` would blow up the expression tree where a
-    broadcast join would not).
-
-    `referential` is a sequence of (fk_col, dim_df, dim_key).
-    `image_quality` (an x-spark image_quality-style cfg dict) rides the
-    SAME fused pass: each quality band becomes one more
-    sum(predicate) aggregate expression — zero extra scans or jobs.
-    Returns {"rows", "invalid_rows", "dup_groups": {key: n},
-    "orphans": {fk_col: n}[, "quality": {keyword: n}]}.
-    """
-    from .validator import CompiledValidator
-
-    v = CompiledValidator({k: s for k, s in schema.items()
-                           if k != "x-spark"}, df)
-    valid = F.coalesce(v.valid_column, F.lit(True))
-    extra_aggs = [F.count(F.lit(1)).alias("_c"),
-                  F.sum((~valid).cast("long")).alias("_bad")]
-    quality_cols: dict[str, str] = {}
-    if image_quality:
-        from .operators.quality import image_quality_flags
-        for j, (kw, pred) in enumerate(
-                sorted(image_quality_flags(image_quality).items())):
-            col = f"_q{j}"
-            extra_aggs.append(
-                F.sum(F.coalesce(pred, F.lit(False)).cast("long"))
-                .alias(col))
-            quality_cols[kw] = col
-    orphan_cols: dict[str, str] = {}
-    fused_df = df  # first fused pass only; extra key passes stay on df
-    for i, (fk, dim_df, dim_key) in enumerate(referential or ()):
-        # limit(N+1) probe: one cheap job tells us whether the dim fits
-        # the isin tier without a full count.  NULL dim keys are
-        # dropped BEFORE the isin list is built: `x NOT IN (..., NULL)`
-        # is SQL-NULL for every non-member, which would silently zero
-        # the orphan count (the join tier is naturally immune — NULL
-        # never equi-joins)
-        probe = (dim_df.select(dim_key)
-                 .where(F.col(dim_key).isNotNull()).distinct()
-                 .limit(isin_max_keys + 1).collect())
-        if len(probe) <= isin_max_keys:
-            miss = F.col(fk).isNotNull() & ~F.col(fk).isin(
-                [r[0] for r in probe])
-        else:
-            flag = f"_dimhit{i}"
-            dim = (dim_df.select(F.col(dim_key).alias(fk))
-                   .distinct().withColumn(flag, F.lit(1)))
-            # join only the frame used by the FIRST fused pass —
-            # later duplicate-count passes need no referential work
-            # and run on the original df (ADVICE-r3)
-            fused_df = fused_df.join(F.broadcast(dim), fk, "left")
-            miss = F.col(fk).isNotNull() & F.col(flag).isNull()
-        extra_aggs.append(F.sum(miss.cast("long")).alias(f"_orph{i}"))
-        orphan_cols[fk] = f"_orph{i}"
-
-    out: dict = {"dup_groups": {}, "orphans": {}}
-    if quality_cols:
-        out["quality"] = {}
-    keys = list(unique_keys) or ["__nogroup__"]
-    first = True
-    for key in keys:
-        if key == "__nogroup__":
-            row = fused_df.agg(*extra_aggs).collect()[0]
-            out["rows"] = row["_c"]
-            out["invalid_rows"] = row["_bad"]
-            for fk, c in orphan_cols.items():
-                out["orphans"][fk] = row[c]
-            for kw, c in quality_cols.items():
-                out["quality"][kw] = row[c] or 0
-            break
-        if first:
-            g = fused_df.groupBy(key).agg(*extra_aggs)
-            agg = g.agg(
-                F.sum("_c").alias("rows"),
-                F.sum("_bad").alias("bad"),
-                # SQL UNIQUE: the NULL-key group is never a duplicate
-                F.sum(((F.col("_c") > 1) & F.col(key).isNotNull())
-                      .cast("long")).alias("dups"),
-                *[F.sum(c).alias(c) for c in orphan_cols.values()],
-                *[F.sum(c).alias(c) for c in quality_cols.values()],
-            ).collect()[0]
-            out["rows"] = agg["rows"]
-            out["invalid_rows"] = agg["bad"] or 0
-            out["dup_groups"][key] = agg["dups"] or 0
-            for fk, c in orphan_cols.items():
-                out["orphans"][fk] = agg[c] or 0
-            for kw, c in quality_cols.items():
-                out["quality"][kw] = agg[c] or 0
-            first = False
-        else:
-            n = (df.where(F.col(key).isNotNull()).groupBy(key)
-                 .agg(F.count(F.lit(1)).alias("_c"))
-                 .filter(F.col("_c") > 1).count())
-            out["dup_groups"][key] = n
-    return out

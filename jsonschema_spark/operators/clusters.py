@@ -29,6 +29,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .kernels import bounded_collect
+
 
 def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge list oriented (min, max), self-loops dropped,
@@ -74,10 +76,14 @@ def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _local_components(spark, rows, id_type) -> DataFrame:
-    """Driver-side union-find over a collected (bounded) edge list —
-    exact same labeling as the distributed fixpoint (component = min
-    member id), returned as a DataFrame."""
+def _local_components(spark, edges) -> DataFrame:
+    """Driver-side union-find over a collected (bounded) Arrow edge
+    table — exact same labeling as the distributed fixpoint (component
+    = min member id), returned as an Arrow-backed DataFrame (a
+    LocalTableScan: no Python worker decodes it) of the edges' id
+    type."""
+    import pyarrow as pa
+
     parent: dict = {}
 
     def find(x):
@@ -87,17 +93,20 @@ def _local_components(spark, rows, id_type) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        ra, rb = find(r[0]), find(r[1])
+    for a, b in zip(edges.column("src").to_pylist(),
+                    edges.column("dst").to_pylist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     mins: dict = {}
     roots = {x: find(x) for x in parent}
     for x, r in roots.items():
         mins[r] = min(mins.get(r, x), x)
-    out = [(x, mins[r]) for x, r in roots.items()]
-    return spark.createDataFrame(out,
-                                 f"id {id_type}, component {id_type}")
+    t = edges.schema.field("src").type
+    comps = [mins[r] for r in roots.values()]
+    return spark.createDataFrame(pa.table(
+        [pa.array(list(roots), t), pa.array(comps, t)],
+        names=["id", "component"]))
 
 
 def connected_components(edges: DataFrame, src: str = "src",
@@ -127,15 +136,17 @@ def connected_components(edges: DataFrame, src: str = "src",
     graphs; raise for more); hitting it raises rather than returning a
     silently-unconverged labeling.
 
-    **Small-graph fast path**: when the distinct edge count (known from
-    the convergence signature's first pass — no extra job) is at most
-    ``small_graph_threshold``, the edges are collected and labeled with
-    a driver-side union-find — identical output, one job instead of ~4
-    per round.  Near-dup pair streams are usually tiny relative to the
-    corpus (the pairs, not the documents, form the graph), so this is
-    the common case even at 10^12 rows scanned; the default 2M edges is
-    ~32 MB on the driver.  Pass ``small_graph_threshold=0`` to force
-    the distributed path.
+    **Small-graph fast path**: when the distinct edges fit
+    ``small_graph_threshold`` rows, one ``kernels.bounded_collect`` job
+    brings them to the driver as an Arrow table and a driver-side
+    union-find labels them — identical output, one job instead of ~4
+    per round (an empty graph is the empty table).  Near-dup pair
+    streams are usually tiny relative to the corpus (the pairs, not
+    the documents, form the graph), so this is the common case even at
+    10^12 rows scanned; the default 2M edges is ~32 MB on the driver.
+    Over the cap the probe's rows are dropped and the distributed path
+    runs.  Pass ``small_graph_threshold=0`` to force the distributed
+    path.
     """
     # Materialize the canonical edges before iterating: the input is
     # often the tail of an expensive pair pipeline (LSH joins, posting
@@ -144,15 +155,10 @@ def connected_components(edges: DataFrame, src: str = "src",
     # recompute 2x per round.
     e = _truncate_lineage(_canonical(edges, src, dst),
                           reliable_checkpoint)
+    small = bounded_collect(e.select("src", "dst"), small_graph_threshold)
+    if small is not None:
+        return _local_components(e.sparkSession, small)
     sig = _signature(e)
-    if sig[0] == 0:
-        return e.select(F.col("src").alias("id"),
-                        F.col("dst").alias("component"))
-    if sig[0] <= small_graph_threshold:
-        id_type = e.schema["src"].dataType.simpleString()
-        return _local_components(e.sparkSession,
-                                 e.select("src", "dst").collect(),
-                                 id_type)
     for _ in range(max_iterations):
         # --- large-star ------------------------------------------------
         sym = e.union(e.select(F.col("dst").alias("src"),

@@ -1,15 +1,19 @@
-"""Distribution-drift checks: histograms + KS / L1 / chi-square vs a
-baseline snapshot.
+"""Distribution-drift checks: a column's histogram scored against a
+baseline snapshot with KS, L1 (total variation), chi-square and PSI.
 
-No direct reference analogue (closest is enum-membership frequency,
-/root/reference/jsonschema/_keywords.py:269-271); mandated by
-BASELINE.json north_star.  Histograms are a single groupBy over a
-native bucket expression (partial+final agg — the only shuffle), and the
-statistic comparison runs on the tiny aggregated frames.
+Histograms are one groupBy over a native bucket expression.  Every
+score comes from one scorer, :func:`score_histograms`, whichever scope
+asks: the table scope (one constant partition), per-partition drift
+(``by``) and the streaming windows of
+:func:`..streaming.validate.drift_stream`.  Numeric buckets are compared
+as ``long`` over the dense ``0..bins-1`` grid; categorical buckets over
+the union of both sides' buckets, NULL matching NULL.  Scores and
+violation rows are lazy DataFrames: nothing is collected to the driver.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -38,36 +42,6 @@ def categorical_histogram(df: DataFrame, col: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n")))
 
 
-def drift_statistics(current: DataFrame, baseline: DataFrame) -> dict:
-    """KS (max |CDF diff|), L1/total-variation, and chi-square over two
-    (bucket, n) histograms.  Joins two already-aggregated tiny frames —
-    driver cost only."""
-    cur = current.withColumnRenamed("n", "n_cur")
-    base = baseline.withColumnRenamed("n", "n_base")
-    joined = (cur.join(base, "bucket", "full_outer")
-              .fillna(0, ["n_cur", "n_base"])
-              .orderBy("bucket"))
-    rows = joined.collect()
-    tot_c = sum(r["n_cur"] for r in rows) or 1
-    tot_b = sum(r["n_base"] for r in rows) or 1
-    ks = 0.0
-    l1 = 0.0
-    chi2 = 0.0
-    cum_c = cum_b = 0
-    for r in rows:
-        pc = r["n_cur"] / tot_c
-        pb = r["n_base"] / tot_b
-        cum_c += r["n_cur"]
-        cum_b += r["n_base"]
-        ks = max(ks, abs(cum_c / tot_c - cum_b / tot_b))
-        l1 += abs(pc - pb)
-        expected = pb * tot_c
-        if expected > 0:
-            chi2 += (r["n_cur"] - expected) ** 2 / expected
-    return {"ks": ks, "l1": l1 / 2.0, "chi2": chi2,
-            "n_current": tot_c, "n_baseline": tot_b}
-
-
 def save_baseline(df: DataFrame, path: str,
                   numeric: dict[str, tuple[float, float, int]] = {},
                   categorical: Sequence[str] = ()) -> None:
@@ -84,10 +58,8 @@ def save_baseline(df: DataFrame, path: str,
         parts.append(categorical_histogram(df, col)
                      .withColumn("column", F.lit(col))
                      .withColumn("bucket", F.col("bucket").cast("string")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(path)
+    reduce(DataFrame.unionByName, parts).write.mode("overwrite").parquet(
+        path)
 
 
 def load_baseline(spark, path: str, col: str) -> DataFrame:
@@ -101,46 +73,52 @@ def check_against_baseline(df: DataFrame, baseline_path: str,
                            numeric: dict[str, tuple[float, float, int]] = {},
                            categorical: Sequence[str] = (),
                            max_ks: float = 0.1,
-                           max_l1: Optional[float] = None) -> DataFrame:
-    """Drift violations of `df` vs a saved snapshot, per profiled
-    column — the north-star 'distribution-drift vs baseline snapshot'
-    check end-to-end."""
+                           max_l1: Optional[float] = None,
+                           by: Optional[str] = None) -> DataFrame:
+    """Drift violation rows of `df` against a saved snapshot: a
+    ``drift:ks`` row (and a ``drift:l1`` row when `max_l1` is set) for
+    each profiled column whose statistic exceeds its threshold — in the
+    table scope, or per partition of the column `by`, whose rows name
+    the partition.  The `x-spark` ``drift`` block of ``validate_dataset``
+    runs exactly this.
+
+    The one eager step is a one-row probe per column: a snapshot with
+    no histogram for a profiled column raises ``ValueError`` (against
+    an empty baseline every column would score KS 1.0: a
+    misconfiguration reported as drift)."""
+    from ..validator import _violation_rows, _vrow
+
+    prefix = ([F.lit(f"partition {by}="), F.col("part").cast("string"),
+               F.lit(": ")] if by else [])
+
+    def flag(col, stat, threshold, label):
+        val = F.col(stat)
+        return F.when(val > threshold, _vrow(
+            f"drift:{stat}", f"$.{col}", f"x-spark/drift/{col}/{stat}",
+            # %.4f, not round().cast: fixed-width rendering a SQL
+            # oracle reproduces exactly
+            F.concat(*prefix, F.lit(f"{label} "),
+                     F.format_string("%.4f", val),
+                     F.lit(f" exceeds {threshold}")),
+            F.format_string("%.6f", val)))
+
     spark = df.sparkSession
-    out = None
-    for col, (lo, hi, bins) in numeric.items():
-        cur = (histogram(df, col, lo, hi, bins)
-               .withColumn("bucket", F.col("bucket").cast("string")))
-        v = drift_violations(cur, load_baseline(spark, baseline_path, col),
-                             col, max_ks, max_l1)
-        out = v if out is None else out.unionByName(v)
-    for col in categorical:
-        cur = (categorical_histogram(df, col)
-               .withColumn("bucket", F.col("bucket").cast("string")))
-        v = drift_violations(cur, load_baseline(spark, baseline_path, col),
-                             col, max_ks, max_l1)
-        out = v if out is None else out.unionByName(v)
-    return out
-
-
-def drift_violations(current: DataFrame, baseline: DataFrame, col: str,
-                     max_ks: float = 0.1,
-                     max_l1: Optional[float] = None) -> DataFrame:
-    """Violation rows (keyword 'drift:<stat>') when the drift statistic
-    between two histograms of `col` exceeds its threshold."""
-    stats = drift_statistics(current, baseline)
-    rows = []
-    if stats["ks"] > max_ks:
-        rows.append(("drift:ks", f"$.{col}", f"x-spark/drift/{col}/ks",
-                     f"KS statistic {stats['ks']:.4f} exceeds {max_ks}",
-                     f"{stats['ks']:.6f}"))
-    if max_l1 is not None and stats["l1"] > max_l1:
-        rows.append(("drift:l1", f"$.{col}", f"x-spark/drift/{col}/l1",
-                     f"L1 distance {stats['l1']:.4f} exceeds {max_l1}",
-                     f"{stats['l1']:.6f}"))
-    spark = current.sparkSession
-    schema = ("keyword string, json_path string, schema_path string, "
-              "message string, failing_value string")
-    return spark.createDataFrame(rows, schema)
+    out = []
+    for col, bounds in [*numeric.items(), *((c, None) for c in categorical)]:
+        base = load_baseline(spark, baseline_path, col)
+        if not base.limit(1).count():
+            raise ValueError(
+                f"baseline at {baseline_path!r} has no histogram for "
+                f"column {col!r} — was it saved with this column in "
+                f"`numeric` or `categorical`?")
+        flags = [flag(col, "ks", max_ks, "KS statistic")]
+        if max_l1 is not None:
+            flags.append(flag(col, "l1", max_l1, "L1 distance"))
+        out.append(_violation_rows(_scores(df, col, bounds, base, by),
+                                   flags))
+    if not out:
+        return _violation_rows(spark.range(0), [])
+    return reduce(DataFrame.unionByName, out)
 
 
 def partitioned_drift(df: DataFrame, part_col: str, col: str,
@@ -153,64 +131,102 @@ def partitioned_drift(df: DataFrame, part_col: str, col: str,
     per-partition loop, so 100k partitions cost one shuffle + one
     window, not 100k jobs.
 
-    Plan: one groupBy(part, bucket) count (the only wide shuffle over
-    the data) -> dense (part x bucket) grid from a codegen'd sequence
-    explode -> broadcast-joined baseline counts -> within-partition
-    cumulative sums (window over bucket) -> per-partition aggregates:
+    One groupBy(part, bucket) count (the only wide shuffle over the
+    data) feeds :func:`score_histograms`.  `baseline` is a (bucket, n)
+    histogram built with the SAME `bucket_expr` bounds (e.g.
+    `histogram(...)` of the snapshot).  Rows of `df` with NULL
+    `part_col`/`col` are excluded.  Every expression is native, so a
+    SQL engine can reproduce the numbers bit-for-bit — see the
+    `drift_partitioned` driver oracle."""
+    return _scores(df, col, (lo, hi, bins), baseline, part_col)
+
+
+def _scores(df: DataFrame, col: str, bounds: Optional[tuple],
+            baseline: DataFrame, by: Optional[str]) -> DataFrame:
+    """:func:`score_histograms` of `col` against `baseline`, per
+    partition of `by`, or in the table scope (`by` None) for the one
+    partition NULL, which is scored even when `df` has no value to
+    count.  `bounds` (lo, hi, bins) bucket a numeric column, whose
+    NULLs are skipped; None makes `col` categorical, NULL a bucket."""
+    rows = df if bounds is None else df.filter(F.col(col).isNotNull())
+    if by:
+        rows = rows.filter(F.col(by).isNotNull())
+        part, parts = F.col(by), None
+    else:
+        part = F.lit(None).cast("string")
+        parts = df.sparkSession.range(1).select(part.alias("part"))
+    bucket = (F.col(col) if bounds is None else bucket_expr(col, *bounds))
+    cur = (rows.groupBy(part.alias("part"), bucket.alias("bucket"))
+           .agg(F.count(F.lit(1)).alias("n_cur")))
+    return score_histograms(cur, None if bounds is None else bounds[2],
+                            baseline, parts)
+
+
+def score_histograms(cur: DataFrame, bins: Optional[int],
+                     baseline: DataFrame,
+                     parts: Optional[DataFrame] = None) -> DataFrame:
+    """Score per-partition histograms ``(part, bucket, n_cur)`` against
+    one baseline ``(bucket, n)`` histogram: ``(part, n_rows, ks, l1,
+    chi2, psi)``, one row per partition of `parts` (default: the
+    partitions present in `cur`).
+
+    With `bins`, buckets are numeric and compared as ``long`` over the
+    dense ``0..bins-1`` grid; with ``bins=None`` they are categorical,
+    compared as strings over the union of baseline and current
+    buckets, NULL matching NULL.  Each partition's grid is scored in
+    bucket order (NULL first), with within-partition window sums:
 
     - ks:   max |CDF_cur - CDF_base|
     - l1:   total-variation distance, sum|p_cur - p_base| / 2
     - chi2: sum (n_cur - E)^2 / E over buckets with baseline mass
     - psi:  population stability index with add-one (Laplace)
             smoothing on both sides so empty buckets stay finite:
-            sum (pc' - pb') * ln(pc'/pb'), p' = (n+1)/(tot+bins)
+            sum (pc' - pb') * ln(pc'/pb'), p' = (n+1)/(tot+G), G the
+            grid size
 
-    `baseline` is a (bucket, n) histogram built with the SAME
-    `bucket_expr` bounds (e.g. `histogram(...)` of the snapshot).
-    Rows of `df` with NULL `part_col`/`col` are excluded, matching the
-    table-scope `drift_statistics`.  Every expression is native (the
-    windows are tiny: `bins` rows per partition), so a SQL engine can
-    reproduce the numbers bit-for-bit — see the `drift_partitioned`
-    driver oracle."""
-    cur = (df.filter(F.col(col).isNotNull() & F.col(part_col).isNotNull())
-           .groupBy(F.col(part_col).alias("part"),
-                    bucket_expr(col, lo, hi, bins).alias("bucket"))
-           .agg(F.count(F.lit(1)).alias("n_cur")))
-    return score_histograms(cur, bins, baseline)
-
-
-def score_histograms(cur: DataFrame, bins: int,
-                     baseline: DataFrame) -> DataFrame:
-    """Score pre-aggregated per-partition histograms ``(part, bucket,
-    n_cur)`` against one baseline ``(bucket, n)`` histogram — the
-    shared scoring core of :func:`partitioned_drift` and the streaming
-    windowed-drift path (where the histogram aggregation already
-    happened under a watermark and each finalized window is a
-    partition)."""
+    A side without rows divides by 1, not 0: an empty current
+    histogram scores KS 1.0 against any baseline."""
     from pyspark.sql import Window
 
-    parts = cur.select("part").distinct()
-    grid = parts.select(
-        "part", F.explode(F.sequence(F.lit(0), F.lit(bins - 1)))
-        .alias("bucket"))
-    base = baseline.select(F.col("bucket").cast("long").alias("bucket"),
+    if parts is None:
+        parts = cur.select("part").distinct()
+    if bins is None:
+        kind = "string"
+        buckets = (baseline.select(F.col("bucket").cast(kind).alias("bucket"))
+                   .union(cur.select(F.col("bucket").cast(kind)))
+                   .distinct())
+        grid = parts.crossJoin(buckets)
+    else:
+        kind = "long"
+        grid = parts.select("part", F.explode(F.sequence(
+            F.lit(0).cast(kind), F.lit(bins - 1).cast(kind)))
+            .alias("bucket"))
+    base = baseline.select(F.col("bucket").cast(kind).alias("_bb"),
                            F.col("n").cast("long").alias("n_base"))
-    j = (grid.join(F.broadcast(base), "bucket", "left")
-         .join(cur, ["part", "bucket"], "left")
-         .fillna(0, ["n_cur", "n_base"]))
+    hist = cur.select(F.col("part").alias("_cp"),
+                      F.col("bucket").cast(kind).alias("_cb"), "n_cur")
+    j = (grid.join(F.broadcast(base),
+                   F.col("bucket").eqNullSafe(F.col("_bb")), "left")
+         .join(hist, F.col("part").eqNullSafe(F.col("_cp"))
+               & F.col("bucket").eqNullSafe(F.col("_cb")), "left")
+         .select("part", "bucket",
+                 F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
+                 F.coalesce("n_base", F.lit(0)).alias("n_base")))
     by_part = Window.partitionBy("part")
-    cum = (Window.partitionBy("part").orderBy("bucket")
-           .rowsBetween(Window.unboundedPreceding, 0))
+    cum = by_part.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     tot_c = F.sum("n_cur").over(by_part)
     tot_b = F.sum("n_base").over(by_part)
-    pc, pb = F.col("n_cur") / tot_c, F.col("n_base") / tot_b
-    pcs = (F.col("n_cur") + 1) / (tot_c + bins)
-    pbs = (F.col("n_base") + 1) / (tot_b + bins)
-    expected = pb * tot_c
+    size = F.count(F.lit(1)).over(by_part)
+    den_c = F.greatest(tot_c, F.lit(1))
+    den_b = F.greatest(tot_b, F.lit(1))
+    pc, pb = F.col("n_cur") / den_c, F.col("n_base") / den_b
+    pcs = (F.col("n_cur") + 1) / (tot_c + size)
+    pbs = (F.col("n_base") + 1) / (tot_b + size)
+    expected = pb * den_c
     scored = j.select(
-        "part", "n_cur", "n_base",
-        (F.abs(F.sum("n_cur").over(cum) / tot_c
-               - F.sum("n_base").over(cum) / tot_b)).alias("_ks_term"),
+        "part", "n_cur",
+        (F.abs(F.sum("n_cur").over(cum) / den_c
+               - F.sum("n_base").over(cum) / den_b)).alias("_ks_term"),
         F.abs(pc - pb).alias("_l1_term"),
         F.when(expected > 0,
                F.pow(F.col("n_cur") - expected, F.lit(2.0)) / expected)

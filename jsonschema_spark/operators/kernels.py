@@ -10,6 +10,8 @@ gate between them is :func:`bounded_collect`: the kernel runs when the
 capped Arrow collect returns a table, the distributed path when it
 returns ``None``.  No row count, caller hint or unbounded collect
 decides it, so the driver never holds more than ``cap + 1`` rows.
+``clusters.connected_components`` gates its driver-side union-find
+the same way.
 
 The module also owns what the kernels would otherwise copy: the typed
 empty result, the task launch, the worker-side memo, and the registry

@@ -73,17 +73,6 @@ def image_quality_violations(df: DataFrame, cfg: dict,
     return _violation_rows(df, structs, id_cols)
 
 
-def image_quality_flags(cfg: dict) -> dict:
-    """The same quality bands as boolean predicate Columns, keyed by
-    violation keyword — for riding OTHER passes as aggregate
-    expressions (``full_check_counts`` sums them inside its fused
-    groupBy scan, so "validate + unique + referential + quality" still
-    costs the same two scans).  Equality with
-    :func:`image_quality_violations`'s per-keyword row counts is
-    pinned in tests."""
-    return {kw: pred for kw, pred, *_ in _quality_bands(cfg)}
-
-
 def _quality_bands(cfg: dict) -> list:
     """[(keyword, gated_bad_predicate, json_path, schema_path,
     message_col, failing_col)] for the configured metadata bands."""
@@ -91,9 +80,9 @@ def _quality_bands(cfg: dict) -> list:
     h = F.col(cfg.get("h_col", "h")).cast("double")
     blen = F.length(F.col(cfg.get("bytes_col", "bytes"))).cast("double")
     geom_ok = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
-    # try_divide: the bands gate on geom_ok, but an aggregate's common
-    # subexpressions are evaluated before the gate, and under ANSI a
-    # plain division by h = 0 raises there
+    # try_divide: the bands gate on geom_ok, but subexpression
+    # elimination may evaluate a shared division before the gate, and
+    # under ANSI a plain division by h = 0 raises there
     aspect = F.try_divide(w, h)
     pixels = w * h
     bpp = F.try_divide(blen, pixels)

@@ -171,8 +171,13 @@ class ValidationRun:
         rows = [(r["part"], run_id, r["rows"], r["bad"] or 0,
                  r["nviol"] or 0, (r["bad"] or 0) == 0, t0, t1,
                  lineage_json) for r in stats]
-        # ...then the manifest rows commit the groups
-        mdf = self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
+        # ...then the manifest rows commit the groups.  An Arrow table,
+        # not a Python list: it plans a LocalTableScan, so the commit
+        # starts no Python worker
+        import pyarrow as pa
+        names = [f.split()[0] for f in MANIFEST_SCHEMA.split(",")]
+        mdf = self.spark.createDataFrame(
+            pa.table(list(zip(*rows)), names=names), MANIFEST_SCHEMA)
         if self.manifest_table is not None:
             from .sources.iceberg import merge_manifest
             merge_manifest(self.spark, self.manifest_table, mdf)

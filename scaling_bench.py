@@ -60,9 +60,9 @@ spark.sparkContext.setLogLevel("ERROR")
 if not os.path.exists(os.path.join(data, "_SUCCESS")):
     images_df(spark, rows, partitions=256, with_license=True) \
         .write.mode("overwrite").parquet(data)
-# stored table bucketed by image_id: the uniqueness/validation fused
-# pass aggregates ON the bucket column, so the biggest full_check_stored
-# shuffle disappears (bucket-local plan, proven in tests/test_bucketing)
+# stored table bucketed by image_id: full_check_stored's image_id
+# uniqueness window partitions ON the bucket column, so its shuffle
+# disappears (bucket-local plan, proven in tests/test_bucketing)
 from jsonschema_spark.sources.io import (register_bucketed_table,
                                          write_bucketed_table)
 BUCKETS = 128
@@ -84,6 +84,10 @@ img_disk = spark.read.parquet(data)
 v_gen = CompiledValidator(spec, img_gen)
 v_disk = CompiledValidator(spec, img_disk)
 lic = licenses_df(spark)
+stored_spec = dict(spec, **{"x-spark": {
+    "unique": ["image_id", "phash"],
+    "referential": [{"column": "license_id",
+                     "ref": {"table": "licenses", "key": "license_id"}}]}})
 spark.range(1_000_000).selectExpr("sum(id)").collect()   # warm-up
 
 def compute_validate():
@@ -102,15 +106,13 @@ def full_check():
         return f1.result(), f2.result(), f3.result(), f4.result()
 
 def full_check_stored():
-    # the stored-table shape: validation + referential sums RIDE the
-    # image_id uniqueness pass, which aggregates on the table's BUCKET
-    # column -> bucket-local, no exchange; phash uniqueness is the only
-    # remaining shuffle -> 2 pruned scans + 1 shuffle total
-    # (dataset.full_check_counts over the bucketed stored table)
-    from jsonschema_spark.dataset import full_check_counts
-    return full_check_counts(
-        img_bucketed, spec, unique_keys=["image_id", "phash"],
-        referential=[("license_id", lic, "license_id")])
+    # the stored-table shape: validate_dataset's row keywords, unique
+    # (image_id, phash) and referential blocks over the image_id-
+    # BUCKETED stored table, aggregated to per-keyword counts
+    from jsonschema_spark import validate_dataset
+    return validate_dataset(
+        img_bucketed, stored_spec, ["image_id"],
+        tables={"licenses": lic}).groupBy("keyword").count().collect()
 
 def scan_validate():
     return v_disk.counts(img_disk)
@@ -165,10 +167,10 @@ CAVEATS = {
     "compute_validate": "pure codegen, no I/O — the honest CPU proxy",
     "full_check": "adds 2 key shuffles + broadcast anti-join; "
                   "shuffle on tmpfs",
-    "full_check_stored": "scan-fused over the image_id-BUCKETED stored "
-                         "table: validate+referential ride a "
-                         "bucket-local (zero-exchange) uniqueness agg; "
-                         "2 pruned scans + 1 shuffle (phash) total",
+    "full_check_stored": "validate_dataset (row keywords + unique "
+                         "image_id/phash + referential) over the "
+                         "image_id-BUCKETED stored table, counted per "
+                         "keyword",
     "scan_validate": "parquet scan; sandbox page cache capped ~6GB -> "
                      "bound by ONE shared virtual disk (no cluster "
                      "analogue: executor scan bandwidth scales with N)",
@@ -295,17 +297,14 @@ def main() -> None:
         "",
         "### full_check_stored vs the DRAM bound",
         "",
-        "The bucketed stored table removed the image_id exchange "
-        "entirely (r2 shape: 2 shuffles; now 1, phash only) and "
-        "roughly doubled absolute throughput at both levels, but its "
-        "N->4N efficiency is still capped well below the CPU bound: "
-        "even a bucket-LOCAL groupBy of ~n distinct keys is a giant "
-        "random-access hash aggregation, i.e. exactly the "
-        "memory-subsystem kernel measured above.  The job's efficiency "
-        "exceeding that kernel's measured ceiling (by >2x this run) "
-        "means the remaining gap is the VM's DRAM saturation, which a "
-        "real 4N-executor cluster does not share — executors bring "
-        "their own memory channels.",
+        "The bucketed stored table removes the image_id exchange: the "
+        "image_id uniqueness window partitions on the bucket column, so "
+        "the data shuffles only for the phash window (plus the small "
+        "per-keyword count).  Its N->4N efficiency is still bound by "
+        "random-access window and hash work over ~n distinct keys, "
+        "i.e. exactly the memory-subsystem kernel measured above, "
+        "which a real 4N-executor cluster does not share — executors "
+        "bring their own memory channels.",
     ]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     out_path = os.path.join(REPO, "BENCH", "BASELINE.md")

@@ -107,6 +107,22 @@ def test_cc_empty(spark):
     assert connected_components(df).count() == 0
 
 
+def test_cc_small_graph_result_is_a_local_scan(spark):
+    """The union-find path (an empty graph included) returns an
+    Arrow-backed local frame of the edges' id type: a LocalTableScan,
+    not a Python RDD."""
+    for ddl, edges, want in (
+            ("src long, dst long", [(1, 2), (3, 2)], {1: 1, 2: 1, 3: 1}),
+            ("src string, dst string", [], {})):
+        df = spark.createDataFrame(edges, ddl)
+        got = connected_components(df)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert [f.dataType for f in got.schema] == \
+            [df.schema["src"].dataType] * 2
+        assert {r["id"]: r["component"] for r in got.collect()} == want
+
+
 def test_cc_duplicate_and_self_edges_ignored(spark):
     edges = [(1, 2), (2, 1), (1, 2), (3, 3), (2, 3)]
     got = _spark_cc(spark, edges)

@@ -6,10 +6,8 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.dataset import full_check_counts
 from jsonschema_spark.operators.bestmatch import best_match, error_tree
-from jsonschema_spark.operators.drift import (drift_statistics, histogram,
-                                              drift_violations)
+from jsonschema_spark.operators.drift import histogram, score_histograms
 from jsonschema_spark.operators.referential import (orphans,
                                                     referential_violations)
 from jsonschema_spark.operators.stats import column_stats, stats_violations
@@ -193,15 +191,27 @@ def test_uniqueness_null_keys_are_absent(spark):
     viol = sorted(r["id"] for r in uniqueness_violations(
         df, "k", ["id"]).collect())
     assert viol == [1, 3, 6, 7]
-    # full_check_counts' fused pass (k) and extra key pass (j) follow
-    # the same rule; NULL-key rows still count as rows, invalid rows
-    # (j = 1 fails the minimum) and orphans (j = 1 is not in the dim)
-    fused = full_check_counts(
-        df, {"properties": {"j": {"minimum": 2}}}, unique_keys=["k", "j"],
-        referential=[("j", spark.createDataFrame([(2,)], "j int"), "j")])
-    assert fused["dup_groups"] == {"k": 2, "j": 1}
-    assert (fused["rows"], fused["invalid_rows"]) == (8, 4)
-    assert fused["orphans"] == {"j": 4}
+    # validate_dataset's unique, referential and row blocks follow the
+    # same rule: NULL-key rows are never duplicates, yet still fail the
+    # row keyword (j = 1 fails the minimum) and the referential check
+    # (j = 1 is not in the dim)
+    from jsonschema_spark import validate_dataset
+    spec = {"properties": {"j": {"minimum": 2}},
+            "x-spark": {"unique": ["k", "j"],
+                        "referential": [{"column": "j",
+                                         "ref": {"table": "dim",
+                                                 "key": "j"}}]}}
+    rows = validate_dataset(
+        df, spec, ["id"],
+        tables={"dim": spark.createDataFrame([(2,)], "j int")}).collect()
+    by_kw = {}
+    for r in rows:
+        by_kw.setdefault(r["keyword"], []).append(r["id"])
+    assert sorted(by_kw.pop("uniqueItems:k")) == [1, 3, 6, 7]
+    assert sorted(by_kw.pop("uniqueItems:j")) == [1, 2, 3, 4]
+    assert sorted(by_kw.pop("minimum")) == [1, 2, 3, 4]
+    assert sorted(by_kw.pop("referential:j")) == [1, 2, 3, 4]
+    assert by_kw == {}
 
 
 def test_uniqueness_violations_on_images(spark):
@@ -245,18 +255,27 @@ def test_orphans_ignore_duplicate_and_null_dim_keys(spark):
 
 
 def test_drift(spark):
+    from test_drift_baseline import drift_reference
     base = spark.range(10_000).select(
         (F.col("id") % 100).cast("double").alias("x"))
     same = histogram(base, "x", 0, 100, 20)
     shifted = spark.range(10_000).select(
         ((F.col("id") % 100) * 0.5 + 50).alias("x"))
-    s_same = drift_statistics(histogram(base, "x", 0, 100, 20), same)
+
+    def score(frame):
+        cur = histogram(frame, "x", 0, 100, 20).select(
+            F.lit(0).alias("part"), "bucket", F.col("n").alias("n_cur"))
+        return score_histograms(cur, 20, same).first()
+
+    s_same = drift_reference(histogram(base, "x", 0, 100, 20), same)
     assert s_same["ks"] < 1e-9 and s_same["l1"] < 1e-9
-    s_shift = drift_statistics(histogram(shifted, "x", 0, 100, 20), same)
+    s_shift = drift_reference(histogram(shifted, "x", 0, 100, 20), same)
     assert s_shift["ks"] > 0.3
-    v = drift_violations(histogram(shifted, "x", 0, 100, 20), same, "x",
-                         max_ks=0.1)
-    assert v.count() == 1
+    for frame, ref in ((base, s_same), (shifted, s_shift)):
+        got = score(frame)
+        assert abs(got["ks"] - ref["ks"]) < 1e-9
+        assert abs(got["l1"] - ref["l1"]) < 1e-9
+        assert got["n_rows"] == ref["n_current"]
 
 
 def test_best_match_and_error_tree(spark):
@@ -298,6 +317,38 @@ def test_runner_resume(spark, tmp_path):
     # violations written under part= dirs and readable as one table
     viol = spark.read.parquet(str(tmp_path / "out" / "violations"))
     assert viol.count() > 0
+
+
+def test_runner_manifest_commit_is_a_local_scan(spark, tmp_path,
+                                                monkeypatch):
+    """The manifest rows commit from an Arrow-backed local frame: its
+    write plans a LocalTableScan, not a Python RDD (`Scan ExistingRDD`),
+    so committing starts no Python worker."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from jsonschema_spark.runner import ValidationRun
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if path.endswith("manifest"):
+            plans.append(
+                self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    df = spark.range(100).select(
+        F.col("id").alias("rid"),
+        (F.col("id") % 3).cast("string").alias("grp"))
+    run = ValidationRun(spark, str(tmp_path / "out"),
+                        {"properties": {"rid": {"maximum": 90}}}, "grp")
+    assert sorted(run.run(df, ["rid"]).completed) == ["0", "1", "2"]
+    assert len(plans) == 1
+    assert "LocalTableScan" in plans[0] and "ExistingRDD" not in plans[0]
+    m = {r["partition_key"]: r for r in run.manifest().collect()}
+    assert sum(r["rows"] for r in m.values()) == 100
+    assert sum(r["invalid_rows"] for r in m.values()) == 9
 
 
 def test_runner_single_pass_many_groups(spark, tmp_path):
@@ -366,40 +417,6 @@ def test_real_bmp_codec_pipeline(spark):
     assert viols.count() == n_trunc + n_corrupt
     assert set(viols.select("keyword").distinct().toPandas()["keyword"]) \
         == {"pixelInvariant"}
-
-
-def test_full_check_counts_dim_size_guard(spark):
-    """VERDICT-r2 #7: above `isin_max_keys` distinct dim keys the fused
-    referential membership switches from a driver-side codegen'd isin
-    set to a broadcast-hash-join flag column (an unbounded isin would
-    blow up the expression tree).  Both paths must agree."""
-    from jsonschema_spark.dataset import full_check_counts
-
-    df = (spark.range(5000)
-          .select(F.col("id").alias("rid"),
-                  (F.col("id") % 2500).alias("fk"),
-                  (F.col("id") % 7).alias("x")))
-    # dim covers fk values 0..1999 -> rows with fk >= 2000 are orphans;
-    # a planted NULL dim key must not poison the isin tier (`x NOT IN
-    # (..., NULL)` is SQL-NULL, which would zero the orphan count)
-    dim = (spark.range(2000).select(F.col("id").alias("k"))
-           .unionByName(spark.sql("SELECT CAST(NULL AS BIGINT) AS k")))
-    schema = {"properties": {"x": {"maximum": 5}}}
-    expected_orph = df.filter("fk >= 2000").count()
-    expected_bad = df.filter("x > 5").count()
-    # force the join path (threshold below the dim's 2000 keys)...
-    joined = full_check_counts(df, schema, unique_keys=["rid"],
-                               referential=[("fk", dim, "k")],
-                               isin_max_keys=100)
-    # ...and the isin path (threshold above)
-    isin = full_check_counts(df, schema, unique_keys=["rid"],
-                             referential=[("fk", dim, "k")],
-                             isin_max_keys=1_000_000)
-    for out in (joined, isin):
-        assert out["rows"] == 5000
-        assert out["invalid_rows"] == expected_bad
-        assert out["orphans"]["fk"] == expected_orph
-        assert out["dup_groups"]["rid"] == 0
 
 
 def test_runner_scrub_hadoop_fs_path(spark, tmp_path):

@@ -327,36 +327,6 @@ def test_spec_grammar_alignment_method():
                                       "method": "blas"}}, "#/x-spark")
 
 
-def test_image_quality_flags_match_violation_counts(spark):
-    """image_quality_flags (the fused-aggregate form) counts exactly
-    what image_quality_violations emits, per keyword."""
-    from pyspark.sql import functions as F
-
-    from jsonschema_spark.operators.quality import image_quality_flags
-    df = _imgs(spark)
-    flags = image_quality_flags(CFG)
-    row = df.agg(*[
-        F.sum(F.coalesce(p, F.lit(False)).cast("long")).alias(k)
-        for k, p in flags.items()]).collect()[0]
-    viol = image_quality_violations(df, CFG, ["image_id"])
-    want = {r["keyword"]: r["n"] for r in
-            viol.groupBy("keyword").agg(F.count(F.lit(1)).alias("n"))
-            .collect()}
-    for k in flags:
-        assert (row[k] or 0) == want.get(k, 0), k
-
-
-def test_full_check_counts_carries_quality(spark):
-    from jsonschema_spark.dataset import full_check_counts
-    df = _imgs(spark)
-    out = full_check_counts(
-        df, {"type": "object"}, unique_keys=["image_id"],
-        image_quality={"max_aspect": 100.0, "min_bytes": 16})
-    assert out["rows"] == 9
-    assert out["quality"] == {"imageQuality:aspect": 1,   # wide only
-                              "imageQuality:bytes": 1}    # truncated
-
-
 def test_alignment_arrow_null_elements_are_missing(spark):
     """A NULL element inside a vector makes the row unscorable on both
     paths (the native fold returns NULL there; the arrow kernel reads

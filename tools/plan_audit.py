@@ -298,8 +298,10 @@ def main() -> None:
         "join with the cluster labeling, so only pair members enter "
         "the election (the singleton majority of a 10^12-row corpus "
         "never shuffles on cluster_id); the corpus itself is touched "
-        "only by two joins against small frames, AQE-convertible to "
-        "broadcast at runtime",
+        "only by two joins against small frames, planned as broadcasts "
+        "(the union-find labeling is a local frame of known size; a "
+        "distributed labeling is AQE-convertible to broadcast at "
+        "runtime)",
         resolve_duplicates(
             docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                         "text").union(
