@@ -626,8 +626,7 @@ def q_drift_ks_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "o_totalprice", 0.0, 500000.0, 20)
     base = histogram(o.filter(F.col("o_orderstatus") == "F"),
                      "o_totalprice", 0.0, 500000.0, 20)
-    s = score_histograms(cur.select(F.lit(0).alias("part"), "bucket",
-                                    F.col("n").alias("n_cur")), 20, base)
+    s = score_histograms(cur.select(F.lit(0).alias("part"), "*"), 20, base)
     return (s.crossJoin(base.agg(F.sum("n").alias("n_baseline")))
             .select(F.round("ks", 6).alias("ks"),
                     F.round("l1", 6).alias("l1"),

@@ -216,13 +216,15 @@ def run(args: argparse.Namespace, spark=None) -> int:
         else:
             viol = v.violations(df, id_cols)
         if args.out:
-            # write ONCE, then count/sample from the written parquet —
-            # the dataset-tier plan (codec decodes, key shuffles) must
-            # not execute twice
-            (viol.write.mode("overwrite")
-             .parquet(f"{args.out}/violations"))
-            manifest.write.mode("overwrite").parquet(f"{args.out}/manifest")
-            viol = spark.read.parquet(f"{args.out}/violations")
+            # write ONCE, then count/total from the written parquet (the
+            # dataset-tier plan and the manifest aggregate must not run
+            # twice), read with the known schema: no footer-reading job
+            def written(frame, name):
+                frame.write.mode("overwrite").parquet(f"{args.out}/{name}")
+                return spark.read.schema(frame.schema).parquet(
+                    f"{args.out}/{name}")
+            viol = written(viol, "violations")
+            manifest = written(manifest, "manifest")
         elif xs:
             viol = viol.persist()
         if xs:

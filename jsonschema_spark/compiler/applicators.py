@@ -425,8 +425,7 @@ def _struct_members(ctx: CompileContext) -> list[T.StructField]:
 
 def _bind_member(ctx: CompileContext, field: T.StructField,
                  fragment: str) -> CompileContext:
-    target = (F.col(field.name) if _row_scope(ctx)
-              else ctx.target.getField(field.name))
+    target = ctx.member(field.name)
     # member bindings reset null_is_absent to the data-model policy
     # (None = inherit): see CompileContext.absent_policy
     return ctx.child(target=target, dtype=field.dataType,
@@ -541,8 +540,7 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
         extras = [f for f in _struct_members(ctx)
                   if f.name not in known and f.name not in matched]
         for fld in extras:
-            target = (F.col(fld.name) if _row_scope(ctx)
-                      else ctx.target.getField(fld.name))
+            target = ctx.member(fld.name)
             if value is False:
                 n = make_check(
                     ctx.child(path_fragment=fld.name, row_fields=None),
@@ -595,8 +593,7 @@ def c_property_names(ctx: CompileContext, value: Any,
         for fld in _struct_members(ctx):
             name_ok = _element_ok(ctx, value, F.lit(fld.name), STRING,
                                   "propertyNames")
-            target = (F.col(fld.name) if _row_scope(ctx)
-                      else ctx.target.getField(fld.name))
+            target = ctx.member(fld.name)
             n = make_check(ctx, "propertyNames", target.isNull() | name_ok,
                            f"property name '{fld.name}' fails "
                            f"propertyNames")
@@ -625,8 +622,7 @@ def c_dependent_schemas(ctx: CompileContext, value: Any,
             fld = members.get(prop)
             if fld is None:
                 continue  # trigger statically absent -> vacuous
-            present = (F.col(prop).isNotNull() if _row_scope(ctx)
-                       else ctx.target.getField(prop).isNotNull())
+            present = ctx.member(prop).isNotNull()
         child = compile_subschema(
             ctx.child(schema_fragment=f"dependentSchemas/{pointer_escape(prop)}"), sub)
         for chk in child.checks:
@@ -786,8 +782,7 @@ def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
         for prop, sub in ds.items():
             if prop not in names:
                 continue  # trigger statically absent -> never applies
-            trigger = (F.col(prop) if _row_scope(ctx)
-                       else ctx.target.getField(prop)).isNotNull()
+            trigger = ctx.member(prop).isNotNull()
             rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
             if rec is False:
                 continue
@@ -831,8 +826,7 @@ def c_unevaluated_properties(ctx: CompileContext, value: Any,
     out = Node()
     if _row_scope(ctx) or ctx.is_struct():
         for fld in _struct_members(ctx):
-            member = (F.col(fld.name) if _row_scope(ctx)
-                      else ctx.target.getField(fld.name))
+            member = ctx.member(fld.name)
             evaluated = _evaluated_prop_cond(ctx, schema, fld, member)
             if evaluated is True:
                 continue

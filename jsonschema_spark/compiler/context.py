@@ -13,25 +13,69 @@ from dataclasses import dataclass, field, replace
 from typing import TYPE_CHECKING, Any, Optional
 
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 if TYPE_CHECKING:
     from .registry import KeywordRegistry
 
-_IDENT = re.compile(r"^\w+$")
+#: ``ValidationError.json_path``'s identifier pattern
+_IDENT = re.compile(r"^[a-zA-Z][a-zA-Z0-9_]*$")
+#: one rendered component as a Java regex: ``.name`` (Python's ``$`` lets
+#: ``_IDENT`` match ``name\n``), ``[i]`` or ``['escaped name']``
+_TOKEN = r"\.[a-zA-Z][a-zA-Z0-9_]*\n?|\[[0-9]+\]|\['(?:[^'\\]|\\.)*'\]"
 
 
 def json_path_join(base: str, fragment: Any) -> str:
-    """Render a JSONPath the way ``ValidationError.json_path`` does
-    (/root/reference/jsonschema/exceptions.py:152-163): ``$`` root,
-    ``.prop`` for identifier-like keys, ``['odd key']`` otherwise,
-    ``[i]`` for array indexes.
-    """
+    """Render a JSONPath exactly as ``ValidationError.json_path`` does
+    (jsonschema/exceptions.py:152-163): ``$`` root, ``.prop`` for keys
+    matching ``_IDENT``, ``['odd key']`` with ``\\`` and ``'``
+    backslash-escaped otherwise, ``[i]`` for array indexes.  The Column
+    functions below parse this grammar back natively."""
     if isinstance(fragment, int):
         return f"{base}[{fragment}]"
-    if _IDENT.match(str(fragment)):
-        return f"{base}.{fragment}"
-    return f"{base}['{fragment}']"
+    name = str(fragment)
+    if _IDENT.match(name):
+        return f"{base}.{name}"
+    return "%s['%s']" % (base, name.replace("\\", "\\\\").replace("'", "\\'"))
+
+
+def _path_tokens(json_path: Column) -> Column:
+    return F.regexp_extract_all(json_path, F.lit(_TOKEN), 0)
+
+
+def _token_name(t: Column) -> Column:
+    """A token's component: the unescaped name, or the index digits."""
+    n = F.length(t)
+    return (F.when(t.startswith("['"), F.regexp_replace(
+                t.substr(F.lit(3), n - 4), r"\\(.)", "$1"))
+            .when(t.startswith("["), t.substr(F.lit(2), n - 2))
+            .otherwise(t.substr(F.lit(2), n)))
+
+
+def path_depth(json_path: Column) -> Column:
+    """Component count of a rendered json_path (``len(error.path)``)."""
+    return F.size(_path_tokens(json_path))
+
+
+def path_order(json_path: Column) -> Column:
+    """``array<struct<i:long, s:string>>`` that sorts like the reference's
+    ``error.path`` deque: indexes as integers, names as strings."""
+    return F.transform(_path_tokens(json_path), lambda t: F.struct(
+        F.when(t.rlike(r"^\[[0-9]"), _token_name(t).cast("long")).alias("i"),
+        F.when(~t.rlike(r"^\[[0-9]"), _token_name(t)).alias("s")))
+
+
+def json_pointer(json_path: Column) -> Column:
+    """RFC 6901 pointer of a rendered json_path: ``$`` -> ``''``, each
+    component -> ``/`` + its ``~0``/``~1``-escaped name.  A string that
+    is not ``$`` followed by exactly its tokens passes through verbatim."""
+    tokens = _path_tokens(json_path)
+    pointer = F.array_join(F.transform(tokens, lambda t: F.concat(
+        F.lit("/"), F.regexp_replace(F.regexp_replace(
+            _token_name(t), "~", "~0"), "/", "~1"))), "")
+    return F.when(F.concat(F.lit("$"), F.array_join(tokens, ""))
+                  == json_path, pointer).otherwise(json_path)
 
 
 def pointer_escape(name: Any) -> str:
@@ -129,6 +173,13 @@ class CompileContext:
                        dtype=dtype if dtype is not None else self.dtype,
                        json_path=jp, schema_path=sp, row_fields=rf,
                        null_is_absent=nia, warnings=self.warnings)
+
+    def member(self, name: str) -> Column:
+        """Object member `name` of the target: a column at row scope,
+        quoted so a dot in the name is not read as struct access."""
+        if self.target is None:
+            return F.col("`" + name.replace("`", "``") + "`")
+        return self.target.getField(name)
 
     def warn(self, msg: str) -> None:
         self.warnings.append(f"{self.schema_path or '<root>'}: {msg}")

@@ -394,7 +394,7 @@ def _member(ctx: CompileContext, name: str) -> Optional[Column]:
     """Column expression for object member `name`, or None if statically
     absent (flat table without that column)."""
     if _row_scope(ctx):
-        return F.col(name) if name in _row_field_names(ctx) else None
+        return ctx.member(name) if name in _row_field_names(ctx) else None
     if ctx.is_struct():
         names = [f.name for f in ctx.dtype.fields]
         return ctx.target.getField(name) if name in names else None
@@ -444,7 +444,7 @@ def _property_count(ctx: CompileContext) -> Optional[Column]:
         names = _row_field_names(ctx)
         if not names:
             return None
-        return sum((F.col(n).isNotNull().cast("int") for n in names),
+        return sum((ctx.member(n).isNotNull().cast("int") for n in names),
                    F.lit(0))
     if ctx.is_map():
         return F.size(F.map_keys(ctx.target))

@@ -43,7 +43,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .compiler.context import CompileContext
+from .compiler.context import CompileContext, json_pointer
 from .compiler.registry import (SchemaCompileError, compile_subschema,
                                 default_registry)
 from .compiler.resolver import Resolver
@@ -477,8 +477,6 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
     resource boundary (our schema paths are root-relative, so the plain
     ``$id#/<path>`` join is exact there and omitted elsewhere — the
     field is optional in the output schema)."""
-    from .operators.bestmatch import _jsonpath_to_pointer
-
     dtype = infer_spark_type(instance)
     sschema = T.StructType([T.StructField("value", dtype, True)])
     df = spark.createDataFrame([(_to_row_value(instance, dtype),)], sschema)
@@ -511,7 +509,7 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
         units = []
         for r in _violation_rows(df, structs).select(
                 "schema_path", "message",
-                _jsonpath_to_pointer(F.col("json_path")).alias("il")
+                json_pointer(F.col("json_path")).alias("il")
         ).collect():
             u = {"valid": False,
                  "keywordLocation": "/" + r["schema_path"],
@@ -531,7 +529,7 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
         row = df.select(*[
             F.struct(
                 F.coalesce(a_unit.pred, F.lit(False)).alias("applies"),
-                _jsonpath_to_pointer(F.lit(a_unit.json_path)).alias("il"),
+                json_pointer(F.lit(a_unit.json_path)).alias("il"),
             ).alias(f"_a{i}")
             for i, a_unit in enumerate(ctx.annotations)]).first()
         for i, a_unit in enumerate(ctx.annotations):

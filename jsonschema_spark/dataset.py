@@ -64,6 +64,7 @@ from typing import Any, Mapping, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compiler.context import json_path_join
 from .validator import CompiledValidator, _violation_rows, _vrow
 
 VIOLATION_COLS = ("keyword", "json_path", "schema_path", "message",
@@ -165,7 +166,8 @@ def validate_dataset(df: DataFrame, schema: dict,
             # pixel_invariant's finding, not a phash mismatch
             maxh = (xs["phash_integrity"] or {}).get("max_hamming", 0)
             structs.append(F.when(F.col("hamming") > maxh, _vrow(
-                "phashIntegrity", "$.phash", "x-spark/phash_integrity",
+                "phashIntegrity", json_path_join("$", "phash"),
+                "x-spark/phash_integrity",
                 F.concat(F.lit("stored phash differs from recomputed "
                                "pixel hash by "),
                          F.col("hamming").cast("string"), F.lit(" bits")),
@@ -195,7 +197,8 @@ def validate_dataset(df: DataFrame, schema: dict,
         parts.append(pad(_violation_rows(
             pairs.agg(F.count(F.lit(1)).alias("_n")),
             [F.when(n > maxp, _vrow(
-                "nearDup:phash", "$.phash", "x-spark/near_dup_phash",
+                "nearDup:phash", json_path_join("$", "phash"),
+                "x-spark/near_dup_phash",
                 F.concat(n.cast("string"),
                          F.lit(f" near-duplicate image pairs at hamming <= "
                                f"{maxh} (allowed {maxp})")), n))])))
@@ -219,7 +222,7 @@ def validate_dataset(df: DataFrame, schema: dict,
 
         def _rrow(kind, n, lim, frac):
             return F.when(frac > lim, _vrow(
-                f"repetition:{kind}{n}", f"$.{col}",
+                f"repetition:{kind}{n}", json_path_join("$", col),
                 f"x-spark/repetition/{kind}_{n}gram",
                 F.concat(F.lit(f"{kind} {n}-gram char fraction "),
                          F.format_string("%.6f", frac),
@@ -244,7 +247,7 @@ def validate_dataset(df: DataFrame, schema: dict,
         n = F.col("_n")
         parts.append(pad(_violation_rows(
             df.select(*keep, total.alias("_n")), [F.when(n > max_hits, _vrow(
-                "pii", f"$.{col}", "x-spark/pii",
+                "pii", json_path_join("$", col), "x-spark/pii",
                 F.concat(n.cast("string"),
                          F.lit(f" PII matches exceed allowed {max_hits}")),
                 n))], keep)))
@@ -283,7 +286,8 @@ def validate_dataset(df: DataFrame, schema: dict,
             n=cfg.get("n", 13), on_hash=cfg.get("on_hash", True))
         frac = F.col("contaminated_frac")
         parts.append(pad(_violation_rows(sc, [F.when(frac > max_frac, _vrow(
-            "contamination", f"$.{col}", "x-spark/contamination",
+            "contamination", json_path_join("$", col),
+            "x-spark/contamination",
             F.concat(F.col("n_hit").cast("string"), F.lit(" of "),
                      F.col("n_grams").cast("string"),
                      F.lit(f" {cfg.get('n', 13)}-grams appear in {ref_name} "

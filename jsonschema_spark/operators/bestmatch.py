@@ -12,36 +12,15 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..compiler.context import json_pointer, path_depth, path_order
 
 WEAK_MATCHES = ("anyOf", "oneOf")  # exceptions.py:24
 #: keywords whose violation rows carry context (branch errors) — what
 #: the descent recurses into; independent of the `weak` ranking set
 COMPOSITE_KEYWORDS = ("anyOf", "oneOf")
-
-
-def _sortable_path(c):
-    """json_path rendered so STRING order == component-wise path order
-    (the reference compares ``error.path`` deques element-wise, with
-    array indices as ints): zero-pad bracket indices to width 12, so
-    ``[12]`` sorts after ``[2]``.  Pure regexp passes, widest first so
-    a padded index is never re-padded; indices past 12 digits (10^12
-    elements in ONE array) are out of scope.  Documented edge case: a
-    *property name* literally containing ``[2]`` (rendered as
-    ``['a[2]b']``) is zero-padded as if it were an index and sorts in
-    index order rather than the reference's component-wise string
-    order — acceptable for tabular data, noted per ADVICE-r3.  The
-    pass chain is gated
-    behind a cheap contains() so bracket-free paths (the overwhelming
-    majority of tabular violations) never pay the 11 regexps —
-    CASE WHEN short-circuits in codegen."""
-    padded = c
-    for w in range(11, 0, -1):
-        padded = F.regexp_replace(padded, r"\[(\d{%d})\]" % w,
-                                  "[" + "0" * (12 - w) + "$1]")
-    return F.when(c.contains("["), padded).otherwise(c)
 
 
 def _relevance_cols(weak: Sequence[str], strong: Sequence[str],
@@ -59,8 +38,8 @@ def _relevance_cols(weak: Sequence[str], strong: Sequence[str],
     ``Check.type_match``); a violations frame from an external source
     without the column degrades to the 4-element key, with `keyword` as
     the deterministic final tiebreak either way."""
-    depth = F.size(F.split(F.col("json_path"), r"\.|\[")) - 1
-    spath = _sortable_path(F.col("json_path"))
+    depth = path_depth(F.col("json_path"))
+    spath = path_order(F.col("json_path"))
     weak_f = (F.col("keyword").isin(*weak).cast("int") if weak
               else F.lit(0))
     strong_f = (F.col("keyword").isin(*strong).cast("int") if strong
@@ -181,47 +160,16 @@ def error_tree(violations: DataFrame) -> DataFrame:
             .orderBy("json_path"))
 
 
-def _jsonpath_to_pointer(c):
-    """Column: engine JSONPath -> RFC 6901 JSON pointer, positional."""
-    import re as _re
-    from pyspark.sql.functions import pandas_udf
-
-    seg = _re.compile(r"\.(\w+)|\[(\d+)\]|\['((?:[^'\\]|\\.)*)'\]")
-
-    def esc(s: str) -> str:
-        return s.replace("~", "~0").replace("/", "~1")
-
-    @pandas_udf("string")
-    def conv(s: pd.Series) -> pd.Series:
-        def one(path):
-            if path is None:
-                return None
-            out, pos = [], 1  # skip leading '$'
-            for m in seg.finditer(path, 1):
-                if m.start() != pos:
-                    return path  # not our grammar: pass through verbatim
-                pos = m.end()
-                name = m.group(1) or m.group(2) or m.group(3) or ""
-                out.append("/" + esc(name))
-            return "".join(out)
-        return s.map(one)
-
-    return conv(c)
-
-
 def standard_output(violations: DataFrame) -> DataFrame:
     """The official JSON-Schema "basic" output-format unit shape
     (/root/reference/json/output-tests/draft2020-12/output-schema.json):
     one row per output unit with ``valid``, ``keywordLocation`` (a JSON
     pointer through the schema incl. applicators), ``instanceLocation``,
     and ``error``.  Our schema_path is slash-joined from the root, so the
-    pointer is '/' + schema_path; json_path renders to a pointer by a
-    positional parse (`$`->'' , `.k`->'/k', `[i]`->'/i', `['odd k']` ->
-    '/odd k') with RFC 6901 `~0`/`~1` escaping — a global dot
-    substitution would corrupt bracket-quoted names containing dots, so
-    this is an Arrow-batched parse (reporting path, violations-sized)."""
+    pointer is '/' + schema_path; instanceLocation is
+    :func:`~jsonschema_spark.compiler.context.json_pointer` of json_path."""
     kw_loc = F.concat(F.lit("/"), F.col("schema_path"))
-    inst_ptr = _jsonpath_to_pointer(F.col("json_path"))
+    inst_ptr = json_pointer(F.col("json_path"))
     return violations.select(
         F.lit(False).alias("valid"),
         kw_loc.alias("keywordLocation"),

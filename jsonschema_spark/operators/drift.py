@@ -86,6 +86,7 @@ def check_against_baseline(df: DataFrame, baseline_path: str,
     no histogram for a profiled column raises ``ValueError`` (against
     an empty baseline every column would score KS 1.0: a
     misconfiguration reported as drift)."""
+    from ..compiler.context import json_path_join
     from ..validator import _violation_rows, _vrow
 
     prefix = ([F.lit(f"partition {by}="), F.col("part").cast("string"),
@@ -94,7 +95,8 @@ def check_against_baseline(df: DataFrame, baseline_path: str,
     def flag(col, stat, threshold, label):
         val = F.col(stat)
         return F.when(val > threshold, _vrow(
-            f"drift:{stat}", f"$.{col}", f"x-spark/drift/{col}/{stat}",
+            f"drift:{stat}", json_path_join("$", col),
+            f"x-spark/drift/{col}/{stat}",
             # %.4f, not round().cast: fixed-width rendering a SQL
             # oracle reproduces exactly
             F.concat(*prefix, F.lit(f"{label} "),
@@ -157,7 +159,7 @@ def _scores(df: DataFrame, col: str, bounds: Optional[tuple],
         parts = df.sparkSession.range(1).select(part.alias("part"))
     bucket = (F.col(col) if bounds is None else bucket_expr(col, *bounds))
     cur = (rows.groupBy(part.alias("part"), bucket.alias("bucket"))
-           .agg(F.count(F.lit(1)).alias("n_cur")))
+           .agg(F.count(F.lit(1)).alias("n")))
     return score_histograms(cur, None if bounds is None else bounds[2],
                             baseline, parts)
 
@@ -165,7 +167,7 @@ def _scores(df: DataFrame, col: str, bounds: Optional[tuple],
 def score_histograms(cur: DataFrame, bins: Optional[int],
                      baseline: DataFrame,
                      parts: Optional[DataFrame] = None) -> DataFrame:
-    """Score per-partition histograms ``(part, bucket, n_cur)`` against
+    """Score per-partition histograms ``(part, bucket, n)`` against
     one baseline ``(bucket, n)`` histogram: ``(part, n_rows, ks, l1,
     chi2, psi)``, one row per partition of `parts` (default: the
     partitions present in `cur`).
@@ -204,7 +206,8 @@ def score_histograms(cur: DataFrame, bins: Optional[int],
     base = baseline.select(F.col("bucket").cast(kind).alias("_bb"),
                            F.col("n").cast("long").alias("n_base"))
     hist = cur.select(F.col("part").alias("_cp"),
-                      F.col("bucket").cast(kind).alias("_cb"), "n_cur")
+                      F.col("bucket").cast(kind).alias("_cb"),
+                      F.col("n").alias("n_cur"))
     j = (grid.join(F.broadcast(base),
                    F.col("bucket").eqNullSafe(F.col("_bb")), "left")
          .join(hist, F.col("part").eqNullSafe(F.col("_cp"))

@@ -602,20 +602,17 @@ def caption_check(df: DataFrame, expected,
     `expected` is a Column (e.g. ``sources.images.reference_caption``
     over the generating id), so the whole check is ONE codegen'd narrow
     scan — no UDF, no shuffle, `bytes` pruned."""
+    from ..compiler.context import json_path_join
+    from ..validator import _violation_rows, _vrow
+
     cap = F.col(caption_col)
-    bad = df.filter(~cap.eqNullSafe(expected))
-    return bad.select(
-        *id_cols,
-        F.lit("captionEquality").alias("keyword"),
-        F.lit(f"$.{caption_col}").alias("json_path"),
-        F.lit("x-spark/caption/equality").alias("schema_path"),
+    return _violation_rows(df.filter(~cap.eqNullSafe(expected)), [_vrow(
+        "captionEquality", json_path_join("$", caption_col),
+        "x-spark/caption/equality",
         F.when(cap.isNull(), F.lit("caption is null, reference is not"))
          .when(F.length(cap) == 0, F.lit("caption is empty"))
-         .otherwise(F.lit("caption differs from reference"))
-        .alias("message"),
-        F.substring(F.coalesce(cap, F.lit("<null>")), 1, 64)
-        .alias("failing_value"),
-    )
+         .otherwise(F.lit("caption differs from reference")),
+        F.substring(F.coalesce(cap, F.lit("<null>")), 1, 64))], id_cols)
 
 
 # ------------------------------------------------- real WAV codec ---------

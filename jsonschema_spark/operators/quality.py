@@ -40,6 +40,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
 
@@ -76,9 +77,12 @@ def image_quality_violations(df: DataFrame, cfg: dict,
 def _quality_bands(cfg: dict) -> list:
     """[(keyword, gated_bad_predicate, json_path, schema_path,
     message_col, failing_col)] for the configured metadata bands."""
-    w = F.col(cfg.get("w_col", "w")).cast("double")
+    w_col, bytes_col = cfg.get("w_col", "w"), cfg.get("bytes_col", "bytes")
+    w = F.col(w_col).cast("double")
     h = F.col(cfg.get("h_col", "h")).cast("double")
-    blen = F.length(F.col(cfg.get("bytes_col", "bytes"))).cast("double")
+    blen = F.length(F.col(bytes_col)).cast("double")
+    w_path, bytes_path = (json_path_join("$", w_col),
+                          json_path_join("$", bytes_col))
     geom_ok = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
     # try_divide: the bands gate on geom_ok, but subexpression
     # elimination may evaluate a shared division before the gate, and
@@ -108,7 +112,7 @@ def _quality_bands(cfg: dict) -> list:
     if lo is not None or hi is not None:
         bands.append((
             "imageQuality:aspect", geom_ok & _banded(lo, hi, aspect),
-            "$.w", "x-spark/image_quality/aspect",
+            w_path, "x-spark/image_quality/aspect",
             F.concat(F.lit("aspect ratio of "), dims,
                      F.lit(f" {_band_text(lo, hi)}")),
             dims))
@@ -116,7 +120,7 @@ def _quality_bands(cfg: dict) -> list:
     if lo is not None or hi is not None:
         bands.append((
             "imageQuality:pixels", geom_ok & _banded(lo, hi, pixels),
-            "$.w", "x-spark/image_quality/pixels",
+            w_path, "x-spark/image_quality/pixels",
             F.concat(F.lit("pixel count of "), dims,
                      F.lit(f" {_band_text(lo, hi)}")),
             pixels.cast("long").cast("string")))
@@ -125,7 +129,7 @@ def _quality_bands(cfg: dict) -> list:
         bands.append((
             "imageQuality:bytes",
             blen.isNotNull() & _banded(lo, hi, blen),
-            "$.bytes", "x-spark/image_quality/bytes",
+            bytes_path, "x-spark/image_quality/bytes",
             F.concat(F.lit("payload of "), blen.cast("long").cast("string"),
                      F.lit(f" bytes {_band_text(lo, hi)}")),
             blen.cast("long").cast("string")))
@@ -135,7 +139,7 @@ def _quality_bands(cfg: dict) -> list:
         bands.append((
             "imageQuality:bytesPerPixel",
             geom_ok & blen.isNotNull() & _banded(lo, hi, bpp),
-            "$.bytes", "x-spark/image_quality/bytes_per_pixel",
+            bytes_path, "x-spark/image_quality/bytes_per_pixel",
             F.concat(F.lit("payload bytes "),
                      blen.cast("long").cast("string"),
                      F.lit(" for "), dims,
@@ -169,7 +173,7 @@ def luma_quality_structs(cfg: dict) -> list:
                 and hi is not None
                 else (f"below {lo}" if lo is not None else f"above {hi}"))
         structs.append(F.when(ok & bad, _vrow(
-            "lumaQuality:brightness", "$.bytes",
+            "lumaQuality:brightness", json_path_join("$", "bytes"),
             "x-spark/image_quality_decoded/luma",
             F.concat(F.lit("decoded mean luma "),
                      F.format_string("%.2f", mean), F.lit(f" {band}")),
@@ -177,7 +181,7 @@ def luma_quality_structs(cfg: dict) -> list:
     mc = cfg.get("min_contrast")
     if mc is not None:
         structs.append(F.when(ok & (std < mc), _vrow(
-            "lumaQuality:contrast", "$.bytes",
+            "lumaQuality:contrast", json_path_join("$", "bytes"),
             "x-spark/image_quality_decoded/contrast",
             F.concat(F.lit("decoded luma std "),
                      F.format_string("%.2f", std),
@@ -200,7 +204,7 @@ def pixel_invariant_struct(min_psnr: float) -> Column:
                | (F.col("decoded_w") != F.col("w"))
                | (F.col("decoded_h") != F.col("h")))
     return F.when(pix_bad, _vrow(
-        "pixelInvariant", "$.bytes", "x-spark/pixel/psnr",
+        "pixelInvariant", json_path_join("$", "bytes"), "x-spark/pixel/psnr",
         F.concat(F.lit("decoded payload fails PSNR/metadata "
                        "invariant (psnr="),
                  F.round("psnr", 2).cast("string"), F.lit(")")),
@@ -357,12 +361,14 @@ def alignment_violations(df: DataFrame, cfg: dict,
         base, ids = df, list(id_cols)
     structs = [
         F.when(cos.isNull(), _vrow(
-            "alignment:missing", f"$.{txt_c}", "x-spark/alignment",
+            "alignment:missing", json_path_join("$", txt_c),
+            "x-spark/alignment",
             F.lit("image or caption embedding missing or zero-norm — "
                   "pair cannot be scored"),
             F.lit(None).cast("string"))),
         F.when(cos < min_cos, _vrow(
-            "alignment:cosine", f"$.{txt_c}", "x-spark/alignment",
+            "alignment:cosine", json_path_join("$", txt_c),
+            "x-spark/alignment",
             F.concat(F.lit("caption-image cosine "),
                      F.format_string("%.6f", cos),
                      F.lit(f" below {min_cos}")),

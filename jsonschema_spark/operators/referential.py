@@ -15,6 +15,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler.context import json_path_join
+from ..validator import _violation_rows, _vrow
+
 
 def orphans(df: DataFrame, fk: str, dim: DataFrame,
             dim_key: str) -> DataFrame:
@@ -32,13 +35,9 @@ def referential_violations(df: DataFrame, fk: str, dim: DataFrame,
                            dim_key: str,
                            id_cols: Sequence[str] = ()) -> DataFrame:
     """Violation rows (keyword 'referential:<fk>') for orphaned fks."""
-    keep = [F.col(c) for c in id_cols] if id_cols else []
-    return orphans(df, fk, dim, dim_key).select(
-        *keep,
-        F.lit(f"referential:{fk}").alias("keyword"),
-        F.lit(f"$.{fk}").alias("json_path"),
-        F.lit(f"x-spark/referential/{fk}").alias("schema_path"),
+    return _violation_rows(orphans(df, fk, dim, dim_key), [_vrow(
+        f"referential:{fk}", json_path_join("$", fk),
+        f"x-spark/referential/{fk}",
         F.concat(F.lit(f"{fk} value not present in referenced table: "),
-                 F.col(fk).cast("string")).alias("message"),
-        F.col(fk).cast("string").alias("failing_value"),
-    )
+                 F.col(fk).cast("string")),
+        F.col(fk))], id_cols)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -107,7 +108,8 @@ def stats_violations(df: DataFrame, rules: dict[str, dict[str, Any]]) -> DataFra
             shown = (F.format_string("%.4f", s) if kw == "max_null_rate"
                      else s.cast("string"))
             structs.append(F.when(fails(s, lim), _vrow(
-                f"stats:{kw}", f"$.{col}", f"x-spark/stats/{col}/stats:{kw}",
+                f"stats:{kw}", json_path_join("$", col),
+                f"x-spark/stats/{col}/stats:{kw}",
                 F.concat(F.lit(f"{label} "), shown, F.lit(f" {word} {lim}")),
                 s)))
     return _violation_rows(df.agg(*aggs), structs)

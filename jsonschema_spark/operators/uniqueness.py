@@ -26,6 +26,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
 
@@ -66,7 +67,7 @@ def uniqueness_violations(df: DataFrame, keys: str | Sequence[str],
                for i, k in enumerate(keys)])
     return _violation_rows(counted, [
         F.when(F.col(k).isNotNull() & (F.col(f"_n{i}") > 1), _vrow(
-            f"uniqueItems:{k}", f"$.{k}", f"x-spark/unique/{k}",
+            f"uniqueItems:{k}", json_path_join("$", k), f"x-spark/unique/{k}",
             F.concat(F.lit(f"duplicate {k}: "), F.col(k).cast("string")),
             F.col(k)))
         for i, k in enumerate(keys)], id_cols)

@@ -140,15 +140,11 @@ def _check_x_spark(xs: Any, path: str) -> None:
         if "by" in d:
             if not isinstance(d["by"], str) or not d["by"]:
                 raise bad("/drift/by", "must be a partition column name")
-            if cat:
-                raise bad("/drift/by",
-                          "per-partition drift profiles numeric columns "
-                          "only (categorical histograms have no shared "
-                          "bucket grid); drop `categorical` or `by`")
-            if not num:
+            if not num and not cat:
                 raise bad("/drift/by", "per-partition drift needs at "
-                          "least one numeric column to profile (the "
-                          "check would otherwise be a silent no-op)")
+                          "least one numeric or categorical column to "
+                          "profile (the check would otherwise be a "
+                          "silent no-op)")
     if "repetition" in xs and xs["repetition"] is not None:
         r = xs["repetition"]
         if not isinstance(r, dict):

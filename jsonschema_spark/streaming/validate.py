@@ -223,7 +223,7 @@ def drift_stream(stream_df: DataFrame, ts_col: str, col: str,
             return
         cur = batch.select(
             F.col("window_start").cast("string").alias("part"),
-            "bucket", F.col("n").alias("n_cur"))
+            "bucket", "n")
         (score_histograms(cur, bins, baseline)
          .write.mode("overwrite")
          .parquet(os.path.join(out_dir, "drift", f"batch={batch_id}")))

@@ -24,7 +24,7 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler.context import CompileContext
+from .compiler.context import CompileContext, json_pointer
 from .compiler.node import Check, all_of
 from .compiler.registry import (KeywordRegistry, compile_subschema,
                                 default_registry)
@@ -197,7 +197,6 @@ class CompiledValidator:
         applied (e.g. a satisfied anyOf branch)."""
         import json as _json
 
-        from .operators.bestmatch import _jsonpath_to_pointer
         structs = [
             F.when(F.coalesce(a.pred, F.lit(False)), F.struct(
                 F.lit(a.keyword).alias("keyword"),
@@ -214,8 +213,7 @@ class CompiledValidator:
             *id_cols,
             F.lit(True).alias("valid"),
             "keyword", "keywordLocation",
-            _jsonpath_to_pointer(F.col("json_path"))
-            .alias("instanceLocation"),
+            json_pointer(F.col("json_path")).alias("instanceLocation"),
             "annotation_json")
 
     # ------------------------------------------------------------- manifest

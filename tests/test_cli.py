@@ -162,3 +162,24 @@ def test_cli_curate_mode(spark, tmp_path):
     # exact dup pair (1,2), equal length: tie -> smallest id survives
     assert got[1]["is_canonical"] and not got[2]["is_canonical"]
     assert all(got[i]["split"] in ("train", "test") for i in got)
+
+
+def test_cli_out_runs_each_output_once(spark, tmp_path):
+    """With --out, the totals come from the written manifest and the
+    written files are read back with their known schema: 5 jobs (table
+    schema, violations write, manifest shuffle and write, totals read),
+    where recomputing the manifest and inferring footers took 7."""
+    spec = _spec_file(tmp_path, {"properties": {"v": {"maximum": 50}}})
+    table = str(tmp_path / "t.parquet")
+    spark.range(100).selectExpr("id", "id as v", "string(id % 3) as g") \
+        .write.parquet(table)
+    args = parse_args([spec, table, "--id-cols", "id", "--partition-by",
+                       "g", "--out", str(tmp_path / "out")])
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-out", "jobs of one cli.run")
+    try:
+        assert run(args, spark=spark) == 1
+        jobs = sc.statusTracker().getJobIdsForGroup("cli-out")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) == 5, len(jobs)

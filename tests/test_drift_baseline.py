@@ -117,8 +117,6 @@ def test_validate_dataset_per_partition_drift(spark, tmp_path):
     """x-spark.drift with "by": per-partition scoring inside the unified
     checker — only the shifted partition trips, its violation row names
     the partition, and the clean partitions stay silent."""
-    from jsonschema_spark import SchemaCompileError
-
     clean = spark.range(8_000).selectExpr(
         "id", "double(id % 100) as w",
         "case when id % 2 = 0 then 'png' else 'jpeg' end as fmt")
@@ -141,12 +139,39 @@ def test_validate_dataset_per_partition_drift(spark, tmp_path):
     assert float(v[0]["failing_value"]) > 0.05
     # identical data: every partition clean
     assert validate_dataset(clean, spec).count() == 0
-    # grammar: by + categorical is rejected up front
-    bad = {"type": "object",
-           "x-spark": {"drift": {"baseline": path, "by": "fmt",
-                                 "categorical": ["fmt"]}}}
-    with pytest.raises(SchemaCompileError, match="numeric columns only"):
-        validate_dataset(shifted, bad)
+
+
+def test_validate_dataset_per_partition_categorical_drift(spark, tmp_path):
+    """x-spark.drift with "by" and only a categorical column: every
+    partition's KS and L1 rows equal the null-safe reference on that
+    partition's histogram, NULL a category of its own."""
+    cat = ("case when id % 3 = 0 then null when id % 3 = 1 then 'a' "
+           "else 'b' end as c")
+    path = str(tmp_path / "bl")
+    save_baseline(spark.range(300).selectExpr("id", cat), path,
+                  categorical=["c"])
+    # partition p keeps the baseline mix; q moves half its rows to 'a'
+    df = spark.range(600).selectExpr(
+        "id", "case when id < 300 then 'p' else 'q' end as g", cat
+    ).selectExpr("g", "case when g = 'q' and id % 2 = 0 then 'a' "
+                      "else c end as c")
+    spec = {"x-spark": {"drift": {"baseline": path, "by": "g",
+                                  "categorical": ["c"],
+                                  "max_ks": 0.0, "max_l1": 0.0}}}
+    got = {(r["message"].split(":")[0], r["keyword"]): r["failing_value"]
+           for r in validate_dataset(df, spec).collect()}
+    base = load_baseline(spark, path, "c")
+    want = {}
+    for g in ("p", "q"):
+        cur = (df.filter(F.col("g") == g).groupBy(F.col("c").alias("bucket"))
+               .agg(F.count(F.lit(1)).alias("n")))
+        ref = drift_reference(cur, base, numeric=False)
+        for stat in ("ks", "l1"):
+            if ref[stat] > 0:
+                want[(f"partition g={g}", f"drift:{stat}")] = \
+                    f"{ref[stat]:.6f}"
+    assert ("partition g=q", "drift:ks") in want
+    assert got == want
 
 
 def test_drift_null_threshold_and_missing_baseline_column(spark, tmp_path):
@@ -216,8 +241,7 @@ def test_table_drift_null_category_matches_itself(spark, tmp_path):
     cur = (shifted.groupBy(F.col("c").alias("bucket"))
            .agg(F.count(F.lit(1)).alias("n")))
     base = load_baseline(spark, path, "c")
-    got = score_histograms(cur.select(F.lit(0).alias("part"), "bucket",
-                                      F.col("n").alias("n_cur")),
+    got = score_histograms(cur.select(F.lit(0).alias("part"), "*"),
                            None, base).first()
     ref = drift_reference(cur, base, numeric=False)
     assert ref["ks"] > 0.3

@@ -1,0 +1,123 @@
+"""Instance locations: ``json_path`` rendered exactly like the installed
+reference's ``ValidationError.json_path``, and the JSON pointer, depth
+and sibling order derived from it natively."""
+
+import jsonschema
+import pytest
+from jsonschema.exceptions import best_match as ref_best_match
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from jsonschema_spark import CompiledValidator
+from jsonschema_spark.compiler.context import (json_path_join, json_pointer,
+                                               path_depth)
+from jsonschema_spark.operators.bestmatch import best_match, standard_output
+from jsonschema_spark.operators.quality import image_quality_violations
+
+#: names the identifier pattern rejects (leading ``_`` or digit,
+#: non-ASCII, quote, brackets) beside two it accepts
+NAMES = ["_id", "1a", "é", "a'b", "a[2]b", "x", "ok"]
+
+
+def _frame(spark, names, rows):
+    schema = T.StructType([T.StructField("_row", T.IntegerType())]
+                          + [T.StructField(n, T.IntegerType())
+                             for n in names])
+    return spark.createDataFrame(rows, schema)
+
+
+def _ref_pointer(error):
+    return "".join("/" + str(p).replace("~", "~0").replace("/", "~1")
+                   for p in error.path)
+
+
+def test_locations_match_reference_on_odd_names(spark):
+    """``minimum: 5`` on each name, one row failing all but ``ok``:
+    the (keyword, json_path) set, the best_match pick and the
+    standard_output instanceLocations equal the reference's."""
+    schema = {"properties": {n: {"minimum": 5} for n in NAMES}}
+    inst = {n: 1 for n in NAMES}
+    inst["ok"] = 9
+    df = _frame(spark, NAMES, [(0, *[inst[n] for n in NAMES])])
+    viols = CompiledValidator(schema, df).violations(df, ["_row"])
+    errs = list(jsonschema.Draft202012Validator(schema).iter_errors(inst))
+
+    assert ({(r["keyword"], r["json_path"]) for r in viols.collect()}
+            == {(e.validator, e.json_path) for e in errs})
+    assert (best_match(viols, ["_row"]).collect()[0]["json_path"]
+            == ref_best_match(errs).json_path)
+    assert (sorted(r["instanceLocation"]
+                   for r in standard_output(viols).collect())
+            == sorted(_ref_pointer(e) for e in errs))
+
+
+def test_dotted_column_name_binds_as_one_column(spark):
+    """A column named ``a.b`` is the member ``a.b``, not struct access
+    into ``a``: pass/fail and json_path follow the reference."""
+    schema = {"properties": {"a.b": {"minimum": 5}}}
+    df = _frame(spark, ["a.b"], [(0, 1), (1, 9)])
+    v = CompiledValidator(schema, df)
+    ref = jsonschema.Draft202012Validator(schema)
+    valid = {r["_row"]: r["valid"] for r in v.with_valid(df).collect()}
+    assert valid == {0: ref.is_valid({"a.b": 1}),
+                     1: ref.is_valid({"a.b": 9})} == {0: False, 1: True}
+    [err] = ref.iter_errors({"a.b": 1})
+    assert ([(r["_row"], r["json_path"])
+             for r in v.violations(df, ["_row"]).collect()]
+            == [(0, err.json_path)] == [(0, "$['a.b']")])
+
+
+def test_json_path_join_renders_like_reference():
+    assert [json_path_join("$", n) for n in ("ok", "_id", "a'b", "a\\b")] \
+        == ["$.ok", "$['_id']", "$['a\\'b']", "$['a\\\\b']"]
+    assert json_path_join("$.a", 12) == "$.a[12]"
+
+
+# (json_path, pointer, depth); depth None where the string is not
+# the grammar and passes through verbatim
+POINTERS = [
+    ("$", "", 0),
+    ("$.a", "/a", 1),
+    ("$.a.b[0]", "/a/b/0", 3),
+    ("$[12]", "/12", 1),
+    ("$['a\\'b']", "/a'b", 1),
+    ("$['~/']", "/~0~1", 1),
+    ("$['a.b']", "/a.b", 1),
+    ("$['a\\\\b']", "/a\\b", 1),
+    ("$['é'][3]", "/é/3", 2),
+    ("not a path", "not a path", None),
+    ("$.a!", "$.a!", None),
+]
+
+
+@pytest.mark.parametrize("path,pointer,depth", POINTERS)
+def test_native_pointer_and_depth(spark, path, pointer, depth):
+    row = (spark.createDataFrame([(path,)], "p string")
+           .select(json_pointer(F.col("p")).alias("ptr"),
+                   path_depth(F.col("p")).alias("d")).first())
+    assert row["ptr"] == pointer
+    if depth is not None:
+        assert row["d"] == depth
+
+
+def test_image_quality_names_configured_columns(spark):
+    df = spark.createDataFrame(
+        [("i0", 20000, 16, bytearray(8))],
+        "image_id string, width int, h int, blob binary")
+    cfg = {"w_col": "width", "bytes_col": "blob", "max_aspect": 20.0,
+           "min_bytes": 16}
+    got = {(r["keyword"], r["json_path"]) for r in
+           image_quality_violations(df, cfg, ["image_id"]).collect()}
+    assert got == {("imageQuality:aspect", "$.width"),
+                   ("imageQuality:bytes", "$.blob")}
+
+
+def test_location_outputs_plan_no_python(spark):
+    df = spark.createDataFrame([(1, 1, "a")], "id int, n int, s string")
+    v = CompiledValidator({"properties": {"n": {"minimum": 5},
+                                          "s": {"title": "t"}}}, df)
+    for out in (standard_output(v.violations(df)),
+                v.annotation_units(df, ["id"])):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan
+        assert "BatchEvalPython" not in plan
