@@ -2,7 +2,7 @@
 
 In the reference these recurse through ``descend()``
 (/root/reference/jsonschema/validators.py:396-446); here each subschema
-compiles to predicate Columns and composition is boolean algebra that
+compiles to SQL predicates and composition is boolean algebra that
 Catalyst evaluates vectorized — no short-circuiting needed
 (SURVEY.md §2.2).
 """
@@ -11,27 +11,23 @@ from __future__ import annotations
 
 import re as _re
 from dataclasses import replace as _dc_replace
-from functools import partial
 from typing import Any, Optional
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import sql as F
 from .context import CompileContext, pointer_escape
+from .keywords import _row_scope
 from .node import Node
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
                        fmt_message, make_check)
+from .sql import Expr
 
 STRING = T.StringType()
 
 
-def _row_scope(ctx: CompileContext) -> bool:
-    return ctx.target is None
-
-
-def _element_ok(ctx: CompileContext, subschema: Any, elem: Column,
-                dtype: T.DataType, fragment: str) -> Column:
+def _element_ok(ctx: CompileContext, subschema: Any, elem: Expr,
+                dtype: T.DataType, fragment: str) -> Expr:
     """Validity of one array element / map value under `subschema`."""
     child = ctx.child(target=elem, dtype=dtype, schema_fragment=fragment,
                       null_is_absent=False, row_fields=None)
@@ -51,8 +47,25 @@ def c_all_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     return out
 
 
-def _with_context(ctx: CompileContext, node: Node, keyword: str,
-                  children: list[Node], composite_ok: Column) -> Node:
+def _any(oks: list[Expr]) -> Expr:
+    """OR of `oks` seeded with FALSE: `anyOf: []` / `oneOf: []`
+    (meta-schema-invalid but tolerated, like the reference's any() over
+    no branches) fails every instance."""
+    return F.any_of([F.lit(False), *oks])
+
+
+def _gated(out: Node, child: Node, passes: Expr) -> Node:
+    """Add `child`'s checks and context to `out`, each passing where
+    `passes` holds."""
+    for chk in child.checks + child.context:
+        chk.pred = passes | chk.pred
+    out.checks.extend(child.checks)
+    out.context.extend(child.context)
+    return out
+
+
+def _with_context(node: Node, children: list[Node],
+                  composite_ok: Expr) -> Node:
     """Attach each child branch's checks as *context* of the composite
     error (ValidationError.context, exceptions.py:120-131): they fire
     only when the composite fails, never affect validity, and carry the
@@ -71,15 +84,10 @@ def c_any_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     branch errors attach as context."""
     children = [compile_subschema(ctx.child(schema_fragment=f"anyOf/{i}"),
                                   sub) for i, sub in enumerate(value)]
-    oks = [c.ok for c in children]
-    # seed False: `anyOf: []` (meta-schema-invalid but tolerated, like
-    # the reference's any() over no branches) fails every instance
-    pred = F.lit(False)
-    for o in oks:
-        pred = pred | o
-    node = make_check(ctx, "anyOf", pred, lambda: fmt_message(
+    pred = _any([c.ok for c in children])
+    node = make_check(ctx, "anyOf", pred, fmt_message(
         ctx, "%s is not valid under any of the given schemas"))
-    return _with_context(ctx, node, "anyOf", children, pred)
+    return _with_context(node, children, pred)
 
 
 def c_one_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -89,23 +97,20 @@ def c_one_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
                                   sub) for i, sub in enumerate(value)]
     oks = [c.ok for c in children]
     n = sum((o.cast("int") for o in oks), F.lit(0))
-    node = make_check(ctx, "oneOf", n == 1, lambda: fmt_message(
+    node = make_check(ctx, "oneOf", n == 1, fmt_message(
         ctx, "%s is not valid under exactly one of the given schemas"))
     # context (branch errors) attaches ONLY when NO branch matched —
     # the reference's too-many-matches error ("valid under each of")
     # carries no context (_keywords.py:360-373), so best_match must not
     # descend into branch errors there (caught by the r4 by_relevance
     # differential fuzz)
-    any_ok = F.lit(False)  # seed False: tolerate `oneOf: []` (fails all)
-    for o in oks:
-        any_ok = any_ok | o
-    return _with_context(ctx, node, "oneOf", children, any_ok)
+    return _with_context(node, children, _any(oks))
 
 
 def c_not(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     """`not` (_keywords.py:376-379)."""
     child = compile_subschema(ctx.child(schema_fragment="not"), value)
-    return make_check(ctx, "not", ~child.ok, lambda: fmt_message(
+    return make_check(ctx, "not", ~child.ok, fmt_message(
         ctx, "%s should not be valid under the given schema"))
 
 
@@ -116,24 +121,10 @@ def c_if(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     validators.py:392-393,440-441)."""
     if_ok = compile_subschema(ctx.child(schema_fragment="if"), value).ok
     out = Node()
-    if "then" in schema:
-        child = compile_subschema(ctx.child(schema_fragment="then"),
-                                  schema["then"])
-        for chk in child.checks:
-            chk.pred = (~if_ok) | chk.pred
-            out.checks.append(chk)
-        for chk in child.context:
-            chk.pred = (~if_ok) | chk.pred
-            out.context.append(chk)
-    if "else" in schema:
-        child = compile_subschema(ctx.child(schema_fragment="else"),
-                                  schema["else"])
-        for chk in child.checks:
-            chk.pred = if_ok | chk.pred
-            out.checks.append(chk)
-        for chk in child.context:
-            chk.pred = if_ok | chk.pred
-            out.context.append(chk)
+    for kw, passes in (("then", ~if_ok), ("else", if_ok)):
+        if kw in schema:
+            _gated(out, compile_subschema(ctx.child(schema_fragment=kw),
+                                          schema[kw]), passes)
     return out
 
 
@@ -263,8 +254,8 @@ def _memo_store(ctx: CompileContext, mkey: tuple, child: Node,
         return
     ctx.ref_memo[mkey] = (
         p0,
-        [c.clone() for c in child.checks],
-        [c.clone() for c in child.context],
+        [_dc_replace(c) for c in child.checks],
+        [_dc_replace(c) for c in child.context],
         [_dc_replace(a) for a in ann],
         list(ctx.warnings[n_warn:]),
     )
@@ -276,15 +267,12 @@ def _memo_replay(ctx: CompileContext, entry: tuple) -> Node:
     Check clones each time — see _memo_store."""
     p0, checks, context, ann, warns = entry
     p1 = ctx.schema_path
-    out = Node()
-    for chk in checks:
-        out.checks.append(chk.clone(
-            schema_path=_rebase_sp(chk.schema_path, p0, p1),
-            context_of=_rebase_sp(chk.context_of, p0, p1)))
-    for chk in context:
-        out.context.append(chk.clone(
-            schema_path=_rebase_sp(chk.schema_path, p0, p1),
-            context_of=_rebase_sp(chk.context_of, p0, p1)))
+
+    def moved(chk):
+        return _dc_replace(
+            chk, schema_path=_rebase_sp(chk.schema_path, p0, p1),
+            context_of=_rebase_sp(chk.context_of, p0, p1))
+    out = Node(list(map(moved, checks)), list(map(moved, context)))
     for a in ann:
         ctx.annotations.append(_dc_replace(
             a, schema_path=_rebase_sp(a.schema_path, p0, p1)))
@@ -305,10 +293,10 @@ def _compile_referent(ctx: CompileContext, referent: Any, rbase: str,
     """Shared tail of $ref/$dynamicRef/$recursiveRef: loop detection,
     resource-scope bookkeeping, then compile-time inlining.
 
-    Expansions are memoized per root compile: the compiled Columns
+    Expansions are memoized per root compile: the compiled expressions
     depend only on (referent identity, bound expression, dtype,
     NULL policy, resource base, dynamic scope), and the bound
-    expression is identified by its unresolved-plan string — so a
+    expression is identified by its SQL text — so a
     second occurrence of the same key replays the first compile's
     snapshot with schema paths rebased to the new call site.  Real
     corpora hit this hard: the issue232 Swagger meta-schema compile
@@ -338,12 +326,13 @@ def _compile_referent(ctx: CompileContext, referent: Any, rbase: str,
         # statically-absent scopes are excluded: their depth-8 recursion
         # cutoff depends on the incoming ref_stack, which is not keyed.
         # str(target) pins the exact bound expression: lambda variables
-        # carry globally unique names (x_1, x_2, ...), so an entry whose
-        # Columns reference a lambda variable can only ever hit inside
-        # that same lambda body, while closed expressions (field chains)
-        # hit across every route that binds the same column — and a
-        # hypothetically wrong reuse of an open expression fails the
-        # analyzer loudly (unresolved x_N), never silently.
+        # carry names unique within the compile (_x1, _x2, ...), so an
+        # entry whose expressions reference a lambda variable can only
+        # ever hit inside that same lambda body, while closed
+        # expressions (field chains) hit across every route that binds
+        # the same column — and a hypothetically wrong reuse of an open
+        # expression fails the analyzer loudly (unresolved _xN), never
+        # silently.
         mkey = (id(referent), ctx.json_path, str(ctx.target),
                 ctx.dtype.simpleString(), ctx.null_is_absent,
                 ctx.absent_policy, ctx.base_uri, ctx.dynamic_scope,
@@ -368,10 +357,7 @@ def _compile_referent(ctx: CompileContext, referent: Any, rbase: str,
     if mkey is not None:
         _memo_store(ctx, mkey, child, n_ann, n_warn)
     # $ref does not prefix the schema path (validators.py:392-393)
-    out = Node()
-    out.checks.extend(child.checks)
-    out.context.extend(child.context)
-    return out
+    return Node(child.checks, child.context)
 
 
 def c_ref(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -542,13 +528,12 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
         for fld in extras:
             target = ctx.member(fld.name)
             if value is False:
-                n = make_check(
+                out.checks += make_check(
                     ctx.child(path_fragment=fld.name, row_fields=None),
                     keyword, target.isNull(),
                     f"Additional properties are not allowed "
-                    f"('{fld.name}' was unexpected)")
-                n.checks[0].failing_value = partial(target.cast, "string")
-                out.checks.extend(n.checks)
+                    f"('{fld.name}' was unexpected)",
+                    failing_value=target.cast("string")).checks
             elif value is not True:
                 child_ctx = _bind_member(ctx, fld, keyword)
                 child = compile_subschema(child_ctx, value)
@@ -562,11 +547,9 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
                      f"patternProperties; skipped")
             return None
 
-        def is_extra(k: Column) -> Column:
-            cond = ~k.isin(*known) if known else F.lit(True)
-            for j in jrx:
-                cond = cond & ~k.rlike(j)
-            return cond
+        def is_extra(k: Expr) -> Expr:
+            return F.all_of(([~k.isin(*known)] if known else [])
+                            + [~k.rlike(j) for j in jrx])
 
         if value is False:
             bad = F.size(F.filter(F.map_keys(ctx.target), is_extra))
@@ -594,10 +577,9 @@ def c_property_names(ctx: CompileContext, value: Any,
             name_ok = _element_ok(ctx, value, F.lit(fld.name), STRING,
                                   "propertyNames")
             target = ctx.member(fld.name)
-            n = make_check(ctx, "propertyNames", target.isNull() | name_ok,
-                           f"property name '{fld.name}' fails "
-                           f"propertyNames")
-            out.checks.extend(n.checks)
+            out.checks += make_check(
+                ctx, "propertyNames", target.isNull() | name_ok,
+                f"property name '{fld.name}' fails propertyNames").checks
         return out
     if ctx.is_map():
         ok = F.forall(F.map_keys(ctx.target),
@@ -619,18 +601,12 @@ def c_dependent_schemas(ctx: CompileContext, value: Any,
         if ctx.is_map():
             present = F.map_contains_key(ctx.target, F.lit(prop))
         else:
-            fld = members.get(prop)
-            if fld is None:
+            if prop not in members:
                 continue  # trigger statically absent -> vacuous
             present = ctx.member(prop).isNotNull()
-        child = compile_subschema(
-            ctx.child(schema_fragment=f"dependentSchemas/{pointer_escape(prop)}"), sub)
-        for chk in child.checks:
-            chk.pred = (~present) | chk.pred
-            out.checks.append(chk)
-        for chk in child.context:
-            chk.pred = (~present) | chk.pred
-            out.context.append(chk)
+        _gated(out, compile_subschema(ctx.child(
+            schema_fragment=f"dependentSchemas/{pointer_escape(prop)}"),
+            sub), ~present)
     return out
 
 
@@ -648,14 +624,21 @@ def c_prefix_items(ctx: CompileContext, value: Any,
         ok = _element_ok(ctx.child(path_fragment=i), sub, elem, elem_t,
                          f"prefixItems/{i}")
         pred = (F.size(ctx.target) <= i) | ok
-        n = make_check(ctx.child(path_fragment=i, row_fields=None),
-                       "prefixItems", pred,
-                       f"item {i} fails prefixItems/{i}",
-                       schema_suffix=f"prefixItems/{i}")
-        n.checks[0].failing_value = \
-            lambda i=i: F.get(ctx.target, i).cast("string")
-        out.checks.extend(n.checks)
+        out.checks += make_check(
+            ctx.child(path_fragment=i, row_fields=None), "prefixItems",
+            pred, f"item {i} fails prefixItems/{i}",
+            schema_suffix=f"prefixItems/{i}",
+            failing_value=elem.cast("string")).checks
     return out
+
+
+def _rest_ok(ctx: CompileContext, prefix: int, sub: Any,
+             fragment: str) -> Expr:
+    """Every element past the first `prefix` is valid under `sub`."""
+    c = ctx.target
+    rest = F.slice(c, prefix + 1, F.greatest(F.size(c) - prefix, F.lit(0)))
+    return F.forall(rest, lambda x: _element_ok(
+        ctx, sub, x, ctx.dtype.elementType, fragment))
 
 
 def c_items(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -663,20 +646,15 @@ def c_items(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_array():
         return None
     prefix = len(schema.get("prefixItems", []))
-    c = ctx.target
     if value is False:
-        pred = F.size(c) <= prefix
-        return make_check(ctx, "items", pred,
+        return make_check(ctx, "items", F.size(ctx.target) <= prefix,
                           f"array has items beyond the {prefix} "
                           f"allowed prefix items")
     if value is True:
         return None
-    rest = F.slice(c, prefix + 1,
-                   F.greatest(F.size(c) - prefix, F.lit(0)))
-    ok = F.forall(rest, lambda x: _element_ok(ctx, value, x,
-                                              ctx.dtype.elementType, "items"))
-    return make_check(ctx, "items", ok, lambda: fmt_message(
-        ctx, "%s has items failing the items subschema"))
+    return make_check(ctx, "items", _rest_ok(ctx, prefix, value, "items"),
+                      fmt_message(ctx, "%s has items failing the items "
+                                       "subschema"))
 
 
 def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -689,46 +667,34 @@ def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
                         lambda x: _element_ok(ctx, value, x,
                                               ctx.dtype.elementType,
                                               "contains")))
-    out = Node()
-    node = make_check(ctx, "contains", n >= min_c, lambda: fmt_message(
+    out = make_check(ctx, "contains", n >= min_c, fmt_message(
         ctx, "%s does not contain enough matching items"))
-    out.checks.extend(node.checks)
     if max_c is not None:
-        node = make_check(ctx, "maxContains", n <= max_c, lambda: fmt_message(
-            ctx, "%s contains too many matching items"))
-        out.checks.extend(node.checks)
+        out.checks += make_check(ctx, "maxContains", n <= max_c, fmt_message(
+            ctx, "%s contains too many matching items")).checks
     return out
 
 
-# ---------------------------------- unevaluated* (dynamic Column tracking)
+# ------------------------------ unevaluated* (dynamic predicate tracking)
 #
 # The reference computes evaluated keys/indexes at runtime by re-running
 # sibling applicators (_utils.py:240-406).  In the vectorized engine the
 # candidate key set is static (struct fields) and array elements carry a
 # position, so the *conditions* under which each key/index is evaluated
-# compile to Columns: "anyOf branch i evaluated key k" becomes
+# compile to predicates: "anyOf branch i evaluated key k" becomes
 # `branch_i_ok & eval_cond(branch_i, k)`.  Exact per-row semantics, no
 # approximation — Catalyst CSE dedups repeated branch predicates.
 
 def _or_conds(conds: list[Any]) -> Any:
-    """OR of static bools and Columns; True short-circuits statically."""
-    cols = []
-    for c in conds:
-        if c is True:
-            return True
-        if c is False:
-            continue
-        cols.append(c)
-    if not cols:
-        return False
-    out = cols[0]
-    for c in cols[1:]:
-        out = out | c
-    return out
+    """OR of static bools and predicates; True short-circuits statically."""
+    if any(c is True for c in conds):
+        return True
+    preds = [c for c in conds if c is not False]
+    return F.any_of(preds) if preds else False
 
 
 def _sub_ok(ctx: CompileContext, sub: Any, fragment: str) -> Any:
-    """Validity (static bool or Column) of the bound instance under a
+    """Validity (static bool or Expr) of the bound instance under a
     sibling subschema — the `is_valid(descend(...))` of _utils.py."""
     if sub is True or sub == {}:
         return True
@@ -738,9 +704,9 @@ def _sub_ok(ctx: CompileContext, sub: Any, fragment: str) -> Any:
     return node.ok if node.checks else True
 
 
-def _member_ok(ctx: CompileContext, sub: Any, member: Column,
+def _member_ok(ctx: CompileContext, sub: Any, member: Expr,
                dtype: T.DataType, fragment: str) -> Any:
-    """Validity of one member value under `sub` (bool or Column)."""
+    """Validity of one member value under `sub` (bool or Expr)."""
     if sub is True or sub == {}:
         return True
     if sub is False:
@@ -748,24 +714,63 @@ def _member_ok(ctx: CompileContext, sub: Any, member: Column,
     return _element_ok(ctx, sub, member, dtype, fragment)
 
 
-def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
-                         fld: T.StructField, member: Column,
-                         depth: int = 0) -> Any:
-    """Condition under which struct member `fld` is *evaluated* by
-    `schema` — the Column lift of find_evaluated_property_keys_by_schema
-    (_utils.py:317-406).  Consulted only for present (non-null) members.
-    Returns True/False statically or a boolean Column."""
-    if not isinstance(schema, dict) or depth > 12:
+def _and(gate: Any, cond: Any) -> Any:
+    """AND of a static bool or predicate `gate` and `cond`."""
+    if gate is False or cond is False:
         return False
-    conds: list[Any] = []
+    if gate is True or cond is True:
+        return cond if gate is True else gate
+    return gate & cond
+
+
+def _ref_conds(ctx: CompileContext, schema: dict, rec) -> list[Any]:
+    """`rec` of each reference's target (None when unresolvable)."""
+    out = []
     for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
         if kw in schema and isinstance(schema[kw], str):
             try:
-                resolved = _resolve_for_tracking(ctx, schema, kw)
+                target = _resolve_for_tracking(ctx, schema, kw)
             except SchemaCompileError:
-                resolved = None
-            conds.append(_evaluated_prop_cond(ctx, resolved, fld, member,
-                                              depth + 1))
+                target = None
+            out.append(rec(target))
+    return out
+
+
+def _branch_conds(ctx: CompileContext, schema: dict, rec) -> list[Any]:
+    """`rec` of each allOf/oneOf/anyOf branch, where that branch holds."""
+    out = []
+    for kw in ("allOf", "oneOf", "anyOf"):
+        for i, sub in enumerate(schema.get(kw) or []):
+            cond = rec(sub)
+            if cond is not False:
+                out.append(_and(_sub_ok(ctx, sub, f"{kw}/{i}"), cond))
+    return out
+
+
+def _if_conds(ctx: CompileContext, schema: dict, rec) -> list[Any]:
+    """`rec` of if and then where `if` holds, of else where it fails."""
+    if "if" not in schema:
+        return []
+    if_ok = _sub_ok(ctx, schema["if"], "if")
+    neg = (not if_ok) if isinstance(if_ok, bool) else ~if_ok
+    return [_and(gate, rec(schema[kw]))
+            for kw, gate in (("if", if_ok), ("then", if_ok), ("else", neg))
+            if kw in schema]
+
+
+def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
+                         fld: T.StructField, member: Expr,
+                         depth: int = 0) -> Any:
+    """Condition under which struct member `fld` is *evaluated* by
+    `schema` — the predicate lift of find_evaluated_property_keys_by_schema
+    (_utils.py:317-406).  Consulted only for present (non-null) members.
+    Returns True/False statically or a boolean Expr."""
+    if not isinstance(schema, dict) or depth > 12:
+        return False
+
+    def rec(sub: Any) -> Any:
+        return _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
+    conds: list[Any] = _ref_conds(ctx, schema, rec)
     props = schema.get("properties")
     if isinstance(props, dict) and fld.name in props:
         conds.append(True)
@@ -783,38 +788,9 @@ def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
             if prop not in names:
                 continue  # trigger statically absent -> never applies
             trigger = ctx.member(prop).isNotNull()
-            rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
-            if rec is False:
-                continue
-            conds.append(trigger if rec is True else trigger & rec)
-    for kw in ("allOf", "oneOf", "anyOf"):
-        for i, sub in enumerate(schema.get(kw) or []):
-            rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
-            if rec is False:
-                continue
-            ok = _sub_ok(ctx, sub, f"{kw}/{i}")
-            if ok is False:
-                continue
-            if ok is True:
-                conds.append(rec)
-            else:
-                conds.append(ok if rec is True else ok & rec)
-    if "if" in schema:
-        if_ok = _sub_ok(ctx, schema["if"], "if")
-        branches = [(if_ok, schema["if"])]
-        if "then" in schema:
-            branches.append((if_ok, schema["then"]))
-        if "else" in schema:
-            neg = (not if_ok) if isinstance(if_ok, bool) else ~if_ok
-            branches.append((neg, schema["else"]))
-        for gate, sub in branches:
-            rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
-            if rec is False or gate is False:
-                continue
-            if gate is True:
-                conds.append(rec)
-            else:
-                conds.append(gate if rec is True else gate & rec)
+            conds.append(_and(trigger, rec(sub)))
+    conds += _branch_conds(ctx, schema, rec)
+    conds += _if_conds(ctx, schema, rec)
     return _or_conds(conds)
 
 
@@ -839,13 +815,12 @@ def c_unevaluated_properties(ctx: CompileContext, value: Any,
                 continue
             if sub_ok is not False:
                 bad = bad & ~sub_ok
-            n = make_check(
+            out.checks += make_check(
                 ctx.child(path_fragment=fld.name, row_fields=None),
                 "unevaluatedProperties", ~bad,
                 f"Unevaluated properties are not allowed "
-                f"('{fld.name}' was unexpected)")
-            n.checks[0].failing_value = partial(member.cast, "string")
-            out.checks.extend(n.checks)
+                f"('{fld.name}' was unexpected)",
+                failing_value=member.cast("string")).checks
         return out
     if ctx.is_map():
         # fall back to the static key approximation for map payloads:
@@ -895,15 +870,18 @@ def _static_evaluated_keys(ctx: CompileContext, schema: Any,
     return names, pats
 
 
-def _evaluated_item_cond(ctx: CompileContext, schema: Any, x: Column,
-                         i: Column, depth: int = 0) -> Any:
+def _evaluated_item_cond(ctx: CompileContext, schema: Any, x: Expr,
+                         i: Expr, depth: int = 0) -> Any:
     """Condition under which element `x` at 0-based index `i` is
-    evaluated — the Column lift of find_evaluated_item_indexes_by_schema
+    evaluated — the predicate lift of find_evaluated_item_indexes_by_schema
     (_utils.py:240-313)."""
     if not isinstance(schema, dict) or depth > 12:
         return False
     if "items" in schema and not isinstance(schema["items"], list):
         return True  # _utils.py:251-252: items evaluates every index
+
+    def rec(sub: Any) -> Any:
+        return _evaluated_item_cond(ctx, sub, x, i, depth + 1)
     conds: list[Any] = []
     if isinstance(schema.get("items"), list):
         # 2019-09 positional form evaluates the prefix only
@@ -913,49 +891,16 @@ def _evaluated_item_cond(ctx: CompileContext, schema: Any, x: Column,
             conds.append(_member_ok(ctx, schema["additionalItems"], x,
                                     ctx.dtype.elementType,
                                     "additionalItems"))
-    for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
-        if kw in schema and isinstance(schema[kw], str):
-            try:
-                resolved = _resolve_for_tracking(ctx, schema, kw)
-            except SchemaCompileError:
-                resolved = None
-            conds.append(_evaluated_item_cond(ctx, resolved, x, i,
-                                              depth + 1))
+    conds += _ref_conds(ctx, schema, rec)
     prefix = schema.get("prefixItems")
     if isinstance(prefix, list) and prefix:
         conds.append(i < F.lit(len(prefix)))
-    if "if" in schema:
-        if_ok = _sub_ok(ctx, schema["if"], "if")
-        branches = [(if_ok, schema["if"])]
-        if "then" in schema:
-            branches.append((if_ok, schema["then"]))
-        if "else" in schema:
-            neg = (not if_ok) if isinstance(if_ok, bool) else ~if_ok
-            branches.append((neg, schema["else"]))
-        for gate, sub in branches:
-            rec = _evaluated_item_cond(ctx, sub, x, i, depth + 1)
-            if rec is False or gate is False:
-                continue
-            if gate is True:
-                conds.append(rec)
-            else:
-                conds.append(gate if rec is True else gate & rec)
+    conds += _if_conds(ctx, schema, rec)
     for kw in ("contains", "unevaluatedItems"):
         if kw in schema:
             conds.append(_member_ok(ctx, schema[kw], x,
                                     ctx.dtype.elementType, kw))
-    for kw in ("allOf", "oneOf", "anyOf"):
-        for bi, sub in enumerate(schema.get(kw) or []):
-            rec = _evaluated_item_cond(ctx, sub, x, i, depth + 1)
-            if rec is False:
-                continue
-            ok = _sub_ok(ctx, sub, f"{kw}/{bi}")
-            if ok is False:
-                continue
-            if ok is True:
-                conds.append(rec)
-            else:
-                conds.append(ok if rec is True else ok & rec)
+    conds += _branch_conds(ctx, schema, rec)
     return _or_conds(conds)
 
 
@@ -968,7 +913,7 @@ def c_unevaluated_items(ctx: CompileContext, value: Any,
         return None
     c = ctx.target
 
-    def bad_elem(x: Column, i: Column) -> Column:
+    def bad_elem(x: Expr, i: Expr) -> Expr:
         evaluated = _evaluated_item_cond(ctx, schema, x, i)
         if evaluated is True:
             return F.lit(False)

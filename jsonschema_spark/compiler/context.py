@@ -16,6 +16,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sql import Expr, col
+
 if TYPE_CHECKING:
     from .registry import KeywordRegistry
 
@@ -99,7 +101,7 @@ class CompileContext:
     """State for compiling one subschema against one bound expression."""
 
     registry: "KeywordRegistry"
-    target: Optional[Column]          # bound instance expression (None = row scope)
+    target: Optional[Expr]            # bound instance expression (None = row scope)
     dtype: Optional[T.DataType]       # Spark type of `target` (None = row scope)
     json_path: str = "$"
     schema_path: str = ""
@@ -139,27 +141,18 @@ class CompileContext:
     max_ref_depth: int = 64
     #: compile-time $ref expansion memo, shared down the tree (like
     #: `warnings`) and scoped to one root compile.  Keyed by
-    #: (referent identity, json_path, target expression string, dtype,
+    #: (referent identity, json_path, target expression text, dtype,
     #: binding flags, resource base, dynamic scope) — everything the
-    #: compiled Columns can depend on.  See applicators._compile_referent.
+    #: compiled expressions can depend on.  See
+    #: applicators._compile_referent.
     ref_memo: dict = field(default_factory=dict)
-    #: per-root-compile Column cache for target-derived helper
-    #: expressions that every keyword check rebuilds identically
-    #: (stringified failing value, the NULL-absent guard, common
-    #: literals).  Each py4j Column construction is a JVM round trip
-    #: (~0.1ms); a node with five keyword checks otherwise pays it five
-    #: times over for byte-identical expressions.  Keyed on
-    #: (id(target), op) with the target Column pinned in the value so
-    #: CPython cannot recycle the id while the cache lives; shared down
-    #: the tree by `child()`'s `replace` like `ref_memo`/`warnings`.
-    expr_cache: dict = field(default_factory=dict)
     warnings: list[str] = field(default_factory=list)
     #: AnnotationUnit rows collected during compile (annotation keywords
     #: like readOnly/title/default with their locations + applicability
     #: predicates) — shared down the tree like `warnings`.
     annotations: list = field(default_factory=list)
 
-    def child(self, *, target: Optional[Column] = None,
+    def child(self, *, target: Optional[Expr] = None,
               dtype: Optional[T.DataType] = None,
               path_fragment: Any = None,
               schema_fragment: Any = None,
@@ -174,11 +167,11 @@ class CompileContext:
                        json_path=jp, schema_path=sp, row_fields=rf,
                        null_is_absent=nia, warnings=self.warnings)
 
-    def member(self, name: str) -> Column:
+    def member(self, name: str) -> Expr:
         """Object member `name` of the target: a column at row scope,
         quoted so a dot in the name is not read as struct access."""
         if self.target is None:
-            return F.col("`" + name.replace("`", "``") + "`")
+            return col(name)
         return self.target.getField(name)
 
     def warn(self, msg: str) -> None:

@@ -10,16 +10,18 @@ Spark type, so no runtime cost is paid.
 
 from __future__ import annotations
 
+import operator
+from dataclasses import replace
 from typing import Any, Optional
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import sql as F
 from .context import CompileContext
-from .node import Node, null_string
-from .registry import (KeywordRegistry, SchemaCompileError, cached_expr,
-                       cached_lit, fmt_message, make_check)
+from .node import Node
+from .registry import (KeywordRegistry, SchemaCompileError, fmt_message,
+                       make_check)
+from .sql import Expr
 from ..functions.regex import compile_pattern_predicate
 from ..functions.formats import format_predicate
 
@@ -33,11 +35,11 @@ def _row_scope(ctx: CompileContext) -> bool:
 
 # ---------------------------------------------------------------- type ----
 
-def _type_pred_for(ctx: CompileContext, t: str) -> Optional[Column]:
+def _type_pred_for(ctx: CompileContext, t: str) -> Optional[Expr]:
     """Predicate for one JSON type name against the bound Spark type.
 
     Returns ``None`` for a statically-guaranteed match (no runtime check
-    needed), or a Column, or ``F.lit(False)`` for a static mismatch.
+    needed), or an expression, or ``F.lit(False)`` for a static mismatch.
     bool-is-not-int per _types.py:34-38; draft6+ integer-valued floats per
     _types.py:195-201.  Registry-level redefinitions
     (``KeywordRegistry.redefine_type``, the TypeChecker.redefine
@@ -46,33 +48,23 @@ def _type_pred_for(ctx: CompileContext, t: str) -> Optional[Column]:
     c = ctx.target
     override = getattr(ctx.registry, "type_predicates", {}).get(t)
     if override is not None:
-        return override(ctx)
-    if t == "any":
-        return None
+        # the callback builds PySpark Columns over a Column target
+        p = override(replace(ctx, target=F.column(c)))
+        return p if p is None or isinstance(p, Expr) else F.from_column(p)
     if t == "null":
-        return cached_expr(ctx, "isnull", c.isNull)
-    if t == "string":
-        return None if ctx.is_string() else cached_lit(ctx, False)
-    if t == "boolean":
-        return None if ctx.is_boolean() else cached_lit(ctx, False)
-    if t == "integer":
-        if ctx.is_integral():
-            return None
-        if ctx.is_numeric():  # float/double/decimal: zero fractional part
-            # modulo stays in the double domain (floor() returns BIGINT
-            # and overflows beyond int64 — 1e308 IS a draft6+ integer)
-            return cached_expr(
-                ctx, "int_valued",
-                lambda: (c.cast("double") % 1.0) == 0.0)
-        return cached_lit(ctx, False)
-    if t == "number":
-        return None if ctx.is_numeric() else cached_lit(ctx, False)
-    if t == "array":
-        return None if ctx.is_array() else cached_lit(ctx, False)
-    if t == "object":
-        return None if (ctx.is_struct() or ctx.is_map()) \
-            else cached_lit(ctx, False)
-    raise SchemaCompileError(f"unknown type {t!r}")
+        return c.isNull()
+    if t == "integer" and ctx.is_numeric() and not ctx.is_integral():
+        # float/double/decimal: zero fractional part; modulo stays in the
+        # double domain (floor() returns BIGINT and overflows beyond
+        # int64 — 1e308 IS a draft6+ integer)
+        return (c.cast("double") % 1.0) == 0.0
+    static = {"any": True, "string": ctx.is_string(),
+              "boolean": ctx.is_boolean(), "integer": ctx.is_integral(),
+              "number": ctx.is_numeric(), "array": ctx.is_array(),
+              "object": ctx.is_struct() or ctx.is_map()}
+    if t not in static:
+        raise SchemaCompileError(f"unknown type {t!r}")
+    return None if static[t] else F.lit(False)
 
 
 def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -93,76 +85,60 @@ def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
         # non-null values of this Spark type always satisfy; NULL handling
         # is the binding guard's job (absent) or fails for array elements.
         if not ctx.null_is_absent and "null" not in types:
-            return make_check(
-                ctx, "type",
-                cached_expr(ctx, "isnotnull", ctx.target.isNotNull),
-                f"None is not of type {_fmt_types(types)}")
+            return make_check(ctx, "type", ctx.target.isNotNull(),
+                              f"None is not of type {_fmt_types(types)}")
         return None
-    pred = preds[0]
-    for p in preds[1:]:
-        pred = pred | p
+    pred = F.any_of(preds)
     if not ctx.null_is_absent and "null" not in types:
-        pred = cached_expr(ctx, "isnotnull", ctx.target.isNotNull) & pred
+        pred = ctx.target.isNotNull() & pred
     template = "%s is not of type " + _fmt_types(types).replace("%", "%%")
     if all(_is_static_false(p) for p in preds):
         ctx.warn(f"type {types} can never match Spark type "
                  f"{ctx.dtype.simpleString() if ctx.dtype else '?'}")
-    return make_check(ctx, "type", pred,
-                      lambda: fmt_message(ctx, template))
+    return make_check(ctx, "type", pred, fmt_message(ctx, template))
 
 
 def _fmt_types(types: list[str]) -> str:
     return ", ".join(f"'{t}'" for t in types)
 
 
-_STATIC_FALSE_STR: Optional[str] = None
-
-
-def _is_static_false(p: Optional[Column]) -> bool:
-    if p is None:
-        return False
-    global _STATIC_FALSE_STR
-    if _STATIC_FALSE_STR is None:
-        _STATIC_FALSE_STR = str(F.lit(False))
-    return str(p) == _STATIC_FALSE_STR
+def _is_static_false(p: Optional[Expr]) -> bool:
+    return p is not None and p.text == "false"
 
 
 # ------------------------------------------------------------ enum/const --
 
-def typed_literal_eq(c: Column, dtype: Optional[T.DataType],
-                     v: Any) -> Column:
+def typed_literal_eq(c: Expr, dtype: Optional[T.DataType],
+                     v: Any) -> Expr:
     """Structural equality of a typed expression against a JSON literal,
     per the reference's ``equal`` (_utils.py:133-148): bool is never
     equal to 0/1, numeric equality is mathematical (1 == 1.0), object
     equality is key-order-insensitive, absent member == NULL field.
     Static type mismatches fold to ``lit(False)`` ("can never equal").
     """
-    def never() -> Column:
-        return F.lit(False)
-
     if v is None:
         return c.isNull()
     present = c.isNotNull()
     if isinstance(v, bool):
         if not isinstance(dtype, T.BooleanType):
-            return never()
+            return F.lit(False)
         return present & (c == v)
     if isinstance(v, (int, float)):
         if not isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType,
                                   T.LongType, T.FloatType, T.DoubleType,
                                   T.DecimalType)):
-            return never()
+            return F.lit(False)
         if isinstance(v, int) and isinstance(dtype, (T.ByteType, T.ShortType,
                                                      T.IntegerType, T.LongType)):
             return present & (c == v)
         return present & (c.cast("double") == float(v))
     if isinstance(v, str):
         if not isinstance(dtype, T.StringType):
-            return never()
+            return F.lit(False)
         return present & (c == v)
     if isinstance(v, list):
         if not isinstance(dtype, T.ArrayType):
-            return never()
+            return F.lit(False)
         pred = present & (F.size(c) == len(v))
         for i, e in enumerate(v):
             pred = pred & typed_literal_eq(
@@ -174,7 +150,7 @@ def typed_literal_eq(c: Column, dtype: Optional[T.DataType],
             pred = present
             for k, val in v.items():
                 if k not in names:
-                    return never()
+                    return F.lit(False)
                 pred = pred & typed_literal_eq(c.getField(k), names[k], val)
             for f in dtype.fields:      # extra non-null field -> not equal
                 if f.name not in v:
@@ -186,11 +162,11 @@ def typed_literal_eq(c: Column, dtype: Optional[T.DataType],
                 pred = pred & typed_literal_eq(
                     F.element_at(c, F.lit(k)), dtype.valueType, val)
             return pred
-        return never()
-    return never()
+        return F.lit(False)
+    return F.lit(False)
 
 
-def _literal_eq(ctx: CompileContext, v: Any) -> Optional[Column]:
+def _literal_eq(ctx: CompileContext, v: Any) -> Optional[Expr]:
     """Typed equality of the bound target against a literal; None when
     the literal can never equal a value of the bound Spark type (dropped
     from enum disjunctions — same truth value as lit(False))."""
@@ -207,27 +183,19 @@ def _scalar_isin_values(ctx: CompileContext, value: list) -> Optional[list]:
     column's Spark type already excludes cross-type equality."""
     out = []
     for v in value:
-        if v is None or isinstance(v, (list, dict)):
+        if not isinstance(v, (bool, int, float, str)):
             return None
-        if isinstance(v, bool):
-            if not ctx.is_boolean():
-                continue  # can never equal; drop from the disjunction
-        elif isinstance(v, (int, float)):
-            if not ctx.is_numeric():
-                continue
-        elif isinstance(v, str):
-            if not ctx.is_string():
-                continue
-        else:
-            return None
-        out.append(v)
+        # a value of another JSON type can never equal: drop it
+        if (ctx.is_boolean() if isinstance(v, bool) else ctx.is_string()
+                if isinstance(v, str) else ctx.is_numeric()):
+            out.append(v)
     return out
 
 
 def c_enum(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     """`enum` (_keywords.py:269-271): scalar enums compile to ONE
-    `isin` (broadcast hash lookup, one py4j call regardless of enum
-    size — the const-vs-enum guard); structural members fall back to
+    `isin` (one hash lookup regardless of enum size — the
+    const-vs-enum guard); structural members fall back to
     typed equality."""
     if _row_scope(ctx):
         ctx.warn("enum at row scope unsupported; ignored")
@@ -239,15 +207,9 @@ def c_enum(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
             # a null element is present and no scalar member equals it
             pred = F.coalesce(pred, F.lit(False))
     else:
-        eqs = [e for e in (_literal_eq(ctx, v) for v in value)
-               if e is not None]
-        if not eqs:
-            pred = F.lit(False)
-        else:
-            pred = eqs[0]
-            for e in eqs[1:]:
-                pred = pred | e
-    return make_check(ctx, "enum", pred, lambda: fmt_message(
+        pred = F.any_of(e for e in (_literal_eq(ctx, v) for v in value)
+                        if e is not None)
+    return make_check(ctx, "enum", pred, fmt_message(
         ctx, "%s is not one of the permitted values"))
 
 
@@ -258,7 +220,7 @@ def c_const(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
         return None
     eq = _literal_eq(ctx, value)
     pred = eq if eq is not None else F.lit(False)
-    return make_check(ctx, "const", pred, lambda: fmt_message(
+    return make_check(ctx, "const", pred, fmt_message(
         ctx, "%s was expected to equal the const value"))
 
 
@@ -271,28 +233,19 @@ def _numeric_kw(ctx: CompileContext, keyword: str, value: Any,
     if not isinstance(value, (int, float)) or isinstance(value, bool):
         raise SchemaCompileError(f"{keyword} value must be a number")
     pred = op(ctx.target, value)
-    return make_check(ctx, keyword, pred, lambda: fmt_message(
+    return make_check(ctx, keyword, pred, fmt_message(
         ctx, f"%s violates {keyword} {value}"))
 
 
-def c_minimum(ctx, value, schema):
-    """`minimum` (_keywords.py:158-164)."""
-    return _numeric_kw(ctx, "minimum", value, lambda c, v: c >= v)
+def _bound(keyword: str, op):
+    return lambda ctx, value, schema: _numeric_kw(ctx, keyword, value, op)
 
 
-def c_maximum(ctx, value, schema):
-    """`maximum` (_keywords.py:149-155)."""
-    return _numeric_kw(ctx, "maximum", value, lambda c, v: c <= v)
-
-
-def c_exclusive_minimum(ctx, value, schema):
-    """`exclusiveMinimum` (_keywords.py:127-135)."""
-    return _numeric_kw(ctx, "exclusiveMinimum", value, lambda c, v: c > v)
-
-
-def c_exclusive_maximum(ctx, value, schema):
-    """`exclusiveMaximum` (_keywords.py:138-146)."""
-    return _numeric_kw(ctx, "exclusiveMaximum", value, lambda c, v: c < v)
+#: the bounds (_keywords.py:127-164)
+c_minimum = _bound("minimum", operator.ge)
+c_maximum = _bound("maximum", operator.le)
+c_exclusive_minimum = _bound("exclusiveMinimum", operator.gt)
+c_exclusive_maximum = _bound("exclusiveMaximum", operator.lt)
 
 
 def c_multiple_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -323,26 +276,32 @@ def c_multiple_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Nod
         # (tests/test_property_differential.py, 0/612k disagreements)
         pred = ((q % 1.0) == 0.0) \
             | ((c.cast("double") % float(value)) == 0.0)
-    return make_check(ctx, "multipleOf", pred, lambda: fmt_message(
+    return make_check(ctx, "multipleOf", pred, fmt_message(
         ctx, f"%s is not a multiple of {value}"))
 
 
 # --------------------------------------------------------------- strings --
 
-def c_min_length(ctx: CompileContext, value, schema) -> Optional[Node]:
-    """`minLength` (_keywords.py:231-234). Spark length() = codepoints."""
-    if _row_scope(ctx) or not ctx.is_string():
-        return None
-    return make_check(ctx, "minLength", F.length(ctx.target) >= int(value),
-                      lambda: fmt_message(ctx, "%s is too short"))
+def _count_kw(keyword: str, applies, count, op, message: str):
+    """A bound on a string's length or an array's size."""
+    def compile_kw(ctx: CompileContext, value, schema) -> Optional[Node]:
+        if _row_scope(ctx) or not applies(ctx):
+            return None
+        return make_check(ctx, keyword, op(count(ctx.target), int(value)),
+                          fmt_message(ctx, message))
+    return compile_kw
 
 
-def c_max_length(ctx: CompileContext, value, schema) -> Optional[Node]:
-    """`maxLength` (_keywords.py:237-240)."""
-    if _row_scope(ctx) or not ctx.is_string():
-        return None
-    return make_check(ctx, "maxLength", F.length(ctx.target) <= int(value),
-                      lambda: fmt_message(ctx, "%s is too long"))
+#: minLength/maxLength (_keywords.py:231-240; Spark length() counts
+#: code points) and minItems/maxItems (_keywords.py:194-203)
+c_min_length = _count_kw("minLength", CompileContext.is_string, F.length,
+                         operator.ge, "%s is too short")
+c_max_length = _count_kw("maxLength", CompileContext.is_string, F.length,
+                         operator.le, "%s is too long")
+c_min_items = _count_kw("minItems", CompileContext.is_array, F.size,
+                        operator.ge, "%s is too short")
+c_max_items = _count_kw("maxItems", CompileContext.is_array, F.size,
+                        operator.le, "%s is too long")
 
 
 def c_pattern(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -357,7 +316,7 @@ def c_pattern(ctx: CompileContext, value, schema) -> Optional[Node]:
     pred = compile_pattern_predicate(ctx.target, value, warn=ctx.warn)
     template = "%s does not match " + value.replace("%", "%%")
     return make_check(ctx, "pattern", pred,
-                      lambda: fmt_message(ctx, template))
+                      fmt_message(ctx, template))
 
 
 def c_format(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -379,19 +338,17 @@ def c_format(ctx: CompileContext, value, schema) -> Optional[Node]:
         return None
     template = "%s is not a " + str(value).replace("%", "%%")
     return make_check(ctx, "format", pred,
-                      lambda: fmt_message(ctx, template))
+                      fmt_message(ctx, template))
 
 
 # ------------------------------------------------------- object keywords --
 
 def _row_field_names(ctx: CompileContext) -> list[str]:
-    if ctx.row_fields is None:
-        return []
-    return [f.name for f in ctx.row_fields]
+    return [f.name for f in ctx.row_fields or ()]
 
 
-def _member(ctx: CompileContext, name: str) -> Optional[Column]:
-    """Column expression for object member `name`, or None if statically
+def _member(ctx: CompileContext, name: str) -> Optional[Expr]:
+    """Expression for object member `name`, or None if statically
     absent (flat table without that column)."""
     if _row_scope(ctx):
         return ctx.member(name) if name in _row_field_names(ctx) else None
@@ -413,10 +370,9 @@ def c_required(ctx: CompileContext, value, schema) -> Optional[Node]:
         pred = F.lit(False) if m is None else m.isNotNull()
         if m is None:
             ctx.warn(f"required property {name!r} not in schema — always fails")
-        sub = make_check(ctx, "required", pred,
-                         f"'{name}' is a required property")
-        sub.checks[0].failing_value = null_string
-        out.checks.extend(sub.checks)
+        out.checks += make_check(ctx, "required", pred,
+                                 f"'{name}' is a required property",
+                                 failing_value=F.null_string()).checks
     return out
 
 
@@ -431,15 +387,14 @@ def c_dependent_required(ctx: CompileContext, value, schema) -> Optional[Node]:
             continue  # trigger property statically absent -> vacuous
         for dep in deps:
             d = _member(ctx, dep)
-            dep_present = F.lit(False) if d is None else d.isNotNull()
-            pred = p.isNull() | dep_present
-            sub = make_check(ctx, "dependentRequired", pred,
-                             f"'{dep}' is a dependency of '{prop}'")
-            out.checks.extend(sub.checks)
+            pred = p.isNull() | (F.lit(False) if d is None else d.isNotNull())
+            out.checks += make_check(
+                ctx, "dependentRequired", pred,
+                f"'{dep}' is a dependency of '{prop}'").checks
     return out
 
 
-def _property_count(ctx: CompileContext) -> Optional[Column]:
+def _property_count(ctx: CompileContext) -> Optional[Expr]:
     if _row_scope(ctx):
         names = _row_field_names(ctx)
         if not names:
@@ -454,41 +409,25 @@ def _property_count(ctx: CompileContext) -> Optional[Column]:
     return None
 
 
-def c_min_properties(ctx, value, schema) -> Optional[Node]:
-    """`minProperties` (_keywords.py:312-318)."""
-    n = _property_count(ctx)
-    if n is None:
-        return None
-    return make_check(ctx, "minProperties", n >= int(value),
-                      f"object does not have enough properties (< {value})")
+def _properties_kw(keyword: str, op, message: str):
+    def compile_kw(ctx: CompileContext, value, schema) -> Optional[Node]:
+        n = _property_count(ctx)
+        if n is None:
+            return None
+        return make_check(ctx, keyword, op(n, int(value)),
+                          message.format(value))
+    return compile_kw
 
 
-def c_max_properties(ctx, value, schema) -> Optional[Node]:
-    """`maxProperties` (_keywords.py:321-329)."""
-    n = _property_count(ctx)
-    if n is None:
-        return None
-    return make_check(ctx, "maxProperties", n <= int(value),
-                      f"object has too many properties (> {value})")
+#: minProperties/maxProperties (_keywords.py:312-329)
+c_min_properties = _properties_kw(
+    "minProperties", operator.ge,
+    "object does not have enough properties (< {})")
+c_max_properties = _properties_kw(
+    "maxProperties", operator.le, "object has too many properties (> {})")
 
 
 # -------------------------------------------------------- array keywords --
-
-def c_min_items(ctx, value, schema) -> Optional[Node]:
-    """`minItems` (_keywords.py:194-197)."""
-    if _row_scope(ctx) or not ctx.is_array():
-        return None
-    return make_check(ctx, "minItems", F.size(ctx.target) >= int(value),
-                      lambda: fmt_message(ctx, "%s is too short"))
-
-
-def c_max_items(ctx, value, schema) -> Optional[Node]:
-    """`maxItems` (_keywords.py:200-203)."""
-    if _row_scope(ctx) or not ctx.is_array():
-        return None
-    return make_check(ctx, "maxItems", F.size(ctx.target) <= int(value),
-                      lambda: fmt_message(ctx, "%s is too long"))
-
 
 def c_unique_items(ctx: CompileContext, value, schema) -> Optional[Node]:
     """`uniqueItems` (_keywords.py:206-212, equality per _utils.py:162-237).
@@ -501,7 +440,7 @@ def c_unique_items(ctx: CompileContext, value, schema) -> Optional[Node]:
     c = ctx.target
     pred = F.size(c) == F.size(F.array_distinct(c))
     return make_check(ctx, "uniqueItems", pred,
-                      lambda: fmt_message(ctx, "%s has non-unique elements"))
+                      fmt_message(ctx, "%s has non-unique elements"))
 
 
 def register_all(reg: KeywordRegistry) -> None:

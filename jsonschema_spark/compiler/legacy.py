@@ -24,12 +24,12 @@ Differences handled:
 
 from __future__ import annotations
 
+import operator
 from typing import Any, Optional
 
-from pyspark.sql import functions as F
-
+from . import sql as F
 from .context import CompileContext
-from .node import Node, null_string
+from .node import Node
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
                        fmt_message, make_check)
 from . import applicators, keywords
@@ -43,14 +43,11 @@ def c_items_legacy(ctx: CompileContext, value: Any,
     if isinstance(value, list):
         # positional — identical to 2020-12 prefixItems
         return applicators.c_prefix_items(ctx, value, schema)
-    out = Node()
     ok = F.forall(ctx.target,
                   lambda x: applicators._element_ok(
                       ctx, value, x, ctx.dtype.elementType, "items"))
-    n = make_check(ctx, "items", ok, lambda: fmt_message(
+    return make_check(ctx, "items", ok, fmt_message(
         ctx, "%s has items failing the subschema"))
-    out.checks.extend(n.checks)
-    return out
 
 
 def c_additional_items(ctx: CompileContext, value: Any,
@@ -70,9 +67,7 @@ def c_additional_items(ctx: CompileContext, value: Any,
             f"Additional items are not allowed (beyond index {prefix})")
     if value is True or value == {}:
         return None
-    rest = F.slice(c, prefix + 1, F.greatest(F.size(c) - prefix, F.lit(0)))
-    ok = F.forall(rest, lambda x: applicators._element_ok(
-        ctx, value, x, ctx.dtype.elementType, "additionalItems"))
+    ok = applicators._rest_ok(ctx, prefix, value, "additionalItems")
     return make_check(ctx, "additionalItems", ok,
                       "an additional item fails its subschema")
 
@@ -103,24 +98,21 @@ def c_dependencies(ctx: CompileContext, value: Any,
     return out
 
 
-def c_minimum_draft4(ctx: CompileContext, value: Any,
-                     schema: dict) -> Optional[Node]:
-    """draft4 `minimum` with boolean `exclusiveMinimum` sibling
-    (_legacy_keywords.py:138-151)."""
-    if schema.get("exclusiveMinimum") is True:
-        return keywords._numeric_kw(ctx, "minimum", value,
-                                    lambda c, v: c > v)
-    return keywords.c_minimum(ctx, value, schema)
+def _draft4_bound(keyword: str, modifier: str, op, strict):
+    def compile_kw(ctx: CompileContext, value: Any,
+                   schema: dict) -> Optional[Node]:
+        return keywords._numeric_kw(
+            ctx, keyword, value, strict if schema.get(modifier) is True
+            else op)
+    return compile_kw
 
 
-def c_maximum_draft4(ctx: CompileContext, value: Any,
-                     schema: dict) -> Optional[Node]:
-    """draft4 `maximum` with boolean `exclusiveMaximum` sibling
-    (_legacy_keywords.py:154-167)."""
-    if schema.get("exclusiveMaximum") is True:
-        return keywords._numeric_kw(ctx, "maximum", value,
-                                    lambda c, v: c < v)
-    return keywords.c_maximum(ctx, value, schema)
+#: draft4 `minimum`/`maximum` with a boolean `exclusiveMinimum`/
+#: `exclusiveMaximum` sibling (_legacy_keywords.py:138-167)
+c_minimum_draft4 = _draft4_bound("minimum", "exclusiveMinimum",
+                                 operator.ge, operator.gt)
+c_maximum_draft4 = _draft4_bound("maximum", "exclusiveMaximum",
+                                 operator.le, operator.lt)
 
 
 def c_type_draft4(ctx: CompileContext, value: Any,
@@ -135,7 +127,7 @@ def c_type_draft4(ctx: CompileContext, value: Any,
         if not rest:
             return make_check(
                 ctx, "type", F.lit(False),
-                lambda: fmt_message(ctx, "%s is not of type 'integer'"))
+                fmt_message(ctx, "%s is not of type 'integer'"))
         return keywords.c_type(ctx, rest, schema)
     return keywords.c_type(ctx, value, schema)
 
@@ -148,13 +140,12 @@ _IGNORE = lambda ctx, value, schema: None  # noqa: E731
 def _type_or_schema_pred(ctx: CompileContext, t: Any):
     """draft3 type union member: a type name or a whole schema
     (_legacy_keywords.py:195-217).  Returns (pred_or_None, static_bool)."""
-    from pyspark.sql import functions as _F
     from .keywords import _type_pred_for
     if isinstance(t, str):
         # draft3, like draft4, has the strict integer rule: an
         # integer-valued float is NOT an integer (_types.py:182-193)
         if t == "integer" and not ctx.is_integral() and ctx.is_numeric():
-            return _F.lit(False)
+            return F.lit(False)
         return _type_pred_for(ctx, t)
     node = compile_subschema(ctx.child(schema_fragment="type"), t)
     if not node.checks:
@@ -171,10 +162,8 @@ def c_type_draft3(ctx: CompileContext, value: Any,
     preds = [_type_or_schema_pred(ctx, t) for t in types]
     if any(p is None for p in preds):
         return None  # statically satisfied member
-    pred = preds[0]
-    for p in preds[1:]:
-        pred = pred | p
-    return make_check(ctx, "type", pred, lambda: fmt_message(
+    pred = F.any_of(preds)
+    return make_check(ctx, "type", pred, fmt_message(
         ctx, "%s is not of the permitted types"))
 
 
@@ -194,10 +183,8 @@ def c_disallow(ctx: CompileContext, value: Any,
                           ctx.target.isNull() if ctx.null_is_absent
                           else F.lit(False),
                           "value matches a disallowed type")
-    pred = preds[0]
-    for p in preds[1:]:
-        pred = pred | p
-    return make_check(ctx, "disallow", ~pred, lambda: fmt_message(
+    pred = F.any_of(preds)
+    return make_check(ctx, "disallow", ~pred, fmt_message(
         ctx, "%s matches a disallowed type"))
 
 
@@ -215,9 +202,8 @@ def c_required_draft3(ctx: CompileContext, value: Any,
     if value is not True or ctx.target is None:
         return None
     n = make_check(ctx, "required", ctx.target.isNotNull(),
-                   "property is required")
+                   "property is required", failing_value=F.null_string())
     n.checks[0].skip_null_guard = True
-    n.checks[0].failing_value = null_string
     return n
 
 
@@ -249,7 +235,7 @@ def c_format_draft3(ctx: CompileContext, value: Any,
         pred = ctx.target.rlike(
             r"\A([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)\z")
         return make_check(ctx, "format", pred,
-                          lambda: fmt_message(ctx, "%s is not a time"))
+                          fmt_message(ctx, "%s is not a time"))
     return keywords.c_format(ctx, value, schema)
 
 
@@ -288,7 +274,7 @@ def c_content_encoding_draft7(ctx: CompileContext, value: Any,
         return None
     pred = F.try_to_binary(ctx.target, F.lit("base64")).isNotNull()
     return make_check(ctx, "contentEncoding", pred,
-                      lambda: fmt_message(ctx, "%s is not valid base64"))
+                      fmt_message(ctx, "%s is not valid base64"))
 
 
 def c_content_media_type_draft7(ctx: CompileContext, value: Any,
@@ -302,7 +288,7 @@ def c_content_media_type_draft7(ctx: CompileContext, value: Any,
     if schema.get("contentEncoding") == "base64":
         target = F.try_to_binary(ctx.target, F.lit("base64")).cast("string")
     pred = F.try_parse_json(target).isNotNull()
-    return make_check(ctx, "contentMediaType", pred, lambda: fmt_message(
+    return make_check(ctx, "contentMediaType", pred, fmt_message(
         ctx, "%s is not valid application/json"))
 
 

@@ -4,7 +4,7 @@ The reference generates validator classes from a ``keyword -> callable``
 mapping via ``create()`` (/root/reference/jsonschema/validators.py:136-513)
 and supports extension via ``extend()`` (validators.py:516-598).  Ours maps
 ``keyword -> compiler function`` where a compiler returns a :class:`Node`
-of boolean Column predicates (or ``None`` when the keyword is statically
+of boolean SQL predicates (or ``None`` when the keyword is statically
 inapplicable to the bound Spark type — the vectorized analogue of the
 reference ignoring e.g. ``minimum`` on a string instance).
 
@@ -15,14 +15,12 @@ Compiler signature::
 
 from __future__ import annotations
 
-from functools import partial
 from typing import Any, Callable, Optional, Union
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
+from . import sql
 from .context import CompileContext, schema_path_join
-from .node import Check, Node, null_string
+from .node import Check, Node
+from .sql import Expr
 
 CompilerFn = Callable[[CompileContext, Any, dict], Optional[Node]]
 
@@ -82,6 +80,8 @@ class KeywordRegistry:
         """TypeChecker.redefine analogue (_types.py:122-154): returns a
         copy where JSON type `name` compiles via `fn(ctx) -> Column |
         None` (None = statically satisfied for the bound Spark type).
+        `fn` sees ``ctx.target`` as a PySpark Column, and its Column is
+        brought into the compiled text as the SQL of its expression.
         Redefining a built-in name overrides it; new names extend the
         vocabulary accepted by `type`."""
         out = self.extend({})
@@ -102,60 +102,21 @@ class KeywordRegistry:
         return set(self._compilers)
 
 
-def cached_expr(ctx: CompileContext, op: str, build) -> Column:
-    """Per-root-compile cache for target-derived helper Columns (see
-    ``CompileContext.expr_cache``).  ``op`` names the derivation; the
-    built Column depends only on (target, op).  The target is pinned in
-    the cache value so its ``id()`` cannot be recycled mid-compile."""
-    cache = getattr(ctx, "expr_cache", None)
-    if cache is None:
-        return build()
-    key = (id(ctx.target), op)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit[1]
-    col = build()
-    cache[key] = (ctx.target, col)
-    return col
+def fmt_message(ctx: CompileContext, template: str) -> Expr:
+    """``format_string(template, stringify(ctx))`` — the standard
+    one-value violation message."""
+    return sql.format_string(template, stringify(ctx))
 
 
-def cached_lit(ctx: CompileContext, value) -> Column:
-    """Per-root-compile cache for common literal Columns (False/True/
-    small ints appear hundreds of times per compile, one JVM round trip
-    each)."""
-    cache = getattr(ctx, "expr_cache", None)
-    if cache is None:
-        return F.lit(value)
-    key = ("lit", type(value).__name__, value)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit[1]
-    col = F.lit(value)
-    cache[key] = (None, col)
-    return col
-
-
-def fmt_message(ctx: CompileContext, template: str) -> Column:
-    """Cached ``F.format_string(template, stringify(ctx))`` — the
-    standard one-value violation message.  The same bound target gets
-    the identical message Column for the identical template (the dtype
-    class rides in the key because stringify's rendering branch depends
-    on it)."""
-    return cached_expr(
-        ctx, f"fmt:{type(ctx.dtype).__name__}:{template}",
-        lambda: F.format_string(template, stringify(ctx)))
-
-
-def stringify(ctx: CompileContext) -> Column:
+def stringify(ctx: CompileContext) -> Expr:
     """Stringified failing value for the violation row."""
     if ctx.target is None:
-        return null_string()
+        return sql.null_string()
     if ctx.is_array() or ctx.is_struct() or ctx.is_map():
-        return cached_expr(ctx, "str_json", lambda: F.to_json(ctx.target))
+        return sql.to_json(ctx.target)
     if ctx.is_binary():
-        return cached_expr(ctx, "str_b64", lambda: F.base64(ctx.target))
-    return cached_expr(ctx, "str_cast",
-                       lambda: ctx.target.cast("string"))
+        return sql.base64(ctx.target)
+    return ctx.target.cast("string")
 
 
 #: keywords that judge a JSON null instead of skipping it: every other
@@ -164,24 +125,29 @@ _NULL_KEYWORDS = frozenset({"type", "enum", "const", "not", "anyOf",
                             "oneOf", "$falseSchema", "$schema", "disallow"})
 
 
-def guard(ctx: CompileContext, pred: Column, keyword: str) -> Column:
+def guard(ctx: CompileContext, pred: Expr, keyword: str) -> Expr:
     """NULL-at-binding = property absent: every bound check passes on NULL
     (the reference never applies a property subschema to a missing key —
     jsonschema/_keywords.py:290-301 iterates only present properties).
     Array elements set ``null_is_absent=False`` because a JSON null
     *element* is a present null instance: there only `_NULL_KEYWORDS`
     judge it, and every other keyword passes it, as the reference skips
-    a keyword whose instance type does not match.
+    a keyword whose instance type does not match.  A predicate already
+    OR-guarded for the same target (a check that surfaces through a
+    ``$ref`` or an applicator at the same binding) is returned as is.
     """
     if ctx.target is None or (not ctx.null_is_absent
                               and keyword in _NULL_KEYWORDS):
         return pred
-    return cached_expr(ctx, "isnull", lambda: ctx.target.isNull()) | pred
+    absent = ctx.target.isNull()
+    if pred.op == "OR" and any(t.text == absent.text for t in pred.terms):
+        return pred
+    return absent | pred
 
 
-def type_match_column(ctx: CompileContext, schema: Any) -> Column:
+def type_match_column(ctx: CompileContext, schema: Any) -> Expr:
     """``ValidationError._matches_type()`` (exceptions.py:184-197) as a
-    compile-time Column: True when `schema`'s ``type`` matches the
+    compile-time expression: True when `schema`'s ``type`` matches the
     runtime JSON type of the bound instance.  No ``type`` keyword (or a
     non-string form) folds to False, mirroring the reference's
     KeyError/TypeError -> False.  NULL targets match only a declared
@@ -189,19 +155,13 @@ def type_match_column(ctx: CompileContext, schema: Any) -> Column:
     surface because their checks are guard-passed."""
     expected = schema.get("type") if isinstance(schema, dict) else None
     if not isinstance(expected, (str, list)):
-        return cached_lit(ctx, False)
+        return sql.lit(False)
     types = [expected] if isinstance(expected, str) else expected
     if ctx.target is None:  # row scope: the instance is an object
-        return cached_lit(ctx, any(t in ("object", "any")
-                                   for t in types if isinstance(t, str)))
-    return cached_expr(
-        ctx, f"tm:{types!r}:{type(ctx.dtype).__name__}",
-        lambda: _type_match_build(ctx, types))
-
-
-def _type_match_build(ctx: CompileContext, types: list) -> Column:
+        return sql.lit(any(t in ("object", "any")
+                           for t in types if isinstance(t, str)))
     from .keywords import _type_pred_for
-    disj: Optional[Column] = None
+    preds: list[Expr] = []
     static = False
     for t in types:
         if not isinstance(t, str):  # draft3 type-as-schema entries
@@ -213,20 +173,10 @@ def _type_match_build(ctx: CompileContext, types: list) -> Column:
         if p is None:
             static = True  # non-null values of this Spark type match
         else:
-            disj = p if disj is None else (disj | p)
-    base: Optional[Column] = None
+            preds.append(p)
     if static:
-        base = cached_expr(ctx, "isnotnull", ctx.target.isNotNull)
-    if disj is not None:
-        base = disj if base is None else (base | disj)
-    if base is None:
-        return cached_lit(ctx, False)
-    if disj is None and static:
-        # pure isNotNull can't be NULL — coalesce would be a no-op
-        return cached_expr(
-            ctx, "type_match_nn",
-            lambda: F.coalesce(base, F.lit(False)))
-    return F.coalesce(base, cached_lit(ctx, False))
+        preds.insert(0, ctx.target.isNotNull())
+    return sql.coalesce(sql.any_of(preds), False) if preds else sql.lit(False)
 
 
 def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
@@ -239,15 +189,10 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
     if schema is True or schema == {}:
         return Node()
     if schema is False:
-        n = Node()
-        pred = F.lit(False)
-        n.checks.append(Check(
-            keyword="$falseSchema", json_path=ctx.json_path,
-            schema_path=ctx.schema_path or "$falseSchema",
-            pred=guard(ctx, pred, "$falseSchema"),
-            message=partial(F.lit, "False schema does not allow any value"),
-            failing_value=partial(stringify, ctx),
-        ))
+        n = make_check(ctx, "$falseSchema",
+                       guard(ctx, sql.lit(False), "$falseSchema"),
+                       "False schema does not allow any value")
+        n.checks[0].schema_path = ctx.schema_path or "$falseSchema"
         return n
     if not isinstance(schema, dict):
         raise SchemaCompileError(
@@ -283,14 +228,6 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
                                     False):
         schema = {"$ref": schema["$ref"]}
     out = Node()
-    # _matches_type annotation (exceptions.py:184-197,421): checks
-    # surfacing at THIS level have error.schema == `schema`; descendant
-    # checks were annotated at their own level (type_match already set)
-    tm = partial(type_match_column, ctx, schema)
-
-    def annotate(chk: Check) -> None:
-        if not chk.has_type_match():
-            chk.type_match = tm
 
     for keyword, value in schema.items():
         fn = ctx.registry.get(keyword)
@@ -304,16 +241,21 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
         node = fn(ctx.child(schema_fragment=None), value, schema)
         if node is None:
             continue
-        for chk in node.checks:
+        for chk in node.checks + node.context:
+            if not isinstance(chk.pred, Expr):  # an extension's Column
+                chk.pred = sql.from_column(chk.pred)
             if not chk.skip_null_guard:
                 chk.pred = guard(ctx, chk.pred, chk.keyword)
-            annotate(chk)
-            out.checks.append(chk)
-        for chk in node.context:
-            if not chk.skip_null_guard:
-                chk.pred = guard(ctx, chk.pred, chk.keyword)
-            annotate(chk)
-            out.context.append(chk)
+        out.checks.extend(node.checks)
+        out.context.extend(node.context)
+    # _matches_type annotation (exceptions.py:184-197,421): checks
+    # surfacing at THIS level have error.schema == `schema`; descendant
+    # checks were annotated at their own level (type_match already set)
+    unmatched = [c for c in out.checks + out.context if c.type_match is None]
+    if unmatched:
+        tm = type_match_column(ctx, schema)
+        for chk in unmatched:
+            chk.type_match = tm
 
     # annotation keywords produce output units (2020-12 "basic" format)
     # when the owning subschema successfully applies to a present
@@ -332,23 +274,19 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
     return out
 
 
-def make_check(ctx: CompileContext, keyword: str, pred: Column,
-               message: Union[Column, str, Callable[[], Column]],
-               schema_suffix: Optional[str] = None) -> Node:
-    """A one-check Node.  `message` is a Column, a plain string (a
-    literal message), or a zero-argument builder such as ``lambda:
-    fmt_message(ctx, template)``; strings and builders, like the
-    stringified failing value, are built only when a violation row
-    first reads them (see :class:`Check`)."""
-    if isinstance(message, str):
-        message = partial(cached_lit, ctx, message)
-    n = Node()
+def make_check(ctx: CompileContext, keyword: str, pred: Expr,
+               message: Union[Expr, str],
+               schema_suffix: Optional[str] = None,
+               failing_value: Optional[Expr] = None) -> Node:
+    """A one-check Node.  `message` is an expression such as
+    ``fmt_message(ctx, template)`` or a plain string (a literal
+    message); `failing_value` defaults to the stringified target."""
     sp = schema_path_join(ctx.schema_path, schema_suffix or keyword)
-    n.checks.append(Check(
+    return Node([Check(
         keyword=keyword, json_path=ctx.json_path, schema_path=sp,
-        pred=pred, message=message, failing_value=partial(stringify, ctx),
-    ))
-    return n
+        pred=pred, message=sql.lit(message),
+        failing_value=(stringify(ctx) if failing_value is None
+                       else failing_value))])
 
 
 class SchemaCompileError(ValueError):

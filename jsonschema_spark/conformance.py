@@ -43,11 +43,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .compiler import sql
 from .compiler.context import CompileContext, json_pointer
 from .compiler.registry import (SchemaCompileError, compile_subschema,
                                 default_registry)
 from .compiler.resolver import Resolver
-from .validator import _violation_rows, _vrow
+from .validator import _explode_rows, violation_structs
 
 SUITE_DIR = "/root/reference/json/tests"
 REMOTES_DIR = "/root/reference/json/remotes"
@@ -304,13 +305,13 @@ def evaluate_case(spark: SparkSession, schema: Any,
         df = spark.createDataFrame(rows, sschema)
         ctx = CompileContext(
             registry=registry or default_registry(),
-            target=F.col("value"), dtype=dtype,
+            target=sql.col("value"), dtype=dtype,
             root_schema=schema if isinstance(schema, dict) else None,
             null_is_absent=False,
             resolver=case_res, base_uri=root_uri,
             dynamic_scope=(root_uri,))
         node = compile_subschema(ctx, schema)
-        ok = F.coalesce(node.ok, F.lit(False))
+        ok = sql.column(sql.coalesce(node.ok, False), spark)
         got = {r["_i"]: bool(r["ok"])
                for r in df.select("_i", ok.alias("ok")).collect()}
         for local_i, global_i in enumerate(idxs):
@@ -483,7 +484,7 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
     case_res = resolver.child() if resolver is not None else Resolver()
     root_uri = case_res.add_root(schema)
     ctx = CompileContext(
-        registry=registry, target=F.col("value"), dtype=dtype,
+        registry=registry, target=sql.col("value"), dtype=dtype,
         root_schema=schema if isinstance(schema, dict) else None,
         null_is_absent=False, resolver=case_res, base_uri=root_uri,
         dynamic_scope=(root_uri,))
@@ -496,18 +497,16 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
             return base_id + "#" + kw_loc
         return None
 
-    valid = bool(df.select(F.coalesce(node.ok, F.lit(False)).alias("ok"))
-                 .first()["ok"])
+    valid = bool(df.select(sql.column(sql.coalesce(node.ok, False),
+                                      spark).alias("ok")).first()["ok"])
     out: dict = {"valid": valid, "keywordLocation": "",
                  "instanceLocation": ""}
     if base_id:
         out["absoluteKeywordLocation"] = base_id + "#"
     if not valid:
-        structs = [F.when(~F.coalesce(c.pred, F.lit(True)), _vrow(
-            c.keyword, c.json_path, c.schema_path, c.message,
-            F.lit(None))) for c in node.checks]
+        arr = sql.column(violation_structs(node.checks, False), spark)
         units = []
-        for r in _violation_rows(df, structs).select(
+        for r in _explode_rows(df, arr, ()).select(
                 "schema_path", "message",
                 json_pointer(F.col("json_path")).alias("il")
         ).collect():
@@ -526,19 +525,18 @@ def _basic_output_for_case(spark: SparkSession, schema: Any, instance: Any,
     anns = []
     if ctx.annotations:
         # ONE job evaluates every annotation's applicability + pointer
-        row = df.select(*[
-            F.struct(
-                F.coalesce(a_unit.pred, F.lit(False)).alias("applies"),
-                json_pointer(F.lit(a_unit.json_path)).alias("il"),
-            ).alias(f"_a{i}")
+        applies = sql.column(sql.array(*[
+            sql.coalesce(a_unit.pred, False)
+            for a_unit in ctx.annotations]), spark)
+        row = df.select(applies.alias("applies"), *[
+            json_pointer(F.lit(a_unit.json_path)).alias(f"_il{i}")
             for i, a_unit in enumerate(ctx.annotations)]).first()
         for i, a_unit in enumerate(ctx.annotations):
-            cell = row[f"_a{i}"]
-            if not cell["applies"]:
+            if not row["applies"][i]:
                 continue
             u = {"valid": True,
                  "keywordLocation": "/" + a_unit.schema_path,
-                 "instanceLocation": cell["il"] or "",
+                 "instanceLocation": row[f"_il{i}"] or "",
                  "annotation": a_unit.value}
             a = absolute(u["keywordLocation"])
             if a:

@@ -64,6 +64,7 @@ from typing import Any, Mapping, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .compiler import sql
 from .compiler.context import json_path_join
 from .validator import CompiledValidator, _violation_rows, _vrow
 
@@ -101,7 +102,7 @@ def validate_dataset(df: DataFrame, schema: dict,
         for c in keep:
             if c not in cols:
                 out = out.withColumn(c, F.lit(None).cast("string"))
-        return out.select(*keep, *VIOLATION_COLS)
+        return out.select(*map(sql.ref, keep), *VIOLATION_COLS)
 
     parts = [v.violations(df, keep)]
 
@@ -218,7 +219,7 @@ def validate_dataset(df: DataFrame, schema: dict,
             max_top = {2: 0.20, 3: 0.18, 4: 0.16}
             max_dup = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11,
                        10: 0.10}
-        t = F.col(col)
+        t = sql.ref(col)
 
         def _rrow(kind, n, lim, frac):
             return F.when(frac > lim, _vrow(
@@ -241,16 +242,16 @@ def validate_dataset(df: DataFrame, schema: dict,
         cfg = xs["pii"] or {}
         col = cfg.get("column", "text")
         max_hits = cfg.get("max_hits", 0)
-        c = pii_counts(F.col(col))
+        c = pii_counts(sql.ref(col))
         total = sum((c.getField(f"n_{n}") for n in PII_PATTERNS),
                     F.lit(0).cast("long"))
         n = F.col("_n")
-        parts.append(pad(_violation_rows(
-            df.select(*keep, total.alias("_n")), [F.when(n > max_hits, _vrow(
-                "pii", json_path_join("$", col), "x-spark/pii",
-                F.concat(n.cast("string"),
-                         F.lit(f" PII matches exceed allowed {max_hits}")),
-                n))], keep)))
+        counted = df.select(*map(sql.ref, keep), total.alias("_n"))
+        parts.append(pad(_violation_rows(counted, [F.when(n > max_hits, _vrow(
+            "pii", json_path_join("$", col), "x-spark/pii",
+            F.concat(n.cast("string"),
+                     F.lit(f" PII matches exceed allowed {max_hits}")),
+            n))], keep)))
 
     if "image_quality" in xs:
         # metadata-tier image quality (operators/quality.py): aspect /
@@ -294,7 +295,7 @@ def validate_dataset(df: DataFrame, schema: dict,
                            f"(allowed frac {max_frac})")),
             F.format_string("%.6f", frac)))], keep[:1])))
 
-    out = parts[0].select(*keep, *VIOLATION_COLS)
+    out = parts[0].select(*map(sql.ref, keep), *VIOLATION_COLS)
     for p in parts[1:]:
         out = out.unionByName(p)
     return out

@@ -1,4 +1,4 @@
-"""`format` checkers as vectorized Column predicates.
+"""`format` checkers as vectorized SQL predicates.
 
 Mirrors /root/reference/jsonschema/_format.py: a registry of per-format
 checks; non-strings always pass (handled by the compiler's static type
@@ -14,22 +14,24 @@ Register custom formats with :func:`register_format` — the analogue of
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Any, Callable, Optional
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-FormatFn = Callable[[Column], Column]
+from ..compiler import sql as F
+from ..compiler.sql import Expr
 
-_REGISTRY: dict[str, FormatFn] = {}
-
-
-def register_format(name: str, fn: FormatFn) -> None:
-    _REGISTRY[name] = fn
+_REGISTRY: dict[str, Callable[[Expr], Expr]] = {}
 
 
-def format_predicate(col: Column, name: str) -> Optional[Column]:
+def register_format(name: str, fn: Callable[[Any], Any]) -> None:
+    """Assert format `name` with `fn(Column) -> Column`: `fn` gets the
+    bound string as a PySpark Column, and its result is brought into
+    the compiled text as the SQL of its expression."""
+    _REGISTRY[name] = lambda e: F.from_column(fn(F.column(e)))
+
+
+def format_predicate(col: Expr, name: str) -> Optional[Expr]:
     """Predicate for format `name`, or None when unknown (always passes)."""
     fn = _REGISTRY.get(name)
     return fn(col) if fn is not None else None
@@ -90,21 +92,21 @@ _IDN_EMAIL_RX = _email_regex(
     r"\x{00A0}-\x{D7FF}\x{E000}-\x{FFFC}\x{10000}-\x{10FFFD}")
 
 
-def _email(c: Column) -> Column:
+def _email(c: Expr) -> Expr:
     return c.rlike(_EMAIL_RX)
 
 
-def _idn_email(c: Column) -> Column:
+def _idn_email(c: Expr) -> Expr:
     return c.rlike(_IDN_EMAIL_RX)
 
 
-def _date(c: Column) -> Column:
+def _date(c: Expr) -> Expr:
     # regex + real-calendar check (_format.py:19,423-433)
     return (c.rlike(f"\\A{_DATE_BODY}\\z")
             & F.try_to_timestamp(c, F.lit("yyyy-MM-dd")).isNotNull())
 
 
-def _date_time(c: Column) -> Column:
+def _date_time(c: Expr) -> Expr:
     # RFC 3339 (rfc3339_validator semantics, _format.py:396-413): structural
     # regex (incl. leap-second :60) + calendar validity of the date part.
     rx = f"\\A{_DATE_BODY}[Tt ]{_TIME_BODY}{_TZ}\\z"
@@ -112,45 +114,46 @@ def _date_time(c: Column) -> Column:
             & F.try_to_timestamp(F.substring(c, 1, 10), F.lit("yyyy-MM-dd")).isNotNull())
 
 
-def _time(c: Column) -> Column:
+def _time(c: Expr) -> Expr:
     return c.rlike(f"\\A{_TIME_BODY}{_TZ}\\z")
 
 
-def _ipv6(c: Column) -> Column:
-    # stdlib `ipaddress` via Arrow batch; scope-ids rejected like the
-    # reference (_format.py:258-263).
-    @F.pandas_udf("boolean")
-    def _check(s: pd.Series) -> pd.Series:
-        import ipaddress
+def _udf_format(name: str, ok: Callable[[str], bool]) -> None:
+    """Register format `name` as the pandas UDF mapping `ok` over the
+    non-NULL strings (NULL fails), called as ``_jss_fmt_<name>``."""
+    def build():
+        from pyspark.sql import functions as PF
 
-        def ok(v):
-            if v is None or "%" in v:
-                return False
-            try:
-                ipaddress.IPv6Address(v)
-                return True
-            except ValueError:
-                return False
-        return s.map(ok).astype("boolean")
-    return _check(c)
+        @PF.pandas_udf("boolean")
+        def _check(s: pd.Series) -> pd.Series:
+            return s.map(lambda v: v is not None and ok(v)).astype("boolean")
+        return _check
+
+    fn = "_jss_fmt_" + name.replace("-", "_")
+    _REGISTRY[name] = lambda c: F.udf_call(fn, build, c)
 
 
-def _regex_fmt(c: Column) -> Column:
+def _ipv6_ok(v: str) -> bool:
+    # stdlib `ipaddress`; scope-ids rejected like the reference
+    # (_format.py:258-263)
+    import ipaddress
+    if "%" in v:
+        return False
+    try:
+        ipaddress.IPv6Address(v)
+        return True
+    except ValueError:
+        return False
+
+
+def _regex_ok(v: str) -> bool:
     # `re.compile` succeeds (_format.py:416-420)
-    @F.pandas_udf("boolean")
-    def _check(s: pd.Series) -> pd.Series:
-        import re
-
-        def ok(v):
-            if v is None:
-                return False
-            try:
-                re.compile(v)
-                return True
-            except re.error:
-                return False
-        return s.map(ok).astype("boolean")
-    return _check(c)
+    import re
+    try:
+        re.compile(v)
+        return True
+    except re.error:
+        return False
 
 
 def _rfc3986_regexes(extra: str = "") -> tuple[str, str]:
@@ -192,11 +195,11 @@ _URI_RX, _URI_REF_RX = _rfc3986_regexes()
 _IRI_RX, _IRI_REF_RX = _rfc3986_regexes(r"\x{00A0}-\x{10FFFD}")
 
 
-def _uri(c: Column) -> Column:
+def _uri(c: Expr) -> Expr:
     return c.rlike(_URI_RX)
 
 
-def _uri_reference(c: Column) -> Column:
+def _uri_reference(c: Expr) -> Expr:
     return c.rlike(_URI_REF_RX)
 
 
@@ -204,7 +207,7 @@ _CSS21_COLORS = ("aqua black blue fuchsia gray green lime maroon navy "
                  "olive orange purple red silver teal white yellow").split()
 
 
-def _color(c: Column) -> Column:
+def _color(c: Expr) -> Expr:
     # CSS2.1 names + #hex (webcolors semantics, _format.py:443-453);
     # \A/\z anchors — Java's $ matches before a trailing newline
     return c.isin(*_CSS21_COLORS) | c.rlike(r"\A#[0-9a-fA-F]{3}\z") \
@@ -218,60 +221,53 @@ _URI_TEMPLATE = (r"\A([^\x00-\x20\x7f\"'%<>\\^`{|}]|%[0-9A-Fa-f]{2}|"
                  r"(:[1-9][0-9]{0,3}|\*)?))*\})*\z")
 
 
-def _iri(c: Column) -> Column:
+def _iri(c: Expr) -> Expr:
     # RFC 3987: URI grammar with ucschar widened unreserved set
     return c.rlike(_IRI_RX)
 
 
-def _idn_hostname(c: Column) -> Column:
-    # the idna package (IDNA2008 + contextual rules) via Arrow batch —
-    # the same library the reference wraps (_format.py:287-301); falls
-    # back to the stdlib IDNA2003 codec if it's ever absent
-    @F.pandas_udf("boolean")
-    def _check(s: pd.Series) -> pd.Series:
+def _idn_hostname_ok(v: str) -> bool:
+    # the idna package (IDNA2008 + contextual rules) — the same library
+    # the reference wraps (_format.py:287-301); falls back to the stdlib
+    # IDNA2003 codec if it's ever absent
+    if not v:
+        return False
+    try:
+        import idna as _idna
+    except ImportError:                       # pragma: no cover
         try:
-            import idna as _idna
-
-            def ok(v):
-                if v is None or not v:
-                    return False
-                try:
-                    _idna.encode(v)
-                    return True
-                except (_idna.IDNAError, UnicodeError):
-                    return False
-        except ImportError:                       # pragma: no cover
-            def ok(v):
-                if v is None or not v:
-                    return False
-                try:
-                    v.encode("idna")
-                    return True
-                except UnicodeError:
-                    return False
-        return s.map(ok).astype("boolean")
-    return _check(c)
+            v.encode("idna")
+            return True
+        except UnicodeError:
+            return False
+    try:
+        _idna.encode(v)
+        return True
+    except (_idna.IDNAError, UnicodeError):
+        return False
 
 
-register_format("color", _color)
-register_format("uri-template", lambda c: c.rlike(_URI_TEMPLATE))
-register_format("iri", _iri)
-register_format("iri-reference", lambda c: c.rlike(_IRI_REF_RX))
-register_format("idn-hostname", _idn_hostname)
-register_format("email", _email)
-register_format("idn-email", _idn_email)
-register_format("ipv4", lambda c: c.rlike(_IPV4))
-register_format("ip-address", lambda c: c.rlike(_IPV4))  # draft3 name
-register_format("ipv6", _ipv6)
-register_format("hostname", lambda c: c.rlike(_HOSTNAME))
-register_format("host-name", lambda c: c.rlike(_HOSTNAME))
-register_format("uuid", lambda c: c.rlike(_UUID))
-register_format("date", _date)
-register_format("date-time", _date_time)
-register_format("time", _time)
-register_format("duration", lambda c: c.rlike(_DURATION))
-register_format("json-pointer", lambda c: c.rlike(_JSON_POINTER))
-register_format("relative-json-pointer", lambda c: c.rlike(_REL_JSON_POINTER))
-register_format("regex", _regex_fmt)
-register_format("uri", _uri)
-register_format("uri-reference", _uri_reference)
+_REGISTRY.update({
+    "color": _color,
+    "uri-template": lambda c: c.rlike(_URI_TEMPLATE),
+    "iri": _iri,
+    "iri-reference": lambda c: c.rlike(_IRI_REF_RX),
+    "email": _email,
+    "idn-email": _idn_email,
+    "ipv4": lambda c: c.rlike(_IPV4),
+    "ip-address": lambda c: c.rlike(_IPV4),  # draft3 name
+    "hostname": lambda c: c.rlike(_HOSTNAME),
+    "host-name": lambda c: c.rlike(_HOSTNAME),
+    "uuid": lambda c: c.rlike(_UUID),
+    "date": _date,
+    "date-time": _date_time,
+    "time": _time,
+    "duration": lambda c: c.rlike(_DURATION),
+    "json-pointer": lambda c: c.rlike(_JSON_POINTER),
+    "relative-json-pointer": lambda c: c.rlike(_REL_JSON_POINTER),
+    "uri": _uri,
+    "uri-reference": _uri_reference,
+})
+_udf_format("ipv6", _ipv6_ok)
+_udf_format("regex", _regex_ok)
+_udf_format("idn-hostname", _idn_hostname_ok)

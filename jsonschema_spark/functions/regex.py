@@ -10,12 +10,14 @@ fall back to an Arrow-batched pandas UDF wrapping the real ``re`` engine.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from typing import Callable, Optional
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from ..compiler import sql
+from ..compiler.sql import Expr
 
 
 def _scan_unsafe(pattern: str) -> Optional[str]:
@@ -77,9 +79,9 @@ def _to_java(pattern: str) -> Optional[str]:
     return "".join(out)
 
 
-def compile_pattern_predicate(col: Column, pattern: str,
+def compile_pattern_predicate(col: Expr, pattern: str,
                               warn: Optional[Callable[[str], None]] = None
-                              ) -> Column:
+                              ) -> Expr:
     """Boolean Column: True when ``re.search(pattern, value)`` matches."""
     re.compile(pattern)  # schema-time validation; raises re.error
     java = _to_java(pattern)
@@ -91,11 +93,17 @@ def compile_pattern_predicate(col: Column, pattern: str,
     return python_regex_search(col, pattern)
 
 
-def python_regex_search(col: Column, pattern: str) -> Column:
-    """Exact ``re.search`` semantics via an Arrow-batched pandas UDF."""
+def python_regex_search(col: Expr, pattern: str) -> Expr:
+    """Exact ``re.search`` semantics via an Arrow-batched pandas UDF,
+    called by a name derived from the pattern."""
 
-    @F.pandas_udf("boolean")
-    def _search(s: pd.Series) -> pd.Series:
-        return s.str.contains(pattern, regex=True, na=False)
+    def build():
+        from pyspark.sql import functions as F
 
-    return _search(col)
+        @F.pandas_udf("boolean")
+        def _search(s: pd.Series) -> pd.Series:
+            return s.str.contains(pattern, regex=True, na=False)
+        return _search
+
+    digest = hashlib.sha1(pattern.encode("utf-8", "surrogatepass"))
+    return sql.udf_call("_jss_re_" + digest.hexdigest()[:16], build, col)

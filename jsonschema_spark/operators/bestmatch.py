@@ -15,6 +15,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..compiler import sql
 from ..compiler.context import json_pointer, path_depth, path_order
 
 WEAK_MATCHES = ("anyOf", "oneOf")  # exceptions.py:24
@@ -66,7 +67,7 @@ def best_match(violations: DataFrame, id_cols: Sequence[str],
     order, which has no tabular analogue)."""
     depth, spath, weak_f, strong_f, tm_f = _relevance_cols(
         weak, strong, violations.columns)
-    w = (Window.partitionBy(*[F.col(c) for c in id_cols])
+    w = (Window.partitionBy(*map(sql.ref, id_cols))
          .orderBy(depth.asc(), spath.desc(), weak_f.asc(),
                   strong_f.desc(), tm_f.asc(), F.col("keyword").asc()))
     return (violations
@@ -107,17 +108,18 @@ def best_match_deep(violations_ctx: DataFrame, id_cols: Sequence[str],
     payload = ["keyword", "json_path", "schema_path", "message",
                "failing_value"]
     top = vv.filter(F.col("context_of").isNull())
-    w = Window.partitionBy(*[F.col(c) for c in id_cols]).orderBy(
+    w = Window.partitionBy(*map(sql.ref, id_cols)).orderBy(
         F.col("_depth").asc(), F.col("_spath").desc(),
         F.col("_weak").asc(), F.col("_strong").desc(),
         F.col("_tm").asc(), F.col("keyword").asc())
     best = (top.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(*id_cols, *payload))
+            .select(*map(sql.ref, id_cols), *payload))
     ctx_cols = payload + ["context_of", "_depth", "_spath", "_weak",
                           "_strong", "_tm"]
     ctx_r = vv.filter(F.col("context_of").isNotNull()).select(
-        *id_cols, *[F.col(c).alias("c_" + c) for c in ctx_cols])
+        *map(sql.ref, id_cols),
+        *[F.col(c).alias("c_" + c) for c in ctx_cols])
     for _ in range(max_depth):
         j = (best.join(ctx_r, list(id_cols), "left")
              .withColumn("_cand",
@@ -128,7 +130,7 @@ def best_match_deep(violations_ctx: DataFrame, id_cols: Sequence[str],
         key = F.struct(F.col("c__depth"), F.col("c__spath"),
                        F.col("c__weak"), F.col("c__strong"),
                        F.col("c__tm"))
-        w2 = Window.partitionBy(*[F.col(c) for c in id_cols]).orderBy(
+        w2 = Window.partitionBy(*map(sql.ref, id_cols)).orderBy(
             F.col("_cand").desc(),
             F.col("c__depth").desc_nulls_last(),
             F.col("c__spath").asc_nulls_last(),
@@ -144,7 +146,7 @@ def best_match_deep(violations_ctx: DataFrame, id_cols: Sequence[str],
                & (key == F.col("_next_key")))
         promote = F.col("_cand") & ~tie
         best = first.select(
-            *id_cols,
+            *map(sql.ref, id_cols),
             *[F.when(promote, F.col("c_" + c)).otherwise(F.col(c))
               .alias(c) for c in payload])
     return best

@@ -19,26 +19,28 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler import sql
+
 
 def bucket_expr(col: str, lo: float, hi: float, bins: int):
     """Equal-width bucket index in [0, bins): floor((x-lo)/step), clamped.
     Plain arithmetic (not width_bucket) so a DuckDB oracle can reproduce
     it exactly."""
     step = (hi - lo) / bins
-    raw = F.floor((F.col(col) - F.lit(lo)) / F.lit(step)).cast("long")
+    raw = F.floor((sql.ref(col) - F.lit(lo)) / F.lit(step)).cast("long")
     return F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1))
 
 
 def histogram(df: DataFrame, col: str, lo: float, hi: float,
               bins: int = 32) -> DataFrame:
     """(bucket, n) — one shuffle, map-side combined."""
-    return (df.filter(F.col(col).isNotNull())
+    return (df.filter(sql.ref(col).isNotNull())
             .groupBy(bucket_expr(col, lo, hi, bins).alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n")))
 
 
 def categorical_histogram(df: DataFrame, col: str) -> DataFrame:
-    return (df.groupBy(F.col(col).alias("bucket"))
+    return (df.groupBy(sql.ref(col).alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n")))
 
 
@@ -150,14 +152,14 @@ def _scores(df: DataFrame, col: str, bounds: Optional[tuple],
     partition NULL, which is scored even when `df` has no value to
     count.  `bounds` (lo, hi, bins) bucket a numeric column, whose
     NULLs are skipped; None makes `col` categorical, NULL a bucket."""
-    rows = df if bounds is None else df.filter(F.col(col).isNotNull())
+    rows = df if bounds is None else df.filter(sql.ref(col).isNotNull())
     if by:
-        rows = rows.filter(F.col(by).isNotNull())
-        part, parts = F.col(by), None
+        rows = rows.filter(sql.ref(by).isNotNull())
+        part, parts = sql.ref(by), None
     else:
         part = F.lit(None).cast("string")
         parts = df.sparkSession.range(1).select(part.alias("part"))
-    bucket = (F.col(col) if bounds is None else bucket_expr(col, *bounds))
+    bucket = (sql.ref(col) if bounds is None else bucket_expr(col, *bounds))
     cur = (rows.groupBy(part.alias("part"), bucket.alias("bucket"))
            .agg(F.count(F.lit(1)).alias("n")))
     return score_histograms(cur, None if bounds is None else bounds[2],

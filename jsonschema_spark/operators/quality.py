@@ -40,6 +40,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler import sql
 from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
@@ -78,9 +79,9 @@ def _quality_bands(cfg: dict) -> list:
     """[(keyword, gated_bad_predicate, json_path, schema_path,
     message_col, failing_col)] for the configured metadata bands."""
     w_col, bytes_col = cfg.get("w_col", "w"), cfg.get("bytes_col", "bytes")
-    w = F.col(w_col).cast("double")
-    h = F.col(cfg.get("h_col", "h")).cast("double")
-    blen = F.length(F.col(bytes_col)).cast("double")
+    w = sql.ref(w_col).cast("double")
+    h = sql.ref(cfg.get("h_col", "h")).cast("double")
+    blen = F.length(sql.ref(bytes_col)).cast("double")
     w_path, bytes_path = (json_path_join("$", w_col),
                           json_path_join("$", bytes_col))
     geom_ok = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
@@ -357,7 +358,7 @@ def alignment_violations(df: DataFrame, cfg: dict,
         cos = F.col("cos")
         base, ids = scored, list(id_cols)
     else:
-        cos = cosine_columns(F.col(img_c), F.col(txt_c))
+        cos = cosine_columns(sql.ref(img_c), sql.ref(txt_c))
         base, ids = df, list(id_cols)
     structs = [
         F.when(cos.isNull(), _vrow(

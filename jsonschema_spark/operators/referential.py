@@ -15,6 +15,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler import sql
 from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
@@ -27,8 +28,8 @@ def orphans(df: DataFrame, fk: str, dim: DataFrame,
     whether a key exists, so duplicate dim keys cannot change the
     result, and a `distinct` would cost a shuffle stage before the
     broadcast."""
-    keys = F.broadcast(dim.select(F.col(dim_key).alias(fk)))
-    return df.filter(F.col(fk).isNotNull()).join(keys, fk, "left_anti")
+    keys = F.broadcast(dim.select(sql.ref(dim_key).alias(fk)))
+    return df.filter(sql.ref(fk).isNotNull()).join(keys, [fk], "left_anti")
 
 
 def referential_violations(df: DataFrame, fk: str, dim: DataFrame,
@@ -39,5 +40,5 @@ def referential_violations(df: DataFrame, fk: str, dim: DataFrame,
         f"referential:{fk}", json_path_join("$", fk),
         f"x-spark/referential/{fk}",
         F.concat(F.lit(f"{fk} value not present in referenced table: "),
-                 F.col(fk).cast("string")),
-        F.col(fk))], id_cols)
+                 sql.ref(fk).cast("string")),
+        sql.ref(fk))], id_cols)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..compiler import sql
 from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
@@ -86,7 +87,7 @@ def stats_violations(df: DataFrame, rules: dict[str, dict[str, Any]]) -> DataFra
     n = F.count(F.lit(1))
     aggs, structs = [n.alias("_rows")], []  # df.agg needs one aggregate
     for i, (col, rule) in enumerate(rules.items()):
-        c, dt = F.col(col), types.get(col)
+        c, dt = sql.ref(col), types.get(col)
         # min/max read numbers as they are and strings by length(), like
         # column_stats; other types have no value to bound
         v = (c if isinstance(dt, _NUMERIC) else

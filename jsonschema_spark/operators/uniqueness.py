@@ -26,6 +26,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..compiler import sql
 from ..compiler.context import json_path_join
 from ..validator import _violation_rows, _vrow
 
@@ -34,7 +35,7 @@ def duplicate_keys(df: DataFrame, keys: Sequence[str],
                    strategy: str = "groupby") -> DataFrame:
     """Keys occurring more than once -> (key cols..., dup_count).  Rows
     whose key has a NULL component are dropped before counting."""
-    kcols = [F.col(k) for k in keys]
+    kcols = [sql.ref(k) for k in keys]
     df = df.filter(reduce(lambda a, b: a & b,
                           [c.isNotNull() for c in kcols]))
     if strategy == "sort":
@@ -61,13 +62,13 @@ def uniqueness_violations(df: DataFrame, keys: str | Sequence[str],
     ``count(1) over (partition by key)`` per key on the typed key, so
     doubles group as ``groupBy`` groups them; no join back to `df`."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    narrow = df.select(*dict.fromkeys([*id_cols, *keys]))
-    counted = narrow.select(
-        "*", *[F.count(F.lit(1)).over(Window.partitionBy(k)).alias(f"_n{i}")
-               for i, k in enumerate(keys)])
+    narrow = df.select(*map(sql.ref, dict.fromkeys([*id_cols, *keys])))
+    counted = narrow.select("*", *[
+        F.count(F.lit(1)).over(Window.partitionBy(sql.ref(k))).alias(f"_n{i}")
+        for i, k in enumerate(keys)])
     return _violation_rows(counted, [
-        F.when(F.col(k).isNotNull() & (F.col(f"_n{i}") > 1), _vrow(
+        F.when(sql.ref(k).isNotNull() & (F.col(f"_n{i}") > 1), _vrow(
             f"uniqueItems:{k}", json_path_join("$", k), f"x-spark/unique/{k}",
-            F.concat(F.lit(f"duplicate {k}: "), F.col(k).cast("string")),
-            F.col(k)))
+            F.concat(F.lit(f"duplicate {k}: "), sql.ref(k).cast("string")),
+            sql.ref(k)))
         for i, k in enumerate(keys)], id_cols)

@@ -39,6 +39,7 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compiler import sql
 from .validator import CompiledValidator
 
 MANIFEST_SCHEMA = ("partition_key string, run_id string, rows long, "
@@ -120,7 +121,7 @@ class ValidationRun:
                     "org.apache.iceberg:iceberg-spark-runtime-3.5)")
         validator = CompiledValidator(self.schema, df)
         # filesystem-safe group key: NULL/empty/odd values get sentinels
-        raw = F.col(self.partition_col).cast("string")
+        raw = sql.ref(self.partition_col).cast("string")
         part = F.when(raw.isNull(), F.lit("__null__")) \
                 .when(F.length(F.trim(raw)) == 0, F.lit("__empty__")) \
                 .when(~raw.rlike("^[A-Za-z0-9_.-]+$"),
@@ -156,9 +157,7 @@ class ValidationRun:
                 conf.unset("spark.sql.sources.partitionOverwriteMode")
         # one aggregate pass: per-group rows, invalid rows, violation
         # rows (map-side partial agg; no join back to the written files)
-        fails = [~F.coalesce(c.pred, F.lit(True)) for c in validator.checks]
-        nviol = (F.size(F.filter(F.array(*fails), lambda b: b)) if fails
-                 else F.lit(0))
+        nviol = validator.violation_count_column
         stats = (work.select(
                     "part", validator.valid_column.alias("_v"),
                     nviol.alias("_nv"))

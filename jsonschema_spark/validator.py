@@ -24,8 +24,9 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .compiler import sql
 from .compiler.context import CompileContext, json_pointer
-from .compiler.node import Check, all_of
+from .compiler.node import Check
 from .compiler.registry import (KeywordRegistry, compile_subschema,
                                 default_registry)
 from .spec import check_schema
@@ -59,8 +60,44 @@ def _violation_rows(df: DataFrame, structs: Sequence[Column],
     structs gives the empty result typed by `ddl`."""
     arr = (F.filter(F.array(*structs), lambda s: s.isNotNull()) if structs
            else F.array().cast(f"array<struct<{ddl}>>"))
-    return (df.select(*id_cols, F.explode(arr).alias("_v"))
-            .select(*id_cols, "_v.*"))
+    return _explode_rows(df, arr, id_cols)
+
+
+def _explode_rows(df: DataFrame, arr: Column,
+                  id_cols: Sequence[str]) -> DataFrame:
+    """`id_cols` then the fields of each struct in the array `arr`, one
+    row per struct."""
+    ids = [sql.ref(c) for c in id_cols]
+    return (df.select(*ids, F.explode(arr).alias("_v"))
+            .select(*ids, "_v.*"))
+
+
+def _struct_array(structs: Sequence[sql.Expr], ddl: str) -> sql.Expr:
+    """The non-NULL ``when(bad, named_struct(...))`` expressions of
+    `structs` as one array, typed by `ddl` when there are none."""
+    if not structs:
+        return sql.array().cast(f"array<struct<{ddl}>>")
+    return sql.filter(sql.array(*structs), lambda s: s.isNotNull())
+
+
+def violation_structs(checks: Sequence[Check], context: bool) -> sql.Expr:
+    """One violation struct per failed check of `checks` (see
+    :func:`_vrow`), with ``context_of`` when `context`, as one array."""
+    rows = []
+    for c in checks:
+        fields = dict(keyword=c.keyword, json_path=c.json_path,
+                      schema_path=c.schema_path,
+                      message=c.message.cast("string"),
+                      failing_value=c.failing_value.cast("string"))
+        if context:
+            fields["context_of"] = sql.lit(c.context_of).cast("string")
+        fields["type_match"] = (c.type_match if c.type_match is not None
+                                else sql.lit(False))
+        rows.append(sql.when(~sql.coalesce(c.pred, True),
+                             sql.named_struct(**fields)))
+    ddl = (_VIOLATION_DDL + (",context_of:string" if context else "")
+           + ",type_match:boolean")
+    return _struct_array(rows, ddl)
 
 
 class CompiledValidator:
@@ -96,6 +133,7 @@ class CompiledValidator:
         if format_checker and not self.registry.assert_formats:
             self.registry = self.registry.extend({})
             self.registry.assert_formats = True
+        self._spark = df.sparkSession
         from .compiler.legacy import draft_of
         from .compiler.resolver import Resolver
         # URI semantics must follow the schema's draft: a draft4 schema
@@ -118,10 +156,10 @@ class CompiledValidator:
             row_fields=list(df.schema.fields),
             resolver=resolver, base_uri=root_uri,
             dynamic_scope=(root_uri,))
-        node = compile_subschema(ctx, schema)
-        # the $ref memo serves this compile only; the checks' deferred
-        # builders keep `ctx` alive, so drop the memo's snapshots now
-        ctx.ref_memo.clear()
+        with sql.lambda_names():
+            node = compile_subschema(ctx, schema)
+        #: rendered violation-struct arrays, by "with context"
+        self._violation_arrays: dict[bool, Column] = {}
         self.checks: list[Check] = node.checks
         #: anyOf/oneOf branch errors (ValidationError.context analogue,
         #: exceptions.py:120-131) — excluded from validity and from the
@@ -134,10 +172,31 @@ class CompiledValidator:
 
     # ------------------------------------------------------------- is_valid
     @cached_property
+    def _valid(self) -> sql.Expr:
+        return sql.all_of(c.pred for c in self.checks)
+
+    @cached_property
     def valid_column(self) -> Column:
-        """Row validity: the Kleene AND of every check, built on first
+        """Row validity: the Kleene AND of every check, rendered on first
         read and reused by every later call on this validator."""
-        return all_of([c.pred for c in self.checks])
+        return sql.column(self._valid, self._spark)
+
+    @cached_property
+    def violation_count_column(self) -> Column:
+        """Per-row count of failed checks (the row's number of
+        :meth:`violations` rows)."""
+        fails = [~sql.coalesce(c.pred, True) for c in self.checks]
+        return sql.column(sql.size(sql.filter(sql.array(*fails),
+                                              lambda b: b))
+                          if fails else sql.lit(0), self._spark)
+
+    def sql(self) -> tuple[str, list[tuple[str, str]]]:
+        """The compiled Spark SQL text: the validity expression, and each
+        check's ``(schema_path, predicate)``.  Lambda variables are
+        numbered per compile, so the text depends only on the schema and
+        the DataFrame schema."""
+        return (self._valid.text,
+                [(c.schema_path, c.pred.text) for c in self.checks])
 
     def with_valid(self, df: DataFrame, col: str = "valid") -> DataFrame:
         return df.withColumn(col, self.valid_column)
@@ -170,20 +229,15 @@ class CompiledValidator:
         exactly when some check's ``~coalesce(pred, true)`` fires (a
         context check fires only when its composite's check does), so
         no violation row is lost; the filter is deterministic and pushes
-        down to the scan."""
-        def row(c: Check) -> Column:
-            extra = ({"context_of": F.lit(c.context_of).cast("string")}
-                     if context else {})
-            return F.when(~F.coalesce(c.pred, F.lit(True)), _vrow(
-                c.keyword, c.json_path, c.schema_path, c.message,
-                c.failing_value, **extra,
-                type_match=(c.type_match if c.type_match is not None
-                            else F.lit(False))))
-        ddl = (_VIOLATION_DDL + (",context_of:string" if context else "")
-               + ",type_match:boolean")
-        return _violation_rows(
+        down to the scan.  The struct array is rendered once per
+        validator and output kind."""
+        arr = self._violation_arrays.get(context)
+        if arr is None:
+            arr = self._violation_arrays[context] = sql.column(
+                violation_structs(checks, context), self._spark)
+        return _explode_rows(
             df.filter(self.valid_column == False),  # noqa: E712
-            [row(c) for c in checks], id_cols, ddl)
+            arr, id_cols)
 
     # ---------------------------------------------------------- annotations
     def annotation_units(self, df: DataFrame,
@@ -198,19 +252,18 @@ class CompiledValidator:
         import json as _json
 
         structs = [
-            F.when(F.coalesce(a.pred, F.lit(False)), F.struct(
-                F.lit(a.keyword).alias("keyword"),
-                F.lit("/" + a.schema_path).alias("keywordLocation"),
-                F.lit(a.json_path).alias("json_path"),
-                F.lit(_json.dumps(a.value)).alias("annotation_json"),
-            ))
+            sql.when(sql.coalesce(a.pred, False), sql.named_struct(
+                keyword=a.keyword, keywordLocation="/" + a.schema_path,
+                json_path=a.json_path,
+                annotation_json=_json.dumps(a.value)))
             for a in self.annotations
         ]
         ddl = ("keyword:string,keywordLocation:string,json_path:string,"
                "annotation_json:string")
-        return _violation_rows(df.filter(self.valid_column), structs,
-                               id_cols, ddl).select(
-            *id_cols,
+        arr = sql.column(_struct_array(structs, ddl), self._spark)
+        return _explode_rows(df.filter(self.valid_column), arr,
+                             id_cols).select(
+            *[sql.ref(c) for c in id_cols],
             F.lit(True).alias("valid"),
             "keyword", "keywordLocation",
             json_pointer(F.col("json_path")).alias("instanceLocation"),
@@ -223,7 +276,7 @@ class CompiledValidator:
         (validators.py:485-500 lifted to groupBy)."""
         annotated = df.withColumn("_valid", self.valid_column)
         if partition_by:
-            keys = [F.col(c) for c in partition_by]
+            keys = [sql.ref(c) for c in partition_by]
             grouped = annotated.groupBy(*keys)
         else:
             grouped = annotated.groupBy(

@@ -112,9 +112,9 @@ def test_document_mode_union_structs_and_absent_policy(spark):
     Verdict parity asserted against the installed jsonschema on both
     polarities."""
     import jsonschema
-    import pyspark.sql.functions as F
     import pyspark.sql.types as T
 
+    from jsonschema_spark.compiler import sql
     from jsonschema_spark.compiler.context import CompileContext
     from jsonschema_spark.compiler.registry import compile_subschema
     from jsonschema_spark.conformance import (_registry_for_draft,
@@ -147,12 +147,12 @@ def test_document_mode_union_structs_and_absent_policy(spark):
         root_uri = res.add_root(schema)
         ctx = CompileContext(
             registry=_registry_for_draft("draft4"),
-            target=F.col("value"), dtype=dtype, root_schema=schema,
+            target=sql.col("value"), dtype=dtype, root_schema=schema,
             null_is_absent=True, absent_policy=True,
             resolver=res, base_uri=root_uri, dynamic_scope=(root_uri,))
         node = compile_subschema(ctx, schema)
-        verdicts.append(bool(df.select(
-            F.coalesce(node.ok, F.lit(False)).alias("ok")).first()["ok"]))
+        verdicts.append(bool(df.select(sql.column(
+            sql.coalesce(node.ok, False)).alias("ok")).first()["ok"]))
     assert verdicts == [True, False]
 
     # explicit nulls stay out of the document data model

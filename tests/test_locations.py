@@ -67,6 +67,24 @@ def test_dotted_column_name_binds_as_one_column(spark):
             == [(0, err.json_path)] == [(0, "$['a.b']")])
 
 
+def test_dotted_caller_column_names(spark):
+    """Caller-named columns (``id_cols``, ``partition_by``, x-spark
+    keys) called ``a.b`` are one column each, not struct access."""
+    from jsonschema_spark import validate_dataset
+
+    df = _frame(spark, ["a.b"], [(0, 1), (1, 1), (2, 9)])
+    v = CompiledValidator({"properties": {"_row": {"maximum": 0}}}, df)
+    assert sorted((r["a.b"], r["json_path"])
+                  for r in v.violations(df, ["a.b"]).collect()) \
+        == [(1, "$['_row']"), (9, "$['_row']")]
+    assert sorted(map(tuple, v.manifest(df, ["a.b"]).select(
+        "`a.b`", "rows", "invalid_rows").collect())) == [(1, 2, 1), (9, 1, 1)]
+    out = validate_dataset(df, {"x-spark": {"unique": ["a.b"]}}, ["_row"])
+    assert sorted((r["_row"], r["keyword"], r["json_path"])
+                  for r in out.collect()) == [
+        (0, "uniqueItems:a.b", "$['a.b']"), (1, "uniqueItems:a.b", "$['a.b']")]
+
+
 def test_json_path_join_renders_like_reference():
     assert [json_path_join("$", n) for n in ("ok", "_id", "a'b", "a\\b")] \
         == ["$.ok", "$['_id']", "$['a\\'b']", "$['a\\\\b']"]

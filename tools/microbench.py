@@ -67,8 +67,8 @@ def wide_ref_creation(spark):
             f"{best * 1000:.0f} ms, "
             f"{statistics.median(trips) / checks:.1f} py4j round trips "
             f"per check",
-            f"{checks} checks; messages, failing values and type_match "
-            f"are built only by violations()")
+            f"{checks} checks; the compile builds SQL text in Python, "
+            f"each validator output is one F.expr")
 
 
 def main() -> None:

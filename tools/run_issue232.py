@@ -40,9 +40,9 @@ ROWS = 2_000
 
 def main() -> None:
     import jsonschema
-    import pyspark.sql.functions as F
     import pyspark.sql.types as T
 
+    from jsonschema_spark.compiler import sql
     from jsonschema_spark.compiler.context import CompileContext
     from jsonschema_spark.compiler.registry import compile_subschema
     from jsonschema_spark.conformance import (_registry_for_draft,
@@ -83,12 +83,13 @@ def main() -> None:
                 root_uri = res.add_root(schema)
                 t0 = time.perf_counter()
                 ctx = CompileContext(
-                    registry=registry, target=F.col("value"),
+                    registry=registry, target=sql.col("value"),
                     dtype=dtype, root_schema=schema,
                     null_is_absent=True, absent_policy=True,
                     resolver=res, base_uri=root_uri,
                     dynamic_scope=(root_uri,))
                 node = compile_subschema(ctx, schema)
+                ok_col = sql.column(sql.coalesce(node.ok, False), spark)
                 compile_s = time.perf_counter() - t0
             except Exception as e:      # noqa: BLE001 — report, don't die
                 n_compile_err += 1
@@ -103,7 +104,7 @@ def main() -> None:
                 [(_to_row_value(v, dtype), i)
                  for i, v in enumerate(insts)], sschema)
             got = {r["_i"]: bool(r["ok"]) for r in pair.select(
-                "_i", F.coalesce(node.ok, F.lit(False)).alias("ok"))
+                "_i", ok_col.alias("ok"))
                 .collect()}
             verdicts = [got[0], got[1]]
             ref_verdicts = [ref.is_valid(i) for i in insts]
@@ -117,8 +118,7 @@ def main() -> None:
                 [(_to_row_value(inst, dtype),)] * ROWS, one).cache()
             df.count()
             t0 = time.perf_counter()
-            n_ok = df.select(F.coalesce(node.ok, F.lit(False))
-                             .alias("ok")).filter("ok").count()
+            n_ok = df.select(ok_col.alias("ok")).filter("ok").count()
             run_s = time.perf_counter() - t0
             eng_rps = ROWS / run_s
 
