@@ -17,13 +17,16 @@ from pyspark.sql import types as T
 
 from . import sql as F
 from .context import CompileContext, pointer_escape
-from .keywords import _row_scope
 from .node import Node
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
                        fmt_message, make_check)
 from .sql import Expr
 
 STRING = T.StringType()
+
+
+def _row_scope(ctx: CompileContext) -> bool:
+    return ctx.target is None
 
 
 def _element_ok(ctx: CompileContext, subschema: Any, elem: Expr,
@@ -47,25 +50,8 @@ def c_all_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     return out
 
 
-def _any(oks: list[Expr]) -> Expr:
-    """OR of `oks` seeded with FALSE: `anyOf: []` / `oneOf: []`
-    (meta-schema-invalid but tolerated, like the reference's any() over
-    no branches) fails every instance."""
-    return F.any_of([F.lit(False), *oks])
-
-
-def _gated(out: Node, child: Node, passes: Expr) -> Node:
-    """Add `child`'s checks and context to `out`, each passing where
-    `passes` holds."""
-    for chk in child.checks + child.context:
-        chk.pred = passes | chk.pred
-    out.checks.extend(child.checks)
-    out.context.extend(child.context)
-    return out
-
-
-def _with_context(node: Node, children: list[Node],
-                  composite_ok: Expr) -> Node:
+def _with_context(ctx: CompileContext, node: Node, keyword: str,
+                  children: list[Node], composite_ok: Expr) -> Node:
     """Attach each child branch's checks as *context* of the composite
     error (ValidationError.context, exceptions.py:120-131): they fire
     only when the composite fails, never affect validity, and carry the
@@ -84,10 +70,15 @@ def c_any_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     branch errors attach as context."""
     children = [compile_subschema(ctx.child(schema_fragment=f"anyOf/{i}"),
                                   sub) for i, sub in enumerate(value)]
-    pred = _any([c.ok for c in children])
+    oks = [c.ok for c in children]
+    # seed False: `anyOf: []` (meta-schema-invalid but tolerated, like
+    # the reference's any() over no branches) fails every instance
+    pred = F.lit(False)
+    for o in oks:
+        pred = pred | o
     node = make_check(ctx, "anyOf", pred, fmt_message(
         ctx, "%s is not valid under any of the given schemas"))
-    return _with_context(node, children, pred)
+    return _with_context(ctx, node, "anyOf", children, pred)
 
 
 def c_one_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -104,7 +95,10 @@ def c_one_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     # carries no context (_keywords.py:360-373), so best_match must not
     # descend into branch errors there (caught by the r4 by_relevance
     # differential fuzz)
-    return _with_context(node, children, _any(oks))
+    any_ok = F.lit(False)  # seed False: tolerate `oneOf: []` (fails all)
+    for o in oks:
+        any_ok = any_ok | o
+    return _with_context(ctx, node, "oneOf", children, any_ok)
 
 
 def c_not(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -121,10 +115,24 @@ def c_if(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     validators.py:392-393,440-441)."""
     if_ok = compile_subschema(ctx.child(schema_fragment="if"), value).ok
     out = Node()
-    for kw, passes in (("then", ~if_ok), ("else", if_ok)):
-        if kw in schema:
-            _gated(out, compile_subschema(ctx.child(schema_fragment=kw),
-                                          schema[kw]), passes)
+    if "then" in schema:
+        child = compile_subschema(ctx.child(schema_fragment="then"),
+                                  schema["then"])
+        for chk in child.checks:
+            chk.pred = (~if_ok) | chk.pred
+            out.checks.append(chk)
+        for chk in child.context:
+            chk.pred = (~if_ok) | chk.pred
+            out.context.append(chk)
+    if "else" in schema:
+        child = compile_subschema(ctx.child(schema_fragment="else"),
+                                  schema["else"])
+        for chk in child.checks:
+            chk.pred = if_ok | chk.pred
+            out.checks.append(chk)
+        for chk in child.context:
+            chk.pred = if_ok | chk.pred
+            out.context.append(chk)
     return out
 
 
@@ -267,12 +275,15 @@ def _memo_replay(ctx: CompileContext, entry: tuple) -> Node:
     Check clones each time — see _memo_store."""
     p0, checks, context, ann, warns = entry
     p1 = ctx.schema_path
-
-    def moved(chk):
-        return _dc_replace(
+    out = Node()
+    for chk in checks:
+        out.checks.append(_dc_replace(
             chk, schema_path=_rebase_sp(chk.schema_path, p0, p1),
-            context_of=_rebase_sp(chk.context_of, p0, p1))
-    out = Node(list(map(moved, checks)), list(map(moved, context)))
+            context_of=_rebase_sp(chk.context_of, p0, p1)))
+    for chk in context:
+        out.context.append(_dc_replace(
+            chk, schema_path=_rebase_sp(chk.schema_path, p0, p1),
+            context_of=_rebase_sp(chk.context_of, p0, p1)))
     for a in ann:
         ctx.annotations.append(_dc_replace(
             a, schema_path=_rebase_sp(a.schema_path, p0, p1)))
@@ -357,7 +368,10 @@ def _compile_referent(ctx: CompileContext, referent: Any, rbase: str,
     if mkey is not None:
         _memo_store(ctx, mkey, child, n_ann, n_warn)
     # $ref does not prefix the schema path (validators.py:392-393)
-    return Node(child.checks, child.context)
+    out = Node()
+    out.checks.extend(child.checks)
+    out.context.extend(child.context)
+    return out
 
 
 def c_ref(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -528,12 +542,13 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
         for fld in extras:
             target = ctx.member(fld.name)
             if value is False:
-                out.checks += make_check(
+                n = make_check(
                     ctx.child(path_fragment=fld.name, row_fields=None),
                     keyword, target.isNull(),
                     f"Additional properties are not allowed "
-                    f"('{fld.name}' was unexpected)",
-                    failing_value=target.cast("string")).checks
+                    f"('{fld.name}' was unexpected)")
+                n.checks[0].failing_value = target.cast("string")
+                out.checks.extend(n.checks)
             elif value is not True:
                 child_ctx = _bind_member(ctx, fld, keyword)
                 child = compile_subschema(child_ctx, value)
@@ -548,8 +563,10 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
             return None
 
         def is_extra(k: Expr) -> Expr:
-            return F.all_of(([~k.isin(*known)] if known else [])
-                            + [~k.rlike(j) for j in jrx])
+            cond = ~k.isin(*known) if known else F.lit(True)
+            for j in jrx:
+                cond = cond & ~k.rlike(j)
+            return cond
 
         if value is False:
             bad = F.size(F.filter(F.map_keys(ctx.target), is_extra))
@@ -577,9 +594,10 @@ def c_property_names(ctx: CompileContext, value: Any,
             name_ok = _element_ok(ctx, value, F.lit(fld.name), STRING,
                                   "propertyNames")
             target = ctx.member(fld.name)
-            out.checks += make_check(
-                ctx, "propertyNames", target.isNull() | name_ok,
-                f"property name '{fld.name}' fails propertyNames").checks
+            n = make_check(ctx, "propertyNames", target.isNull() | name_ok,
+                           f"property name '{fld.name}' fails "
+                           f"propertyNames")
+            out.checks.extend(n.checks)
         return out
     if ctx.is_map():
         ok = F.forall(F.map_keys(ctx.target),
@@ -601,12 +619,18 @@ def c_dependent_schemas(ctx: CompileContext, value: Any,
         if ctx.is_map():
             present = F.map_contains_key(ctx.target, F.lit(prop))
         else:
-            if prop not in members:
+            fld = members.get(prop)
+            if fld is None:
                 continue  # trigger statically absent -> vacuous
             present = ctx.member(prop).isNotNull()
-        _gated(out, compile_subschema(ctx.child(
-            schema_fragment=f"dependentSchemas/{pointer_escape(prop)}"),
-            sub), ~present)
+        child = compile_subschema(
+            ctx.child(schema_fragment=f"dependentSchemas/{pointer_escape(prop)}"), sub)
+        for chk in child.checks:
+            chk.pred = (~present) | chk.pred
+            out.checks.append(chk)
+        for chk in child.context:
+            chk.pred = (~present) | chk.pred
+            out.context.append(chk)
     return out
 
 
@@ -624,21 +648,13 @@ def c_prefix_items(ctx: CompileContext, value: Any,
         ok = _element_ok(ctx.child(path_fragment=i), sub, elem, elem_t,
                          f"prefixItems/{i}")
         pred = (F.size(ctx.target) <= i) | ok
-        out.checks += make_check(
-            ctx.child(path_fragment=i, row_fields=None), "prefixItems",
-            pred, f"item {i} fails prefixItems/{i}",
-            schema_suffix=f"prefixItems/{i}",
-            failing_value=elem.cast("string")).checks
+        n = make_check(ctx.child(path_fragment=i, row_fields=None),
+                       "prefixItems", pred,
+                       f"item {i} fails prefixItems/{i}",
+                       schema_suffix=f"prefixItems/{i}")
+        n.checks[0].failing_value = F.get(ctx.target, i).cast("string")
+        out.checks.extend(n.checks)
     return out
-
-
-def _rest_ok(ctx: CompileContext, prefix: int, sub: Any,
-             fragment: str) -> Expr:
-    """Every element past the first `prefix` is valid under `sub`."""
-    c = ctx.target
-    rest = F.slice(c, prefix + 1, F.greatest(F.size(c) - prefix, F.lit(0)))
-    return F.forall(rest, lambda x: _element_ok(
-        ctx, sub, x, ctx.dtype.elementType, fragment))
 
 
 def c_items(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -646,15 +662,20 @@ def c_items(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
     if _row_scope(ctx) or not ctx.is_array():
         return None
     prefix = len(schema.get("prefixItems", []))
+    c = ctx.target
     if value is False:
-        return make_check(ctx, "items", F.size(ctx.target) <= prefix,
+        pred = F.size(c) <= prefix
+        return make_check(ctx, "items", pred,
                           f"array has items beyond the {prefix} "
                           f"allowed prefix items")
     if value is True:
         return None
-    return make_check(ctx, "items", _rest_ok(ctx, prefix, value, "items"),
-                      fmt_message(ctx, "%s has items failing the items "
-                                       "subschema"))
+    rest = F.slice(c, prefix + 1,
+                   F.greatest(F.size(c) - prefix, F.lit(0)))
+    ok = F.forall(rest, lambda x: _element_ok(ctx, value, x,
+                                              ctx.dtype.elementType, "items"))
+    return make_check(ctx, "items", ok, fmt_message(
+        ctx, "%s has items failing the items subschema"))
 
 
 def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -667,11 +688,14 @@ def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
                         lambda x: _element_ok(ctx, value, x,
                                               ctx.dtype.elementType,
                                               "contains")))
-    out = make_check(ctx, "contains", n >= min_c, fmt_message(
+    out = Node()
+    node = make_check(ctx, "contains", n >= min_c, fmt_message(
         ctx, "%s does not contain enough matching items"))
+    out.checks.extend(node.checks)
     if max_c is not None:
-        out.checks += make_check(ctx, "maxContains", n <= max_c, fmt_message(
-            ctx, "%s contains too many matching items")).checks
+        node = make_check(ctx, "maxContains", n <= max_c, fmt_message(
+            ctx, "%s contains too many matching items"))
+        out.checks.extend(node.checks)
     return out
 
 
@@ -687,10 +711,19 @@ def c_contains(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
 
 def _or_conds(conds: list[Any]) -> Any:
     """OR of static bools and predicates; True short-circuits statically."""
-    if any(c is True for c in conds):
-        return True
-    preds = [c for c in conds if c is not False]
-    return F.any_of(preds) if preds else False
+    cols = []
+    for c in conds:
+        if c is True:
+            return True
+        if c is False:
+            continue
+        cols.append(c)
+    if not cols:
+        return False
+    out = cols[0]
+    for c in cols[1:]:
+        out = out | c
+    return out
 
 
 def _sub_ok(ctx: CompileContext, sub: Any, fragment: str) -> Any:
@@ -714,50 +747,6 @@ def _member_ok(ctx: CompileContext, sub: Any, member: Expr,
     return _element_ok(ctx, sub, member, dtype, fragment)
 
 
-def _and(gate: Any, cond: Any) -> Any:
-    """AND of a static bool or predicate `gate` and `cond`."""
-    if gate is False or cond is False:
-        return False
-    if gate is True or cond is True:
-        return cond if gate is True else gate
-    return gate & cond
-
-
-def _ref_conds(ctx: CompileContext, schema: dict, rec) -> list[Any]:
-    """`rec` of each reference's target (None when unresolvable)."""
-    out = []
-    for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
-        if kw in schema and isinstance(schema[kw], str):
-            try:
-                target = _resolve_for_tracking(ctx, schema, kw)
-            except SchemaCompileError:
-                target = None
-            out.append(rec(target))
-    return out
-
-
-def _branch_conds(ctx: CompileContext, schema: dict, rec) -> list[Any]:
-    """`rec` of each allOf/oneOf/anyOf branch, where that branch holds."""
-    out = []
-    for kw in ("allOf", "oneOf", "anyOf"):
-        for i, sub in enumerate(schema.get(kw) or []):
-            cond = rec(sub)
-            if cond is not False:
-                out.append(_and(_sub_ok(ctx, sub, f"{kw}/{i}"), cond))
-    return out
-
-
-def _if_conds(ctx: CompileContext, schema: dict, rec) -> list[Any]:
-    """`rec` of if and then where `if` holds, of else where it fails."""
-    if "if" not in schema:
-        return []
-    if_ok = _sub_ok(ctx, schema["if"], "if")
-    neg = (not if_ok) if isinstance(if_ok, bool) else ~if_ok
-    return [_and(gate, rec(schema[kw]))
-            for kw, gate in (("if", if_ok), ("then", if_ok), ("else", neg))
-            if kw in schema]
-
-
 def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
                          fld: T.StructField, member: Expr,
                          depth: int = 0) -> Any:
@@ -767,10 +756,15 @@ def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
     Returns True/False statically or a boolean Expr."""
     if not isinstance(schema, dict) or depth > 12:
         return False
-
-    def rec(sub: Any) -> Any:
-        return _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
-    conds: list[Any] = _ref_conds(ctx, schema, rec)
+    conds: list[Any] = []
+    for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
+        if kw in schema and isinstance(schema[kw], str):
+            try:
+                resolved = _resolve_for_tracking(ctx, schema, kw)
+            except SchemaCompileError:
+                resolved = None
+            conds.append(_evaluated_prop_cond(ctx, resolved, fld, member,
+                                              depth + 1))
     props = schema.get("properties")
     if isinstance(props, dict) and fld.name in props:
         conds.append(True)
@@ -788,9 +782,38 @@ def _evaluated_prop_cond(ctx: CompileContext, schema: Any,
             if prop not in names:
                 continue  # trigger statically absent -> never applies
             trigger = ctx.member(prop).isNotNull()
-            conds.append(_and(trigger, rec(sub)))
-    conds += _branch_conds(ctx, schema, rec)
-    conds += _if_conds(ctx, schema, rec)
+            rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
+            if rec is False:
+                continue
+            conds.append(trigger if rec is True else trigger & rec)
+    for kw in ("allOf", "oneOf", "anyOf"):
+        for i, sub in enumerate(schema.get(kw) or []):
+            rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
+            if rec is False:
+                continue
+            ok = _sub_ok(ctx, sub, f"{kw}/{i}")
+            if ok is False:
+                continue
+            if ok is True:
+                conds.append(rec)
+            else:
+                conds.append(ok if rec is True else ok & rec)
+    if "if" in schema:
+        if_ok = _sub_ok(ctx, schema["if"], "if")
+        branches = [(if_ok, schema["if"])]
+        if "then" in schema:
+            branches.append((if_ok, schema["then"]))
+        if "else" in schema:
+            neg = (not if_ok) if isinstance(if_ok, bool) else ~if_ok
+            branches.append((neg, schema["else"]))
+        for gate, sub in branches:
+            rec = _evaluated_prop_cond(ctx, sub, fld, member, depth + 1)
+            if rec is False or gate is False:
+                continue
+            if gate is True:
+                conds.append(rec)
+            else:
+                conds.append(gate if rec is True else gate & rec)
     return _or_conds(conds)
 
 
@@ -815,12 +838,13 @@ def c_unevaluated_properties(ctx: CompileContext, value: Any,
                 continue
             if sub_ok is not False:
                 bad = bad & ~sub_ok
-            out.checks += make_check(
+            n = make_check(
                 ctx.child(path_fragment=fld.name, row_fields=None),
                 "unevaluatedProperties", ~bad,
                 f"Unevaluated properties are not allowed "
-                f"('{fld.name}' was unexpected)",
-                failing_value=member.cast("string")).checks
+                f"('{fld.name}' was unexpected)")
+            n.checks[0].failing_value = member.cast("string")
+            out.checks.extend(n.checks)
         return out
     if ctx.is_map():
         # fall back to the static key approximation for map payloads:
@@ -879,9 +903,6 @@ def _evaluated_item_cond(ctx: CompileContext, schema: Any, x: Expr,
         return False
     if "items" in schema and not isinstance(schema["items"], list):
         return True  # _utils.py:251-252: items evaluates every index
-
-    def rec(sub: Any) -> Any:
-        return _evaluated_item_cond(ctx, sub, x, i, depth + 1)
     conds: list[Any] = []
     if isinstance(schema.get("items"), list):
         # 2019-09 positional form evaluates the prefix only
@@ -891,16 +912,49 @@ def _evaluated_item_cond(ctx: CompileContext, schema: Any, x: Expr,
             conds.append(_member_ok(ctx, schema["additionalItems"], x,
                                     ctx.dtype.elementType,
                                     "additionalItems"))
-    conds += _ref_conds(ctx, schema, rec)
+    for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
+        if kw in schema and isinstance(schema[kw], str):
+            try:
+                resolved = _resolve_for_tracking(ctx, schema, kw)
+            except SchemaCompileError:
+                resolved = None
+            conds.append(_evaluated_item_cond(ctx, resolved, x, i,
+                                              depth + 1))
     prefix = schema.get("prefixItems")
     if isinstance(prefix, list) and prefix:
         conds.append(i < F.lit(len(prefix)))
-    conds += _if_conds(ctx, schema, rec)
+    if "if" in schema:
+        if_ok = _sub_ok(ctx, schema["if"], "if")
+        branches = [(if_ok, schema["if"])]
+        if "then" in schema:
+            branches.append((if_ok, schema["then"]))
+        if "else" in schema:
+            neg = (not if_ok) if isinstance(if_ok, bool) else ~if_ok
+            branches.append((neg, schema["else"]))
+        for gate, sub in branches:
+            rec = _evaluated_item_cond(ctx, sub, x, i, depth + 1)
+            if rec is False or gate is False:
+                continue
+            if gate is True:
+                conds.append(rec)
+            else:
+                conds.append(gate if rec is True else gate & rec)
     for kw in ("contains", "unevaluatedItems"):
         if kw in schema:
             conds.append(_member_ok(ctx, schema[kw], x,
                                     ctx.dtype.elementType, kw))
-    conds += _branch_conds(ctx, schema, rec)
+    for kw in ("allOf", "oneOf", "anyOf"):
+        for bi, sub in enumerate(schema.get(kw) or []):
+            rec = _evaluated_item_cond(ctx, sub, x, i, depth + 1)
+            if rec is False:
+                continue
+            ok = _sub_ok(ctx, sub, f"{kw}/{bi}")
+            if ok is False:
+                continue
+            if ok is True:
+                conds.append(rec)
+            else:
+                conds.append(ok if rec is True else ok & rec)
     return _or_conds(conds)
 
 

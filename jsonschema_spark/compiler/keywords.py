@@ -10,6 +10,7 @@ Spark type, so no runtime cost is paid.
 
 from __future__ import annotations
 
+import math
 import operator
 from dataclasses import replace
 from typing import Any, Optional
@@ -51,20 +52,30 @@ def _type_pred_for(ctx: CompileContext, t: str) -> Optional[Expr]:
         # the callback builds PySpark Columns over a Column target
         p = override(replace(ctx, target=F.column(c)))
         return p if p is None or isinstance(p, Expr) else F.from_column(p)
+    if t == "any":
+        return None
     if t == "null":
         return c.isNull()
-    if t == "integer" and ctx.is_numeric() and not ctx.is_integral():
-        # float/double/decimal: zero fractional part; modulo stays in the
-        # double domain (floor() returns BIGINT and overflows beyond
-        # int64 — 1e308 IS a draft6+ integer)
-        return (c.cast("double") % 1.0) == 0.0
-    static = {"any": True, "string": ctx.is_string(),
-              "boolean": ctx.is_boolean(), "integer": ctx.is_integral(),
-              "number": ctx.is_numeric(), "array": ctx.is_array(),
-              "object": ctx.is_struct() or ctx.is_map()}
-    if t not in static:
-        raise SchemaCompileError(f"unknown type {t!r}")
-    return None if static[t] else F.lit(False)
+    if t == "string":
+        return None if ctx.is_string() else F.lit(False)
+    if t == "boolean":
+        return None if ctx.is_boolean() else F.lit(False)
+    if t == "integer":
+        if ctx.is_integral():
+            return None
+        if ctx.is_numeric():  # float/double/decimal: zero fractional part
+            # modulo stays in the double domain (floor() returns BIGINT
+            # and overflows beyond int64 — 1e308 IS a draft6+ integer)
+            return (c.cast("double") % 1.0) == 0.0
+        return F.lit(False)
+    if t == "number":
+        return None if ctx.is_numeric() else F.lit(False)
+    if t == "array":
+        return None if ctx.is_array() else F.lit(False)
+    if t == "object":
+        return None if (ctx.is_struct() or ctx.is_map()) \
+            else F.lit(False)
+    raise SchemaCompileError(f"unknown type {t!r}")
 
 
 def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -88,14 +99,17 @@ def c_type(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
             return make_check(ctx, "type", ctx.target.isNotNull(),
                               f"None is not of type {_fmt_types(types)}")
         return None
-    pred = F.any_of(preds)
+    pred = preds[0]
+    for p in preds[1:]:
+        pred = pred | p
     if not ctx.null_is_absent and "null" not in types:
         pred = ctx.target.isNotNull() & pred
     template = "%s is not of type " + _fmt_types(types).replace("%", "%%")
     if all(_is_static_false(p) for p in preds):
         ctx.warn(f"type {types} can never match Spark type "
                  f"{ctx.dtype.simpleString() if ctx.dtype else '?'}")
-    return make_check(ctx, "type", pred, fmt_message(ctx, template))
+    return make_check(ctx, "type", pred,
+                      fmt_message(ctx, template))
 
 
 def _fmt_types(types: list[str]) -> str:
@@ -116,29 +130,34 @@ def typed_literal_eq(c: Expr, dtype: Optional[T.DataType],
     equality is key-order-insensitive, absent member == NULL field.
     Static type mismatches fold to ``lit(False)`` ("can never equal").
     """
+    def never() -> Expr:
+        return F.lit(False)
+
     if v is None:
         return c.isNull()
     present = c.isNotNull()
     if isinstance(v, bool):
         if not isinstance(dtype, T.BooleanType):
-            return F.lit(False)
+            return never()
         return present & (c == v)
     if isinstance(v, (int, float)):
         if not isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType,
                                   T.LongType, T.FloatType, T.DoubleType,
                                   T.DecimalType)):
-            return F.lit(False)
+            return never()
         if isinstance(v, int) and isinstance(dtype, (T.ByteType, T.ShortType,
                                                      T.IntegerType, T.LongType)):
             return present & (c == v)
+        if not _may_equal_float(dtype, v):
+            return never()
         return present & (c.cast("double") == float(v))
     if isinstance(v, str):
         if not isinstance(dtype, T.StringType):
-            return F.lit(False)
+            return never()
         return present & (c == v)
     if isinstance(v, list):
         if not isinstance(dtype, T.ArrayType):
-            return F.lit(False)
+            return never()
         pred = present & (F.size(c) == len(v))
         for i, e in enumerate(v):
             pred = pred & typed_literal_eq(
@@ -150,7 +169,7 @@ def typed_literal_eq(c: Expr, dtype: Optional[T.DataType],
             pred = present
             for k, val in v.items():
                 if k not in names:
-                    return F.lit(False)
+                    return never()
                 pred = pred & typed_literal_eq(c.getField(k), names[k], val)
             for f in dtype.fields:      # extra non-null field -> not equal
                 if f.name not in v:
@@ -162,8 +181,30 @@ def typed_literal_eq(c: Expr, dtype: Optional[T.DataType],
                 pred = pred & typed_literal_eq(
                     F.element_at(c, F.lit(k)), dtype.valueType, val)
             return pred
-        return F.lit(False)
-    return F.lit(False)
+        return never()
+    return never()
+
+
+def _doubles_around(v: int) -> tuple[float, float]:
+    """The greatest double <= `v` and the least double >= `v` (one
+    double when `v` is exact, an infinity past the largest finite one)."""
+    try:
+        f = float(v)
+    except OverflowError:
+        f = math.inf if v > 0 else -math.inf
+    if f == v:
+        return f, f
+    return ((f, math.nextafter(f, math.inf)) if f < v
+            else (math.nextafter(f, -math.inf), f))
+
+
+def _may_equal_float(dtype: Optional[T.DataType], v: Any) -> bool:
+    """False for an integer no FLOAT/DOUBLE value equals: the reference
+    compares ints with floats exactly, where Spark would first round the
+    integer to a double."""
+    return not (isinstance(v, int)
+                and isinstance(dtype, (T.FloatType, T.DoubleType))
+                and len(set(_doubles_around(v))) > 1)
 
 
 def _literal_eq(ctx: CompileContext, v: Any) -> Optional[Expr]:
@@ -183,12 +224,20 @@ def _scalar_isin_values(ctx: CompileContext, value: list) -> Optional[list]:
     column's Spark type already excludes cross-type equality."""
     out = []
     for v in value:
-        if not isinstance(v, (bool, int, float, str)):
+        if v is None or isinstance(v, (list, dict)):
             return None
-        # a value of another JSON type can never equal: drop it
-        if (ctx.is_boolean() if isinstance(v, bool) else ctx.is_string()
-                if isinstance(v, str) else ctx.is_numeric()):
-            out.append(v)
+        if isinstance(v, bool):
+            if not ctx.is_boolean():
+                continue  # can never equal; drop from the disjunction
+        elif isinstance(v, (int, float)):
+            if not ctx.is_numeric() or not _may_equal_float(ctx.dtype, v):
+                continue
+        elif isinstance(v, str):
+            if not ctx.is_string():
+                continue
+        else:
+            return None
+        out.append(v)
     return out
 
 
@@ -207,8 +256,14 @@ def c_enum(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
             # a null element is present and no scalar member equals it
             pred = F.coalesce(pred, F.lit(False))
     else:
-        pred = F.any_of(e for e in (_literal_eq(ctx, v) for v in value)
-                        if e is not None)
+        eqs = [e for e in (_literal_eq(ctx, v) for v in value)
+               if e is not None]
+        if not eqs:
+            pred = F.lit(False)
+        else:
+            pred = eqs[0]
+            for e in eqs[1:]:
+                pred = pred | e
     return make_check(ctx, "enum", pred, fmt_message(
         ctx, "%s is not one of the permitted values"))
 
@@ -232,20 +287,36 @@ def _numeric_kw(ctx: CompileContext, keyword: str, value: Any,
         return None  # non-numbers ignored (_keywords.py:149-164)
     if not isinstance(value, (int, float)) or isinstance(value, bool):
         raise SchemaCompileError(f"{keyword} value must be a number")
-    pred = op(ctx.target, value)
+    bound = value
+    if not _may_equal_float(ctx.dtype, value):
+        # compare exactly where Spark would round `value` to a double:
+        # x >= v and x < v against the least double >= v, x > v and
+        # x <= v against the greatest double <= v
+        below, above = _doubles_around(value)
+        bound = above if op in (operator.ge, operator.lt) else below
+    pred = op(ctx.target, bound)
     return make_check(ctx, keyword, pred, fmt_message(
         ctx, f"%s violates {keyword} {value}"))
 
 
-def _bound(keyword: str, op):
-    return lambda ctx, value, schema: _numeric_kw(ctx, keyword, value, op)
+def c_minimum(ctx, value, schema):
+    """`minimum` (_keywords.py:158-164)."""
+    return _numeric_kw(ctx, "minimum", value, operator.ge)
 
 
-#: the bounds (_keywords.py:127-164)
-c_minimum = _bound("minimum", operator.ge)
-c_maximum = _bound("maximum", operator.le)
-c_exclusive_minimum = _bound("exclusiveMinimum", operator.gt)
-c_exclusive_maximum = _bound("exclusiveMaximum", operator.lt)
+def c_maximum(ctx, value, schema):
+    """`maximum` (_keywords.py:149-155)."""
+    return _numeric_kw(ctx, "maximum", value, operator.le)
+
+
+def c_exclusive_minimum(ctx, value, schema):
+    """`exclusiveMinimum` (_keywords.py:127-135)."""
+    return _numeric_kw(ctx, "exclusiveMinimum", value, operator.gt)
+
+
+def c_exclusive_maximum(ctx, value, schema):
+    """`exclusiveMaximum` (_keywords.py:138-146)."""
+    return _numeric_kw(ctx, "exclusiveMaximum", value, operator.lt)
 
 
 def c_multiple_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Node]:
@@ -282,26 +353,20 @@ def c_multiple_of(ctx: CompileContext, value: Any, schema: dict) -> Optional[Nod
 
 # --------------------------------------------------------------- strings --
 
-def _count_kw(keyword: str, applies, count, op, message: str):
-    """A bound on a string's length or an array's size."""
-    def compile_kw(ctx: CompileContext, value, schema) -> Optional[Node]:
-        if _row_scope(ctx) or not applies(ctx):
-            return None
-        return make_check(ctx, keyword, op(count(ctx.target), int(value)),
-                          fmt_message(ctx, message))
-    return compile_kw
+def c_min_length(ctx: CompileContext, value, schema) -> Optional[Node]:
+    """`minLength` (_keywords.py:231-234). Spark length() = codepoints."""
+    if _row_scope(ctx) or not ctx.is_string():
+        return None
+    return make_check(ctx, "minLength", F.length(ctx.target) >= int(value),
+                      fmt_message(ctx, "%s is too short"))
 
 
-#: minLength/maxLength (_keywords.py:231-240; Spark length() counts
-#: code points) and minItems/maxItems (_keywords.py:194-203)
-c_min_length = _count_kw("minLength", CompileContext.is_string, F.length,
-                         operator.ge, "%s is too short")
-c_max_length = _count_kw("maxLength", CompileContext.is_string, F.length,
-                         operator.le, "%s is too long")
-c_min_items = _count_kw("minItems", CompileContext.is_array, F.size,
-                        operator.ge, "%s is too short")
-c_max_items = _count_kw("maxItems", CompileContext.is_array, F.size,
-                        operator.le, "%s is too long")
+def c_max_length(ctx: CompileContext, value, schema) -> Optional[Node]:
+    """`maxLength` (_keywords.py:237-240)."""
+    if _row_scope(ctx) or not ctx.is_string():
+        return None
+    return make_check(ctx, "maxLength", F.length(ctx.target) <= int(value),
+                      fmt_message(ctx, "%s is too long"))
 
 
 def c_pattern(ctx: CompileContext, value, schema) -> Optional[Node]:
@@ -344,7 +409,9 @@ def c_format(ctx: CompileContext, value, schema) -> Optional[Node]:
 # ------------------------------------------------------- object keywords --
 
 def _row_field_names(ctx: CompileContext) -> list[str]:
-    return [f.name for f in ctx.row_fields or ()]
+    if ctx.row_fields is None:
+        return []
+    return [f.name for f in ctx.row_fields]
 
 
 def _member(ctx: CompileContext, name: str) -> Optional[Expr]:
@@ -370,9 +437,10 @@ def c_required(ctx: CompileContext, value, schema) -> Optional[Node]:
         pred = F.lit(False) if m is None else m.isNotNull()
         if m is None:
             ctx.warn(f"required property {name!r} not in schema — always fails")
-        out.checks += make_check(ctx, "required", pred,
-                                 f"'{name}' is a required property",
-                                 failing_value=F.null_string()).checks
+        sub = make_check(ctx, "required", pred,
+                         f"'{name}' is a required property")
+        sub.checks[0].failing_value = F.null_string()
+        out.checks.extend(sub.checks)
     return out
 
 
@@ -387,10 +455,11 @@ def c_dependent_required(ctx: CompileContext, value, schema) -> Optional[Node]:
             continue  # trigger property statically absent -> vacuous
         for dep in deps:
             d = _member(ctx, dep)
-            pred = p.isNull() | (F.lit(False) if d is None else d.isNotNull())
-            out.checks += make_check(
-                ctx, "dependentRequired", pred,
-                f"'{dep}' is a dependency of '{prop}'").checks
+            dep_present = F.lit(False) if d is None else d.isNotNull()
+            pred = p.isNull() | dep_present
+            sub = make_check(ctx, "dependentRequired", pred,
+                             f"'{dep}' is a dependency of '{prop}'")
+            out.checks.extend(sub.checks)
     return out
 
 
@@ -409,25 +478,41 @@ def _property_count(ctx: CompileContext) -> Optional[Expr]:
     return None
 
 
-def _properties_kw(keyword: str, op, message: str):
-    def compile_kw(ctx: CompileContext, value, schema) -> Optional[Node]:
-        n = _property_count(ctx)
-        if n is None:
-            return None
-        return make_check(ctx, keyword, op(n, int(value)),
-                          message.format(value))
-    return compile_kw
+def c_min_properties(ctx, value, schema) -> Optional[Node]:
+    """`minProperties` (_keywords.py:312-318)."""
+    n = _property_count(ctx)
+    if n is None:
+        return None
+    return make_check(ctx, "minProperties", n >= int(value),
+                      f"object does not have enough properties (< {value})")
 
 
-#: minProperties/maxProperties (_keywords.py:312-329)
-c_min_properties = _properties_kw(
-    "minProperties", operator.ge,
-    "object does not have enough properties (< {})")
-c_max_properties = _properties_kw(
-    "maxProperties", operator.le, "object has too many properties (> {})")
+def c_max_properties(ctx, value, schema) -> Optional[Node]:
+    """`maxProperties` (_keywords.py:321-329)."""
+    n = _property_count(ctx)
+    if n is None:
+        return None
+    return make_check(ctx, "maxProperties", n <= int(value),
+                      f"object has too many properties (> {value})")
 
 
 # -------------------------------------------------------- array keywords --
+
+def c_min_items(ctx, value, schema) -> Optional[Node]:
+    """`minItems` (_keywords.py:194-197)."""
+    if _row_scope(ctx) or not ctx.is_array():
+        return None
+    return make_check(ctx, "minItems", F.size(ctx.target) >= int(value),
+                      fmt_message(ctx, "%s is too short"))
+
+
+def c_max_items(ctx, value, schema) -> Optional[Node]:
+    """`maxItems` (_keywords.py:200-203)."""
+    if _row_scope(ctx) or not ctx.is_array():
+        return None
+    return make_check(ctx, "maxItems", F.size(ctx.target) <= int(value),
+                      fmt_message(ctx, "%s is too long"))
+
 
 def c_unique_items(ctx: CompileContext, value, schema) -> Optional[Node]:
     """`uniqueItems` (_keywords.py:206-212, equality per _utils.py:162-237).

@@ -43,11 +43,14 @@ def c_items_legacy(ctx: CompileContext, value: Any,
     if isinstance(value, list):
         # positional — identical to 2020-12 prefixItems
         return applicators.c_prefix_items(ctx, value, schema)
+    out = Node()
     ok = F.forall(ctx.target,
                   lambda x: applicators._element_ok(
                       ctx, value, x, ctx.dtype.elementType, "items"))
-    return make_check(ctx, "items", ok, fmt_message(
+    n = make_check(ctx, "items", ok, fmt_message(
         ctx, "%s has items failing the subschema"))
+    out.checks.extend(n.checks)
+    return out
 
 
 def c_additional_items(ctx: CompileContext, value: Any,
@@ -67,7 +70,9 @@ def c_additional_items(ctx: CompileContext, value: Any,
             f"Additional items are not allowed (beyond index {prefix})")
     if value is True or value == {}:
         return None
-    ok = applicators._rest_ok(ctx, prefix, value, "additionalItems")
+    rest = F.slice(c, prefix + 1, F.greatest(F.size(c) - prefix, F.lit(0)))
+    ok = F.forall(rest, lambda x: applicators._element_ok(
+        ctx, value, x, ctx.dtype.elementType, "additionalItems"))
     return make_check(ctx, "additionalItems", ok,
                       "an additional item fails its subschema")
 
@@ -98,21 +103,22 @@ def c_dependencies(ctx: CompileContext, value: Any,
     return out
 
 
-def _draft4_bound(keyword: str, modifier: str, op, strict):
-    def compile_kw(ctx: CompileContext, value: Any,
-                   schema: dict) -> Optional[Node]:
-        return keywords._numeric_kw(
-            ctx, keyword, value, strict if schema.get(modifier) is True
-            else op)
-    return compile_kw
+def c_minimum_draft4(ctx: CompileContext, value: Any,
+                     schema: dict) -> Optional[Node]:
+    """draft4 `minimum` with boolean `exclusiveMinimum` sibling
+    (_legacy_keywords.py:138-151)."""
+    if schema.get("exclusiveMinimum") is True:
+        return keywords._numeric_kw(ctx, "minimum", value, operator.gt)
+    return keywords.c_minimum(ctx, value, schema)
 
 
-#: draft4 `minimum`/`maximum` with a boolean `exclusiveMinimum`/
-#: `exclusiveMaximum` sibling (_legacy_keywords.py:138-167)
-c_minimum_draft4 = _draft4_bound("minimum", "exclusiveMinimum",
-                                 operator.ge, operator.gt)
-c_maximum_draft4 = _draft4_bound("maximum", "exclusiveMaximum",
-                                 operator.le, operator.lt)
+def c_maximum_draft4(ctx: CompileContext, value: Any,
+                     schema: dict) -> Optional[Node]:
+    """draft4 `maximum` with boolean `exclusiveMaximum` sibling
+    (_legacy_keywords.py:154-167)."""
+    if schema.get("exclusiveMaximum") is True:
+        return keywords._numeric_kw(ctx, "maximum", value, operator.lt)
+    return keywords.c_maximum(ctx, value, schema)
 
 
 def c_type_draft4(ctx: CompileContext, value: Any,
@@ -162,7 +168,9 @@ def c_type_draft3(ctx: CompileContext, value: Any,
     preds = [_type_or_schema_pred(ctx, t) for t in types]
     if any(p is None for p in preds):
         return None  # statically satisfied member
-    pred = F.any_of(preds)
+    pred = preds[0]
+    for p in preds[1:]:
+        pred = pred | p
     return make_check(ctx, "type", pred, fmt_message(
         ctx, "%s is not of the permitted types"))
 
@@ -183,7 +191,9 @@ def c_disallow(ctx: CompileContext, value: Any,
                           ctx.target.isNull() if ctx.null_is_absent
                           else F.lit(False),
                           "value matches a disallowed type")
-    pred = F.any_of(preds)
+    pred = preds[0]
+    for p in preds[1:]:
+        pred = pred | p
     return make_check(ctx, "disallow", ~pred, fmt_message(
         ctx, "%s matches a disallowed type"))
 
@@ -202,8 +212,9 @@ def c_required_draft3(ctx: CompileContext, value: Any,
     if value is not True or ctx.target is None:
         return None
     n = make_check(ctx, "required", ctx.target.isNotNull(),
-                   "property is required", failing_value=F.null_string())
+                   "property is required")
     n.checks[0].skip_null_guard = True
+    n.checks[0].failing_value = F.null_string()
     return n
 
 
@@ -243,7 +254,7 @@ def draft3_registry() -> KeywordRegistry:
     reg = KeywordRegistry()
     keywords.register_all(reg)
     applicators.register_all(reg)
-    reg = reg.extend({
+    reg = reg._merged({
         "items": c_items_legacy,
         "additionalItems": c_additional_items,
         "dependencies": c_dependencies_draft3,
@@ -299,7 +310,7 @@ def draft7_registry() -> KeywordRegistry:
     reg = KeywordRegistry()
     keywords.register_all(reg)
     applicators.register_all(reg)
-    reg = reg.extend({
+    reg = reg._merged({
         "items": c_items_legacy,
         "additionalItems": c_additional_items,
         "dependencies": c_dependencies,
@@ -328,7 +339,7 @@ def draft2019_registry() -> KeywordRegistry:
     reg = KeywordRegistry()
     keywords.register_all(reg)
     applicators.register_all(reg)
-    return reg.extend({
+    return reg._merged({
         "items": c_items_legacy,
         "additionalItems": c_additional_items,
         "dependencies": c_dependencies,
@@ -339,7 +350,7 @@ def draft4_registry() -> KeywordRegistry:
     """Draft 4 profile: boolean exclusive bounds, strict integer type
     (validators.py:635-672)."""
     reg = draft7_registry()
-    reg = reg.extend({
+    reg = reg._merged({
         "minimum": c_minimum_draft4,
         "maximum": c_maximum_draft4,
         "exclusiveMinimum": _IGNORE,   # boolean modifier, read by minimum

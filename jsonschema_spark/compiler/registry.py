@@ -15,6 +15,7 @@ Compiler signature::
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any, Callable, Optional, Union
 
 from . import sql
@@ -68,6 +69,16 @@ class KeywordRegistry:
         return self._compilers.get(keyword)
 
     def extend(self, compilers: dict[str, CompilerFn]) -> "KeywordRegistry":
+        """A copy with `compilers` added or overriding.  An extension
+        compiler sees ``ctx.target`` as a PySpark Column, and the checks
+        it returns may hold Columns: they are brought into the compiled
+        text as the SQL of their expressions (:func:`sql.from_column`).
+        A compiler that recurses with :func:`compile_subschema` works on
+        the text and is added with :meth:`register` instead."""
+        return self._merged({kw: _column_compiler(fn)
+                             for kw, fn in compilers.items()})
+
+    def _merged(self, compilers: dict[str, CompilerFn]) -> "KeywordRegistry":
         merged = dict(self._compilers)
         merged.update(compilers)
         out = KeywordRegistry(merged)
@@ -84,7 +95,7 @@ class KeywordRegistry:
         brought into the compiled text as the SQL of its expression.
         Redefining a built-in name overrides it; new names extend the
         vocabulary accepted by `type`."""
-        out = self.extend({})
+        out = self._merged({})
         out.type_predicates[name] = fn
         return out
 
@@ -93,13 +104,22 @@ class KeywordRegistry:
         *ignore* it (the reference builds each draft class from an
         explicit keyword subset, validators.py:601-857; anything else is
         an unknown keyword and validates nothing)."""
-        out = self.extend({})
+        out = self._merged({})
         for kw in keywords:
             out._compilers.pop(kw, None)
         return out
 
     def keywords(self) -> set[str]:
         return set(self._compilers)
+
+
+def _column_compiler(fn: CompilerFn) -> CompilerFn:
+    def compile_kw(ctx: CompileContext, value: Any,
+                   schema: dict) -> Optional[Node]:
+        if ctx.target is not None:
+            ctx = replace(ctx, target=sql.column(ctx.target))
+        return fn(ctx, value, schema)
+    return compile_kw
 
 
 def fmt_message(ctx: CompileContext, template: str) -> Expr:
@@ -189,10 +209,15 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
     if schema is True or schema == {}:
         return Node()
     if schema is False:
-        n = make_check(ctx, "$falseSchema",
-                       guard(ctx, sql.lit(False), "$falseSchema"),
-                       "False schema does not allow any value")
-        n.checks[0].schema_path = ctx.schema_path or "$falseSchema"
+        n = Node()
+        pred = sql.lit(False)
+        n.checks.append(Check(
+            keyword="$falseSchema", json_path=ctx.json_path,
+            schema_path=ctx.schema_path or "$falseSchema",
+            pred=guard(ctx, pred, "$falseSchema"),
+            message=sql.lit("False schema does not allow any value"),
+            failing_value=stringify(ctx),
+        ))
         return n
     if not isinstance(schema, dict):
         raise SchemaCompileError(
@@ -217,7 +242,7 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
                 from .legacy import PROFILES, registry_for
                 if root.get("$schema") in PROFILES:
                     reg2 = registry_for(root) or default_registry()
-                    reg2 = reg2.extend({})
+                    reg2 = reg2._merged({})
                     reg2.assert_formats = ctx.registry.assert_formats
                     ctx.registry = reg2
 
@@ -242,8 +267,9 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
         if node is None:
             continue
         for chk in node.checks + node.context:
-            if not isinstance(chk.pred, Expr):  # an extension's Column
-                chk.pred = sql.from_column(chk.pred)
+            # an extension's Columns become text
+            chk.pred, chk.message, chk.failing_value = map(
+                sql.lit, (chk.pred, chk.message, chk.failing_value))
             if not chk.skip_null_guard:
                 chk.pred = guard(ctx, chk.pred, chk.keyword)
         out.checks.extend(node.checks)
@@ -276,17 +302,17 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
 
 def make_check(ctx: CompileContext, keyword: str, pred: Expr,
                message: Union[Expr, str],
-               schema_suffix: Optional[str] = None,
-               failing_value: Optional[Expr] = None) -> Node:
+               schema_suffix: Optional[str] = None) -> Node:
     """A one-check Node.  `message` is an expression such as
     ``fmt_message(ctx, template)`` or a plain string (a literal
-    message); `failing_value` defaults to the stringified target."""
+    message)."""
+    n = Node()
     sp = schema_path_join(ctx.schema_path, schema_suffix or keyword)
-    return Node([Check(
+    n.checks.append(Check(
         keyword=keyword, json_path=ctx.json_path, schema_path=sp,
-        pred=pred, message=sql.lit(message),
-        failing_value=(stringify(ctx) if failing_value is None
-                       else failing_value))])
+        pred=pred, message=sql.lit(message), failing_value=stringify(ctx),
+    ))
+    return n
 
 
 class SchemaCompileError(ValueError):

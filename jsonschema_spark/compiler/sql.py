@@ -9,7 +9,11 @@ the Column calls build: Python literals keep ``F.lit``'s types (an int
 is INT, BIGINT past 32 bits and DECIMAL past 64; a float is a ``D``
 DOUBLE; a string is quoted with ``\\`` and ``'`` escaped), identifiers
 are backtick-quoted, and a struct field is a ``['name']`` subscript,
-which resolves like ``getField``.  AND and OR chains render flat: the
+which resolves like ``getField``.  Spark's parser replaces ``${name}``
+in the text by a configuration value (``spark.sql.variable.substitute``)
+before it parses: a string writes ``${`` as ``$\\{``, which the parser
+reads back as ``${``, and a column whose name holds ``${`` cannot be
+named in the text at all.  AND and OR chains render flat: the
 parser builds a balanced tree from them, so no depth of checks nests.
 
 Lambda variables are ``_x1``, ``_x2``, ... in creation order within one
@@ -24,10 +28,12 @@ import contextvars
 import inspect
 import itertools
 import math
+import re
 import weakref
 from typing import Any, Callable, Iterable
 
-from pyspark.sql import SparkSession
+from py4j.java_gateway import JavaObject
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 # precedence levels of the grammar, loosest first
@@ -118,7 +124,8 @@ def any_of(preds: Iterable[Expr]) -> Expr:
 
 
 def _string(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace(
+        "${", "$\\{") + "'"
 
 
 def quote(name: str) -> str:
@@ -127,9 +134,12 @@ def quote(name: str) -> str:
 
 
 def lit(v: Any) -> Expr:
-    """A literal of ``F.lit(v)``'s type; an Expr passes through."""
+    """A literal of ``F.lit(v)``'s type; an Expr passes through and a
+    PySpark Column becomes :func:`from_column`'s text."""
     if isinstance(v, Expr):
         return v
+    if isinstance(v, Column):
+        return from_column(v)
     if v is None or isinstance(v, bool):
         return Expr({None: "NULL", True: "true", False: "false"}[v])
     if isinstance(v, int):
@@ -147,7 +157,16 @@ def lit(v: Any) -> Expr:
 
 def col(name: str) -> Expr:
     """Top-level column `name`: a dot in it is part of the name."""
+    if "${" in name:
+        _unnameable(name)
     return Expr(quote(name))
+
+
+def _unnameable(name: str):
+    from .registry import SchemaCompileError
+    raise SchemaCompileError(
+        f"column {name!r} cannot be named in Spark SQL text: the parser "
+        "substitutes the '${...}' in it")
 
 
 def null_string() -> Expr:
@@ -239,7 +258,11 @@ def column(e: Expr, spark: Any = None):
         done = _REGISTERED.setdefault(spark, set())
         for name in called:
             if name not in done:
-                spark.udf.register(name, _UDFS[name]())
+                udf = _UDFS[name]()
+                if isinstance(udf, JavaObject):  # an extension's UDF
+                    spark._jsparkSession.udf().registerPython(name, udf)
+                else:
+                    spark.udf.register(name, udf)
                 done.add(name)
     return F.expr(e.text)
 
@@ -250,9 +273,59 @@ def ref(name: str):
     return F.col(quote(name))
 
 
-def from_column(c: Any) -> Expr:
+def from_column(c: Column) -> Expr:
     """An extension's PySpark Column as the SQL of its unresolved
-    Catalyst expression (Python UDFs and lambdas have none)."""
-    text = SparkSession.getActiveSession()._jsparkSession.expression(
-        c._jc).sql()
+    Catalyst expression.  That SQL does not parse back as is where the
+    Column calls a Python UDF or holds a lambda: each UDF is called as
+    a temporary function named after its content, and each lambda is
+    written in the parser's ``x -> body`` form."""
+    spark = SparkSession.getActiveSession()
+    e = spark._jsparkSession.expression(c._jc)
+    text, todo = e.sql(), [e]
+    while todo:  # a node before its children, whose text it holds
+        n = todo.pop()
+        kind, children = n.getClass().getSimpleName(), n.children()
+        children = [children.apply(i) for i in range(children.size())]
+        if kind == "PythonUDF":
+            call = n.sql()
+            text = text.replace(call, quote(_extension_udf(spark, n))
+                                + call[len(n.name()):])
+        elif kind == "LambdaFunction":
+            body, *args = (ch.sql() for ch in children)
+            head = args[0] if len(args) == 1 else f"({', '.join(args)})"
+            text = text.replace(n.sql(), f"{head} -> {body}")
+        todo.extend(children)
+    text = _TOKENS.sub(_escape_variables, text)
     return Expr(text if text in ("true", "false", "NULL") else f"({text})")
+
+
+#: extension UDF name -> its JVM UserDefinedPythonFunction
+_EXTENSION_UDFS: dict[str, JavaObject] = {}
+
+
+def _extension_udf(spark: SparkSession, node: JavaObject) -> str:
+    """The temporary-function name of PythonUDF `node`'s function: its
+    content hash, suffixed where unequal functions share the hash."""
+    udf = spark._jvm.org.apache.spark.sql.execution.python \
+        .UserDefinedPythonFunction(node.name(), node.func(), node.dataType(),
+                                   node.evalType(), node.udfDeterministic())
+    base = f"_jss_udf_{udf.hashCode() & 0xFFFFFFFF:08x}"
+    for i in itertools.count():
+        name = base if i == 0 else f"{base}_{i}"
+        known = _EXTENSION_UDFS.setdefault(name, udf)
+        if known is udf or known.equals(udf):
+            _UDFS.setdefault(name, lambda: known)
+            return name
+
+
+#: a string literal, a quoted identifier, or a bare ``${``
+_TOKENS = re.compile(r"'(?:[^'\\]|\\.)*'|`(?:[^`]|``)*`|\$\{", re.S)
+
+
+def _escape_variables(m: re.Match) -> str:
+    token = m.group()
+    if "${" not in token:
+        return token
+    if token[0] == "'":
+        return token.replace("${", "$\\{")
+    _unnameable(token)

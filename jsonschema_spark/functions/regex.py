@@ -48,12 +48,18 @@ def _scan_unsafe(pattern: str) -> Optional[str]:
     return None
 
 
+#: a brace group; Python repeats on ``{m}``, ``{m,}``, ``{,n}``,
+#: ``{m,n}`` and ``{,}`` and reads any other ``{`` as a literal
+_BRACES = re.compile(r"\{(\d*)(,?)(\d*)\}")
+
+
 def _to_java(pattern: str) -> Optional[str]:
     """Translate a Python regex to an equivalent Java regex, or None."""
     if _scan_unsafe(pattern) is not None:
         return None
     out = []
     i = 0
+    in_class = False
     while i < len(pattern):
         ch = pattern[i]
         if ch == "\\" and i + 1 < len(pattern):
@@ -62,9 +68,26 @@ def _to_java(pattern: str) -> Optional[str]:
                 out.append("\\z")
                 i += 2
                 continue
+            if nxt == "N" and pattern.startswith("{", i + 2):
+                j = pattern.index("}", i) + 1  # \N{name}, the same in Java
+                out.append(pattern[i:j])
+                i = j
+                continue
             out.append(ch + nxt)
             i += 2
             continue
+        if ch == "{" and not in_class:
+            # Java requires the lower bound and rejects a literal `{`
+            m = _BRACES.match(pattern, i)
+            if m is not None and (m.group(1) or m.group(2)):
+                lo, comma, hi = m.groups()
+                out.append("{" + (lo or "0") + comma + hi + "}")
+                i = m.end()
+            else:
+                out.append("\\{")
+                i += 1
+            continue
+        in_class = (in_class or ch == "[") and ch != "]"
         if pattern.startswith("(?P<", i):
             out.append("(?<")
             i += 4

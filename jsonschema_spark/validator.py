@@ -158,8 +158,6 @@ class CompiledValidator:
             dynamic_scope=(root_uri,))
         with sql.lambda_names():
             node = compile_subschema(ctx, schema)
-        #: rendered violation-struct arrays, by "with context"
-        self._violation_arrays: dict[bool, Column] = {}
         self.checks: list[Check] = node.checks
         #: anyOf/oneOf branch errors (ValidationError.context analogue,
         #: exceptions.py:120-131) — excluded from validity and from the
@@ -209,7 +207,7 @@ class CompiledValidator:
         ``error._matches_type()`` (exceptions.py:184-197) — the 5th
         ``by_relevance`` element, consumed by
         :func:`operators.bestmatch.best_match`."""
-        return self._violations(df, id_cols, self.checks, False)
+        return self._violations(df, id_cols, self._violation_array)
 
     def violations_with_context(self, df: DataFrame,
                                 id_cols: Sequence[str] = ()) -> DataFrame:
@@ -219,22 +217,26 @@ class CompiledValidator:
         carrying ``context_of`` = the composite's schema_path (NULL for
         top-level errors).  Context rows fire only when their composite
         fails; they feed :func:`operators.bestmatch.best_match_deep`."""
-        return self._violations(
-            df, id_cols, self.checks + self.context_checks, True)
+        return self._violations(df, id_cols, self._context_violation_array)
+
+    @cached_property
+    def _violation_array(self) -> Column:
+        return sql.column(violation_structs(self.checks, False), self._spark)
+
+    @cached_property
+    def _context_violation_array(self) -> Column:
+        return sql.column(violation_structs(
+            self.checks + self.context_checks, True), self._spark)
 
     def _violations(self, df: DataFrame, id_cols: Sequence[str],
-                    checks: Sequence[Check], context: bool) -> DataFrame:
+                    arr: Column) -> DataFrame:
         """Passing rows are dropped on the boolean validity chain before
         any struct is built.  Under Kleene AND, ``valid`` is false
         exactly when some check's ``~coalesce(pred, true)`` fires (a
         context check fires only when its composite's check does), so
         no violation row is lost; the filter is deterministic and pushes
-        down to the scan.  The struct array is rendered once per
-        validator and output kind."""
-        arr = self._violation_arrays.get(context)
-        if arr is None:
-            arr = self._violation_arrays[context] = sql.column(
-                violation_structs(checks, context), self._spark)
+        down to the scan.  `arr` is the violation-struct array, rendered
+        once per validator and output kind."""
         return _explode_rows(
             df.filter(self.valid_column == False),  # noqa: E712
             arr, id_cols)

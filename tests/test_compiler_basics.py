@@ -281,6 +281,73 @@ def test_redefine_type(spark):
     assert _valid_flags(spark, ddl, rows, schema) == [True, True]
 
 
+def test_extension_columns_with_udfs_lambdas_and_variables(spark):
+    """Extension Columns that call a pandas or Python UDF, hold a lambda
+    or a ``${...}`` literal are brought into the compiled text, and
+    `extend` compilers see the target as a PySpark Column."""
+    import pandas as pd
+    from jsonschema_spark import register_format
+    from jsonschema_spark.compiler.registry import (default_registry,
+                                                    fmt_message, make_check)
+
+    @F.pandas_udf("boolean")
+    def even_length(s: pd.Series) -> pd.Series:
+        return s.str.len() % 2 == 0
+
+    register_format("even-length-pandas", even_length)
+    ddl = "_i int, s string"
+    rows = [(0, "ab"), (1, "abc"), (2, None), (3, "${HOME}!")]
+    schema = {"properties": {"s": {"format": "even-length-pandas"}}}
+    assert _valid_flags(spark, ddl, rows, schema, format_checker=True) \
+        == [True, False, True, True]
+
+    shouty = F.udf(lambda s: s is not None and s.isupper(), "boolean")
+    reg = default_registry().redefine_type(
+        "shouty", lambda ctx: shouty(ctx.target) | (ctx.target == "${HOME}!")
+        if ctx.is_string() else F.lit(False))
+    rows = [(0, "AB"), (1, "ab"), (2, None), (3, "${HOME}!")]
+    schema = {"properties": {"s": {"type": "shouty"}}}
+    assert _valid_flags(spark, ddl, rows, schema, registry=reg) == [
+        True, False, True, True]
+
+    def c_starts_with(ctx, value, schema):
+        if not ctx.is_string():
+            return None
+        return make_check(ctx, "startsWith", ctx.target.startswith(value),
+                          fmt_message(ctx, f"%s does not start with {value}"))
+
+    def c_all_positive(ctx, value, schema):
+        if not ctx.is_array():
+            return None
+        return make_check(ctx, "allPositive",
+                          F.forall(ctx.target, lambda x: x > 0),
+                          "an item is not positive")
+
+    reg = default_registry().extend({"startsWith": c_starts_with,
+                                     "allPositive": c_all_positive})
+    df = spark.createDataFrame(
+        [(0, "${x}y", [1]), (1, "zz", [1, -1]), (2, None, None)],
+        "_i int, s string, a array<int>")
+    v = CompiledValidator({"properties": {
+        "s": {"startsWith": "${x}"}, "a": {"allPositive": True}}},
+        df, registry=reg)
+    assert sorted(tuple(r) for r in v.violations(df, ["_i"]).select(
+        "_i", "keyword", "message", "failing_value").collect()) == [
+        (1, "allPositive", "an item is not positive", "[1,-1]"),
+        (1, "startsWith", "zz does not start with ${x}", "zz")]
+
+
+def test_dollar_brace_column_names_cannot_be_bound(spark):
+    """The parser substitutes ``${...}`` inside a quoted identifier, so a
+    schema that binds such a column is refused at compile time; an
+    unbound one is left alone."""
+    df = spark.createDataFrame([(1, 2)], "`${x}` int, y int")
+    with pytest.raises(SchemaCompileError, match="cannot be named"):
+        CompiledValidator({"properties": {"${x}": {"minimum": 0}}}, df)
+    v = CompiledValidator({"properties": {"y": {"minimum": 5}}}, df)
+    assert v.counts(df) == (0, 1)
+
+
 def test_draft4_legacy_anchor_via_public_api(spark):
     """ADVICE-r2 regression: CompiledValidator must build its Resolver
     with the schema's OWN draft semantics.  A draft4 schema using the

@@ -82,15 +82,24 @@ def test_integer_literals(spark_mode, sub):
 
 @pytest.mark.parametrize("sub", [
     {"const": 2 ** 63}, {"enum": [2 ** 31, 2 ** 63]}, {"minimum": 2 ** 31},
-    {"multipleOf": 2 ** 31}, {"multipleOf": 10 ** 30}], ids=repr)
+    {"multipleOf": 2 ** 31}, {"multipleOf": 10 ** 30},
+    # integers no double equals: compared exactly, as the reference does
+    {"exclusiveMinimum": 10 ** 30}, {"exclusiveMaximum": 10 ** 30},
+    {"minimum": 10 ** 30}, {"maximum": 10 ** 30},
+    {"minimum": 2 ** 53 + 1}, {"maximum": 2 ** 53 + 1},
+    {"exclusiveMinimum": 2 ** 53 + 1}, {"exclusiveMaximum": 2 ** 53 + 1},
+    {"const": 10 ** 30}, {"enum": [10 ** 30, 2 ** 53 + 1, 3]},
+    {"minimum": 10 ** 400}, {"maximum": -10 ** 400}, {"const": 10 ** 400}],
+    ids=lambda sub: repr(sub)[:40])
 def test_integer_literals_on_doubles(spark_mode, sub):
     _agree(spark_mode, {"x": T.DoubleType()},
-           [{"x": d} for d in (2.0 ** 31, 2.0 ** 63, 1e30, 0.5, 3.0, None)],
+           [{"x": d} for d in (2.0 ** 31, 2.0 ** 63, 1e30, 0.5, 3.0,
+                               2.0 ** 53, 2.0 ** 53 + 2, None)],
            {"properties": {"x": sub}})
 
 
 STRINGS = ["it's", "back\\slash", "new\nline", "é ü 中 𝄞", "plain", "",
-           "a1", "x'y", "'", "\\", None]
+           "a1", "x'y", "'", "\\", "${x}", "${HOME}", "$\\{x}", None]
 STRING_SCHEMAS = [
     {"const": "it's"}, {"const": "back\\slash"}, {"const": "new\nline"},
     {"const": "é ü 中 𝄞"}, {"const": "'"}, {"const": "\\"},
@@ -98,6 +107,12 @@ STRING_SCHEMAS = [
     {"maxLength": 4}, {"minLength": 7},
     {"pattern": "\\d"}, {"pattern": "\\\\"}, {"pattern": "\\'"},
     {"pattern": "^it's$"}, {"pattern": "new\\nline"}, {"pattern": "中"},
+    # Spark substitutes ${...} in the text it parses
+    {"const": "${x}"}, {"enum": ["${HOME}", "$\\{x}"]},
+    {"pattern": "^\\$\\{[a-z]+}$"}, {"pattern": "\\${"},
+    {"pattern": "^\\${[a-z]+}$"},
+    # a `{` Python reads as a literal, and a repeat with no lower bound
+    {"pattern": "x{"}, {"pattern": "^.{,3}$"},
 ]
 
 
@@ -109,6 +124,8 @@ def test_string_literals_and_patterns(spark_mode, sub):
 
 #: a dot, a backtick, a quote, a space and a leading digit
 NAMES = ["a.b", "a`b", "a'b", "a b", "1a"]
+#: struct fields are named by string subscripts, so ``${`` is fine
+FIELD_NAMES = NAMES + ["${x}"]
 
 
 def test_property_names(spark_mode):
@@ -121,16 +138,19 @@ def test_property_names(spark_mode):
 
 
 def test_struct_field_names(spark_mode):
-    inner = T.StructType([T.StructField(n, T.IntegerType()) for n in NAMES])
-    rows = [{"s": dict.fromkeys(NAMES, 1)}, {"s": dict.fromkeys(NAMES, 9)},
+    inner = T.StructType([T.StructField(n, T.IntegerType())
+                          for n in FIELD_NAMES])
+    rows = [{"s": dict.fromkeys(FIELD_NAMES, 1)},
+            {"s": dict.fromkeys(FIELD_NAMES, 9)},
             {"s": {"a.b": 1}}, {"s": None}]
     schema = {"properties": {"s": {
-        "required": ["a`b"],
-        "properties": {n: {"minimum": 5} for n in NAMES}}}}
+        "required": ["a`b", "${x}"],
+        "properties": {n: {"minimum": 5} for n in FIELD_NAMES}}}}
     st = T.StructType([T.StructField("_row", T.IntegerType()),
                        T.StructField("s", inner)])
     df = spark_mode.createDataFrame(
-        [(i, None if r["s"] is None else tuple(r["s"].get(n) for n in NAMES))
+        [(i, None if r["s"] is None
+          else tuple(r["s"].get(n) for n in FIELD_NAMES))
          for i, r in enumerate(rows)], st)
     v = CompiledValidator(schema, df)
     got = sorted((r["_row"], r["keyword"], r["json_path"])
