@@ -539,17 +539,18 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
         matched = _pattern_matched_names({p: None for p in patterns}, names)
         extras = [f for f in _struct_members(ctx)
                   if f.name not in known and f.name not in matched]
+        if value is False:
+            bad = [(f.name, ctx.member(f.name).isNotNull()) for f in extras]
+            if "patternProperties" not in schema:
+                return _naming_error(
+                    ctx, keyword, bad, "Additional properties are not "
+                    "allowed (", (" was", " were"), " unexpected)")
+            regexes = ", ".join(map(repr, sorted(schema["patternProperties"])))
+            return _naming_error(
+                ctx, keyword, bad, "", (" does", " do"),
+                f" not match any of the regexes: {regexes}")
         for fld in extras:
-            target = ctx.member(fld.name)
-            if value is False:
-                n = make_check(
-                    ctx.child(path_fragment=fld.name, row_fields=None),
-                    keyword, target.isNull(),
-                    f"Additional properties are not allowed "
-                    f"('{fld.name}' was unexpected)")
-                n.checks[0].failing_value = target.cast("string")
-                out.checks.extend(n.checks)
-            elif value is not True:
+            if value is not True:
                 child_ctx = _bind_member(ctx, fld, keyword)
                 child = compile_subschema(child_ctx, value)
                 out.checks.extend(child.checks)
@@ -581,6 +582,26 @@ def _extras_keyword(ctx: CompileContext, value: Any, schema: dict,
         return make_check(ctx, keyword, ok,
                           "an additional property failed its subschema")
     return None
+
+
+def _naming_error(ctx: CompileContext, keyword: str,
+                  bad: list[tuple[str, Expr]], head: str,
+                  verbs: tuple[str, str], tail: str,
+                  ordered: bool = True) -> Optional[Node]:
+    """One check at the object that fails when a member is unexpected
+    (its predicate in `bad` holds), the reference's one error naming
+    them all (extras_msg, _utils.py): `head`, the repr of each
+    unexpected name, sorted when `ordered`, then `verbs`' singular or
+    plural and `tail`."""
+    if not bad:
+        return None
+    if ordered:
+        bad = sorted(bad, key=lambda b: b[0])
+    names = F.filter(F.array(*[F.when(b, repr(n)) for n, b in bad]),
+                     lambda n: n.isNotNull())
+    verb = F.coalesce(F.when(F.size(names) == 1, verbs[0]), verbs[1])
+    return make_check(ctx, keyword, ~F.any_of(b for _, b in bad),
+                      F.concat(head, F.array_join(names, ", "), verb, tail))
 
 
 def c_property_names(ctx: CompileContext, value: Any,
@@ -822,8 +843,8 @@ def c_unevaluated_properties(ctx: CompileContext, value: Any,
     """`unevaluatedProperties` (_keywords.py:407-436): a present member
     violates iff no sibling applicator evaluated it AND it fails the
     unevaluatedProperties subschema (False = always fails)."""
-    out = Node()
     if _row_scope(ctx) or ctx.is_struct():
+        unexpected = []
         for fld in _struct_members(ctx):
             member = ctx.member(fld.name)
             evaluated = _evaluated_prop_cond(ctx, schema, fld, member)
@@ -838,14 +859,17 @@ def c_unevaluated_properties(ctx: CompileContext, value: Any,
                 continue
             if sub_ok is not False:
                 bad = bad & ~sub_ok
-            n = make_check(
-                ctx.child(path_fragment=fld.name, row_fields=None),
-                "unevaluatedProperties", ~bad,
-                f"Unevaluated properties are not allowed "
-                f"('{fld.name}' was unexpected)")
-            n.checks[0].failing_value = member.cast("string")
-            out.checks.extend(n.checks)
-        return out
+            unexpected.append((fld.name, bad))
+        if value is False:
+            return _naming_error(
+                ctx, "unevaluatedProperties", unexpected,
+                "Unevaluated properties are not allowed (",
+                (" was", " were"), " unexpected)")
+        # the reference lists these in instance order
+        return _naming_error(
+            ctx, "unevaluatedProperties", unexpected,
+            "Unevaluated properties are not valid under the given schema (",
+            (" was", " were"), " unevaluated and invalid)", ordered=False)
     if ctx.is_map():
         # fall back to the static key approximation for map payloads:
         # collect keys/patterns evaluated by *any* sibling applicator,

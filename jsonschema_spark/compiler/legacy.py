@@ -26,12 +26,13 @@ from __future__ import annotations
 
 import operator
 from typing import Any, Optional
+from urllib.parse import urlsplit
 
 from . import sql as F
 from .context import CompileContext
 from .node import Node
 from .registry import (KeywordRegistry, SchemaCompileError, compile_subschema,
-                       fmt_message, make_check)
+                       default_registry, fmt_message, make_check)
 from . import applicators, keywords
 
 
@@ -424,48 +425,43 @@ def apply_vocabulary(registry: KeywordRegistry, schema: Any,
     return registry
 
 
-#: $schema URI -> registry factory — the engine's validator_for
-#: (validators.py:1335-1410)
-PROFILES = {
-    "https://json-schema.org/draft/2020-12/schema": None,   # default
-    "https://json-schema.org/draft/2019-09/schema": draft2019_registry,
-    "http://json-schema.org/draft-07/schema#": draft7_registry,
-    "http://json-schema.org/draft-06/schema#": draft6_registry,
-    "http://json-schema.org/draft-04/schema#": draft4_registry,
-    "http://json-schema.org/draft-03/schema#": draft3_registry,
+#: draft name -> (`$schema` URI, keyword-registry factory): the
+#: engine's validator_for table (validators.py:1335-1410).  The name is
+#: also the Resolver's draft, so URI resolution follows the schema's
+#: own draft (draft<=7 `id`, $ref-ignores-siblings, legacy `#anchor`
+#: identifiers)
+DRAFTS = {
+    "draft2020-12": ("https://json-schema.org/draft/2020-12/schema",
+                     default_registry),
+    "draft2019-09": ("https://json-schema.org/draft/2019-09/schema",
+                     draft2019_registry),
+    "draft7": ("http://json-schema.org/draft-07/schema", draft7_registry),
+    "draft6": ("http://json-schema.org/draft-06/schema", draft6_registry),
+    "draft4": ("http://json-schema.org/draft-04/schema", draft4_registry),
+    "draft3": ("http://json-schema.org/draft-03/schema", draft3_registry),
 }
+_DRAFT_OF_URI = {uri: name for name, (uri, _) in DRAFTS.items()}
 
 
-def registry_for(schema: Any) -> Optional[KeywordRegistry]:
-    """Pick the profile registry from `$schema` (None = default)."""
-    if isinstance(schema, dict):
-        uri = schema.get("$schema")
-        factory = PROFILES.get(uri)
-        if factory is not None:
-            return factory()
-    return None
-
-
-#: $schema URI -> Resolver draft string, so URI resolution follows the
-#: schema's own draft (draft<=7 `id`, $ref-ignores-siblings, legacy
-#: `#anchor` identifiers) — mirrors conformance.base_resolver's wiring
-DRAFT_NAMES = {
-    "https://json-schema.org/draft/2020-12/schema": "draft2020-12",
-    "https://json-schema.org/draft/2019-09/schema": "draft2019-09",
-    "http://json-schema.org/draft-07/schema#": "draft7",
-    "http://json-schema.org/draft-06/schema#": "draft6",
-    "http://json-schema.org/draft-04/schema#": "draft4",
-    "http://json-schema.org/draft-03/schema#": "draft3",
-}
+def draft_named(uri: Any) -> Optional[str]:
+    """The draft a `$schema` URI names, None for any other value.  URIs
+    compare as the reference's ``URIDict`` compares them, after
+    ``urlsplit(uri).geturl()``, which drops an empty fragment or query:
+    ``.../draft-07/schema#`` and ``.../draft-07/schema`` are one draft."""
+    if not isinstance(uri, str):
+        return None
+    return _DRAFT_OF_URI.get(urlsplit(uri).geturl())
 
 
 def draft_of(schema: Any) -> str:
-    """Resolver draft string for a schema's `$schema` (2020-12 default,
-    like validator_for's default_validator — validators.py:1376-1384)."""
-    if isinstance(schema, dict):
-        uri = schema.get("$schema")
-        if isinstance(uri, str):
-            for cand in (uri, uri.rstrip("#"), uri + "#"):
-                if cand in DRAFT_NAMES:
-                    return DRAFT_NAMES[cand]
-    return "draft2020-12"
+    """The draft of a schema's `$schema` (2020-12 default, like
+    validator_for's default_validator — validators.py:1376-1384)."""
+    return ((isinstance(schema, dict) and draft_named(schema.get("$schema")))
+            or "draft2020-12")
+
+
+def registry_for(draft: str) -> KeywordRegistry:
+    """The keyword registry of `draft`, a draft name or a suite
+    directory under one (``draft7/optional``); 2020-12 for any other."""
+    _, factory = DRAFTS.get(draft.split("/", 1)[0], DRAFTS["draft2020-12"])
+    return factory()

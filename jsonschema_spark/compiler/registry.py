@@ -239,10 +239,10 @@ def compile_subschema(ctx: CompileContext, schema: Any) -> Node:
             # specification (suite optional/cross-draft.json)
             root = ctx.resolver.documents.get(nb)
             if isinstance(root, dict):
-                from .legacy import PROFILES, registry_for
-                if root.get("$schema") in PROFILES:
-                    reg2 = registry_for(root) or default_registry()
-                    reg2 = reg2._merged({})
+                from .legacy import draft_named, registry_for
+                draft = draft_named(root.get("$schema"))
+                if draft:
+                    reg2 = registry_for(draft)._merged({})
                     reg2.assert_formats = ctx.registry.assert_formats
                     ctx.registry = reg2
 

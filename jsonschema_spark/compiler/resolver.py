@@ -120,14 +120,10 @@ class Resolver:
         reference's referencing registry (ADVICE-r3).  Documents
         without ``$schema`` inherit the root draft."""
         self._keepalive.append(doc)
+        from .legacy import draft_named
         doc_draft = self.draft
-        if isinstance(doc, dict) and isinstance(doc.get("$schema"), str):
-            from .legacy import DRAFT_NAMES
-            uri_s = doc["$schema"]
-            for cand in (uri_s, uri_s.rstrip("#"), uri_s + "#"):
-                if cand in DRAFT_NAMES:
-                    doc_draft = DRAFT_NAMES[cand]
-                    break
+        if isinstance(doc, dict):
+            doc_draft = draft_named(doc.get("$schema")) or doc_draft
         base = uri
         if isinstance(doc, dict):
             ident = self._identifier(doc, doc_draft)

@@ -65,12 +65,14 @@ class Expr:
     def __ror__(self, o): return _chain("OR", o, self)
     def __invert__(self): return Expr(f"NOT {_wrap(self, _ATOM)}", _NOT)
     def __eq__(self, o): return _binary(self, "=", o, _CMP, _ADD)
+    def __ne__(self, o): return _binary(self, "!=", o, _CMP, _ADD)
     def __lt__(self, o): return _binary(self, "<", o, _CMP, _ADD)
     def __le__(self, o): return _binary(self, "<=", o, _CMP, _ADD)
     def __gt__(self, o): return _binary(self, ">", o, _CMP, _ADD)
     def __ge__(self, o): return _binary(self, ">=", o, _CMP, _ADD)
     def __add__(self, o): return _binary(self, "+", o, _ADD, _MUL)
     def __sub__(self, o): return _binary(self, "-", o, _ADD, _MUL)
+    def __mul__(self, o): return _binary(self, "*", o, _MUL, _ATOM)
     def __truediv__(self, o): return _binary(self, "/", o, _MUL, _ATOM)
     def __mod__(self, o): return _binary(self, "%", o, _MUL, _ATOM)
     def isNull(self): return Expr(f"isnull({self.text})")
@@ -197,6 +199,10 @@ def substring(c, pos, n): return _fn("substring", c, pos, n)
 def try_to_timestamp(c, fmt): return _fn("try_to_timestamp", c, fmt)
 def try_to_binary(c, fmt): return _fn("try_to_binary", c, fmt)
 def try_parse_json(c): return _fn("try_parse_json", c)
+def concat(*cs): return _fn("concat", *cs)
+def array_join(c, sep): return _fn("array_join", c, sep)
+def round(c, scale): return _fn("round", c, scale)  # noqa: A001
+def try_divide(a, b): return _fn("try_divide", a, b)
 
 
 def named_struct(**fields: Any) -> Expr:

@@ -45,6 +45,7 @@ from pyspark.sql import types as T
 
 from .compiler import sql
 from .compiler.context import CompileContext, json_pointer
+from .compiler.legacy import registry_for
 from .compiler.registry import (SchemaCompileError, compile_subschema,
                                 default_registry)
 from .compiler.resolver import Resolver
@@ -58,19 +59,6 @@ MAGIC_REMOTE_URL = "http://localhost:1234"
 
 def _base_draft(draft: str) -> str:
     return draft.split("/", 1)[0]
-
-
-def _registry_for_draft(draft: str):
-    from .compiler.legacy import (draft2019_registry, draft3_registry,
-                                  draft4_registry, draft6_registry,
-                                  draft7_registry)
-    return {
-        "draft7": draft7_registry,
-        "draft6": draft6_registry,
-        "draft4": draft4_registry,
-        "draft3": draft3_registry,
-        "draft2019-09": draft2019_registry,
-    }.get(_base_draft(draft), default_registry)()
 
 
 _BASE_RESOLVERS: dict[str, Resolver] = {}
@@ -383,7 +371,7 @@ def run_suite(spark: SparkSession, draft: str = "draft2020-12",
     base = os.path.join(SUITE_DIR, draft)
     names = sorted(files or
                    [f for f in os.listdir(base) if f.endswith(".json")])
-    registry = _registry_for_draft(draft)
+    registry = registry_for(draft)
     if assert_formats is None:
         # only the optional/format directory runs with assertion — the
         # main-suite format.json asserts annotation-only behavior
@@ -567,7 +555,7 @@ def run_output_suite(spark: SparkSession,
         out_schema["$id"], referencing.Resource.from_contents(out_schema))
     cls = (ref_js.Draft202012Validator if draft == "draft2020-12"
            else ref_js.Draft201909Validator)
-    registry = _registry_for_draft(draft)
+    registry = registry_for(draft)
     resolver = base_resolver(draft)
     report = SuiteReport()
     content = os.path.join(base, "content")

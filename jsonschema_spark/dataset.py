@@ -166,13 +166,13 @@ def validate_dataset(df: DataFrame, schema: dict,
             # undecodable rows have a NULL hamming: they are the
             # pixel_invariant's finding, not a phash mismatch
             maxh = (xs["phash_integrity"] or {}).get("max_hamming", 0)
-            structs.append(F.when(F.col("hamming") > maxh, _vrow(
+            hamming = sql.col("hamming")
+            structs.append(sql.when(hamming > maxh, _vrow(
                 "phashIntegrity", json_path_join("$", "phash"),
                 "x-spark/phash_integrity",
-                F.concat(F.lit("stored phash differs from recomputed "
-                               "pixel hash by "),
-                         F.col("hamming").cast("string"), F.lit(" bits")),
-                F.col("stored_phash").cast("string"))))
+                sql.concat("stored phash differs from recomputed pixel "
+                           "hash by ", hamming.cast("string"), " bits"),
+                sql.col("stored_phash"))))
         if luma:
             from .operators.quality import luma_quality_structs
             structs += luma_quality_structs(xs["image_quality_decoded"])
@@ -194,15 +194,15 @@ def validate_dataset(df: DataFrame, schema: dict,
         maxp = cfg.get("max_pairs", 0)
         pairs = phash_near_duplicates(df, "image_id", "phash",
                                       max_hamming=maxh)
-        n = F.col("_n")
+        n = sql.col("_n")
         parts.append(pad(_violation_rows(
             pairs.agg(F.count(F.lit(1)).alias("_n")),
-            [F.when(n > maxp, _vrow(
+            [sql.when(n > maxp, _vrow(
                 "nearDup:phash", json_path_join("$", "phash"),
                 "x-spark/near_dup_phash",
-                F.concat(n.cast("string"),
-                         F.lit(f" near-duplicate image pairs at hamming <= "
-                               f"{maxh} (allowed {maxp})")), n))])))
+                sql.concat(n.cast("string"),
+                           f" near-duplicate image pairs at hamming <= "
+                           f"{maxh} (allowed {maxp})"), n))])))
 
     if "repetition" in xs:
         # Gopher-style repetition thresholds as per-row violations
@@ -220,21 +220,22 @@ def validate_dataset(df: DataFrame, schema: dict,
             max_dup = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11,
                        10: 0.10}
         t = sql.ref(col)
-
-        def _rrow(kind, n, lim, frac):
-            return F.when(frac > lim, _vrow(
+        fracs = [("top", n, lim, top_ngram_char_frac(t, n))
+                 for n, lim in sorted(max_top.items())]
+        fracs += [("dup", n, lim, dup_ngram_char_frac(t, n))
+                  for n, lim in sorted(max_dup.items())]
+        scored = df.select(*map(sql.ref, dict.fromkeys(keep)),
+                           *[c.alias(f"_{kind}{n}")
+                             for kind, n, _, c in fracs])
+        structs = []
+        for kind, n, lim, _ in fracs:
+            frac = sql.format_string("%.6f", sql.col(f"_{kind}{n}"))
+            structs.append(sql.when(sql.col(f"_{kind}{n}") > lim, _vrow(
                 f"repetition:{kind}{n}", json_path_join("$", col),
                 f"x-spark/repetition/{kind}_{n}gram",
-                F.concat(F.lit(f"{kind} {n}-gram char fraction "),
-                         F.format_string("%.6f", frac),
-                         F.lit(f" exceeds {lim}")),
-                F.format_string("%.6f", frac)))
-
-        structs = [_rrow("top", n, lim, top_ngram_char_frac(t, n))
-                   for n, lim in sorted(max_top.items())]
-        structs += [_rrow("dup", n, lim, dup_ngram_char_frac(t, n))
-                    for n, lim in sorted(max_dup.items())]
-        parts.append(pad(_violation_rows(df, structs, keep)))
+                sql.concat(f"{kind} {n}-gram char fraction ", frac,
+                           f" exceeds {lim}"), frac)))
+        parts.append(pad(_violation_rows(scored, structs, keep)))
 
     if "pii" in xs:
         # PII budget per row (operators/pii.py: zero-shuffle regexps)
@@ -245,13 +246,14 @@ def validate_dataset(df: DataFrame, schema: dict,
         c = pii_counts(sql.ref(col))
         total = sum((c.getField(f"n_{n}") for n in PII_PATTERNS),
                     F.lit(0).cast("long"))
-        n = F.col("_n")
+        n = sql.col("_n")
         counted = df.select(*map(sql.ref, keep), total.alias("_n"))
-        parts.append(pad(_violation_rows(counted, [F.when(n > max_hits, _vrow(
-            "pii", json_path_join("$", col), "x-spark/pii",
-            F.concat(n.cast("string"),
-                     F.lit(f" PII matches exceed allowed {max_hits}")),
-            n))], keep)))
+        parts.append(pad(_violation_rows(counted, [sql.when(
+            n > max_hits, _vrow(
+                "pii", json_path_join("$", col), "x-spark/pii",
+                sql.concat(n.cast("string"),
+                           f" PII matches exceed allowed {max_hits}"),
+                n))], keep)))
 
     if "image_quality" in xs:
         # metadata-tier image quality (operators/quality.py): aspect /
@@ -285,15 +287,15 @@ def validate_dataset(df: DataFrame, schema: dict,
             df, tables[ref_name], id_col=keep[0], text_col=col,
             ref_text_col=cfg.get("ref_column", col),
             n=cfg.get("n", 13), on_hash=cfg.get("on_hash", True))
-        frac = F.col("contaminated_frac")
-        parts.append(pad(_violation_rows(sc, [F.when(frac > max_frac, _vrow(
+        frac = sql.col("contaminated_frac")
+        parts.append(pad(_violation_rows(sc, [sql.when(frac > max_frac, _vrow(
             "contamination", json_path_join("$", col),
             "x-spark/contamination",
-            F.concat(F.col("n_hit").cast("string"), F.lit(" of "),
-                     F.col("n_grams").cast("string"),
-                     F.lit(f" {cfg.get('n', 13)}-grams appear in {ref_name} "
-                           f"(allowed frac {max_frac})")),
-            F.format_string("%.6f", frac)))], keep[:1])))
+            sql.concat(sql.col("n_hit").cast("string"), " of ",
+                       sql.col("n_grams").cast("string"),
+                       f" {cfg.get('n', 13)}-grams appear in {ref_name} "
+                       f"(allowed frac {max_frac})"),
+            sql.format_string("%.6f", frac)))], keep[:1])))
 
     out = parts[0].select(*map(sql.ref, keep), *VIOLATION_COLS)
     for p in parts[1:]:

@@ -91,20 +91,19 @@ def check_against_baseline(df: DataFrame, baseline_path: str,
     from ..compiler.context import json_path_join
     from ..validator import _violation_rows, _vrow
 
-    prefix = ([F.lit(f"partition {by}="), F.col("part").cast("string"),
-               F.lit(": ")] if by else [])
+    prefix = ([f"partition {by}=", sql.col("part").cast("string"), ": "]
+              if by else [])
 
     def flag(col, stat, threshold, label):
-        val = F.col(stat)
-        return F.when(val > threshold, _vrow(
+        val = sql.col(stat)
+        return sql.when(val > threshold, _vrow(
             f"drift:{stat}", json_path_join("$", col),
             f"x-spark/drift/{col}/{stat}",
             # %.4f, not round().cast: fixed-width rendering a SQL
             # oracle reproduces exactly
-            F.concat(*prefix, F.lit(f"{label} "),
-                     F.format_string("%.4f", val),
-                     F.lit(f" exceeds {threshold}")),
-            F.format_string("%.6f", val)))
+            sql.concat(*prefix, f"{label} ", sql.format_string("%.4f", val),
+                       f" exceeds {threshold}"),
+            sql.format_string("%.6f", val)))
 
     spark = df.sparkSession
     out = []

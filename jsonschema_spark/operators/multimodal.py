@@ -602,17 +602,21 @@ def caption_check(df: DataFrame, expected,
     `expected` is a Column (e.g. ``sources.images.reference_caption``
     over the generating id), so the whole check is ONE codegen'd narrow
     scan — no UDF, no shuffle, `bytes` pruned."""
+    from ..compiler import sql
     from ..compiler.context import json_path_join
     from ..validator import _violation_rows, _vrow
 
     cap = F.col(caption_col)
-    return _violation_rows(df.filter(~cap.eqNullSafe(expected)), [_vrow(
+    bad = df.filter(~cap.eqNullSafe(expected)).withColumn("_cap", cap)
+    text = sql.col("_cap")
+    return _violation_rows(bad, [_vrow(
         "captionEquality", json_path_join("$", caption_col),
         "x-spark/caption/equality",
-        F.when(cap.isNull(), F.lit("caption is null, reference is not"))
-         .when(F.length(cap) == 0, F.lit("caption is empty"))
-         .otherwise(F.lit("caption differs from reference")),
-        F.substring(F.coalesce(cap, F.lit("<null>")), 1, 64))], id_cols)
+        sql.coalesce(sql.when(text.isNull(),
+                              "caption is null, reference is not"),
+                     sql.when(sql.length(text) == 0, "caption is empty"),
+                     "caption differs from reference"),
+        sql.substring(sql.coalesce(text, "<null>"), 1, 64))], id_cols)
 
 
 # ------------------------------------------------- real WAV codec ---------

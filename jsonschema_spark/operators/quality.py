@@ -69,31 +69,25 @@ def image_quality_violations(df: DataFrame, cfg: dict,
     (only its length is read, which parquet can answer from page
     metadata without decompressing the value... in practice the column
     is read, but never shuffled)."""
-    bands = _quality_bands(cfg)
-    structs = [F.when(pred, _vrow(kw, jp, sp, msg, fv))
-               for kw, pred, jp, sp, msg, fv in bands]
-    return _violation_rows(df, structs, id_cols)
-
-
-def _quality_bands(cfg: dict) -> list:
-    """[(keyword, gated_bad_predicate, json_path, schema_path,
-    message_col, failing_col)] for the configured metadata bands."""
     w_col, bytes_col = cfg.get("w_col", "w"), cfg.get("bytes_col", "bytes")
-    w = sql.ref(w_col).cast("double")
-    h = sql.ref(cfg.get("h_col", "h")).cast("double")
-    blen = F.length(sql.ref(bytes_col)).cast("double")
+    narrow = df.select(*map(sql.ref, dict.fromkeys(id_cols)),
+                       sql.ref(w_col).cast("double").alias("_w"),
+                       sql.ref(cfg.get("h_col", "h")).cast("double")
+                       .alias("_h"),
+                       F.length(sql.ref(bytes_col)).cast("double")
+                       .alias("_blen"))
+    w, h, blen = sql.col("_w"), sql.col("_h"), sql.col("_blen")
     w_path, bytes_path = (json_path_join("$", w_col),
                           json_path_join("$", bytes_col))
     geom_ok = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
     # try_divide: the bands gate on geom_ok, but subexpression
     # elimination may evaluate a shared division before the gate, and
     # under ANSI a plain division by h = 0 raises there
-    aspect = F.try_divide(w, h)
+    aspect = sql.try_divide(w, h)
     pixels = w * h
-    bpp = F.try_divide(blen, pixels)
-    dims = F.concat(F.coalesce(w.cast("long").cast("string"), F.lit("?")),
-                    F.lit("x"),
-                    F.coalesce(h.cast("long").cast("string"), F.lit("?")))
+    bpp = sql.try_divide(blen, pixels)
+    dims = sql.concat(sql.coalesce(w.cast("long").cast("string"), "?"), "x",
+                      sql.coalesce(h.cast("long").cast("string"), "?"))
 
     def _band_text(lo, hi):
         if lo is not None and hi is not None:
@@ -101,54 +95,49 @@ def _quality_bands(cfg: dict) -> list:
         return f"below {lo}" if lo is not None else f"above {hi}"
 
     def _banded(lo, hi, value):
-        bad = F.lit(False)
+        bad = sql.lit(False)
         if lo is not None:
             bad = bad | (value < lo)
         if hi is not None:
             bad = bad | (value > hi)
         return bad
 
-    bands = []
+    structs = []
     lo, hi = cfg.get("min_aspect"), cfg.get("max_aspect")
     if lo is not None or hi is not None:
-        bands.append((
-            "imageQuality:aspect", geom_ok & _banded(lo, hi, aspect),
-            w_path, "x-spark/image_quality/aspect",
-            F.concat(F.lit("aspect ratio of "), dims,
-                     F.lit(f" {_band_text(lo, hi)}")),
-            dims))
+        structs.append(sql.when(geom_ok & _banded(lo, hi, aspect), _vrow(
+            "imageQuality:aspect", w_path, "x-spark/image_quality/aspect",
+            sql.concat("aspect ratio of ", dims, f" {_band_text(lo, hi)}"),
+            dims)))
     lo, hi = cfg.get("min_pixels"), cfg.get("max_pixels")
     if lo is not None or hi is not None:
-        bands.append((
-            "imageQuality:pixels", geom_ok & _banded(lo, hi, pixels),
-            w_path, "x-spark/image_quality/pixels",
-            F.concat(F.lit("pixel count of "), dims,
-                     F.lit(f" {_band_text(lo, hi)}")),
-            pixels.cast("long").cast("string")))
+        structs.append(sql.when(geom_ok & _banded(lo, hi, pixels), _vrow(
+            "imageQuality:pixels", w_path, "x-spark/image_quality/pixels",
+            sql.concat("pixel count of ", dims, f" {_band_text(lo, hi)}"),
+            pixels.cast("long").cast("string"))))
     lo, hi = cfg.get("min_bytes"), cfg.get("max_bytes")
     if lo is not None or hi is not None:
-        bands.append((
-            "imageQuality:bytes",
-            blen.isNotNull() & _banded(lo, hi, blen),
-            bytes_path, "x-spark/image_quality/bytes",
-            F.concat(F.lit("payload of "), blen.cast("long").cast("string"),
-                     F.lit(f" bytes {_band_text(lo, hi)}")),
-            blen.cast("long").cast("string")))
+        structs.append(sql.when(
+            blen.isNotNull() & _banded(lo, hi, blen), _vrow(
+                "imageQuality:bytes", bytes_path,
+                "x-spark/image_quality/bytes",
+                sql.concat("payload of ", blen.cast("long").cast("string"),
+                           f" bytes {_band_text(lo, hi)}"),
+                blen.cast("long").cast("string"))))
     lo, hi = (cfg.get("min_bytes_per_pixel"),
               cfg.get("max_bytes_per_pixel"))
     if lo is not None or hi is not None:
-        bands.append((
-            "imageQuality:bytesPerPixel",
-            geom_ok & blen.isNotNull() & _banded(lo, hi, bpp),
-            bytes_path, "x-spark/image_quality/bytes_per_pixel",
-            F.concat(F.lit("payload bytes "),
-                     blen.cast("long").cast("string"),
-                     F.lit(" for "), dims,
-                     F.lit(f" pixels, ratio {_band_text(lo, hi)}")),
-            blen.cast("long").cast("string")))
-    if not bands:             # spec meta-check rejects this upstream
+        structs.append(sql.when(
+            geom_ok & blen.isNotNull() & _banded(lo, hi, bpp), _vrow(
+                "imageQuality:bytesPerPixel", bytes_path,
+                "x-spark/image_quality/bytes_per_pixel",
+                sql.concat("payload bytes ", blen.cast("long").cast("string"),
+                           " for ", dims,
+                           f" pixels, ratio {_band_text(lo, hi)}"),
+                blen.cast("long").cast("string"))))
+    if not structs:           # spec meta-check rejects this upstream
         raise ValueError("image_quality needs at least one threshold")
-    return bands
+    return _violation_rows(narrow, structs, id_cols)
 
 
 def luma_quality_structs(cfg: dict) -> list:
@@ -160,12 +149,12 @@ def luma_quality_structs(cfg: dict) -> list:
     undecodable rows are the pixel-invariant's finding (and their NaN
     stats would otherwise compare as greater-than-everything under
     Spark's NaN ordering)."""
-    ok = F.col("decode_ok")
-    mean, std = F.col("luma_mean"), F.col("luma_std")
+    ok = sql.col("decode_ok")
+    mean, std = sql.col("luma_mean"), sql.col("luma_std")
     structs = []
     lo, hi = cfg.get("min_luma"), cfg.get("max_luma")
     if lo is not None or hi is not None:
-        bad = F.lit(False)
+        bad = sql.lit(False)
         if lo is not None:
             bad = bad | (mean < lo)
         if hi is not None:
@@ -173,43 +162,41 @@ def luma_quality_structs(cfg: dict) -> list:
         band = (f"outside [{lo}, {hi}]" if lo is not None
                 and hi is not None
                 else (f"below {lo}" if lo is not None else f"above {hi}"))
-        structs.append(F.when(ok & bad, _vrow(
+        structs.append(sql.when(ok & bad, _vrow(
             "lumaQuality:brightness", json_path_join("$", "bytes"),
             "x-spark/image_quality_decoded/luma",
-            F.concat(F.lit("decoded mean luma "),
-                     F.format_string("%.2f", mean), F.lit(f" {band}")),
-            F.format_string("%.4f", mean))))
+            sql.concat("decoded mean luma ", sql.format_string("%.2f", mean),
+                       f" {band}"),
+            sql.format_string("%.4f", mean))))
     mc = cfg.get("min_contrast")
     if mc is not None:
-        structs.append(F.when(ok & (std < mc), _vrow(
+        structs.append(sql.when(ok & (std < mc), _vrow(
             "lumaQuality:contrast", json_path_join("$", "bytes"),
             "x-spark/image_quality_decoded/contrast",
-            F.concat(F.lit("decoded luma std "),
-                     F.format_string("%.2f", std),
-                     F.lit(f" below {mc} (flat/solid image)")),
-            F.format_string("%.4f", std))))
+            sql.concat("decoded luma std ", sql.format_string("%.2f", std),
+                       f" below {mc} (flat/solid image)"),
+            sql.format_string("%.4f", std))))
     if not structs:           # spec meta-check rejects this upstream
         raise ValueError("image_quality_decoded needs at least one "
                          "threshold")
     return structs
 
 
-def pixel_invariant_struct(min_psnr: float) -> Column:
+def pixel_invariant_struct(min_psnr: float) -> sql.Expr:
     """The pixelInvariant violation struct over any frame carrying
     ``(decode_ok, psnr, decoded_w, decoded_h, w, h)`` — the output of
     either decode tier: ``multimodal.decode_images`` (a projection that
     keeps every table column) or ``decode_pixels(psnr=True)`` with
     ``w, h`` carried through."""
-    pix_bad = ((~F.col("decode_ok"))
-               | (F.col("psnr") < min_psnr)
-               | (F.col("decoded_w") != F.col("w"))
-               | (F.col("decoded_h") != F.col("h")))
-    return F.when(pix_bad, _vrow(
+    psnr = sql.col("psnr")
+    pix_bad = (~sql.col("decode_ok") | (psnr < min_psnr)
+               | (sql.col("decoded_w") != sql.col("w"))
+               | (sql.col("decoded_h") != sql.col("h")))
+    return sql.when(pix_bad, _vrow(
         "pixelInvariant", json_path_join("$", "bytes"), "x-spark/pixel/psnr",
-        F.concat(F.lit("decoded payload fails PSNR/metadata "
-                       "invariant (psnr="),
-                 F.round("psnr", 2).cast("string"), F.lit(")")),
-        F.col("psnr").cast("string")))
+        sql.concat("decoded payload fails PSNR/metadata invariant (psnr=",
+                   sql.round(psnr, 2).cast("string"), ")"),
+        psnr.cast("string")))
 
 
 def cosine_columns(a: Column, b: Column) -> Column:
@@ -355,24 +342,22 @@ def alignment_violations(df: DataFrame, cfg: dict,
     min_cos = cfg.get("min_cosine", 0.5)
     if cfg.get("method", "native") == "arrow":
         scored = arrow_cosine(df, img_c, txt_c, id_cols)
-        cos = F.col("cos")
-        base, ids = scored, list(id_cols)
     else:
-        cos = cosine_columns(sql.ref(img_c), sql.ref(txt_c))
-        base, ids = df, list(id_cols)
+        scored = df.select(*map(sql.ref, dict.fromkeys(id_cols)),
+                           cosine_columns(sql.ref(img_c), sql.ref(txt_c))
+                           .alias("cos"))
+    cos = sql.col("cos")
     structs = [
-        F.when(cos.isNull(), _vrow(
+        sql.when(cos.isNull(), _vrow(
             "alignment:missing", json_path_join("$", txt_c),
             "x-spark/alignment",
-            F.lit("image or caption embedding missing or zero-norm — "
-                  "pair cannot be scored"),
-            F.lit(None).cast("string"))),
-        F.when(cos < min_cos, _vrow(
+            "image or caption embedding missing or zero-norm — "
+            "pair cannot be scored", None)),
+        sql.when(cos < min_cos, _vrow(
             "alignment:cosine", json_path_join("$", txt_c),
             "x-spark/alignment",
-            F.concat(F.lit("caption-image cosine "),
-                     F.format_string("%.6f", cos),
-                     F.lit(f" below {min_cos}")),
-            F.format_string("%.6f", cos))),
+            sql.concat("caption-image cosine ",
+                       sql.format_string("%.6f", cos), f" below {min_cos}"),
+            sql.format_string("%.6f", cos))),
     ]
-    return _violation_rows(base, structs, ids)
+    return _violation_rows(scored, structs, id_cols)

@@ -36,9 +36,10 @@ def referential_violations(df: DataFrame, fk: str, dim: DataFrame,
                            dim_key: str,
                            id_cols: Sequence[str] = ()) -> DataFrame:
     """Violation rows (keyword 'referential:<fk>') for orphaned fks."""
-    return _violation_rows(orphans(df, fk, dim, dim_key), [_vrow(
-        f"referential:{fk}", json_path_join("$", fk),
-        f"x-spark/referential/{fk}",
-        F.concat(F.lit(f"{fk} value not present in referenced table: "),
-                 sql.ref(fk).cast("string")),
-        sql.ref(fk))], id_cols)
+    fkv = sql.col("_fk")
+    return _violation_rows(
+        orphans(df, fk, dim, dim_key).withColumn("_fk", sql.ref(fk)), [_vrow(
+            f"referential:{fk}", json_path_join("$", fk),
+            f"x-spark/referential/{fk}",
+            sql.concat(f"{fk} value not present in referenced table: ",
+                       fkv.cast("string")), fkv)], id_cols)

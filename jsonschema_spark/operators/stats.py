@@ -104,13 +104,12 @@ def stats_violations(df: DataFrame, rules: dict[str, dict[str, Any]]) -> DataFra
         for kw, (agg, label, word, fails) in checks.items():
             if kw not in rule or agg is None:
                 continue
-            s, lim = F.col(f"_{i}_{kw}"), rule[kw]
+            s, lim = sql.col(f"_{i}_{kw}"), rule[kw]
             aggs.append(agg.alias(f"_{i}_{kw}"))
-            shown = (F.format_string("%.4f", s) if kw == "max_null_rate"
+            shown = (sql.format_string("%.4f", s) if kw == "max_null_rate"
                      else s.cast("string"))
-            structs.append(F.when(fails(s, lim), _vrow(
+            structs.append(sql.when(fails(s, lim), _vrow(
                 f"stats:{kw}", json_path_join("$", col),
                 f"x-spark/stats/{col}/stats:{kw}",
-                F.concat(F.lit(f"{label} "), shown, F.lit(f" {word} {lim}")),
-                s)))
+                sql.concat(f"{label} ", shown, f" {word} {lim}"), s)))
     return _violation_rows(df.agg(*aggs), structs)

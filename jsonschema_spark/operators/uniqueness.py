@@ -66,9 +66,13 @@ def uniqueness_violations(df: DataFrame, keys: str | Sequence[str],
     counted = narrow.select("*", *[
         F.count(F.lit(1)).over(Window.partitionBy(sql.ref(k))).alias(f"_n{i}")
         for i, k in enumerate(keys)])
-    return _violation_rows(counted, [
-        F.when(sql.ref(k).isNotNull() & (F.col(f"_n{i}") > 1), _vrow(
+    # each key also as `_k{i}`, after the windows: no shuffle carries it
+    counted = counted.select(
+        "*", *[sql.ref(k).alias(f"_k{i}") for i, k in enumerate(keys)])
+    structs = []
+    for i, k in enumerate(keys):
+        key, n = sql.col(f"_k{i}"), sql.col(f"_n{i}")
+        structs.append(sql.when(key.isNotNull() & (n > 1), _vrow(
             f"uniqueItems:{k}", json_path_join("$", k), f"x-spark/unique/{k}",
-            F.concat(F.lit(f"duplicate {k}: "), sql.ref(k).cast("string")),
-            sql.ref(k)))
-        for i, k in enumerate(keys)], id_cols)
+            sql.concat(f"duplicate {k}: ", key.cast("string")), key)))
+    return _violation_rows(counted, structs, id_cols)

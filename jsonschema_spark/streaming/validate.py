@@ -24,7 +24,8 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..validator import CompiledValidator
+from ..compiler import sql
+from ..validator import CompiledValidator, pass_fail
 
 
 def _ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
@@ -52,10 +53,12 @@ def with_valid_stream(stream_df: DataFrame, schema: Any,
 
 
 #: x-spark blocks that are per-row and stateless — append-mode safe
-#: with zero streaming state.  The first four compile to pure Column
-#: expressions; the decode tier (pixel_invariant / phash_integrity /
-#: image_quality_decoded) is a narrow mapInPandas scan, which
-#: Structured Streaming runs per micro-batch with no state either.
+#: with zero streaming state.  The first four, and pixel_invariant on
+#: the stub tier (``decode_images``), are native projections; the
+#: real-codec tier (pixel_invariant "real" / phash_integrity /
+#: image_quality_decoded) is one narrow mapInPandas scan
+#: (``decode_pixels``), which Structured Streaming runs per micro-batch
+#: with no state either.
 #: Dataset-scope blocks (unique / referential / stats / drift /
 #: near_dup_phash / contamination — the last aggregates grams back per
 #: doc, an unwatermarked streaming groupBy) need bounded state or a
@@ -107,20 +110,13 @@ def windowed_manifest(stream_df: DataFrame, schema: Any, ts_col: str,
     """
     stream_df = _ensure_event_time(stream_df, ts_col)
     v = CompiledValidator(schema, stream_df)
-    annotated = (stream_df
-                 .withWatermark(ts_col, watermark)
-                 .withColumn("_valid", v.valid_column))
-    keys = [F.window(F.col(ts_col), window).alias("window"),
-            *[F.col(c) for c in partition_by]]
-    return (annotated.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum((~F.col("_valid")).cast("long")).alias("invalid_rows"),
-        (F.sum((~F.col("_valid")).cast("long")) == 0).alias("passed"),
-    ).select(
+    keys = [sql.ref(c) for c in partition_by]
+    return pass_fail(
+        stream_df.withWatermark(ts_col, watermark), v.valid_column,
+        [F.window(F.col(ts_col), window).alias("window"), *keys]).select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
-        *partition_by, "rows", "invalid_rows", "passed",
-    ))
+        *keys, "rows", "invalid_rows", "passed")
 
 
 def dedup_stream(stream_df: DataFrame, key_cols: Sequence[str],

@@ -4,16 +4,17 @@ The reference's ``Validator`` precompiles a keyword list per schema and
 exposes ``iter_errors`` / ``is_valid``
 (/root/reference/jsonschema/protocols.py:106-189,
 /root/reference/jsonschema/validators.py:282-500).  Ours compiles once on
-the driver into named boolean Columns and exposes the vectorized
-equivalents:
+the driver into Spark SQL text (:mod:`.compiler.sql`) and exposes the
+vectorized equivalents:
 
 - ``with_valid(df)``     — ``is_valid`` as a boolean column over the scan
 - ``violations(df)``     — ``iter_errors`` as a violation-rows DataFrame
 - ``manifest(df)``       — per-partition pass/fail aggregate
 
 Everything row-level is one narrow scan: no shuffle, whole-stage codegen
-for native predicates, Arrow-batched pandas UDFs only where Python-exact
-semantics demand them.
+for native predicates, pandas UDFs (temporary functions the text calls)
+only where Python-exact semantics demand them.  :func:`_vrow` builds
+every violation struct, here and in every ``x-spark`` producer.
 """
 
 from __future__ import annotations
@@ -27,8 +28,7 @@ from pyspark.sql import functions as F
 from .compiler import sql
 from .compiler.context import CompileContext, json_pointer
 from .compiler.node import Check
-from .compiler.registry import (KeywordRegistry, compile_subschema,
-                                default_registry)
+from .compiler.registry import KeywordRegistry, compile_subschema
 from .spec import check_schema
 
 
@@ -38,28 +38,28 @@ _VIOLATION_DDL = ("keyword:string,json_path:string,schema_path:string,"
 
 
 def _vrow(keyword: str, json_path: str, schema_path: str,
-          message: Column, failing: Column, **extra: Column) -> Column:
+          message: Any, failing: Any, **extra: Any) -> sql.Expr:
     """One violation struct: compile-time keyword and locations as
     literals, the runtime message and failing value as strings, then any
     `extra` fields in the order given."""
-    return F.struct(F.lit(keyword).alias("keyword"),
-                    F.lit(json_path).alias("json_path"),
-                    F.lit(schema_path).alias("schema_path"),
-                    message.cast("string").alias("message"),
-                    failing.cast("string").alias("failing_value"),
-                    *[c.alias(k) for k, c in extra.items()])
+    return sql.named_struct(keyword=keyword, json_path=json_path,
+                            schema_path=schema_path,
+                            message=sql.lit(message).cast("string"),
+                            failing_value=sql.lit(failing).cast("string"),
+                            **extra)
 
 
-def _violation_rows(df: DataFrame, structs: Sequence[Column],
+def _violation_rows(df: DataFrame, structs: Sequence[sql.Expr],
                     id_cols: Sequence[str] = (),
                     ddl: str = _VIOLATION_DDL) -> DataFrame:
-    """Flat rows from ``when(bad, struct(...))`` Columns: `id_cols` then
-    the struct's fields, one row per non-NULL struct per input row.  One
-    projection evaluates every struct, so a subtree below `df` (a decode
-    pass, say) runs once however many violation kinds it feeds.  No
-    structs gives the empty result typed by `ddl`."""
-    arr = (F.filter(F.array(*structs), lambda s: s.isNotNull()) if structs
-           else F.array().cast(f"array<struct<{ddl}>>"))
+    """Flat rows from ``when(bad, _vrow(...))`` expressions: `id_cols`
+    then the struct's fields, one row per non-NULL struct per input row.
+    One projection evaluates every struct, so a subtree below `df` (a
+    decode pass, say) runs once however many violation kinds it feeds.
+    No structs gives the empty result typed by `ddl`.  The text may not
+    name a caller's column (:func:`sql.col`): producers project one it
+    reads under an engine name (``_k0``, ``_fk``, ...) first."""
+    arr = sql.column(_struct_array(structs, ddl), df.sparkSession)
     return _explode_rows(df, arr, id_cols)
 
 
@@ -85,16 +85,13 @@ def violation_structs(checks: Sequence[Check], context: bool) -> sql.Expr:
     :func:`_vrow`), with ``context_of`` when `context`, as one array."""
     rows = []
     for c in checks:
-        fields = dict(keyword=c.keyword, json_path=c.json_path,
-                      schema_path=c.schema_path,
-                      message=c.message.cast("string"),
-                      failing_value=c.failing_value.cast("string"))
-        if context:
-            fields["context_of"] = sql.lit(c.context_of).cast("string")
-        fields["type_match"] = (c.type_match if c.type_match is not None
-                                else sql.lit(False))
-        rows.append(sql.when(~sql.coalesce(c.pred, True),
-                             sql.named_struct(**fields)))
+        extra = ({"context_of": sql.lit(c.context_of).cast("string")}
+                 if context else {})
+        rows.append(sql.when(~sql.coalesce(c.pred, True), _vrow(
+            c.keyword, c.json_path, c.schema_path, c.message,
+            c.failing_value, **extra,
+            type_match=(c.type_match if c.type_match is not None
+                        else False))))
     ddl = (_VIOLATION_DDL + (",context_of:string" if context else "")
            + ",type_match:boolean")
     return _struct_array(rows, ddl)
@@ -124,23 +121,21 @@ class CompiledValidator:
         extra = frozenset(getattr(registry, "type_predicates", ()) or ())
         check_schema(schema, extra_types=extra)
         self.schema = schema
-        if registry is None:
-            # validator_for: $schema picks the draft profile
-            # (validators.py:1335-1410); default = 2020-12
-            from .compiler.legacy import registry_for
-            registry = registry_for(schema)
-        self.registry = registry or default_registry()
+        from .compiler.legacy import draft_of, registry_for
+        draft = draft_of(schema)
+        # validator_for: $schema picks the draft profile
+        # (validators.py:1335-1410); default = 2020-12
+        self.registry = registry or registry_for(draft)
         if format_checker and not self.registry.assert_formats:
             self.registry = self.registry.extend({})
             self.registry.assert_formats = True
         self._spark = df.sparkSession
-        from .compiler.legacy import draft_of
         from .compiler.resolver import Resolver
         # URI semantics must follow the schema's draft: a draft4 schema
         # using the legacy location-independent identifier {"id": "#x"}
         # resolves through Resolver's draft<=7 rules, not 2020-12
         # (validator_for -> resolver wiring, validators.py:1335-1410)
-        resolver = Resolver(draft_of(schema), retrieve=retrieve)
+        resolver = Resolver(draft, retrieve=retrieve)
         for uri, doc in (schema_store or {}).items():
             resolver.add_document(uri, doc)
         root_uri = resolver.add_root(schema)
@@ -262,9 +257,8 @@ class CompiledValidator:
         ]
         ddl = ("keyword:string,keywordLocation:string,json_path:string,"
                "annotation_json:string")
-        arr = sql.column(_struct_array(structs, ddl), self._spark)
-        return _explode_rows(df.filter(self.valid_column), arr,
-                             id_cols).select(
+        return _violation_rows(df.filter(self.valid_column), structs,
+                               id_cols, ddl).select(
             *[sql.ref(c) for c in id_cols],
             F.lit(True).alias("valid"),
             "keyword", "keywordLocation",
@@ -276,18 +270,9 @@ class CompiledValidator:
                  partition_by: Optional[Sequence[str]] = None) -> DataFrame:
         """Per-partition pass/fail manifest — ``is_valid`` aggregated
         (validators.py:485-500 lifted to groupBy)."""
-        annotated = df.withColumn("_valid", self.valid_column)
-        if partition_by:
-            keys = [sql.ref(c) for c in partition_by]
-            grouped = annotated.groupBy(*keys)
-        else:
-            grouped = annotated.groupBy(
-                F.spark_partition_id().alias("partition_id"))
-        return grouped.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum((~F.col("_valid")).cast("long")).alias("invalid_rows"),
-            (F.sum((~F.col("_valid")).cast("long")) == 0).alias("passed"),
-        )
+        keys = ([sql.ref(c) for c in partition_by] if partition_by
+                else [F.spark_partition_id().alias("partition_id")])
+        return pass_fail(df, self.valid_column, keys)
 
     def counts(self, df: DataFrame) -> tuple[int, int]:
         row = (df.select(self.valid_column.alias("v"))
@@ -295,6 +280,17 @@ class CompiledValidator:
                       F.count(F.lit(1)).alias("n"))).collect()[0]
         ok = row["ok"] or 0
         return int(ok), int(row["n"] - ok)
+
+
+def pass_fail(df: DataFrame, valid: Column,
+              keys: Sequence[Column]) -> DataFrame:
+    """The manifest aggregate: ``rows``, ``invalid_rows`` and ``passed``
+    of `df` per group of `keys`, by the row validity `valid`."""
+    invalid = F.sum((~F.col("_valid")).cast("long"))
+    return (df.withColumn("_valid", valid).groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("rows"),
+                 invalid.alias("invalid_rows"),
+                 (invalid == 0).alias("passed")))
 
 
 def validate(df: DataFrame, schema: Any,

@@ -705,3 +705,29 @@ def test_unevaluated_keywords_match_reference(spark):
         ref = jsonschema.Draft202012Validator(schema)
         assert _valid_flags(spark, ddl, rows, schema) \
             == [ref.is_valid(i) for i in insts], sub
+
+
+@pytest.mark.parametrize("uri", [
+    "http://json-schema.org/draft-04/schema",
+    "http://json-schema.org/draft-04/schema#",
+    "http://json-schema.org/draft-07/schema",
+    "http://json-schema.org/draft-07/schema#",
+    "https://json-schema.org/draft/2019-09/schema",
+    "https://json-schema.org/draft/2019-09/schema#"])
+def test_schema_uri_spellings_pick_the_reference_draft(spark, uri):
+    """`$schema` with or without the trailing `#` picks the draft the
+    reference's validator_for picks: draft-04 and draft-07 ignore a
+    `$ref`'s siblings, 2019-09 applies them."""
+    import jsonschema
+
+    from jsonschema_spark.compiler.legacy import draft_of
+    df = spark.createDataFrame([("a",)], "x string")
+    schema = {"$schema": uri, "definitions": {"d": {}},
+              "properties": {"x": {"$ref": "#/definitions/d",
+                                   "maxLength": 0}}}
+    cls = jsonschema.validators.validator_for(schema)
+    assert draft_of(schema) == {
+        "Draft4Validator": "draft4", "Draft7Validator": "draft7",
+        "Draft201909Validator": "draft2019-09"}[cls.__name__]
+    ok, _ = CompiledValidator(schema, df).counts(df)
+    assert (ok == 1) == cls(schema).is_valid({"x": "a"})

@@ -86,11 +86,11 @@ def test_vocabulary_tables_are_era_aware():
     unevaluatedProperties in /vocab/applicator (no /vocab/unevaluated
     before 2020-12); applying the 2020-12 vocabulary table to a
     2019-09 meta-schema silently dropped both keywords."""
-    from jsonschema_spark.compiler.legacy import apply_vocabulary
-    from jsonschema_spark.conformance import (_registry_for_draft,
-                                              base_resolver)
+    from jsonschema_spark.compiler.legacy import (apply_vocabulary,
+                                                  registry_for)
+    from jsonschema_spark.conformance import base_resolver
     res = base_resolver("draft2019-09")
-    reg = _registry_for_draft("draft2019-09")
+    reg = registry_for("draft2019-09")
     schema = {"$schema": "https://json-schema.org/draft/2019-09/schema",
               "unevaluatedItems": False}
     reg2 = apply_vocabulary(reg, schema, res)
@@ -99,7 +99,7 @@ def test_vocabulary_tables_are_era_aware():
     # 2020-12 path unaffected
     res12 = base_resolver("draft2020-12")
     reg12 = apply_vocabulary(
-        _registry_for_draft("draft2020-12"),
+        registry_for("draft2020-12"),
         {"$schema": "https://json-schema.org/draft/2020-12/schema"}, res12)
     assert reg12.get("unevaluatedProperties") is not None
 
@@ -117,8 +117,8 @@ def test_document_mode_union_structs_and_absent_policy(spark):
     from jsonschema_spark.compiler import sql
     from jsonschema_spark.compiler.context import CompileContext
     from jsonschema_spark.compiler.registry import compile_subschema
-    from jsonschema_spark.conformance import (_registry_for_draft,
-                                              _to_row_value, base_resolver,
+    from jsonschema_spark.compiler.legacy import registry_for
+    from jsonschema_spark.conformance import (_to_row_value, base_resolver,
                                               infer_spark_type_document)
 
     schema = {
@@ -146,7 +146,7 @@ def test_document_mode_union_structs_and_absent_policy(spark):
         res = resolver.child()
         root_uri = res.add_root(schema)
         ctx = CompileContext(
-            registry=_registry_for_draft("draft4"),
+            registry=registry_for("draft4"),
             target=sql.col("value"), dtype=dtype, root_schema=schema,
             null_is_absent=True, absent_policy=True,
             resolver=res, base_uri=root_uri, dynamic_scope=(root_uri,))

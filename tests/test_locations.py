@@ -139,3 +139,41 @@ def test_location_outputs_plan_no_python(spark):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan
         assert "BatchEvalPython" not in plan
+
+
+@pytest.mark.parametrize("scope", ["row", "struct"])
+def test_unexpected_properties_are_one_error_at_the_object(spark, scope):
+    """additionalProperties/unevaluatedProperties false report ONE error
+    at the object naming every present unexpected member, as the
+    reference does; (keyword, json_path, message) per row equal to the
+    installed jsonschema, at row scope and for a struct member."""
+    df = spark.createDataFrame(
+        [(1, None, None, None), (2, 5, None, None), (3, 5, 6, None),
+         (4, None, 1, 2)], "a int, z int, b int, x1 int")
+    if scope == "struct":
+        df = df.selectExpr(
+            "a", "named_struct('a', a, 'z', z, 'b', b, 'x1', x1) AS s")
+    schemas = [
+        {"properties": {"a": {}}, "additionalProperties": False},
+        {"properties": {"a": {}}, "patternProperties": {"^x": {}, "^q": {}},
+         "additionalProperties": False},
+        {"properties": {"a": {}}, "unevaluatedProperties": False},
+        {"properties": {"a": {}}, "unevaluatedProperties": {"maximum": 5}},
+    ]
+    for schema in schemas:
+        spec = schema if scope == "row" else {"properties": {"s": schema}}
+        got = sorted((r["a"], r["keyword"], r["json_path"], r["message"])
+                     for r in CompiledValidator(spec, df).violations(
+                         df, ["a"]).collect())
+        ref = jsonschema.Draft202012Validator(spec)
+        want = []
+        for r in df.collect():
+            inst = {k: v for k, v in r.asDict(recursive=True).items()
+                    if v is not None}
+            if "s" in inst:
+                inst["s"] = {k: v for k, v in inst["s"].items()
+                             if v is not None}
+            want += [(r["a"], e.validator, e.json_path, e.message)
+                     for e in ref.iter_errors(inst)]
+        assert got == sorted(want), schema
+        assert want, schema

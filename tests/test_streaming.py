@@ -318,3 +318,23 @@ def test_validate_dataset_stream_decode_tier_matches_batch(spark, tmp_path):
             .select("image_id", "keyword").collect()}
     assert got == want
     assert any(k == "lumaQuality:contrast" for _, k in got)
+
+
+def test_windowed_manifest_dotted_partition_column(spark):
+    """`partition_by` names a column, dots included, as
+    CompiledValidator.manifest does; same aggregate as the batch
+    manifest per window."""
+    df = spark.createDataFrame(
+        [("2024-01-01 00:00:10", "x", 1), ("2024-01-01 00:00:20", "x", -1),
+         ("2024-01-01 00:00:30", "y", 3)],
+        "ts string, `a.b` string, v int").withColumn(
+            "ts", F.col("ts").cast("timestamp"))
+    spec = {"properties": {"v": {"minimum": 0}}}
+    got = windowed_manifest(df, spec, "ts", partition_by=["a.b"])
+    assert got.columns == ["window_start", "window_end", "a.b", "rows",
+                           "invalid_rows", "passed"]
+    rows = sorted((r["a.b"], r["rows"], r["invalid_rows"], r["passed"])
+                  for r in got.collect())
+    want = sorted(tuple(r) for r in CompiledValidator(spec, df).manifest(
+        df, ["a.b"]).collect())
+    assert rows == want == [("x", 2, 1, False), ("y", 1, 0, True)]

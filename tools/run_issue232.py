@@ -45,8 +45,8 @@ def main() -> None:
     from jsonschema_spark.compiler import sql
     from jsonschema_spark.compiler.context import CompileContext
     from jsonschema_spark.compiler.registry import compile_subschema
-    from jsonschema_spark.conformance import (_registry_for_draft,
-                                              _to_row_value,
+    from jsonschema_spark.compiler.legacy import registry_for
+    from jsonschema_spark.conformance import (_to_row_value,
                                               base_resolver,
                                               infer_spark_type_document)
     from jsonschema_spark.session import get_spark
@@ -57,7 +57,7 @@ def main() -> None:
     spark = get_spark("issue232", cores=1, shuffle_partitions=1)
     spark.sparkContext.setLogLevel("ERROR")
 
-    registry = _registry_for_draft("draft4")
+    registry = registry_for("draft4")
     resolver = base_resolver("draft4")
 
     lines = ["", "## issue232 — real-world draft-04 schema "
